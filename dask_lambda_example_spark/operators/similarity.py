@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from dask_lambda_example_spark.functions.vector import (
     as_double, cosine, cosine_pair, dot, l2dist, l2norm, sign_lsh_bucket)
 from dask_lambda_example_spark.io import load_table
-from dask_lambda_example_spark.registry import query
+from dask_lambda_example_spark.registry import QUERIES, query
 
 # ---------------------------------------------------------------------------
 # vector expression toolkit (JVM HOFs, no UDFs)
@@ -161,11 +161,18 @@ def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's partitioning is the ONLY parallelism the O(probes x corpus)
     cosine folds get — the row-count floor must not collapse it to one
     partition at small corpus sizes (VERDICT r14 item 1)."""
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
-        "vec_id", as_double(F.col("embedding")).alias("emb")).withColumn(
-        "nrm", l2norm(F.col("emb")))
-    probes = e.filter(_probe_filter())
-    q, c = F.broadcast(probes).alias("q"), e.alias("c")
+    return _exact_cosine_topk(
+        load_table(spark, sf_dir, "embeddings", parallel="force").select(
+            "vec_id", as_double(F.col("embedding")).alias("emb")), TOP_K)
+
+
+def _exact_cosine_topk(e: DataFrame, k: int) -> DataFrame:
+    """The one exact cosine top-``k`` over a (vec_id, emb) frame:
+    (query_id, neighbor_id, cos, rank) for every probe against every
+    other row of ``e``. The caller picks the scan, so the post-ingest
+    recall audit reuses it over its own."""
+    e = e.select("vec_id", "emb", l2norm(F.col("emb")).alias("nrm"))
+    q, c = F.broadcast(e.filter(_probe_filter())).alias("q"), e.alias("c")
     scored = (
         q.join(c, F.col("c.vec_id") != F.col("q.vec_id"))
         .select(
@@ -178,7 +185,7 @@ def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
     )
 
@@ -295,33 +302,57 @@ def sim_ann_signlsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANN recall audit (exact vs LSH, composed from the registered queries)
+# recall@k audit — the one sign-off join every approximate path ships
+# (``sim_*_recall*``), here first for exact vs LSH
 # ---------------------------------------------------------------------------
 
 
-def _recall_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
+def _recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Per probe, how many of the exact top-``k`` neighbors the
+    approximate result recovered: (query_id, n_hit, recall_at_k).
+    ``exact`` is a ranked (query_id, neighbor_id, rank) frame, ``approx``
+    any (query_id, neighbor_id) one. Both are probe-bounded, so the
+    left audit join touches only |probes| × k rows."""
+    exact_k = (exact.filter(F.col("rank") <= k)
+               .select("query_id", "neighbor_id"))
+    hits = approx.select(F.col("query_id").alias("hit_query"),
+                         F.col("neighbor_id").alias("hit"))
+    return (
+        exact_k.join(
+            hits, (F.col("query_id") == F.col("hit_query"))
+            & (F.col("neighbor_id") == F.col("hit")), "left")
+        .groupBy("query_id")
+        .agg(F.count("hit").alias("n_hit"))
+        .select("query_id", "n_hit",
+                F.round(F.col("n_hit") / k, 6).alias("recall_at_k"))
+    )
 
-    exact = QUERIES["sim_cosine_topk_bruteforce"].oracle
-    ann = QUERIES["sim_ann_signlsh_topk"].oracle
+
+def _recall_sql(exact: str, approx: str, k: int) -> str:
+    """The DuckDB reference for ``_recall_at_k`` over two oracle
+    queries: ``exact`` ranked (query_id, neighbor_id, rank), ``approx``
+    any (query_id, neighbor_id) result."""
     return f"""
-    WITH exact_full AS ({exact}),
-    ann_full AS ({ann}),
-    exact_k AS (SELECT query_id, neighbor_id FROM exact_full
-                WHERE rank <= {ANN_K}),
-    hits AS (
-        SELECT e.query_id, count(a.neighbor_id) AS n_hit
-        FROM exact_k e
-        LEFT JOIN ann_full a ON a.query_id = e.query_id
-                            AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           round(n_hit * 1.0 / {ANN_K}, 6) AS recall_at_k
-    FROM hits
+    WITH exact_k AS (SELECT query_id, neighbor_id FROM ({exact})
+                     WHERE rank <= {k}),
+    approx AS ({approx})
+    SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
+           round(count(a.neighbor_id) * 1.0 / {k}, 6) AS recall_at_k
+    FROM exact_k e
+    LEFT JOIN approx a ON a.query_id = e.query_id
+                      AND a.neighbor_id = e.neighbor_id
+    GROUP BY e.query_id
     """
 
 
-@query("sim_ann_recall_report", oracle=_recall_oracle())
+def _cosine_recall(approx: str, k: int) -> str:
+    """Oracle of a recall audit against the exact cosine search."""
+    return _recall_sql(QUERIES["sim_cosine_topk_bruteforce"].oracle,
+                       QUERIES[approx].oracle, k)
+
+
+@query("sim_ann_recall_report",
+       oracle=_cosine_recall("sim_ann_signlsh_topk", ANN_K))
 def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of the sign-LSH ANN against exact brute force —
     the number a serving team actually signs off on before shipping an
@@ -329,8 +360,8 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors the bucketed ANN recovered.
 
     Composed from the two REGISTERED queries (same discipline as
-    ``pipeline_curation_funnel``): the Spark side calls their
-    implementations, the oracle nests their oracle SQL as CTEs — so the
+    ``pipeline_curation_funnel``): ``_recall_at_k`` over their
+    implementations, ``_recall_sql`` over their oracle SQL — so the
     audit itself is value-checked end-to-end, and recall loss is a
     measured artifact rather than a hoped-for property. Scale: both
     inputs are probe-bounded (O(|probes| × n) worst case), the audit
@@ -344,20 +375,8 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     in dedup.py, which grows bits only ABOVE a per-bucket target);
     the report is the tool that catches the misconfiguration before an
     index ships."""
-    exact_k = (sim_cosine_topk_bruteforce(spark, sf_dir)
-               .filter(F.col("rank") <= ANN_K)
-               .select("query_id", "neighbor_id"))
-    ann = (sim_ann_signlsh_topk(spark, sf_dir)
-           .select("query_id", F.col("neighbor_id").alias("ann_neighbor")))
-    return (
-        exact_k.join(
-            ann, (exact_k.query_id == ann.query_id)
-            & (exact_k.neighbor_id == ann.ann_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("ann_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / ANN_K, 6).alias("recall_at_k"))
-    )
+    return _recall_at_k(sim_cosine_topk_bruteforce(spark, sf_dir),
+                        sim_ann_signlsh_topk(spark, sf_dir), ANN_K)
 
 
 sim_ann_recall_report.__doc__ = sim_ann_recall_report.__doc__.format(k=ANN_K)
@@ -594,47 +613,14 @@ sim_ivf_search_multiprobe.__doc__ = sim_ivf_search_multiprobe.__doc__.format(
     p=IVF_PROBE_CELLS)
 
 
-def _ivf_recall_multiprobe_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    exact = QUERIES["sim_cosine_topk_bruteforce"].oracle
-    ivf = QUERIES["sim_ivf_search_multiprobe"].oracle
-    return f"""
-    WITH exact_full AS ({exact}),
-    ivf_full AS ({ivf}),
-    exact_k AS (SELECT query_id, neighbor_id FROM exact_full
-                WHERE rank <= {IVF_K}),
-    hits AS (
-        SELECT e.query_id, count(a.neighbor_id) AS n_hit
-        FROM exact_k e
-        LEFT JOIN ivf_full a ON a.query_id = e.query_id
-                            AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           round(n_hit * 1.0 / {IVF_K}, 6) AS recall_at_k
-    FROM hits
-    """
-
-
-@query("sim_ivf_recall_multiprobe", oracle=_ivf_recall_multiprobe_oracle())
+@query("sim_ivf_recall_multiprobe",
+       oracle=_cosine_recall("sim_ivf_search_multiprobe", IVF_K))
 def sim_ivf_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the 2-cell multiprobe IVF search — read next to
     ``sim_ivf_recall_report`` (the 1-cell number), the pair IS the
     measured recall-vs-scan-fraction curve."""
-    exact_k = (sim_cosine_topk_bruteforce(spark, sf_dir)
-               .filter(F.col("rank") <= IVF_K)
-               .select("query_id", "neighbor_id"))
-    ivf = (sim_ivf_search_multiprobe(spark, sf_dir)
-           .select("query_id", F.col("neighbor_id").alias("ivf_neighbor")))
-    return (
-        exact_k.join(
-            ivf, (exact_k.query_id == ivf.query_id)
-            & (exact_k.neighbor_id == ivf.ivf_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("ivf_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / IVF_K, 6).alias("recall_at_k"))
-    )
+    return _recall_at_k(sim_cosine_topk_bruteforce(spark, sf_dir),
+                        sim_ivf_search_multiprobe(spark, sf_dir), IVF_K)
 
 
 # Adaptive probe dial (round 14): both fixed dials spend the SAME scan
@@ -672,49 +658,16 @@ sim_ivf_search_adaptive.__doc__ = sim_ivf_search_adaptive.__doc__.format(
     m=IVF_ADAPT_MARGIN, cap=IVF_ADAPT_MAX_CELLS)
 
 
-def _ivf_recall_adaptive_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    exact = QUERIES["sim_cosine_topk_bruteforce"].oracle
-    ivf = QUERIES["sim_ivf_search_adaptive"].oracle
-    return f"""
-    WITH exact_full AS ({exact}),
-    ivf_full AS ({ivf}),
-    exact_k AS (SELECT query_id, neighbor_id FROM exact_full
-                WHERE rank <= {IVF_K}),
-    hits AS (
-        SELECT e.query_id, count(a.neighbor_id) AS n_hit
-        FROM exact_k e
-        LEFT JOIN ivf_full a ON a.query_id = e.query_id
-                            AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           round(n_hit * 1.0 / {IVF_K}, 6) AS recall_at_k
-    FROM hits
-    """
-
-
-@query("sim_ivf_recall_adaptive", oracle=_ivf_recall_adaptive_oracle())
+@query("sim_ivf_recall_adaptive",
+       oracle=_cosine_recall("sim_ivf_search_adaptive", IVF_K))
 def sim_ivf_recall_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the adaptive-probe IVF search — read next to
     ``sim_ivf_recall_report`` (1 cell) and ``sim_ivf_recall_multiprobe``
     (2 cells): the three rows ARE the measured recall-vs-scan curve,
     with the adaptive point spending its extra cells only on ambiguous
     probes (``sim_ivf_adaptive_probe_stats`` prices that side)."""
-    exact_k = (sim_cosine_topk_bruteforce(spark, sf_dir)
-               .filter(F.col("rank") <= IVF_K)
-               .select("query_id", "neighbor_id"))
-    ivf = (sim_ivf_search_adaptive(spark, sf_dir)
-           .select("query_id", F.col("neighbor_id").alias("ivf_neighbor")))
-    return (
-        exact_k.join(
-            ivf, (exact_k.query_id == ivf.query_id)
-            & (exact_k.neighbor_id == ivf.ivf_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("ivf_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / IVF_K, 6).alias("recall_at_k"))
-    )
+    return _recall_at_k(sim_cosine_topk_bruteforce(spark, sf_dir),
+                        sim_ivf_search_adaptive(spark, sf_dir), IVF_K)
 
 
 def _ivf_adaptive_stats_oracle() -> str:
@@ -1016,29 +969,8 @@ sim_hybrid_rrf.__doc__ = sim_hybrid_rrf.__doc__.format(
 # ---------------------------------------------------------------------------
 
 
-def _ivf_recall_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    exact = QUERIES["sim_cosine_topk_bruteforce"].oracle
-    ivf = QUERIES["sim_ivf_search"].oracle
-    return f"""
-    WITH exact_full AS ({exact}),
-    ivf_full AS ({ivf}),
-    exact_k AS (SELECT query_id, neighbor_id FROM exact_full
-                WHERE rank <= {IVF_K}),
-    hits AS (
-        SELECT e.query_id, count(a.neighbor_id) AS n_hit
-        FROM exact_k e
-        LEFT JOIN ivf_full a ON a.query_id = e.query_id
-                            AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           round(n_hit * 1.0 / {IVF_K}, 6) AS recall_at_k
-    FROM hits
-    """
-
-
-@query("sim_ivf_recall_report", oracle=_ivf_recall_oracle())
+@query("sim_ivf_recall_report",
+       oracle=_cosine_recall("sim_ivf_search", IVF_K))
 def sim_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of the IVF cell-pruned search against exact brute
     force — the sibling of ``sim_ann_recall_report`` for the second ANN
@@ -1046,29 +978,16 @@ def sim_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     number. Per probe: how many of the exact top-{k} neighbors the
     single-cell IVF search recovered.
 
-    Same composition discipline: the Spark side calls the two
-    REGISTERED implementations, the oracle nests their oracle SQL as
-    CTEs, so the audit is value-checked end-to-end and IVF's
-    single-probe-cell recall loss (probes whose true neighbors live in
-    a different cell score 0) is a measured artifact. Scale: both
-    inputs are probe-bounded; the audit join touches |probes| × k
-    rows. The knob this report tunes at 100 TB is n_probe_cells —
-    searching the top-p centroid cells instead of 1 trades scan
-    fraction (p / n_cells) against exactly the recall measured here."""
-    exact_k = (sim_cosine_topk_bruteforce(spark, sf_dir)
-               .filter(F.col("rank") <= IVF_K)
-               .select("query_id", "neighbor_id"))
-    ivf = (sim_ivf_search(spark, sf_dir)
-           .select("query_id", F.col("neighbor_id").alias("ivf_neighbor")))
-    return (
-        exact_k.join(
-            ivf, (exact_k.query_id == ivf.query_id)
-            & (exact_k.neighbor_id == ivf.ivf_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("ivf_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / IVF_K, 6).alias("recall_at_k"))
-    )
+    Same audit (``_recall_at_k`` over the two REGISTERED queries, their
+    oracle SQL nested by ``_recall_sql``), so IVF's single-probe-cell
+    recall loss (probes whose true neighbors live in a different cell
+    score 0) is a measured artifact. Scale: both inputs are
+    probe-bounded; the audit join touches |probes| × k rows. The knob
+    this report tunes at 100 TB is n_probe_cells — searching the top-p
+    centroid cells instead of 1 trades scan fraction (p / n_cells)
+    against exactly the recall measured here."""
+    return _recall_at_k(sim_cosine_topk_bruteforce(spark, sf_dir),
+                        sim_ivf_search(spark, sf_dir), IVF_K)
 
 
 sim_ivf_recall_report.__doc__ = sim_ivf_recall_report.__doc__.format(k=IVF_K)
@@ -1493,34 +1412,76 @@ def _pq_rerank_d2_sql(q: str, c: str) -> str:
             f" + list_dot_product({c}, {c})")
 
 
-def _pq_rerank_oracle() -> str:
+def _exact_l2_sql(k: int, shortlist: str | None = None) -> str:
+    """The DuckDB reference for ``_exact_l2_topk``: exact squared-L2
+    top-``k`` per probe, (query_id, neighbor_id, dist2, rank), over the
+    ``shortlist`` query's (query_id, neighbor_id) pairs, or over probe ×
+    corpus when there is none."""
     d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
+    probe = _PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP)
+    pairs = (f"({shortlist}) s JOIN e q ON q.vec_id = s.query_id"
+             f" JOIN e c ON c.vec_id = s.neighbor_id" if shortlist
+             else f"e q JOIN e c ON {probe} AND c.vec_id <> q.vec_id")
     return f"""
-    WITH shortlist AS ({_pq_adc_oracle(PQ_RERANK)}),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-          FROM embeddings)
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+               FROM embeddings)
     SELECT query_id, neighbor_id, round(d2, 6) AS dist2, rank FROM (
-        SELECT s.query_id, s.neighbor_id, {d2} AS d2,
-               row_number() OVER (PARTITION BY s.query_id
-                                  ORDER BY {d2}, s.neighbor_id) AS rank
-        FROM shortlist s
-        JOIN e q ON q.vec_id = s.query_id
-        JOIN e c ON c.vec_id = s.neighbor_id)
-    WHERE rank <= {PQ_TOPK}
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {d2} AS d2,
+               row_number() OVER (PARTITION BY q.vec_id
+                                  ORDER BY {d2}, c.vec_id) AS rank
+        FROM {pairs})
+    WHERE rank <= {k}
     """
 
 
-@query("sim_pq_rerank_search", oracle=_pq_rerank_oracle())
+def _exact_l2_topk(spark: SparkSession, sf_dir: str, k: int,
+                   shortlist: DataFrame | None = None) -> DataFrame:
+    """The one exact squared-L2 top-k: (query_id, neighbor_id, dist2,
+    rank) per probe, ‖q−c‖² evaluated as qq − 2qc + cc with the
+    in-order dot() fold, ties broken by neighbor_id.
+
+    Without ``shortlist`` it is the brute-force side of the L2 recall
+    audits: the probe set broadcasts against the corpus scan, which is
+    never shuffled. With a (query_id, neighbor_id) ``shortlist`` it is
+    the refine stage of the re-rank searches: the shortlist (joined to
+    its broadcast probe vectors) broadcasts and fetches the
+    full-precision neighbors with ONE broadcast-hash join against the
+    corpus, again scanned once and never shuffled."""
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
+        "vec_id", as_double(F.col("embedding")).alias("emb"))
+    q = (e.filter(_probe_filter())
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("emb").alias("qemb"),
+                  dot(F.col("emb"), F.col("emb")).alias("qq")))
+    c = e.select(F.col("vec_id").alias("neighbor_id"),
+                 F.col("emb").alias("cemb"),
+                 dot(F.col("emb"), F.col("emb")).alias("cc"))
+    if shortlist is None:
+        pairs = F.broadcast(q).join(
+            c, F.col("neighbor_id") != F.col("query_id"))
+    else:
+        pairs = F.broadcast(shortlist.join(F.broadcast(q), "query_id")
+                            ).join(c, "neighbor_id")
+    d2 = (F.col("qq") - 2 * dot(F.col("qemb"), F.col("cemb"))
+          + F.col("cc"))
+    wrank = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
+    return (pairs.select("query_id", "neighbor_id", d2.alias("d2"))
+            .withColumn("rank", F.row_number().over(wrank))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id",
+                    F.round("d2", 6).alias("dist2"), "rank"))
+
+
+@query("sim_pq_rerank_search",
+       oracle=_exact_l2_sql(PQ_TOPK, _pq_adc_oracle(PQ_RERANK)))
 def sim_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC shortlist → exact re-rank (the FAISS ``refine`` stage).
 
     The ADC ranking (``_pq_adc_ranked`` — identical plan to
     ``sim_pq_adc_search``) is cut at ``PQ_RERANK`` instead of top-k;
-    the |probes| × {PQ_RERANK} shortlist then fetches full-precision
-    vectors with ONE broadcast-hash join against the corpus (the
-    shortlist side is tiny and broadcasts; the corpus is scanned once,
-    never shuffled) and re-scores exactly: ‖q−c‖² = qq − 2qc + cc with
-    the in-order dot() fold, then a bounded window takes the final
+    the |probes| × {PQ_RERANK} shortlist is then exactly re-scored by
+    ``_exact_l2_topk`` (one broadcast-hash join against the corpus,
+    which is scanned once and never shuffled), keeping the final
     top-{PQ_TOPK}.
 
     Scale: this is the standard accuracy-recovery dial at 100 TB —
@@ -1536,194 +1497,49 @@ def sim_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     sl = (_pq_adc_ranked(spark, sf_dir)
           .filter(F.col("rank") <= PQ_RERANK)
           .select("query_id", "neighbor_id"))
-    return _exact_rerank(spark, sf_dir, sl)
+    return _exact_l2_topk(spark, sf_dir, PQ_TOPK, sl)
 
 
 sim_pq_rerank_search.__doc__ = sim_pq_rerank_search.__doc__.format(
     PQ_RERANK=PQ_RERANK, PQ_TOPK=PQ_TOPK)
 
 
-def _exact_rerank(spark: SparkSession, sf_dir: str,
-                  sl: DataFrame) -> DataFrame:
-    """The refine stage shared by ``sim_pq_rerank_search`` and
-    ``sim_ivfpq_rerank_search``: given a (query_id, neighbor_id)
-    shortlist, fetch full-precision vectors with ONE broadcast-hash
-    join against the corpus (shortlist side broadcasts; the corpus is
-    scanned once, never shuffled), exactly re-score ‖q−c‖² =
-    qq − 2qc + cc with the in-order dot() fold, and take the final
-    top-``PQ_TOPK`` per probe."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", as_double(F.col("embedding")).alias("emb"))
-    q = (e.filter(_probe_filter())
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("emb").alias("qemb"),
-                  dot(F.col("emb"), F.col("emb")).alias("qq")))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("emb").alias("cemb"),
-                 dot(F.col("emb"), F.col("emb")).alias("cc"))
-    d2 = (F.col("qq") - 2 * dot(F.col("qemb"), F.col("cemb"))
-          + F.col("cc"))
-    wrank = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return (F.broadcast(sl.join(F.broadcast(q), "query_id"))
-            .join(c, "neighbor_id")
-            .select("query_id", "neighbor_id", d2.alias("d2"))
-            .withColumn("rank", F.row_number().over(wrank))
-            .filter(F.col("rank") <= PQ_TOPK)
-            .select("query_id", "neighbor_id",
-                    F.round("d2", 6).alias("dist2"), "rank"))
+def _l2_recall(approx: str) -> str:
+    """Oracle of a recall audit against the exact squared-L2 search."""
+    return _recall_sql(_exact_l2_sql(PQ_TOPK), QUERIES[approx].oracle,
+                       PQ_TOPK)
 
 
-def _pq_rerank_recall_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    rr = QUERIES["sim_pq_rerank_search"].oracle
-    d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    exact_k AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {d2}, c.vec_id) AS rank
-            FROM e q JOIN e c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id % {PROBE_MOD} = 0 AND q.vec_id < {PROBE_CAP})
-        WHERE rank <= {PQ_TOPK}),
-    rr_full AS ({rr})
-    SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           round(count(a.neighbor_id) * 1.0 / {PQ_TOPK}, 6) AS recall_at_k
-    FROM exact_k e
-    LEFT JOIN rr_full a ON a.query_id = e.query_id
-                       AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """
-
-
-@query("sim_pq_rerank_recall", oracle=_pq_rerank_recall_oracle())
+@query("sim_pq_rerank_recall", oracle=_l2_recall("sim_pq_rerank_search"))
 def sim_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of the re-ranked PQ search against exact
     squared-L2 brute force — the measured sign-off number for the
-    refine stage (every approximate path in this repo ships one). Same
-    shape as ``sim_pq_recall_report``; the only difference is the
-    audited frame. Because the re-rank orders its shortlist exactly,
-    this recall is exactly shortlist membership of the true top-k —
-    the number the PQ_RERANK width buys (VERDICT r10 item 7: the sf1
-    recall dial)."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
-        "vec_id", as_double(F.col("embedding")).alias("emb"))
-    q = (e.filter(_probe_filter())
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("emb").alias("qemb"),
-                  dot(F.col("emb"), F.col("emb")).alias("qq")))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("emb").alias("cemb"),
-                 dot(F.col("emb"), F.col("emb")).alias("cc"))
-    d2 = (F.col("qq") - 2 * dot(F.col("qemb"), F.col("cemb"))
-          + F.col("cc"))
-    wrank = Window.partitionBy("query_id").orderBy(d2, F.asc("neighbor_id"))
-    exact_k = (F.broadcast(q)
-               .join(c, F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("rank", F.row_number().over(wrank))
-               .filter(F.col("rank") <= PQ_TOPK)
-               .select("query_id", "neighbor_id"))
-    rr = (sim_pq_rerank_search(spark, sf_dir)
-          .select("query_id", F.col("neighbor_id").alias("rr_neighbor")))
-    return (
-        exact_k.join(
-            rr, (exact_k.query_id == rr.query_id)
-            & (exact_k.neighbor_id == rr.rr_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("rr_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / PQ_TOPK, 6).alias("recall_at_k"))
-    )
+    refine stage (every approximate path in this repo ships one):
+    ``_recall_at_k`` of the re-ranked frame against ``_exact_l2_topk``.
+    Because the re-rank orders its shortlist exactly, this recall is
+    exactly shortlist membership of the true top-k — the number the
+    PQ_RERANK width buys (VERDICT r10 item 7: the sf1 recall dial)."""
+    return _recall_at_k(_exact_l2_topk(spark, sf_dir, PQ_TOPK),
+                        sim_pq_rerank_search(spark, sf_dir), PQ_TOPK)
 
 
-def _pq_recall_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    pq = QUERIES["sim_pq_adc_search"].oracle
-    # exact squared-L2 in the dot-product grouping (aa - 2ab + bb), the
-    # same float evaluation order as the Spark side's dot() fold — the
-    # brute-force sibling in PQ's native metric.
-    d2 = ("list_dot_product(q.emb, q.emb) "
-          "- 2 * list_dot_product(q.emb, c.emb) "
-          "+ list_dot_product(c.emb, c.emb)")
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    exact_k AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {d2}, c.vec_id) AS rank
-            FROM e q JOIN e c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id % {PROBE_MOD} = 0 AND q.vec_id < {PROBE_CAP})
-        WHERE rank <= {PQ_TOPK}),
-    pq_full AS ({pq})
-    SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           round(count(a.neighbor_id) * 1.0 / {PQ_TOPK}, 6) AS recall_at_k
-    FROM exact_k e
-    LEFT JOIN pq_full a ON a.query_id = e.query_id
-                       AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """
-
-
-@query("sim_pq_recall_report", oracle=_pq_recall_oracle())
+@query("sim_pq_recall_report", oracle=_l2_recall("sim_pq_adc_search"))
 def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of PQ-ADC against exact squared-L2 brute force —
     every approximate path in this repo ships with a measured sign-off
-    number (the ``sim_ann_recall_report`` / ``sim_ivf_recall_report``
-    discipline), and PQ's is measured in PQ's NATIVE metric (L2), not
-    borrowed from the cosine exact search. Exact side evaluates
-    ‖q−c‖² as qq − 2qc + cc with the in-order dot() fold so both
-    engines group the floats identically; the PQ side is the
-    registered query itself (oracle nests its SQL as a CTE). Scale:
-    probe-bounded on both sides; the audit join touches |probes| × k
-    rows. The knob this report prices at 100 TB is PQ_BITS (lattice
-    bits per dimension): finer quantization → higher recall and a
-    proportionally larger code table. Measured at the round-10
-    codebook shape (3-bit lattice, 64 codes/subspace): mean recall@3
-    0.70 / 0.60 at sf0.01 / sf0.1 vs 0.15 for the 10-code round-9
-    form, above the whole IVF-multiprobe recall curve (0.22→0.42) —
-    GROWTH_r10_pq_tiers.json carries the tier numbers."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
-        "vec_id", as_double(F.col("embedding")).alias("emb"))
-    q = (e.filter(_probe_filter())
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("emb").alias("qemb"),
-                  dot(F.col("emb"), F.col("emb")).alias("qq")))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("emb").alias("cemb"),
-                 dot(F.col("emb"), F.col("emb")).alias("cc"))
-    d2 = (F.col("qq") - 2 * dot(F.col("qemb"), F.col("cemb"))
-          + F.col("cc"))
-    wrank = Window.partitionBy("query_id").orderBy(d2, F.asc("neighbor_id"))
-    exact_k = (F.broadcast(q)
-               .join(c, F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("rank", F.row_number().over(wrank))
-               .filter(F.col("rank") <= PQ_TOPK)
-               .select("query_id", "neighbor_id"))
-    pq = (sim_pq_adc_search(spark, sf_dir)
-          .select("query_id", F.col("neighbor_id").alias("pq_neighbor")))
-    return (
-        exact_k.join(
-            pq, (exact_k.query_id == pq.query_id)
-            & (exact_k.neighbor_id == pq.pq_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("pq_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / PQ_TOPK, 6).alias("recall_at_k"))
-    )
+    number (``_recall_at_k``), and PQ's is measured in PQ's NATIVE
+    metric (L2, ``_exact_l2_topk``), not borrowed from the cosine exact
+    search; the PQ side is the registered query itself (the oracle
+    nests its SQL). Scale: probe-bounded on both sides; the audit join
+    touches |probes| × k rows. The knob this report prices at 100 TB
+    is PQ_BITS (lattice bits per dimension): finer quantization →
+    higher recall and a proportionally larger code table. Measured at
+    the round-10 codebook shape (3-bit lattice, 64 codes/subspace):
+    mean recall@3 0.70 / 0.60 at sf0.01 / sf0.1 vs 0.15 for the
+    10-code round-9 form, above the whole IVF-multiprobe recall curve
+    (0.22→0.42) — GROWTH_r10_pq_tiers.json carries the tier numbers."""
+    return _recall_at_k(_exact_l2_topk(spark, sf_dir, PQ_TOPK),
+                        sim_pq_adc_search(spark, sf_dir), PQ_TOPK)
 
 
 IVFPQ_PROBE_CELLS = 2   # coarse cells scanned per probe (multiprobe)
@@ -1873,24 +1689,8 @@ sim_ivfpq_search.__doc__ = sim_ivfpq_search.__doc__.format(
     p=IVFPQ_PROBE_CELLS)
 
 
-def _ivfpq_rerank_oracle() -> str:
-    d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
-    return f"""
-    WITH shortlist AS ({_ivfpq_oracle(PQ_RERANK)}),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-          FROM embeddings)
-    SELECT query_id, neighbor_id, round(d2, 6) AS dist2, rank FROM (
-        SELECT s.query_id, s.neighbor_id, {d2} AS d2,
-               row_number() OVER (PARTITION BY s.query_id
-                                  ORDER BY {d2}, s.neighbor_id) AS rank
-        FROM shortlist s
-        JOIN e q ON q.vec_id = s.query_id
-        JOIN e c ON c.vec_id = s.neighbor_id)
-    WHERE rank <= {PQ_TOPK}
-    """
-
-
-@query("sim_ivfpq_rerank_search", oracle=_ivfpq_rerank_oracle())
+@query("sim_ivfpq_rerank_search",
+       oracle=_exact_l2_sql(PQ_TOPK, _ivfpq_oracle(PQ_RERANK)))
 def sim_ivfpq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete production ANN path: IVF cell pruning → PQ-ADC
     scoring → exact re-rank of the shortlist (FAISS ``IVFx,PQy`` +
@@ -1906,13 +1706,13 @@ def sim_ivfpq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the cell-pruned ADC ranking (identical to
     ``sim_ivfpq_search``) cut at ``PQ_RERANK``, then the shared
-    ``_exact_rerank`` refine join — shortlist broadcasts, corpus
+    ``_exact_l2_topk`` refine join — shortlist broadcasts, corpus
     scanned once, never shuffled. The oracle nests the full IVF-PQ
     pipeline at shortlist width and replicates the exact re-score."""
     sl = (_ivfpq_ranked(spark, sf_dir)
           .filter(F.col("rank") <= PQ_RERANK)
           .select("query_id", "neighbor_id"))
-    return _exact_rerank(spark, sf_dir, sl)
+    return _exact_l2_topk(spark, sf_dir, PQ_TOPK, sl)
 
 
 # ---------------------------------------------------------------------------
@@ -1943,139 +1743,46 @@ _INGEST_BATCH_SQL = f"vec_id % {INGEST_MOD} = {INGEST_REM}"
 
 
 
-class _CorpusCellIndex:
-    """The frozen coarse index as DRIVER-SIDE metadata: per-cell
-    centroid vectors and norms (and, with ``with_grid``, the PQ
-    quantization grid), collected from ONE distributed stats pass over
-    the corpus (optimization round 15, guide §1.2 step 1 / §2.4).
-
-    Why collected and not broadcast DataFrames: the index is n_cells ×
-    dim values — quantizer CONFIGURATION, bounded by the index shape
-    and never by corpus size (the same ≤-tiny-collect class as the
-    z-order histogram; a BroadcastExchange would collect the identical
-    rows to the driver anyway). Holding it as literals lets the cell
-    assignment be a pure projection (no explode, no aggregation
-    exchange, no window — see ``_ingest_assign_cells``), which at
-    100 TB removes every shuffle of the ingest batch and at bench
-    scale removes ~10 scheduled stages per query. Previously cen,
-    cnorm and the separate ``_pq_grid(corpus)`` each hung a full
-    corpus explode + aggregation under their own broadcast exchange,
-    re-aggregating the corpus up to four times per query.
-
-    Exactness: avg per (label, pos) is computed by the same
-    distributed aggregation as before; the grid's global min/max per
-    pos equal min-of-per-label-mins / max-of-per-label-maxes (exact
-    order-independent reductions); the norms sum cval² in ascending
-    pos order — the same order the exploded rows reached the old
-    per-label aggregate — in IEEE doubles, so every derived value is
-    bit-identical and the oracle contract holds.
-    """
-
-    __slots__ = ("labels", "cen", "cn", "mna", "wa", "label_dtype")
-
-    def __init__(self, corpus: DataFrame, with_grid: bool = False):
-        import math
-
-        rows = (corpus
-                .select("label", F.posexplode("emb").alias("pos0", "val"))
-                .groupBy("label", "pos0")
-                .agg(F.avg("val").alias("cval"),
-                     F.min("val").alias("mn"),
-                     F.max("val").alias("mx"))
-                .collect())
-        self.label_dtype = dict(corpus.dtypes)["label"]
-        by_label: dict = {}
-        for r in rows:
-            by_label.setdefault(r["label"], {})[r["pos0"]] = r
-        # A null cell label never equi-joined into any cell in the old
-        # relational form; the literal form has no place for it either.
-        assert None not in by_label, \
-            "null cell label in corpus index — relational join semantics " \
-            "would drop it; refusing to bake it into the literal index"
-        self.labels = sorted(by_label)
-        self.cen = {lb: [by_label[lb][p]["cval"] for p in sorted(by_label[lb])]
-                    for lb in self.labels}
-        self.cn = {lb: math.sqrt(_inorder_sum(v * v for v in self.cen[lb]))
-                   for lb in self.labels}
-        # NaN cosines (a zero-norm centroid) would order differently
-        # under the comparator sort than under the old window sort —
-        # fail loudly instead of silently diverging (cannot happen for
-        # mean vectors of non-degenerate cells).
-        assert all(c > 0 for c in self.cn.values()), \
-            "zero/NaN centroid norm in corpus index"
-        if not with_grid:
-            self.mna = self.wa = None
-            return
-        dims = sorted({p for rs in by_label.values() for p in rs})
-        self.mna = [min(by_label[lb][p]["mn"] for lb in self.labels)
-                    for p in dims]
-        self.wa = [max(max(by_label[lb][p]["mx"] for lb in self.labels)
-                       - self.mna[i], 1e-30)
-                   for i, p in enumerate(dims)]
-
-    def grid_cols(self):
-        """(mna, wa) literal array columns — the quantization grid the
-        ``_pq_bin_expr`` / ``_pq_sat_bin_expr`` encodes read."""
-        return (F.array(*[F.lit(v) for v in self.mna]),
-                F.array(*[F.lit(v) for v in self.wa]))
+def _ingest_corpus_cells(corpus: DataFrame):
+    """(cen, cnorm): the frozen coarse index from the CORPUS only —
+    per-(label, pos) centroid values and per-label centroid norms.
+    Tiny (n_cells × dim and n_cells rows) → broadcast material."""
+    cexpl = corpus.select(
+        "label", F.posexplode("emb").alias("pos0", "val")).select(
+        "label", (F.col("pos0") + 1).alias("pos"), "val")
+    cen = cexpl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
+    cnorm = cen.groupBy("label").agg(
+        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("cn"))
+    return cen, cnorm
 
 
-def _inorder_sum(it) -> float:
-    """Left-to-right IEEE double sum — the same association order as
-    Spark's in-partition aggregate over pos-ascending exploded rows and
-    the ``dot()`` fold (double addition is order-sensitive)."""
-    acc = 0.0
-    for x in it:
-        acc = acc + x
-    return acc
-
-
-def _ingest_corpus_cells(corpus: DataFrame, with_grid: bool = False):
-    """Build the frozen coarse index (see ``_CorpusCellIndex``)."""
-    return _CorpusCellIndex(corpus, with_grid)
-
-
-def _ingest_assign_cells(vecs: DataFrame, index: _CorpusCellIndex,
-                         n_cells: int, keep: tuple = ()) -> DataFrame:
+def _ingest_assign_cells(vecs: DataFrame, cen: DataFrame,
+                         cnorm: DataFrame, n_cells: int) -> DataFrame:
     """Top-``n_cells`` coarse-cell assignment by cosine against the
-    frozen centroids: (vec_id, label, ccos), ties broken by label —
-    the single assignment implementation shared by the ingest and the
-    post-ingest recall/serving paths.
-
-    Optimization round 15 (guide §2.4 "remove shuffles outright"):
-    a pure PROJECTION — per-row in-order dot folds against the literal
-    centroid vectors, a comparator array_sort for the (ccos desc,
-    label asc) top-``n_cells``, one inline explode. The previous
-    relational form (posexplode → two aggregations → window) shuffled
-    |vecs| × dim exploded rows twice and sorted a window per call; at
-    100 TB the ingest batch now never shuffles at all. Arithmetic is
-    fold-order-identical: dot sums products in ascending pos order
-    (what the old per-(vec_id, label) aggregate received), vn/cn are
-    the same sqrt-of-in-order-sums, ccos the same dot / (vn * cn).
-
-    ``keep`` lists pass-through columns of ``vecs`` to carry alongside
-    the assignment — consumers that previously re-joined the
-    assignment back onto ``vecs`` on vec_id (the encode/codes columns)
-    ride the same projection instead of paying that join."""
-    vn = l2norm(F.col("emb"))
-    cands = F.array(*[
-        F.struct(
-            F.lit(lb).cast(index.label_dtype).alias("label"),
-            (dot(F.col("emb"), F.array(*[F.lit(v) for v in index.cen[lb]]))
-             / (F.col("vn") * F.lit(index.cn[lb]))).alias("ccos"))
-        for lb in index.labels])
-    top = F.slice(
-        F.array_sort(cands, lambda l, r: (
-            F.when(l["ccos"] > r["ccos"], -1)
-             .when(l["ccos"] < r["ccos"], 1)
-             .when(l["label"] < r["label"], -1)
-             .when(l["label"] > r["label"], 1)
-             .otherwise(0))),
-        1, n_cells)
-    return (vecs.withColumn("vn", vn)
-            .select("vec_id", *keep, F.explode(top).alias("s"))
-            .select("vec_id", F.col("s.label").alias("label"),
-                    F.col("s.ccos").alias("ccos"), *keep))
+    broadcast frozen centroids: (vec_id, label, ccos), ties broken by
+    label — the single assignment implementation shared by the ingest
+    and the post-ingest recall (round-13 review: it existed three
+    times). The norm table is |vecs|-sized and joins on vec_id WITHOUT
+    a broadcast hint: for a probe set it is tiny anyway (AQE
+    broadcasts it), for a 100 TB ingest batch it must never pin
+    executor memory — only the n_cells-sized index tables broadcast."""
+    vexpl = vecs.select(
+        "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
+        "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+    vnorm = vexpl.groupBy("vec_id").agg(
+        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("vn"))
+    vpc = (vexpl.join(F.broadcast(cen), "pos")
+           .groupBy("vec_id", "label")
+           .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
+           .join(vnorm, "vec_id")
+           .join(F.broadcast(cnorm), "label")
+           .select("vec_id", "label",
+                   (F.col("dot") / (F.col("vn") * F.col("cn")))
+                    .alias("ccos")))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
+    return (vpc.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= n_cells)
+            .select("vec_id", "label", "ccos"))
 
 
 def _pq_sat_bin_expr(pos: int):
@@ -2189,7 +1896,7 @@ def sim_ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
-    cen, cnorm, grid = _ingest_corpus_cells(corpus, with_grid=True)
+    cen, cnorm = _ingest_corpus_cells(corpus)
     assigned = _ingest_assign_cells(batch, cen, cnorm, 1).select(
         "vec_id", F.col("label").alias("cell"),
         F.round("ccos", 6).alias("ccos"))
@@ -2197,6 +1904,7 @@ def sim_ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Saturating encode against the frozen corpus grid — see
     # _pq_sat_bin_expr; the oracle applies the identical
     # greatest/least clamps.
+    grid = _pq_grid(corpus)
     codes = _pq_sat_codes_arr()
     coded = (batch.crossJoin(F.broadcast(grid))
              .select("vec_id",
@@ -2216,7 +1924,7 @@ def _ingest_recall_oracle() -> str:
     batch ∪ corpus: the index labels are the ORIGINAL cells for corpus
     vectors and the INGEST-ASSIGNED cells for batch vectors (the
     centroid table stays corpus-only — frozen index)."""
-    return f"""
+    ivf_k = f"""
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
     corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
@@ -2269,25 +1977,15 @@ def _ingest_recall_oracle() -> str:
         FROM probes q
         JOIN passigned a ON a.vec_id = q.vec_id
         JOIN idx c ON c.label = a.label AND c.vec_id <> q.vec_id),
-    ivf_k AS (SELECT query_id, neighbor_id FROM (
+    ranked AS (
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= {IVF_K}),
-    exact_k AS (SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {_cos_sql('q.emb', 'c.emb')} DESC,
-                                           c.vec_id) AS rank
-        FROM probes q JOIN e c ON c.vec_id <> q.vec_id)
-        WHERE rank <= {IVF_K})
-    SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           round(count(a.neighbor_id) * 1.0 / {IVF_K}, 6) AS recall_at_k
-    FROM exact_k e
-    LEFT JOIN ivf_k a ON a.query_id = e.query_id
-                     AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
+        FROM scored)
+    SELECT query_id, neighbor_id FROM ranked WHERE rank <= {IVF_K}
     """
+    return _recall_sql(QUERIES["sim_cosine_topk_bruteforce"].oracle,
+                       ivf_k, IVF_K)
 
 
 @query("sim_ivf_incremental_recall", oracle=_ingest_recall_oracle())
@@ -2296,18 +1994,15 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiprobe IVF search over the POST-INGEST index (corpus vectors
     under their original cells ∪ batch vectors under their ingest-
     assigned cells; centroids stay corpus-only — the frozen-index
-    contract) and audit against exact cosine top-k over batch ∪ corpus.
+    contract) and audit it with ``_recall_at_k`` against
+    ``_exact_cosine_topk`` over batch ∪ corpus.
     A newly ingested vector is retrievable exactly when its assigned
     cell is among a probe's scanned cells — the recall number this
     report prices (every approximate path in this repo ships one; the
     ``sim_ivf_recall_multiprobe`` discipline). Plan shape matches the
     ingest + search queries: broadcast centroid/assignment tables, one
     cell-pruned scored join, bounded windows."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
@@ -2342,34 +2037,8 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrank = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("neighbor_id"))
     ivf_k = (scored.withColumn("rank", F.row_number().over(wrank))
-             .filter(F.col("rank") <= IVF_K)
-             .select("query_id", "neighbor_id"))
-
-    qx = (e.filter(_probe_filter())
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("emb").alias("qemb"),
-                  l2norm(F.col("emb")).alias("qnrm")))
-    cx = e.withColumn("nrm", l2norm(F.col("emb"))).alias("cx")
-    exact_scored = (
-        F.broadcast(qx).join(
-            cx, F.col("cx.vec_id") != F.col("query_id"))
-        .select("query_id", F.col("cx.vec_id").alias("neighbor_id"),
-                cosine_pair(F.col("qemb"), F.col("cx.emb"),
-                            F.col("qnrm"), F.col("cx.nrm")).alias("cos")))
-    exact_k = (exact_scored.withColumn("rank", F.row_number().over(wrank))
-               .filter(F.col("rank") <= IVF_K)
-               .select("query_id", F.col("neighbor_id").alias("xn")))
-
-    hits = ivf_k.select("query_id",
-                        F.col("neighbor_id").alias("ivf_neighbor"))
-    return (
-        exact_k.join(
-            hits, (exact_k.query_id == hits.query_id)
-            & (exact_k.xn == hits.ivf_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("ivf_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / IVF_K, 6).alias("recall_at_k")))
+             .filter(F.col("rank") <= IVF_K))
+    return _recall_at_k(_exact_cosine_topk(e, IVF_K), ivf_k, IVF_K)
 
 
 # ---------------------------------------------------------------------------
@@ -2394,8 +2063,7 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ingest_rerank_oracle() -> str:
-    d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
-    return f"""
+    shortlist = f"""
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings),
     corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
@@ -2495,22 +2163,14 @@ def _ingest_rerank_oracle() -> str:
                             AND a.label = ic.cell
             WHERE ic.vec_id <> q.query_id
             GROUP BY q.query_id, ic.vec_id),
-    shortlist AS (SELECT query_id, neighbor_id FROM (
+    ranked AS (
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY ad2, neighbor_id) AS rank
-        FROM adc) WHERE rank <= {PQ_RERANK}),
-    ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings)
-    SELECT query_id, neighbor_id, round(d2, 6) AS dist2, rank FROM (
-        SELECT s.query_id, s.neighbor_id, {d2} AS d2,
-               row_number() OVER (PARTITION BY s.query_id
-                                  ORDER BY {d2}, s.neighbor_id) AS rank
-        FROM shortlist s
-        JOIN ev q ON q.vec_id = s.query_id
-        JOIN ev c ON c.vec_id = s.neighbor_id)
-    WHERE rank <= {PQ_TOPK}
+        FROM adc)
+    SELECT query_id, neighbor_id FROM ranked WHERE rank <= {PQ_RERANK}
     """
+    return _exact_l2_sql(PQ_TOPK, shortlist)
 
 
 def _ingest_rerank_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2522,10 +2182,11 @@ def _ingest_rerank_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
-    cen, cnorm, grid = _ingest_corpus_cells(corpus, with_grid=True)
+    cen, cnorm = _ingest_corpus_cells(corpus)
     ingested = _ingest_assign_cells(batch, cen, cnorm, 1).select(
         "vec_id", "label")
 
+    grid = _pq_grid(corpus)
     ccoded = _pq_coded(corpus, grid).select(
         "vec_id", "label", "emb", "codes")
     bcoded = (batch.crossJoin(F.broadcast(grid))
@@ -2567,7 +2228,7 @@ def sim_ivf_incremental_rerank_search(spark: SparkSession,
     post-ingest code table (corpus codes + the batch's saturated
     codes; codebook = incrementally-maintained bin means) → ONE
     broadcast exact re-rank of the PQ_RERANK shortlist
-    (``_exact_rerank``: shortlist broadcasts, the full-precision
+    (``_exact_l2_topk``: shortlist broadcasts, the full-precision
     corpus is scanned once, never shuffled).
 
     This closes the loop the r13 round left open: ingest
@@ -2587,41 +2248,15 @@ def sim_ivf_incremental_rerank_search(spark: SparkSession,
     code table — which is ~8× smaller than the embeddings — and the
     refine reads |probes| × {PQ_RERANK} full vectors."""
     sl = _ingest_rerank_shortlist(spark, sf_dir)
-    return _exact_rerank(spark, sf_dir, sl)
+    return _exact_l2_topk(spark, sf_dir, PQ_TOPK, sl)
 
 
 sim_ivf_incremental_rerank_search.__doc__ = \
     sim_ivf_incremental_rerank_search.__doc__.format(PQ_RERANK=PQ_RERANK)
 
 
-def _ingest_rerank_recall_oracle() -> str:
-    from dask_lambda_example_spark.registry import QUERIES
-
-    rr = QUERIES["sim_ivf_incremental_rerank_search"].oracle
-    d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    exact_k AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {d2}, c.vec_id) AS rank
-            FROM e q JOIN e c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id % {PROBE_MOD} = 0 AND q.vec_id < {PROBE_CAP})
-        WHERE rank <= {PQ_TOPK}),
-    rr_full AS ({rr})
-    SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-           round(count(a.neighbor_id) * 1.0 / {PQ_TOPK}, 6) AS recall_at_k
-    FROM exact_k e
-    LEFT JOIN rr_full a ON a.query_id = e.query_id
-                       AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """
-
-
 @query("sim_ivf_incremental_rerank_recall",
-       oracle=_ingest_rerank_recall_oracle())
+       oracle=_l2_recall("sim_ivf_incremental_rerank_search"))
 def sim_ivf_incremental_rerank_recall(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """Recall@k sign-off for the incremental serving path (every
@@ -2631,37 +2266,8 @@ def sim_ivf_incremental_rerank_recall(spark: SparkSession,
     report prices is what the refine stage RECOVERS over the
     multiprobe-only ``sim_ivf_incremental_recall`` (0.21-0.25 @3 at
     r13 dials) — bounded above by cell membership of the true top-k,
-    exactly like the corpus-side ``sim_pq_rerank_recall``. Same audit
-    shape: probe-bounded exact side, |probes| × k audit join."""
-    # parallel="force": the exact brute-force audit side broadcasts the
-    # probe set, so this scan's partitioning is the only parallelism the
-    # O(probes x corpus) d2 folds get (VERDICT r14 item 1; measured
-    # 2.16 -> 1.21 s warm at sf0.1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
-        "vec_id", as_double(F.col("embedding")).alias("emb"))
-    q = (e.filter(_probe_filter())
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("emb").alias("qemb"),
-                  dot(F.col("emb"), F.col("emb")).alias("qq")))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("emb").alias("cemb"),
-                 dot(F.col("emb"), F.col("emb")).alias("cc"))
-    d2 = (F.col("qq") - 2 * dot(F.col("qemb"), F.col("cemb"))
-          + F.col("cc"))
-    wrank = Window.partitionBy("query_id").orderBy(d2, F.asc("neighbor_id"))
-    exact_k = (F.broadcast(q)
-               .join(c, F.col("neighbor_id") != F.col("query_id"))
-               .withColumn("rank", F.row_number().over(wrank))
-               .filter(F.col("rank") <= PQ_TOPK)
-               .select("query_id", "neighbor_id"))
-    rr = (sim_ivf_incremental_rerank_search(spark, sf_dir)
-          .select("query_id", F.col("neighbor_id").alias("rr_neighbor")))
-    return (
-        exact_k.join(
-            rr, (exact_k.query_id == rr.query_id)
-            & (exact_k.neighbor_id == rr.rr_neighbor), "left")
-        .groupBy(exact_k.query_id.alias("query_id"))
-        .agg(F.count("rr_neighbor").alias("n_hit"))
-        .select("query_id", "n_hit",
-                F.round(F.col("n_hit") / PQ_TOPK, 6).alias("recall_at_k"))
-    )
+    exactly like the corpus-side ``sim_pq_rerank_recall``: the same
+    ``_recall_at_k`` against ``_exact_l2_topk``."""
+    return _recall_at_k(_exact_l2_topk(spark, sf_dir, PQ_TOPK),
+                        sim_ivf_incremental_rerank_search(spark, sf_dir),
+                        PQ_TOPK)

@@ -87,35 +87,20 @@ PRIORITY_QUERIES = (
     # loaded driver host too.
     "agg_approx_sketches", "sim_mllib_brp_join", "mm_decode_fake_images",
     "stream_rate_source_smoke", "text_bpe_train", "text_bpe_encode",
-    # r14 additions (never driver-verified yet — VERDICT r13 items
-    # 3/4/5): the incremental-ANN serving path (ADC shortlist + exact
-    # refine over the frozen+ingested index) and its recall sign-off,
-    # substring-span cut lists + the funnel stage consuming them, and
-    # perceptual image dedup. All five oracle-gated. (The r13 trio —
-    # ingest, post-ingest recall, substring spans — earned full-green
-    # rows in CORRECTNESS_r13.json and rotates out.)
-    "sim_ivf_incremental_rerank_search", "sim_ivf_incremental_rerank_recall",
-    "dedup_substring_cutlist", "dedup_image_phash",
-    "pipeline_curation_funnel_cut",
-    # r14 second wave (never driver-verified yet): the constant-output
-    # canonical-assignment consumer over the image fingerprints (the
-    # at-scale form GROWTH_r14_image_phash.json's output-physics note
-    # calls for) and the audio × dedup intersection (real RIFF/WAVE
-    # parse → 63-bit energy-sign fingerprint → the same bucket-min
-    # canonicalization). Both oracle-gated.
-    "dedup_image_phash_canonical", "dedup_audio_fingerprint",
-    # r14 third wave: video × dedup — spatio-temporal fingerprint over
-    # the REAL MJPEG demux + JPEG decode, same bucket-min canonical
-    # form; closes the text/image/audio/video modality matrix.
-    "dedup_video_fingerprint",
-    # r14 fourth wave: the adaptive IVF probe dial (margin-of-best cell
-    # keep, capped) + its recall twin + the probe-spend stats — the
-    # measured answer to the fixed-dial recall commentary.
-    "sim_ivf_search_adaptive", "sim_ivf_recall_adaptive",
-    "sim_ivf_adaptive_probe_stats",
-    # REVERIFY re-earn (saturated-encode helpers lifted to module level
-    # for the rerank path — identical expressions, changed code):
-    "sim_ivf_incremental_ingest",
+    # The r14 additions earned green rows in CORRECTNESS_r14/r15.json
+    # and rotate out, except the incremental-ANN trio, whose r15 rows
+    # are red: the r15 snapshot crashed them (half-migrated coarse-index
+    # refactor, since reverted to the r14 form). They lead the head
+    # together with the REVERIFY names below.
+    "sim_ivf_incremental_ingest", "sim_ivf_incremental_rerank_search",
+    "sim_ivf_incremental_rerank_recall",
+    # REVERIFY re-earn: the similarity family's recall audits, exact
+    # top-k searches and refine stage now share one implementation each.
+    "sim_cosine_topk_bruteforce", "sim_search_auto",
+    "sim_ann_recall_report", "sim_ivf_recall_report",
+    "sim_ivf_recall_multiprobe", "sim_ivf_recall_adaptive",
+    "sim_pq_rerank_search", "sim_pq_rerank_recall", "sim_pq_recall_report",
+    "sim_ivfpq_rerank_search", "sim_ivf_incremental_recall",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -137,6 +122,8 @@ CORRECTNESS_ARTIFACTS = (
     "CORRECTNESS_r11.json",
     "CORRECTNESS_r12.json",
     "CORRECTNESS_r13.json",
+    "CORRECTNESS_r14.json",
+    "CORRECTNESS_r15.json",
 )
 
 # Names whose implementation changed materially after their last green
@@ -149,63 +136,66 @@ CORRECTNESS_ARTIFACTS = (
 # stream_rate_source_smoke's first-batch wait — is a rows-only query
 # that re-earns its row every round by construction, so it needs no
 # REVERIFY entry.
-# r14: sim_ivf_incremental_ingest's saturated-encode helpers were
-# lifted to module level (shared with the new rerank path). The
-# generated expressions are identical, but the code that earned the
-# r13 green row is not the code at HEAD — re-earn (ADVICE r3).
-REVERIFY: tuple[str, ...] = ("sim_ivf_incremental_ingest",)
+# Similarity consolidation: the incremental-ANN bodies went back to the
+# r14 form, the eight recall audits share one recall join
+# (similarity._recall_at_k), and the exact searches share one exact
+# top-k per metric (_exact_cosine_topk, _exact_l2_topk, which is also
+# the re-rank searches' refine stage). Results are unchanged, but none
+# of these names ran this code when it earned its last green row —
+# re-earn (ADVICE r3).
+REVERIFY: tuple[str, ...] = (
+    "sim_cosine_topk_bruteforce", "sim_search_auto",
+    "sim_ann_recall_report", "sim_ivf_recall_report",
+    "sim_ivf_recall_multiprobe", "sim_ivf_recall_adaptive",
+    "sim_pq_rerank_search", "sim_pq_rerank_recall", "sim_pq_recall_report",
+    "sim_ivfpq_rerank_search", "sim_ivf_incremental_ingest",
+    "sim_ivf_incremental_recall", "sim_ivf_incremental_rerank_search",
+    "sim_ivf_incremental_rerank_recall",
+)
 
 
-def _verdicts() -> dict[str, bool]:
-    """Per-name driver verdict from the pinned committed artifacts,
-    **latest round wins** — a name green in r01 but red in r03 counts as
-    unverified, so regressions rotate back into the window instead of
-    being masked by a stale green (review finding, ADVICE r3).
-
-    Green means: no error, row counts match, and — when the driver ran
-    the full oracle comparison — schema + value-hash match too. A
-    ``no_oracle`` row records only that the query ran (rows_match /
-    schema_match / hash_match are all null); that is NOT a correctness
-    signal, so it never marks the name verified — rows-only queries
-    re-earn their driver row every round.
+def _is_green(r: dict) -> bool:
+    """One CORRECTNESS row is green: no error, row counts match, and —
+    when the full oracle comparison ran — schema + value-hash match
+    too. A ``no_oracle`` row records only that the query ran
+    (rows_match / schema_match / hash_match are all null); that is NOT
+    a correctness signal, so it never marks the name verified —
+    rows-only queries re-earn their row every round.
     """
-    import json
-    import pathlib
-
-    verdicts: dict[str, bool] = {}
-    root = pathlib.Path(__file__).resolve().parent.parent
-    for fname in CORRECTNESS_ARTIFACTS:
-        try:
-            rows = json.loads((root / fname).read_text())
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            verdicts[name] = bool(
-                r.get("err") is None and r.get("rows_match")
+    return bool(r.get("err") is None and r.get("rows_match")
                 and r.get("schema_match") in (True, None)
                 and r.get("hash_match") in (True, None))
-    return verdicts
 
 
-def _last_green_round() -> dict[str, int]:
-    """Name -> index of the latest pinned artifact whose row is green
-    (staleness key for re-sampling: lower = longer unchecked)."""
+def _artifact_rows() -> list[tuple[int, str, dict]]:
+    """(artifact index, name, row) over the pinned committed artifacts,
+    oldest round first; a missing or unreadable artifact is skipped."""
     import json
     import pathlib
 
-    last: dict[str, int] = {}
     root = pathlib.Path(__file__).resolve().parent.parent
+    out = []
     for i, fname in enumerate(CORRECTNESS_ARTIFACTS):
         try:
             rows = json.loads((root / fname).read_text())
         except (OSError, ValueError):
             continue
-        for name, r in rows.items():
-            if (r.get("err") is None and r.get("rows_match")
-                    and r.get("schema_match") in (True, None)
-                    and r.get("hash_match") in (True, None)):
-                last[name] = i
-    return last
+        out.extend((i, name, r) for name, r in rows.items())
+    return out
+
+
+def _verdicts() -> dict[str, bool]:
+    """Per-name verdict, **latest round wins** — a name green in r01
+    but red in r03 counts as unverified, so regressions rotate back into
+    the window instead of being masked by a stale green (review finding,
+    ADVICE r3)."""
+    return {name: _is_green(r) for _, name, r in _artifact_rows()}
+
+
+def _last_green_round() -> dict[str, int]:
+    """Name -> index of the latest pinned artifact whose row is green
+    (staleness key for re-sampling: lower = longer unchecked)."""
+    return {name: i for i, name, r in _artifact_rows() if _is_green(r)}
 
 
 def driver_verified() -> set[str]:

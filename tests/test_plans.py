@@ -908,6 +908,49 @@ def test_ivf_incremental_rerank_refine_is_one_broadcast(spark, sf_dir):
     assert all("Cross" in b for b in bnlj) and len(bnlj) <= 1, bnlj
 
 
+def test_exact_l2_audit_broadcasts_probes_over_streamed_corpus(spark, sf_dir):
+    # the one exact squared-L2 top-k (similarity._exact_l2_topk) keeps
+    # its brute-force shape under each of its three recall-audit
+    # consumers: exactly one probe x corpus join (non-equi on
+    # neighbor_id != query_id), the probe side (qq) is the broadcast
+    # build side, and the corpus side (cc) streams from its scan with
+    # no hash/range shuffle before the join. The only exchange allowed
+    # there is load_table's footer-gated round-robin rebalance.
+    import re
+
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    def names(node):
+        return set(re.findall(r"(\w+)#\d+", node.output().toString()))
+
+    exact_join = re.compile(r"NOT \(neighbor_id#\d+L? = query_id#\d+L?\)")
+    for name in ("sim_pq_rerank_recall", "sim_pq_recall_report",
+                 "sim_ivf_incremental_rerank_recall"):
+        df = QUERIES[name].fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().executedPlan()
+        joins = [n for n in walk(plan)
+                 if exact_join.search(n.simpleString(400))]
+        assert len(joins) == 1, (name, [j.simpleString(400) for j in joins])
+        join = joins[0]
+        desc = join.simpleString(400)
+        assert join.nodeName() == "BroadcastNestedLoopJoin", (name, desc)
+        build, stream = ((join.children().apply(0), join.children().apply(1))
+                         if "BuildLeft" in desc else
+                         (join.children().apply(1), join.children().apply(0)))
+        assert build.nodeName() == "BroadcastExchange", (name, desc)
+        assert "qq" in names(build) and "cc" in names(stream), (name, desc)
+        below = list(walk(stream))
+        assert any(n.nodeName().startswith("Scan") for n in below), name
+        shuffles = [n.simpleString(200) for n in below
+                    if n.nodeName() == "Exchange"
+                    and "RoundRobinPartitioning" not in n.simpleString(200)]
+        assert not shuffles, (name, shuffles)
+
+
 def test_substring_cutlist_adds_no_joins(spark, sf_dir):
     # the cut-list consumer (round-14, VERDICT r13 item 4) is pure
     # gaps-and-islands OVER the span table: its plan must contain

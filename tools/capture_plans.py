@@ -1,6 +1,6 @@
 """Capture ``explain("formatted")`` for a set of queries into
-``plans/r14/<name>_<tag>.txt`` — run once with PYTHONPATH at the round's
-inherited HEAD (tag=before) and once at the optimized tree (tag=after).
+``OUTDIR/<name>_<tag>.txt`` — run once with PYTHONPATH at the parent
+commit (tag=before) and once at the changed tree (tag=after).
 
 Usage: PYTHONPATH=<repo-at-rev> python tools/capture_plans.py TAG OUTDIR name...
 """
