@@ -15,10 +15,10 @@ at 100 TB).
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -87,9 +87,90 @@ def ensure_portable_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# Session confs that change what parquet schema inference returns for
+# the same files; part of ``table_schema``'s memo key.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_SCHEMA_CACHE: dict[tuple, tuple] = {}
+
+
+def _memo(cache: dict, key: tuple, fingerprint: tuple, compute):
+    """One entry per ``key``, holding (fingerprint, value): a hit needs
+    the stored fingerprint to equal the current one, and a miss
+    overwrites the entry, so a table rewritten in place is recomputed
+    and the cache never grows with rewrites."""
+    hit = cache.get(key)
+    if hit is None or hit[0] != fingerprint:
+        hit = cache[key] = (fingerprint, compute())
+    return hit[1]
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet-inferred schema of one driver table, memoized.
+
+    ``spark.read.parquet(path)`` runs a schema-inference JOB (footer
+    reads) every time it is called; a table's schema is a function of
+    its files and of the session's inference confs, so it is inferred
+    once per (``table_fingerprint``, ``_PARQUET_INFERENCE_CONFS``
+    values) and later reads pass it with ``spark.read.schema`` —
+    building a DataFrame then launches no job (ADVICE r4). A rewritten
+    table changes the fingerprint and is re-inferred. The memo holds the
+    Python ``StructType``, never a JVM handle, so it stays valid across
+    SparkContexts, and it needs no JVM gateway (works over Spark
+    Connect).
+
+    A table the driver cannot stat locally (an object-store URI, or a
+    path only a remote Connect server sees) has no fingerprint; its
+    schema is inferred on every call, as a plain ``spark.read`` does."""
+    ensure_portable_session(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        fingerprint = table_fingerprint(sf_dir, name)
+    except FileNotFoundError:
+        return spark.read.parquet(path).schema
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS)
+    return _memo(_SCHEMA_CACHE, (path, confs), fingerprint,
+                 lambda: spark.read.parquet(path).schema)
+
+
+def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:
+    """events.ts contract: session-timezone TIMESTAMP (µs), regardless of
+    how the driver generated the file; ``schema`` is the scan's schema.
+    Two observed encodings:
+
+    - TIMESTAMP(NANOS): scans as bigint under nanosAsLong → truncate
+      ns→µs (what DuckDB does on the same file).
+    - timestamp[us] without tz: scans as TIMESTAMP_NTZ → cast to
+      TIMESTAMP; the session is pinned UTC so the wall-clock value is
+      preserved bit-for-bit, matching DuckDB's naive read.
+
+    Shared by the batch scan (``load_table``) and the file stream
+    (``streaming.pipeline.events_stream``)."""
+    ts_type = {f.name: f.dataType.simpleString() for f in schema}.get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str,
                parallel: bool = False) -> DataFrame:
     """Columnar scan of one driver table (pushdown/pruning-eligible).
+
+    The scan reads with the table's memoized schema (``table_schema``):
+    the schema is inferred once per table fingerprint, and every later
+    build of the same table launches no Spark job. That holds for
+    tables on the driver's local file system (plain path or
+    ``file://``); other schemes infer the schema on every build, as
+    ``spark.read.parquet`` does.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS): with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as a long of
@@ -123,20 +204,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     global floor de-parallelized five such queries 1.5-4x at the
     driver's SF). Call sites with that shape opt out of the floor.
     """
-    ensure_portable_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # events.ts contract: session-timezone TIMESTAMP (µs), regardless of
-    # how the driver generated the file. Two observed encodings:
-    #   - TIMESTAMP(NANOS): scans as bigint under nanosAsLong → truncate
-    #     ns→µs (what DuckDB does on the same file).
-    #   - timestamp[us] without tz: scans as TIMESTAMP_NTZ → cast to
-    #     TIMESTAMP; the session is pinned UTC so the wall-clock value is
-    #     preserved bit-for-bit, matching DuckDB's naive read.
-    ts_type = dict(df.dtypes).get("ts")
-    if name == "events" and ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif name == "events" and ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events":
+        df = normalize_events_ts(df, schema)
     if parallel == "force" or (
             parallel and parquet_rowcount(sf_dir, name) >= PARALLEL_MIN_ROWS):
         df = df.repartition(spark.sparkContext.defaultParallelism)
@@ -151,8 +222,16 @@ def table_files(sf_dir: str, name: str, pattern: str = "*.parquet") -> list:
     and so no caller can silently treat a typo'd table name as empty
     (ADVICE r5; review r9 found six divergent copies of this walk)."""
     import pathlib
+    from urllib.parse import urlparse
 
-    p = pathlib.Path(sf_dir) / f"{name}.parquet"
+    # sf_dir is a local path or a file:// URI; any other scheme (s3a://,
+    # ...) is not on the driver's file system and fails like a missing
+    # table.
+    uri = urlparse(sf_dir)
+    if uri.scheme not in ("", "file"):
+        raise FileNotFoundError(
+            f"{sf_dir!r} is not on the driver's local file system")
+    p = pathlib.Path(uri.path if uri.scheme else sf_dir) / f"{name}.parquet"
     files = ([p] if p.is_file()
              else sorted(f for f in p.rglob(pattern) if f.is_file())
              if p.is_dir() else [])
@@ -162,7 +241,9 @@ def table_files(sf_dir: str, name: str, pattern: str = "*.parquet") -> list:
     return files
 
 
-@lru_cache(maxsize=256)
+_ROWCOUNT_CACHE: dict[tuple, tuple] = {}
+
+
 def parquet_rowcount(sf_dir: str, name: str) -> int:
     """Exact row count of one driver table from parquet FOOTER metadata —
     a driver-local file-stat read, NO Spark job. Operators that size an
@@ -176,16 +257,16 @@ def parquet_rowcount(sf_dir: str, name: str) -> int:
     name silently picking the small-scale configuration is the worst
     failure mode.
 
-    The lru_cache assumes driver tables under an sf_dir are IMMUTABLE
-    for the process lifetime (true for every current caller; the tier
-    generators write to fresh directories). A future in-process writer
-    must invalidate with ``parquet_rowcount.cache_clear()`` or key on
-    ``table_fingerprint`` like ``parquet_column_values`` (ADVICE r14).
+    Memoized per (sf_dir, name) against ``table_fingerprint`` — the
+    same fingerprint ``table_schema`` checks — so a table rewritten
+    in-process is recounted instead of going stale (ADVICE r14).
     """
     import pyarrow.parquet as pq
 
-    return sum(pq.ParquetFile(f).metadata.num_rows
-               for f in table_files(sf_dir, name))
+    return _memo(_ROWCOUNT_CACHE, (sf_dir, name),
+                 table_fingerprint(sf_dir, name),
+                 lambda: sum(pq.ParquetFile(f).metadata.num_rows
+                             for f in table_files(sf_dir, name)))
 
 
 def parquet_column_ndv(sf_dir: str, name: str, column: str) -> int:
@@ -239,7 +320,9 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
     mtime_ns) per file, a driver-local stat with NO Spark job. Memo
     keys that must invalidate when the data under an sf_dir is
     regenerated in-session (e.g. tools/make_skew.py rewriting a tier)
-    include this alongside the path. Fails loudly on a missing table —
+    include this alongside the path; ``table_schema`` and
+    ``parquet_rowcount`` check it. Recurses into a directory-of-parts
+    table, so rewriting, adding or removing a part changes it. Fails loudly on a missing table —
     same contract as ``parquet_rowcount`` (ADVICE r5/r8): a typo'd name
     silently degrading the cache key to path-only is the worst mode."""
     return tuple((f.name, (st := f.stat()).st_size, st.st_mtime_ns)

@@ -29,6 +29,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_lambda_example_spark.io import (
+    load_table, normalize_events_ts, table_schema)
 from dask_lambda_example_spark.registry import query
 from dask_lambda_example_spark.session import scratch_mkdtemp
 
@@ -67,37 +69,32 @@ def events_stream(spark: SparkSession, sf_dir: str,
                   files_per_trigger: int | None = None) -> DataFrame:
     """Streaming scan of the events table via the file source (the
     S3-event-trigger analog, A19). Schema is pinned from the parquet
-    footer (no inference mid-stream); the raw ns-long ts converts the
-    same way as ``io.load_table``. ``files_per_trigger`` sets
-    ``maxFilesPerTrigger`` so a directory-of-parts backlog arrives as a
-    sliced micro-batch sequence instead of one giant batch (the audit
-    tooling's arrival model; registered queries leave it unset)."""
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    footer through ``io.table_schema`` (inferred once per table
+    fingerprint, no inference mid-stream); ts converts with
+    ``io.normalize_events_ts``, exactly as ``io.load_table`` does.
+    ``files_per_trigger`` sets ``maxFilesPerTrigger`` so a
+    directory-of-parts backlog arrives as a sliced micro-batch sequence
+    instead of one giant batch (the audit tooling's arrival model;
+    registered queries leave it unset)."""
+    batch_schema = table_schema(spark, sf_dir, "events")
     # two on-disk layouts exist: a single file `events.parquet` (driver
     # testdata) and a DIRECTORY of part files (the scale tiers from
     # tools/make_sf1.py). The file source treats a directory path as
     # its root, so point at the table path when it IS a directory; the
     # glob filter is only needed for the single-file-in-shared-dir case
     # (without it the stream would ingest every sibling table).
-    import os as _os
-
     tbl = f"{sf_dir}/events.parquet"
     reader = spark.readStream.schema(batch_schema)
     if files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
-    if _os.path.isdir(tbl):
+    if os.path.isdir(tbl):
         stream = reader.parquet(tbl)
     else:
         stream = (
             reader.option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(stream, batch_schema)
 
 
 def run_available_now(df: DataFrame, table: str,
@@ -436,8 +433,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), which is what keeps this safe at any stream rate. Complete-
     mode aggregation over the static input equals the batch join the
     oracle runs."""
-    from dask_lambda_example_spark.io import load_table
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment")
     joined = (

@@ -2237,3 +2237,132 @@ def test_pq_expression_cache_reuses_per_context(spark):
 
     assert _pq_sat_codes_arr() is _pq_sat_codes_arr()
     assert _pq_adc_fold() is _pq_adc_fold()
+
+
+def test_table_builds_launch_no_job(spark, sf_dir):
+    """After one warm-up load, loading every TPC-H table and building
+    each of q1-q22 launches no Spark job: the parquet schema comes from
+    the ``table_schema`` memo instead of an inference job on every
+    ``spark.read.parquet`` (ADVICE r4: building a DataFrame launches no
+    job). Checked by job group, so jobs of other threads don't count."""
+    import re
+
+    from dask_lambda_example_spark.io import load_table
+    from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
+    names = [n for n in QUERIES if re.fullmatch(r"q\d+_\w+", n)]
+    assert len(names) == 22
+    tpch = ("region", "nation", "customer", "supplier", "part", "orders",
+            "lineitem")
+    for t in tpch:
+        load_table(spark, sf_dir, t)
+    sc = spark.sparkContext
+    group = "test_table_builds_launch_no_job"
+    sc.setJobGroup(group, "load_table and q1-q22 builds")
+    try:
+        for t in tpch:
+            load_table(spark, sf_dir, t)
+        for n in names:
+            QUERIES[n].fn(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_load_table_schema_matches_inference(spark, sf_dir, tmp_path):
+    """The memoized schema is the inferred one: for every driver table
+    (plain and ``file://`` sf_dir), and for an events table whose ts is
+    parquet TIMESTAMP(NANOS), which still scans as a long and converts
+    ns → µs by truncation."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from dask_lambda_example_spark.io import TABLES, load_table
+
+    def expected(sf, t):
+        inferred = spark.read.parquet(f"{sf}/{t}.parquet").schema
+        if t != "events":
+            return inferred
+        return StructType([StructField("ts", TimestampType(), True)
+                           if f.name == "ts" else f for f in inferred])
+
+    for t in TABLES:
+        want = expected(sf_dir, t)
+        assert load_table(spark, sf_dir, t).schema == want, t
+        assert load_table(spark, f"file://{sf_dir}", t).schema == want, t
+
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(
+        pa.table({"ts": pa.array([ns], pa.timestamp("ns")),
+                  "value": [1.5]}),
+        tmp_path / "events.parquet", version="2.6")
+    assert str(pq.read_schema(tmp_path / "events.parquet").field("ts").type) \
+        == "timestamp[ns]"
+    assert spark.read.parquet(
+        f"{tmp_path}/events.parquet").schema["ts"].dataType.simpleString() \
+        == "bigint"
+    events = load_table(spark, str(tmp_path), "events")
+    assert events.schema == expected(str(tmp_path), "events")
+    got = events.collect()[0]["ts"]
+    assert got == datetime.datetime(2023, 11, 14, 22, 13, 20, 123456)
+
+
+def test_table_schema_memo_follows_rewrites(spark, tmp_path):
+    """Rewriting a table in place invalidates the schema memo and the
+    footer row count: a single-file table and a directory-of-parts table
+    rewritten with an extra column (and more rows) read back with the
+    new schema and count (ADVICE r14: no memo goes stale in-process).
+    Each memo keeps one entry per table, so rewrites don't grow it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dask_lambda_example_spark.io import (
+        _ROWCOUNT_CACHE, _SCHEMA_CACHE, load_table, parquet_rowcount,
+        table_schema)
+
+    sf = str(tmp_path)
+    (tmp_path / "parts.parquet").mkdir()
+    layouts = {"single": tmp_path / "single.parquet",
+               "parts": tmp_path / "parts.parquet" / "part-00000.parquet"}
+    for name, path in layouts.items():
+        pq.write_table(pa.table({"a": [1, 2]}), path)
+        assert table_schema(spark, sf, name).fieldNames() == ["a"]
+        assert parquet_rowcount(sf, name) == 2
+        pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}),
+                       path)
+        assert table_schema(spark, sf, name).fieldNames() == ["a", "b"]
+        assert parquet_rowcount(sf, name) == 3
+        rows = load_table(spark, sf, name).orderBy("a").collect()
+        assert [tuple(r) for r in rows] == [(1, "x"), (2, "y"), (3, "z")]
+    assert sorted(k for k in _ROWCOUNT_CACHE if k[0] == sf) == [
+        (sf, "parts"), (sf, "single")]
+    assert sorted(k[0] for k in _SCHEMA_CACHE if k[0].startswith(sf)) == [
+        f"{sf}/parts.parquet", f"{sf}/single.parquet"]
+
+
+def test_load_table_needs_no_jvm_gateway(spark, sf_dir):
+    """The schema memo works on a session without a JVM gateway, as
+    over Spark Connect (no ``sparkContext``): the table fingerprint is a
+    driver-local stat, and the session is used only through ``conf`` and
+    ``read``. The Connect smoke test in test_portability skips where
+    grpcio is missing, so this is the check that runs everywhere."""
+    from dask_lambda_example_spark.io import load_table, table_schema
+
+    class NoGateway:
+        conf = property(lambda self: spark.conf)
+        read = property(lambda self: spark.read)
+
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no JVM gateway on this session")
+
+    remote = NoGateway()
+    for sf in (sf_dir, f"file://{sf_dir}"):
+        assert table_schema(remote, sf, "events") == table_schema(
+            spark, sf, "events")
+        assert load_table(remote, sf, "orders").count() == load_table(
+            spark, sf, "orders").count()
