@@ -32,12 +32,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # work in the battery (document shingling+hashing, ~1 ms/row: 3,000
 # rows ≈ the exchange's own scheduling cost on this host); numeric
 # per-row work (vector folds, PQ encodes, ~15 µs/row) breaks even far
-# higher. Env-tunable per deployment.
-try:
-    PARALLEL_MIN_ROWS = int(
-        os.environ.get("SPARK_GRAFT_PARALLEL_MIN_ROWS", "3000"))
-except ValueError:
-    PARALLEL_MIN_ROWS = 3000
+# higher; call sites with that shape pass ``parallel="force"``.
+PARALLEL_MIN_ROWS = 3000
 
 # Runtime-settable SQL confs every query needs regardless of which
 # SparkSession it runs in. The verification driver (and any real user of
@@ -286,33 +282,6 @@ def parquet_column_ndv(sf_dir: str, name: str, column: str) -> int:
         col = pq.read_table(f, columns=[column])[column]
         seen.update(pc.unique(col).to_pylist())
     return len(seen)
-
-
-_COLUMN_VALUES_CACHE: dict[tuple, list] = {}
-
-
-def parquet_column_values(sf_dir: str, name: str, column: str) -> list:
-    """Sorted distinct values of ONE small-cardinality column, read
-    driver-locally with pyarrow — the value-level sibling of
-    ``parquet_column_ndv`` (same contract, same ADVICE r4 no-job rule:
-    operators that bake a small code/label domain into a generated
-    expression need the values, not just the count). Memoized per
-    (sf_dir, column, table fingerprint) — the _MERGE_CACHE pattern —
-    because callers rebuild their plans repeatedly per battery run and
-    the read is a full-column driver scan. Only appropriate for columns
-    whose table fits a driver read; at real scale this list IS
-    configuration or comes from catalog stats."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    key = (sf_dir, name, column, table_fingerprint(sf_dir, name))
-    if key not in _COLUMN_VALUES_CACHE:
-        seen: set = set()
-        for f in table_files(sf_dir, name):
-            col = pq.read_table(f, columns=[column])[column]
-            seen.update(pc.unique(col).to_pylist())
-        _COLUMN_VALUES_CACHE[key] = sorted(seen)
-    return _COLUMN_VALUES_CACHE[key]
 
 
 def table_fingerprint(sf_dir: str, name: str) -> tuple:

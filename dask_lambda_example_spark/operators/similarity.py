@@ -434,132 +434,72 @@ def sim_mllib_brp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_K = 3
 
 
-@query(
-    "sim_ivf_centroids",
-    oracle="""
-    SELECT label, CAST(pos AS INT) AS pos, round(avg(val), 6) AS centroid_val
-    FROM (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS val,
-                 generate_subscripts(embedding, 1) AS pos
-          FROM embeddings)
-    GROUP BY label, pos
-    """,
-)
-def sim_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer build: the centroid of each cell (cells =
-    the label partitioning; a k-means assignment would slot in
-    identically) as (label, dim, value) rows — vector aggregation via
-    ``posexplode`` + one grouped average. At scale this is a single
-    partial+final aggregation over n_cells × dim groups, regardless of
-    corpus size."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True)
-    return (
-        e.select("label", F.posexplode(as_double(F.col("embedding")))
-                 .alias("pos0", "val"))
-        .select("label", (F.col("pos0") + 1).cast("int").alias("pos"), "val")
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("centroid_val"))
-    )
-
-
-def _ivf_search_oracle(n_probe_cells: int = 1,
-                       adapt_margin: float | None = None) -> str:
-    # fixed dial: keep the n_probe_cells best cells.  adaptive dial:
-    # keep cells whose centroid cosine is within ``adapt_margin`` of
-    # the best cell's, capped at n_probe_cells — easy probes scan one
-    # cell, ambiguous probes scan more (the FAISS nprobe heuristic,
-    # additive because cosine can be negative).
-    adapt = (f"AND ccos >= best - {adapt_margin}"
-             if adapt_margin is not None else "")
-    return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    expl AS (SELECT vec_id, label, unnest(emb) AS val,
-                    generate_subscripts(emb, 1) AS pos FROM e),
-    cen AS (SELECT label, pos, avg(val) AS cval FROM expl GROUP BY label, pos),
-    cnorm AS (SELECT label, sqrt(sum(cval * cval)) AS nrm FROM cen GROUP BY label),
-    probes AS (SELECT vec_id, emb FROM e
-               WHERE vec_id % {PROBE_MOD} = 0 AND vec_id < {PROBE_CAP}),
-    pexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM probes),
-    pnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS nrm
-              FROM pexpl GROUP BY vec_id),
-    pc AS (
-        SELECT p.vec_id, c.label,
-               sum(p.val * c.cval) / (pn.nrm * cn.nrm) AS ccos
-        FROM pexpl p JOIN cen c ON p.pos = c.pos
-        JOIN pnorm pn ON pn.vec_id = p.vec_id
-        JOIN cnorm cn ON cn.label = c.label
-        GROUP BY p.vec_id, c.label, pn.nrm, cn.nrm),
-    assigned AS (
-        SELECT vec_id, label FROM (
-            SELECT vec_id, label, ccos,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY ccos DESC, label) AS rn,
-                   max(ccos) OVER (PARTITION BY vec_id) AS best
-            FROM pc) WHERE rn <= {n_probe_cells} {adapt}),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_cos_sql('q.emb', 'c.emb')} AS cos
-        FROM probes q
-        JOIN assigned a ON a.vec_id = q.vec_id
-        JOIN e c ON c.label = a.label AND c.vec_id <> q.vec_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank FROM (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= {IVF_K}
-    """
-
-
-def _ivf_search_impl(spark: SparkSession, sf_dir: str,
-                     n_probe_cells: int, k: int = IVF_K,
-                     adapt_margin: float | None = None) -> DataFrame:
-    """Shared IVF pipeline: assign each probe to its ``n_probe_cells``
-    nearest centroids (with ``adapt_margin`` set, only those within
-    that cosine margin of the best cell — the adaptive dial), exact
-    top-k within those cells only."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
-    expl = e.select(
-        "vec_id", "label",
-        F.posexplode("emb").alias("pos0", "val")).select(
-        "vec_id", "label", (F.col("pos0") + 1).alias("pos"), "val")
-
-    cen = expl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
+def _ingest_corpus_cells(corpus: DataFrame):
+    """(cen, cnorm): the coarse index of a (label, emb) frame —
+    per-(label, pos) centroid values and per-label centroid norms.
+    The one centroid build: the IVF searches and ``sim_ivf_centroids``
+    pass the whole table, IVF-PQ takes ``cen`` for its L2 assignment,
+    the ingest family passes the frozen corpus only. Tiny (n_cells ×
+    dim and n_cells rows) → broadcast material."""
+    cexpl = corpus.select(
+        "label", F.posexplode("emb").alias("pos0", "val")).select(
+        "label", (F.col("pos0") + 1).alias("pos"), "val")
+    cen = cexpl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
     cnorm = cen.groupBy("label").agg(
-        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("nrm"))
+        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("cn"))
+    return cen, cnorm
 
-    probes = e.filter(_probe_filter())
-    pexpl = expl.filter(_probe_filter()).drop("label")
-    pnorm = pexpl.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
 
-    pc = (
-        pexpl.join(F.broadcast(cen), "pos")
-        .groupBy("vec_id", "label")
-        .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
-        .join(F.broadcast(pnorm.withColumnRenamed("nrm", "pn")), "vec_id")
-        .join(F.broadcast(cnorm.withColumnRenamed("nrm", "cn")), "label")
-        .select("vec_id", "label",
-                (F.col("dot") / (F.col("pn") * F.col("cn"))).alias("ccos"))
-    )
-    wassign = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
-    keep = F.col("rn") <= n_probe_cells
+def _ingest_assign_cells(vecs: DataFrame, cen: DataFrame,
+                         cnorm: DataFrame, n_cells: int,
+                         adapt_margin: float | None = None) -> DataFrame:
+    """Top-``n_cells`` coarse-cell assignment by cosine against the
+    broadcast centroids: (vec_id, label, ccos), ties broken by label —
+    the single cosine assignment, shared by the IVF searches' probes,
+    the ingest batch and the post-ingest recall. With ``adapt_margin``
+    set, only cells whose cosine is within that margin of the best
+    cell's are kept (the adaptive dial). The norm table is
+    |vecs|-sized and joins on vec_id WITHOUT a broadcast hint: for a
+    probe set it is tiny anyway (planned as a broadcast), for a 100 TB
+    ingest batch it must never pin executor memory — only the
+    n_cells-sized index tables broadcast."""
+    vexpl = vecs.select(
+        "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
+        "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
+    vnorm = vexpl.groupBy("vec_id").agg(
+        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("vn"))
+    vpc = (vexpl.join(F.broadcast(cen), "pos")
+           .groupBy("vec_id", "label")
+           .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
+           .join(vnorm, "vec_id")
+           .join(F.broadcast(cnorm), "label")
+           .select("vec_id", "label",
+                   (F.col("dot") / (F.col("vn") * F.col("cn")))
+                    .alias("ccos")))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
+    ranked = vpc.withColumn("rn", F.row_number().over(w))
+    keep = F.col("rn") <= n_cells
     if adapt_margin is not None:
-        keep = keep & (F.col("ccos")
-                       >= F.col("best") - F.lit(adapt_margin))
-    assigned = (pc.withColumn("rn", F.row_number().over(wassign))
-                .withColumn("best", F.max("ccos").over(
-                    Window.partitionBy("vec_id")))
-                .filter(keep)
-                .select("vec_id", "label"))
+        ranked = ranked.withColumn(
+            "best", F.max("ccos").over(Window.partitionBy("vec_id")))
+        keep = keep & (F.col("ccos") >= F.col("best") - F.lit(adapt_margin))
+    return ranked.filter(keep).select("vec_id", "label", "ccos")
 
+
+def _cell_pruned_cosine_topk(probes: DataFrame, assigned: DataFrame,
+                             idx: DataFrame, k: int) -> DataFrame:
+    """The one cell-pruned exact cosine scan: each probe (vec_id, emb)
+    is scored only against the ``idx`` rows (vec_id, label, emb) of
+    its ``assigned`` (vec_id, label) cells — the broadcast probe⋈cell
+    side equi-joins the index on ``label``, never a cartesian — then
+    ranked and cut at ``k``: (query_id, neighbor_id, cos, rank), cos
+    rounded to 6 places after ranking on the exact value."""
     q = (F.broadcast(probes.select("vec_id", "emb").join(assigned, "vec_id"))
          .select(F.col("vec_id").alias("query_id"),
                  F.col("label").alias("cell"),
                  F.col("emb").alias("qemb"),
                  l2norm(F.col("emb")).alias("qnrm")))
-    c = e.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
+    c = idx.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
     scored = (
         q.join(c, (F.col("c.label") == F.col("cell"))
                & (F.col("c.vec_id") != F.col("query_id")))
@@ -577,6 +517,122 @@ def _ivf_search_impl(spark: SparkSession, sf_dir: str,
     )
 
 
+def _cells_sql(src: str) -> str:
+    """DuckDB twin of ``_ingest_corpus_cells`` over the (label, emb)
+    relation ``src``: CTEs ``cexpl``, ``cen`` (label, pos, cval) and
+    ``cnorm`` (label, cn)."""
+    return f"""
+    cexpl AS (SELECT label, unnest(emb) AS val,
+                     generate_subscripts(emb, 1) AS pos FROM {src}),
+    cen AS (SELECT label, pos, avg(val) AS cval
+            FROM cexpl GROUP BY label, pos),
+    cnorm AS (SELECT label, sqrt(sum(cval * cval)) AS cn
+              FROM cen GROUP BY label)"""
+
+
+def _assign_sql(vecs: str, n: int, margin: float | None = None) -> str:
+    """DuckDB twin of ``_ingest_assign_cells`` for the (vec_id, emb)
+    relation ``vecs``, against ``_cells_sql``'s tables: CTEs
+    ``{vecs}_expl`` (vec_id, val, pos), ``{vecs}_norm``, ``{vecs}_pc``
+    and ``{vecs}_cells`` (vec_id, label, ccos)."""
+    # fixed dial: keep the n best cells.  adaptive dial: keep cells
+    # whose centroid cosine is within ``margin`` of the best cell's,
+    # capped at n — easy probes scan one cell, ambiguous probes scan
+    # more (the FAISS nprobe heuristic, additive because cosine can be
+    # negative).
+    adapt = f"AND ccos >= best - {margin}" if margin is not None else ""
+    return f"""
+    {vecs}_expl AS (SELECT vec_id, unnest(emb) AS val,
+                    generate_subscripts(emb, 1) AS pos FROM {vecs}),
+    {vecs}_norm AS (SELECT vec_id, sqrt(sum(val * val)) AS vn
+                    FROM {vecs}_expl GROUP BY vec_id),
+    {vecs}_pc AS (SELECT x.vec_id, c.label,
+                         sum(x.val * c.cval) / (xn.vn * cn.cn) AS ccos
+                  FROM {vecs}_expl x JOIN cen c USING (pos)
+                  JOIN {vecs}_norm xn ON xn.vec_id = x.vec_id
+                  JOIN cnorm cn ON cn.label = c.label
+                  GROUP BY x.vec_id, c.label, xn.vn, cn.cn),
+    {vecs}_cells AS (SELECT vec_id, label, ccos FROM (
+        SELECT vec_id, label, ccos,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY ccos DESC, label) AS rn,
+               max(ccos) OVER (PARTITION BY vec_id) AS best
+        FROM {vecs}_pc) WHERE rn <= {n} {adapt})"""
+
+
+def _cell_scan_sql(probes: str, cells: str, idx: str, k: int) -> str:
+    """DuckDB twin of ``_cell_pruned_cosine_topk``: the ``scored`` CTE
+    and the ranked final SELECT that close a WITH."""
+    return f"""
+    scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {_cos_sql('q.emb', 'c.emb')} AS cos
+        FROM {probes} q
+        JOIN {cells} a ON a.vec_id = q.vec_id
+        JOIN {idx} c ON c.label = a.label AND c.vec_id <> q.vec_id)
+    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank FROM (
+        SELECT query_id, neighbor_id, cos,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cos DESC, neighbor_id) AS rank
+        FROM scored) WHERE rank <= {k}
+    """
+
+
+_PROBES_CTE = ("probes AS (SELECT vec_id, emb FROM e q WHERE "
+               + _PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP) + ")")
+
+
+@query(
+    "sim_ivf_centroids",
+    oracle=f"""
+    WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS emb
+               FROM embeddings),
+    {_cells_sql('e')}
+    SELECT label, CAST(pos AS INT) AS pos, round(cval, 6) AS centroid_val
+    FROM cen
+    """,
+)
+def sim_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF coarse-quantizer build: the centroid of each cell (cells =
+    the label partitioning; a k-means assignment would slot in
+    identically) as (label, dim, value) rows — the shared
+    ``_ingest_corpus_cells`` vector aggregation (``posexplode`` + one
+    grouped average). At scale this is a single partial+final
+    aggregation over n_cells × dim groups, regardless of corpus
+    size."""
+    cen, _ = _ingest_corpus_cells(
+        load_table(spark, sf_dir, "embeddings", parallel=True).select(
+            "label", as_double(F.col("embedding")).alias("emb")))
+    return cen.select("label", "pos", F.round("cval", 6).alias("centroid_val"))
+
+
+def _ivf_search_oracle(n_probe_cells: int = 1,
+                       adapt_margin: float | None = None) -> str:
+    return f"""
+    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+               FROM embeddings),
+    {_cells_sql('e')},
+    {_PROBES_CTE},
+    {_assign_sql('probes', n_probe_cells, adapt_margin)},
+    {_cell_scan_sql('probes', 'probes_cells', 'e', IVF_K)}"""
+
+
+def _ivf_search_impl(spark: SparkSession, sf_dir: str,
+                     n_probe_cells: int, k: int = IVF_K,
+                     adapt_margin: float | None = None) -> DataFrame:
+    """Shared IVF pipeline: assign each probe to its ``n_probe_cells``
+    nearest centroids (with ``adapt_margin`` set, only those within
+    that cosine margin of the best cell — the adaptive dial), exact
+    top-k within those cells only."""
+    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
+        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+    cen, cnorm = _ingest_corpus_cells(e)
+    probes = e.filter(_probe_filter())
+    assigned = _ingest_assign_cells(probes, cen, cnorm, n_probe_cells,
+                                    adapt_margin)
+    return _cell_pruned_cosine_topk(probes, assigned, e, k)
+
+
 @query("sim_ivf_search", oracle=_ivf_search_oracle())
 def sim_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search: assign each probe to its nearest centroid (cosine
@@ -584,11 +640,13 @@ def sim_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     only* — the partition-pruned ANN scale path: with the corpus
     hash-partitioned by cell, each probe reads 1/n_cells of the data.
 
-    Probe↔centroid scoring runs in exploded (vec_id, pos, val) form on
-    BOTH sides so the float summation grouping is identical; the
-    in-cell rerank uses the exact HOF cosine. The oracle replicates the
-    whole pipeline — assignment mistakes (vs. brute force) are part of
-    the checked contract."""
+    Pipeline: ``_ingest_corpus_cells`` builds the centroids,
+    ``_ingest_assign_cells`` scores probe↔centroid cosines in exploded
+    (vec_id, pos, val) form — as do the oracle's ``_cells_sql`` and
+    ``_assign_sql`` CTEs, so the float summation grouping is identical
+    — and ``_cell_pruned_cosine_topk`` reranks in-cell with the exact
+    HOF cosine. The oracle replicates the whole pipeline — assignment
+    mistakes (vs. brute force) are part of the checked contract."""
     return _ivf_search_impl(spark, sf_dir, 1)
 
 
@@ -1574,8 +1632,7 @@ def _ivfpq_oracle(topk: int = PQ_TOPK) -> str:
             FROM sub s JOIN cb ON cb.m = s.m AND cb.pos = s.pos
             WHERE s.vec_id % {PROBE_MOD} = 0 AND s.vec_id < {PROBE_CAP}
             GROUP BY s.vec_id, s.m, cb.code),
-    cen AS (SELECT label, pos, avg(val) AS cval
-            FROM expl GROUP BY label, pos),
+    {_cells_sql('e')},
     assigned AS (SELECT query_id, cell FROM (
             SELECT p.vec_id AS query_id, cen.label AS cell,
                    row_number() OVER (
@@ -1649,15 +1706,13 @@ def _ivfpq_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coarse assignment: probe → top cells by exact L2 to the label
     # centroids (probe-bounded: |probes| × dim explode against the
     # broadcast centroid table)
-    expl = e.select("vec_id",
-                    F.posexplode("emb").alias("pos0", "val"))
-    cen = (e.select("label", F.posexplode("emb").alias("pos0", "val"))
-            .groupBy("label", "pos0")
-            .agg(F.avg("val").alias("cval")))
+    cen, _ = _ingest_corpus_cells(e)
+    pexpl = e.filter(_probe_filter()).select(
+        "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
+        "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
     cdiff = F.col("val") - F.col("cval")
     wcell = Window.partitionBy("query_id").orderBy("cd2", "cell")
-    assigned = (expl.filter(_probe_filter())
-                .join(F.broadcast(cen), "pos0")
+    assigned = (pexpl.join(F.broadcast(cen), "pos")
                 .groupBy(F.col("vec_id").alias("query_id"),
                          F.col("label").alias("cell"))
                 .agg(F.sum(cdiff * cdiff).alias("cd2"))
@@ -1741,48 +1796,16 @@ def _ingest_is_batch() -> Column:
 
 _INGEST_BATCH_SQL = f"vec_id % {INGEST_MOD} = {INGEST_REM}"
 
-
-
-def _ingest_corpus_cells(corpus: DataFrame):
-    """(cen, cnorm): the frozen coarse index from the CORPUS only —
-    per-(label, pos) centroid values and per-label centroid norms.
-    Tiny (n_cells × dim and n_cells rows) → broadcast material."""
-    cexpl = corpus.select(
-        "label", F.posexplode("emb").alias("pos0", "val")).select(
-        "label", (F.col("pos0") + 1).alias("pos"), "val")
-    cen = cexpl.groupBy("label", "pos").agg(F.avg("val").alias("cval"))
-    cnorm = cen.groupBy("label").agg(
-        F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("cn"))
-    return cen, cnorm
-
-
-def _ingest_assign_cells(vecs: DataFrame, cen: DataFrame,
-                         cnorm: DataFrame, n_cells: int) -> DataFrame:
-    """Top-``n_cells`` coarse-cell assignment by cosine against the
-    broadcast frozen centroids: (vec_id, label, ccos), ties broken by
-    label — the single assignment implementation shared by the ingest
-    and the post-ingest recall (round-13 review: it existed three
-    times). The norm table is |vecs|-sized and joins on vec_id WITHOUT
-    a broadcast hint: for a probe set it is tiny anyway (AQE
-    broadcasts it), for a 100 TB ingest batch it must never pin
-    executor memory — only the n_cells-sized index tables broadcast."""
-    vexpl = vecs.select(
-        "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
-        "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
-    vnorm = vexpl.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("vn"))
-    vpc = (vexpl.join(F.broadcast(cen), "pos")
-           .groupBy("vec_id", "label")
-           .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
-           .join(vnorm, "vec_id")
-           .join(F.broadcast(cnorm), "label")
-           .select("vec_id", "label",
-                   (F.col("dot") / (F.col("vn") * F.col("cn")))
-                    .alias("ccos")))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("label"))
-    return (vpc.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n_cells)
-            .select("vec_id", "label", "ccos"))
+# The oracle head every ingest query shares: the corpus/batch split,
+# the frozen corpus-only cells and the batch's nearest-cell assignment
+# (``batch_cells``).
+_INGEST_INDEX_SQL = f"""
+    e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+          FROM embeddings),
+    corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
+    batch AS (SELECT * FROM e WHERE {_INGEST_BATCH_SQL}),
+    {_cells_sql('corpus')},
+    {_assign_sql('batch', 1)}"""
 
 
 def _pq_sat_bin_expr(pos: int):
@@ -1824,31 +1847,7 @@ def _pq_sat_codes_arr():
 
 def _ingest_oracle() -> str:
     return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
-    batch AS (SELECT * FROM e WHERE {_INGEST_BATCH_SQL}),
-    cexpl AS (SELECT label, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM corpus),
-    cen AS (SELECT label, pos, avg(val) AS cval
-            FROM cexpl GROUP BY label, pos),
-    cnorm AS (SELECT label, sqrt(sum(cval * cval)) AS cn
-              FROM cen GROUP BY label),
-    bexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM batch),
-    bnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS pn
-              FROM bexpl GROUP BY vec_id),
-    pc AS (SELECT b.vec_id, c.label,
-                  sum(b.val * c.cval) / (pn.pn * cn.cn) AS ccos
-           FROM bexpl b JOIN cen c USING (pos)
-           JOIN bnorm pn ON pn.vec_id = b.vec_id
-           JOIN cnorm cn ON cn.label = c.label
-           GROUP BY b.vec_id, c.label, pn.pn, cn.cn),
-    assigned AS (SELECT vec_id, label, ccos FROM (
-        SELECT vec_id, label, ccos,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, label) AS rn
-        FROM pc) WHERE rn = 1),
+    WITH {_INGEST_INDEX_SQL},
     grid AS (SELECT pos, min(val) AS mn,
                     greatest(max(val) - min(val), 1e-30) AS w
              FROM (SELECT unnest(emb) AS val,
@@ -1856,7 +1855,8 @@ def _ingest_oracle() -> str:
              GROUP BY pos),
     bsub AS (SELECT vec_id, val, pos,
                     CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j FROM bexpl),
+                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
+             FROM batch_expl),
     codes AS (SELECT vec_id, m,
                      CAST(sum(greatest(0, least({PQ_LEVELS - 1},
                               CAST(floor((s.val - g.mn) / g.w
@@ -1870,7 +1870,7 @@ def _ingest_oracle() -> str:
              FROM codes GROUP BY vec_id)
     SELECT a.vec_id, a.label AS cell, round(a.ccos, 6) AS ccos,
            cstr.codes_str
-    FROM assigned a JOIN cstr USING (vec_id)
+    FROM batch_cells a JOIN cstr USING (vec_id)
     """
 
 
@@ -1925,65 +1925,14 @@ def _ingest_recall_oracle() -> str:
     vectors and the INGEST-ASSIGNED cells for batch vectors (the
     centroid table stays corpus-only — frozen index)."""
     ivf_k = f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
-    batch AS (SELECT * FROM e WHERE {_INGEST_BATCH_SQL}),
-    cexpl AS (SELECT label, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM corpus),
-    cen AS (SELECT label, pos, avg(val) AS cval
-            FROM cexpl GROUP BY label, pos),
-    cnorm AS (SELECT label, sqrt(sum(cval * cval)) AS cn
-              FROM cen GROUP BY label),
-    bexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM batch),
-    bnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS pn
-              FROM bexpl GROUP BY vec_id),
-    bpc AS (SELECT b.vec_id, c.label,
-                   sum(b.val * c.cval) / (pn.pn * cn.cn) AS ccos
-            FROM bexpl b JOIN cen c USING (pos)
-            JOIN bnorm pn ON pn.vec_id = b.vec_id
-            JOIN cnorm cn ON cn.label = c.label
-            GROUP BY b.vec_id, c.label, pn.pn, cn.cn),
-    ingested AS (SELECT vec_id, label FROM (
-        SELECT vec_id, label,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, label) AS rn
-        FROM bpc) WHERE rn = 1),
+    WITH {_INGEST_INDEX_SQL},
     idx AS (SELECT vec_id, label, emb FROM corpus
             UNION ALL
             SELECT b.vec_id, i.label, b.emb
-            FROM batch b JOIN ingested i USING (vec_id)),
-    probes AS (SELECT vec_id, emb FROM e
-               WHERE vec_id % {PROBE_MOD} = 0 AND vec_id < {PROBE_CAP}),
-    pexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM probes),
-    pnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS nrm
-              FROM pexpl GROUP BY vec_id),
-    ppc AS (SELECT p.vec_id, c.label,
-                   sum(p.val * c.cval) / (pn.nrm * cn.cn) AS ccos
-            FROM pexpl p JOIN cen c USING (pos)
-            JOIN pnorm pn ON pn.vec_id = p.vec_id
-            JOIN cnorm cn ON cn.label = c.label
-            GROUP BY p.vec_id, c.label, pn.nrm, cn.cn),
-    passigned AS (SELECT vec_id, label FROM (
-        SELECT vec_id, label,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, label) AS rn
-        FROM ppc) WHERE rn <= {IVF_PROBE_CELLS}),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_cos_sql('q.emb', 'c.emb')} AS cos
-        FROM probes q
-        JOIN passigned a ON a.vec_id = q.vec_id
-        JOIN idx c ON c.label = a.label AND c.vec_id <> q.vec_id),
-    ranked AS (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id FROM ranked WHERE rank <= {IVF_K}
-    """
+            FROM batch b JOIN batch_cells i USING (vec_id)),
+    {_PROBES_CTE},
+    {_assign_sql('probes', IVF_PROBE_CELLS)},
+    {_cell_scan_sql('probes', 'probes_cells', 'idx', IVF_K)}"""
     return _recall_sql(QUERIES["sim_cosine_topk_bruteforce"].oracle,
                        ivf_k, IVF_K)
 
@@ -2008,36 +1957,15 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = e.filter(_ingest_is_batch())
 
     cen, cnorm = _ingest_corpus_cells(corpus)
-
-    def assign(vecs: DataFrame, n_cells: int) -> DataFrame:
-        return _ingest_assign_cells(vecs, cen, cnorm, n_cells).select(
-            "vec_id", "label")
-
-    ingested = assign(batch, 1)
+    ingested = _ingest_assign_cells(batch, cen, cnorm, 1)
     idx = corpus.select("vec_id", "label", "emb").unionAll(
         batch.select("vec_id", "emb")
              .join(ingested, "vec_id")
              .select("vec_id", "label", "emb"))
 
-    probes = e.filter(_probe_filter()).select("vec_id", "emb")
-    passigned = assign(probes, IVF_PROBE_CELLS)
-
-    q = (F.broadcast(probes.join(passigned, "vec_id"))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("label").alias("cell"),
-                 F.col("emb").alias("qemb"),
-                 l2norm(F.col("emb")).alias("qnrm")))
-    c = idx.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
-    scored = (
-        q.join(c, (F.col("c.label") == F.col("cell"))
-               & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine_pair(F.col("qemb"), F.col("c.emb"),
-                            F.col("qnrm"), F.col("c.nrm")).alias("cos")))
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    ivf_k = (scored.withColumn("rank", F.row_number().over(wrank))
-             .filter(F.col("rank") <= IVF_K))
+    probes = e.filter(_probe_filter())
+    passigned = _ingest_assign_cells(probes, cen, cnorm, IVF_PROBE_CELLS)
+    ivf_k = _cell_pruned_cosine_topk(probes, passigned, idx, IVF_K)
     return _recall_at_k(_exact_cosine_topk(e, IVF_K), ivf_k, IVF_K)
 
 
@@ -2064,31 +1992,7 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ingest_rerank_oracle() -> str:
     shortlist = f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
-    batch AS (SELECT * FROM e WHERE {_INGEST_BATCH_SQL}),
-    cexpl AS (SELECT label, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM corpus),
-    cen AS (SELECT label, pos, avg(val) AS cval
-            FROM cexpl GROUP BY label, pos),
-    cnorm AS (SELECT label, sqrt(sum(cval * cval)) AS cn
-              FROM cen GROUP BY label),
-    bexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM batch),
-    bnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS pn
-              FROM bexpl GROUP BY vec_id),
-    bpc AS (SELECT b.vec_id, c.label,
-                   sum(b.val * c.cval) / (pn.pn * cn.cn) AS ccos
-            FROM bexpl b JOIN cen c USING (pos)
-            JOIN bnorm pn ON pn.vec_id = b.vec_id
-            JOIN cnorm cn ON cn.label = c.label
-            GROUP BY b.vec_id, c.label, pn.pn, cn.cn),
-    ingested AS (SELECT vec_id, label FROM (
-        SELECT vec_id, label,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, label) AS rn
-        FROM bpc) WHERE rn = 1),
+    WITH {_INGEST_INDEX_SQL},
     grid AS (SELECT pos, min(val) AS mn,
                     greatest(max(val) - min(val), 1e-30) AS w
              FROM (SELECT unnest(emb) AS val,
@@ -2108,7 +2012,8 @@ def _ingest_rerank_oracle() -> str:
                GROUP BY vec_id, m),
     bsub AS (SELECT vec_id, val, pos,
                     CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j FROM bexpl),
+                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
+             FROM batch_expl),
     bcodes AS (SELECT vec_id, m,
                       CAST(sum(greatest(0, least({PQ_LEVELS - 1},
                                CAST(floor((s.val - g.mn) / g.w
@@ -2121,7 +2026,7 @@ def _ingest_rerank_oracle() -> str:
         FROM ccodes c JOIN corpus v ON v.vec_id = c.vec_id
         UNION ALL
         SELECT b.vec_id, i.label AS cell, b.m, b.code
-        FROM bcodes b JOIN ingested i ON i.vec_id = b.vec_id),
+        FROM bcodes b JOIN batch_cells i ON i.vec_id = b.vec_id),
     allsub AS (SELECT vec_id, val, pos, m FROM csub
                UNION ALL
                SELECT vec_id, val, pos, m FROM bsub),
@@ -2129,38 +2034,20 @@ def _ingest_rerank_oracle() -> str:
            FROM allsub s JOIN idxcodes ic
              ON ic.vec_id = s.vec_id AND ic.m = s.m
            GROUP BY ic.code, s.m, s.pos),
+    {_PROBES_CTE},
+    {_assign_sql('probes', IVF_PROBE_CELLS)},
     pdt AS (SELECT s.vec_id AS query_id, s.m, cb.code,
                    sum((s.val - cb.cval) * (s.val - cb.cval)) AS d2
             FROM (SELECT vec_id, val, pos,
                          CAST((pos - 1) // {PQ_DSUB} AS INT) AS m
-                  FROM (SELECT vec_id, unnest(emb) AS val,
-                               generate_subscripts(emb, 1) AS pos
-                        FROM e
-                        WHERE vec_id % {PROBE_MOD} = 0
-                          AND vec_id < {PROBE_CAP})) s
+                  FROM probes_expl) s
             JOIN cb ON cb.m = s.m AND cb.pos = s.pos
             GROUP BY s.vec_id, s.m, cb.code),
-    pexpl AS (SELECT vec_id, unnest(emb) AS val,
-                     generate_subscripts(emb, 1) AS pos FROM e
-              WHERE vec_id % {PROBE_MOD} = 0 AND vec_id < {PROBE_CAP}),
-    pnorm AS (SELECT vec_id, sqrt(sum(val * val)) AS nrm
-              FROM pexpl GROUP BY vec_id),
-    ppc AS (SELECT p.vec_id, c.label,
-                   sum(p.val * c.cval) / (pn.nrm * cn.cn) AS ccos
-            FROM pexpl p JOIN cen c USING (pos)
-            JOIN pnorm pn ON pn.vec_id = p.vec_id
-            JOIN cnorm cn ON cn.label = c.label
-            GROUP BY p.vec_id, c.label, pn.nrm, cn.cn),
-    passigned AS (SELECT vec_id, label FROM (
-        SELECT vec_id, label,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, label) AS rn
-        FROM ppc) WHERE rn <= {IVF_PROBE_CELLS}),
     adc AS (SELECT q.query_id, ic.vec_id AS neighbor_id, sum(q.d2) AS ad2
             FROM pdt q
             JOIN idxcodes ic ON ic.m = q.m AND ic.code = q.code
-            JOIN passigned a ON a.vec_id = q.query_id
-                            AND a.label = ic.cell
+            JOIN probes_cells a ON a.vec_id = q.query_id
+                                AND a.label = ic.cell
             WHERE ic.vec_id <> q.query_id
             GROUP BY q.query_id, ic.vec_id),
     ranked AS (

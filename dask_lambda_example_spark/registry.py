@@ -101,6 +101,11 @@ PRIORITY_QUERIES = (
     "sim_ivf_recall_multiprobe", "sim_ivf_recall_adaptive",
     "sim_pq_rerank_search", "sim_pq_rerank_recall", "sim_pq_recall_report",
     "sim_ivfpq_rerank_search", "sim_ivf_incremental_recall",
+    # REVERIFY re-earn: the IVF searches, the centroid build and IVF-PQ
+    # now read the one coarse index and the one cell-pruned scan.
+    "sim_ivf_centroids", "sim_ivf_search", "sim_ivf_search_multiprobe",
+    "sim_ivf_search_adaptive", "sim_ivf_adaptive_probe_stats",
+    "sim_ivfpq_search",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -143,6 +148,11 @@ CORRECTNESS_ARTIFACTS = (
 # the re-rank searches' refine stage). Results are unchanged, but none
 # of these names ran this code when it earned its last green row —
 # re-earn (ADVICE r3).
+# One coarse IVF index: the IVF searches, the centroid build and IVF-PQ
+# now build their cells with the ingest family's _ingest_corpus_cells,
+# assign probes with _ingest_assign_cells (which carries the adaptive
+# margin) and scan with the shared _cell_pruned_cosine_topk; their
+# oracles share _cells_sql/_assign_sql/_cell_scan_sql — re-earn.
 REVERIFY: tuple[str, ...] = (
     "sim_cosine_topk_bruteforce", "sim_search_auto",
     "sim_ann_recall_report", "sim_ivf_recall_report",
@@ -151,6 +161,9 @@ REVERIFY: tuple[str, ...] = (
     "sim_ivfpq_rerank_search", "sim_ivf_incremental_ingest",
     "sim_ivf_incremental_recall", "sim_ivf_incremental_rerank_search",
     "sim_ivf_incremental_rerank_recall",
+    "sim_ivf_centroids", "sim_ivf_search", "sim_ivf_search_multiprobe",
+    "sim_ivf_search_adaptive", "sim_ivf_adaptive_probe_stats",
+    "sim_ivfpq_search",
 )
 
 

@@ -6,6 +6,7 @@ joins, aggregations combine map-side, hot paths stay in codegen."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dask_lambda_example_spark.io import load_table
@@ -1029,20 +1030,38 @@ def test_canonical_consumers_are_bucket_min_equijoins(spark, sf_dir):
                    for j in joins), (name, joins)
 
 
-def test_adaptive_probe_keeps_ivf_plan_shape(spark, sf_dir):
-    # the adaptive dial (round 14) changes only the cell-keep predicate
-    # — the plan must stay the IVF shape: centroid tables broadcast,
-    # probe-side join broadcast, no cartesian/BNLJ, and the in-cell
-    # scan an equi-join on the cell label.
+# query -> BroadcastNestedLoopJoins its plan holds: the recall audit's
+# exact side (_exact_cosine_topk) is one by design, probes × every
+# other vector.
+_IVF_SCAN_BNLJ = {
+    "sim_ivf_search": 0,
+    "sim_ivf_search_multiprobe": 0,
+    "sim_ivf_search_adaptive": 0,
+    "sim_ivf_incremental_recall": 1,
+}
+
+
+@pytest.mark.parametrize("name", list(_IVF_SCAN_BNLJ))
+def test_adaptive_probe_keeps_ivf_plan_shape(spark, sf_dir, name):
+    # every IVF search runs the one cell-pruned scan
+    # (_cell_pruned_cosine_topk), and the adaptive dial (round 14)
+    # changes only the cell-keep predicate — the plan must stay the IVF
+    # shape: centroid tables broadcast, probe-side join broadcast, no
+    # cartesian/BNLJ, and the in-cell scan an equi-join on the cell
+    # label.
     import re
 
     from dask_lambda_example_spark.plans.inspect import physical_plan
 
-    df = QUERIES["sim_ivf_search_adaptive"].fn(spark, sf_dir)
+    df = QUERIES[name].fn(spark, sf_dir)
     assert_no_cartesian(df)
     plan = physical_plan(df)
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("BroadcastNestedLoopJoin") == _IVF_SCAN_BNLJ[name], plan
     joins = re.findall(r"(?:SortMergeJoin|ShuffledHashJoin|"
                        r"BroadcastHashJoin)[^\n]*", plan)
-    assert any("label#" in j for j in joins) or "label#" in plan, joins
-    assert "Window" in plan  # the margin rule's best-cell window
+    # the probe⋈index scan (the one join on query_id) keys on the label
+    scan = [j for j in joins if "query_id#" in j and "cell#" in j]
+    assert len(scan) == 1 and re.search(
+        r"\[cell#\d+\], \[label#\d+\]|\[label#\d+\], \[cell#\d+\]",
+        scan[0]), joins
+    assert "Window" in plan  # per-probe cell and neighbor rankings
