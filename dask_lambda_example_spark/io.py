@@ -32,8 +32,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # work in the battery (document shingling+hashing, ~1 ms/row: 3,000
 # rows ≈ the exchange's own scheduling cost on this host); numeric
 # per-row work (vector folds, PQ encodes, ~15 µs/row) breaks even far
-# higher; call sites with that shape pass ``parallel="force"``.
+# higher.
 PARALLEL_MIN_ROWS = 3000
+# Estimated cosine pairs at or above which load_table(parallel=True)
+# rebalances whatever the row count. Paired sf0.1 A/Bs bracket it: 31 k
+# pairs ran faster without the rebalance (BENCH_ab_parallel_gate_r14),
+# 160-200 k faster with it (BENCH_ab_parallel_force_r15).
+PARALLEL_MIN_PAIRS = 100_000
 
 # Runtime-settable SQL confs every query needs regardless of which
 # SparkSession it runs in. The verification driver (and any real user of
@@ -158,7 +163,7 @@ def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
-               parallel: bool = False) -> DataFrame:
+               parallel: bool = False, pairs: int = 0) -> DataFrame:
     """Columnar scan of one driver table (pushdown/pruning-eligible).
 
     The scan reads with the table's memoized schema (``table_schema``):
@@ -174,38 +179,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     truncation — exactly what DuckDB does reading the same file, so the
     oracle comparison stays bit-identical.
 
-    ``parallel=True`` repartitions to the session default parallelism:
-    use it for CPU-dense projection pipelines (per-row hashing, array
-    transforms) whose source is a single small file — without a shuffle
-    downstream they would otherwise run on the file's single input
-    partition. At real scale the source has many splits and this
-    becomes a cheap (or unnecessary) rebalance.
-
-    The rebalance is GATED on the table's footer row count
-    (optimization round 14, measured): below ``PARALLEL_MIN_ROWS`` the
-    round-robin exchange costs a full extra stage (~0.3-0.5 s of
-    scheduling on this host) while the single-partition compute it
-    replaces is milliseconds — the guide §2.4 rule ("a repartition
-    someone added for parallelism" is the canonical accidental
-    exchange), sized from input metadata so the SAME code keeps the
-    rebalance wherever the input is big enough for it to pay.
-
-    ``parallel="force"`` rebalances UNCONDITIONALLY. The row floor is
-    calibrated to per-row projection work (~1 ms/row shingling); it is
-    WRONG for consumers whose downstream per-partition work is
-    super-linear in the rows of THIS scan — the brute-force cosine
-    joins broadcast their small side, so the stream side's input
-    partitioning is the only parallelism the O(probes x corpus) fold
-    work ever gets (optimization round 15, VERDICT r14 item 1: the
-    global floor de-parallelized five such queries 1.5-4x at the
-    driver's SF). Call sites with that shape opt out of the floor.
+    ``parallel=True`` asks for a round-robin rebalance to the session
+    default parallelism, for CPU-dense pipelines (per-row hashing,
+    array transforms, pair scoring) whose source is a single small
+    file and would otherwise run on its one input partition. It is
+    granted once, at the scan, only where the work it spreads pays for
+    the extra stage (~0.3-0.5 s of scheduling on this host; guide
+    §2.4: "a repartition someone added for parallelism" is the
+    canonical accidental exchange): when the footer row count reaches
+    ``PARALLEL_MIN_ROWS`` (per-row work), or when ``pairs``, the
+    caller's estimate of the cosine pairs a join after the scan scores
+    (from footer counts and its blocking constants), reaches
+    ``PARALLEL_MIN_PAIRS`` — a broadcast pair join's fold work has no
+    parallelism but the scan's partitions. Both inputs are metadata,
+    so the same code keeps the rebalance wherever the input is big
+    enough for it to pay.
     """
     schema = table_schema(spark, sf_dir, name)
     df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df, schema)
-    if parallel == "force" or (
-            parallel and parquet_rowcount(sf_dir, name) >= PARALLEL_MIN_ROWS):
+    if parallel and (pairs >= PARALLEL_MIN_PAIRS
+                     or parquet_rowcount(sf_dir, name) >= PARALLEL_MIN_ROWS):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

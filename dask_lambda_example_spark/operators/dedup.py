@@ -31,7 +31,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.functions.vector import (
+    as_double, cosine_join, cosine_sql, sign_lsh_bucket)
+from dask_lambda_example_spark.io import (
+    load_table, parquet_column_ndv, parquet_rowcount)
 from dask_lambda_example_spark.registry import QUERIES, query
 
 # ---------------------------------------------------------------------------
@@ -784,18 +787,12 @@ def adaptive_extra_bits(n: int, threshold: int) -> int:
     return math.ceil(math.log2(n / threshold))
 
 
-def _cosine_sql(ea: str, eb: str) -> str:
-    return (f"list_dot_product({ea}, {eb}) / "
-            f"(sqrt(list_dot_product({ea}, {ea})) * "
-            f"sqrt(list_dot_product({eb}, {eb})))")
-
-
 def _embedding_neardup_oracle() -> str:
     bucket = " || ".join(
         f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)"
         for i in range(SIGN_BITS)
     )
-    cos = _cosine_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
+    cos = cosine_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
     return f"""
     WITH e AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings)
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, round({cos}, 6) AS cos
@@ -819,13 +816,8 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and with it Σ|bucket|² pair work per vector) stays constant —
     pair generation is linear in n.  At oracle scale (n ≤ 2048) the
     extra bits are 0 and the static 6-bit SQL blocking matches exactly.
+    The scan's pair estimate is n²/(2·2^bits) same-bucket pairs.
     """
-    from dask_lambda_example_spark.functions.vector import (
-        as_double, cosine_pair, l2norm, sign_lsh_bucket)
-
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    e = load_table(spark, sf_dir, "embeddings", parallel=True)
     # clamp: sign bits consume leading dims; 24 bits = 16M buckets is
     # far past any local scale and stays well inside the 64-dim vectors.
     # n comes from parquet FOOTER metadata (catalog statistics at real
@@ -834,22 +826,18 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = parquet_rowcount(sf_dir, "embeddings")
     n_bits = min(
         SIGN_BITS + adaptive_extra_bits(n, EMB_BUCKET_N_THRESHOLD), 24)
-    ed = e.select(
+    ed = load_table(spark, sf_dir, "embeddings", parallel=True,
+                    pairs=n * n // (2 << n_bits)).select(
         "vec_id",
         sign_lsh_bucket(F.col("embedding"), n_bits).alias("bucket"),
-        as_double(F.col("embedding")).alias("emb"),
-    ).withColumn("nrm", l2norm(F.col("emb")))
-    a = ed.alias("a")
-    b = ed.alias("b")
-    cos = cosine_pair(F.col("a.emb"), F.col("b.emb"),
-                      F.col("a.nrm"), F.col("b.nrm"))
+        as_double(F.col("embedding")).alias("emb"))
     return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .filter(cos >= COSINE_NEARDUP_THRESHOLD)
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                F.round(cos, 6).alias("cos"))
+        cosine_join(ed, ed, (F.col("q.bucket") == F.col("c.bucket"))
+                    & (F.col("q.vec_id") < F.col("c.vec_id")))
+        .filter(F.col("cos") >= COSINE_NEARDUP_THRESHOLD)
+        .select(F.col("q.vec_id").alias("vec_a"),
+                F.col("c.vec_id").alias("vec_b"),
+                F.round("cos", 6).alias("cos"))
     )
 
 
@@ -1133,10 +1121,10 @@ SEM_CELL_N_THRESHOLD = 256
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings)
     SELECT CAST(a.label AS VARCHAR) AS cell, a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_cosine_sql('a.emb', 'b.emb')}, 6) AS cos,
+           round({cosine_sql('a.emb', 'b.emb')}, 6) AS cos,
            b.vec_id AS drop_id
     FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_cosine_sql('a.emb', 'b.emb')} >= {SEM_THRESHOLD}
+    WHERE {cosine_sql('a.emb', 'b.emb')} >= {SEM_THRESHOLD}
     """,
 )
 def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1168,20 +1156,17 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs come from parquet footer metadata / a driver-local column
     read — NO Spark job fires at DataFrame-construction time — and the
     output ``cell`` column is string at EVERY scale, so the schema is
-    size-invariant whether or not refinement engaged."""
-    from dask_lambda_example_spark.functions.vector import (
-        as_double, cosine_pair, l2norm, sign_lsh_bucket)
-    from dask_lambda_example_spark.io import parquet_column_ndv, parquet_rowcount
+    size-invariant whether or not refinement engaged.
 
+    The in-cell self-join broadcasts one side at small scale, so the
+    scan's partitioning is the only parallelism its folds get; its pair
+    estimate is n²/(2·cells), cells = label NDV × 2^sub_bits."""
     n = parquet_rowcount(sf_dir, "embeddings")
     n_cells = parquet_column_ndv(sf_dir, "embeddings", "label")
     sub_bits = min(
         adaptive_extra_bits(n // max(n_cells, 1), SEM_CELL_N_THRESHOLD), 24)
-    # parallel="force": the in-cell self-join broadcasts one side at
-    # small scale, so the stream side's input partitioning is the only
-    # parallelism the sum-of-|cell|^2 cosine folds get — the row-count
-    # floor must not collapse it to one partition (VERDICT r14 item 1).
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
+    e = load_table(spark, sf_dir, "embeddings", parallel=True,
+                   pairs=n * n // (2 * max(n_cells, 1) << sub_bits)).select(
         "vec_id", F.col("label").cast("string").alias("label"),
         as_double(F.col("embedding")).alias("emb"))
     # concat_ws in BOTH branches (with a single operand it is the
@@ -1196,19 +1181,15 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.when(F.col("label").isNull(), F.lit(None).cast("string"))
         .otherwise(F.concat_ws("#", F.col("label"), *refine)))
-    e = e.withColumn("nrm", l2norm(F.col("emb")))
-    a, b = e.alias("a"), e.alias("b")
-    cos = cosine_pair(F.col("a.emb"), F.col("b.emb"),
-                      F.col("a.nrm"), F.col("b.nrm"))
     return (
-        a.join(b, (F.col("a.label") == F.col("b.label"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .filter(cos >= SEM_THRESHOLD)
-        .select(F.col("a.label").alias("cell"),
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                F.round(cos, 6).alias("cos"),
-                F.col("b.vec_id").alias("drop_id"))
+        cosine_join(e, e, (F.col("q.label") == F.col("c.label"))
+                    & (F.col("q.vec_id") < F.col("c.vec_id")))
+        .filter(F.col("cos") >= SEM_THRESHOLD)
+        .select(F.col("q.label").alias("cell"),
+                F.col("q.vec_id").alias("vec_a"),
+                F.col("c.vec_id").alias("vec_b"),
+                F.round("cos", 6).alias("cos"),
+                F.col("c.vec_id").alias("drop_id"))
     )
 
 
@@ -1383,10 +1364,10 @@ _FUZZY_ORACLE = f"""
 
 def _fuzzy_blocked_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fuzzy join's blocked frame ``(doc_id, title, blk, mh)`` —
-    shared by the query below and ``tools/fuzzy_zipf_tiers.py`` so the
-    growth artifact's block-size/pair counts measure EXACTLY the
-    blocking the registered query executes (df cap included), not a
-    re-derivation that could drift."""
+    the block-size/pair counts in ``GROWTH_r10_fuzzy_zipf.json`` were
+    measured on this frame, so they are EXACTLY the blocking the
+    registered query executes (df cap included), not a re-derivation
+    that could drift."""
     import os
 
     d = load_table(spark, sf_dir, "documents").select(

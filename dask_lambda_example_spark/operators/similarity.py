@@ -24,14 +24,14 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_lambda_example_spark.functions.vector import (
-    as_double, cosine, cosine_pair, dot, l2dist, l2norm, sign_lsh_bucket)
-from dask_lambda_example_spark.io import load_table
+    as_double, cosine, cosine_join, cosine_pair, cosine_sql, cosine_topk, dot,
+    l2dist, l2norm, sign_lsh_bucket)
+from dask_lambda_example_spark.io import (
+    load_table, parquet_column_ndv, parquet_rowcount)
 from dask_lambda_example_spark.registry import QUERIES, query
 
 # ---------------------------------------------------------------------------
@@ -65,11 +65,6 @@ def _cached_expr(key: str, build) -> Column:
     return col
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return (f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-            f" * sqrt(list_dot_product({b}, {b})))")
-
-
 # ---------------------------------------------------------------------------
 # function battery
 # ---------------------------------------------------------------------------
@@ -87,7 +82,7 @@ def _cos_sql(a: str, b: str) -> str:
                AS l2_ab,
            round({cos}, 6) AS cos_ab
     FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
-    """.format(cos=_cos_sql("a.emb", "b.emb")),
+    """.format(cos=cosine_sql("a.emb", "b.emb")),
 )
 def sim_vector_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector math battery (dot, L2 norm, L2 distance, cosine) over
@@ -128,26 +123,46 @@ def _probe_filter() -> Column:
     return (F.col("vec_id") % PROBE_MOD == 0) & (F.col("vec_id") < PROBE_CAP)
 
 
-_PROBE_SQL = "q.vec_id % {mod} = 0 AND q.vec_id < {cap}"
+_PROBE_SQL = f"q.vec_id % {PROBE_MOD} = 0 AND q.vec_id < {PROBE_CAP}"
+
+
+def _embeddings(spark: SparkSession, sf_dir: str,
+                scanned: float) -> DataFrame:
+    """(vec_id, label, emb) over the embeddings scan that feeds a
+    probe-style cosine join in which each probe scores the ``scanned``
+    fraction of the corpus. The pair estimate handed to ``load_table``
+    is probes × ``scanned`` × n, from the footer row count n and the
+    probe bound (ids run 0..n-1)."""
+    n = parquet_rowcount(sf_dir, "embeddings")
+    pairs = min(n, PROBE_CAP) // PROBE_MOD * n * scanned
+    return load_table(spark, sf_dir, "embeddings", parallel=True,
+                      pairs=int(pairs)).select(
+        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+
+
+def _topk_sql(pairs: str, k: int) -> str:
+    """DuckDB twin of ``cosine_topk`` over ``cosine_join``: ``pairs``
+    is the FROM clause that joins probe alias ``q`` to corpus alias
+    ``c``; this is the ``scored`` CTE and the ranked SELECT that close
+    a WITH."""
+    return f"""
+    scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {cosine_sql('q.emb', 'c.emb')} AS cos
+        FROM {pairs})
+    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank FROM (
+        SELECT query_id, neighbor_id, cos,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cos DESC, neighbor_id) AS rank
+        FROM scored) WHERE rank <= {k}
+    """
 
 
 @query(
     "sim_cosine_topk_bruteforce",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {cos} AS cos
-        FROM e q JOIN e c ON {probe} AND c.vec_id <> q.vec_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank
-    FROM ranked WHERE rank <= {k}
-    """.format(cos=_cos_sql("q.emb", "c.emb"), k=TOP_K,
-               probe=_PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP)),
+    {_topk_sql(f"e q JOIN e c ON {_PROBE_SQL} AND c.vec_id <> q.vec_id", TOP_K)}""",
 )
 def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the probe vectors against the full
@@ -155,15 +170,11 @@ def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape for scale: ``broadcast(probes)`` × corpus scan (no corpus
     shuffle) → per-query TopK window. Ties broken by neighbor_id for
-    determinism; ranking uses the unrounded score.
-
-    ``parallel="force"``: the probe side broadcasts, so the corpus
-    scan's partitioning is the ONLY parallelism the O(probes x corpus)
-    cosine folds get — the row-count floor must not collapse it to one
-    partition at small corpus sizes (VERDICT r14 item 1)."""
-    return _exact_cosine_topk(
-        load_table(spark, sf_dir, "embeddings", parallel="force").select(
-            "vec_id", as_double(F.col("embedding")).alias("emb")), TOP_K)
+    determinism; ranking uses the unrounded score. Every probe scores
+    the whole corpus, so from about 1,600 vectors on (at
+    ``PARALLEL_MIN_PAIRS``) the scan is rebalanced: the corpus scan's
+    partitioning is the only parallelism the folds get."""
+    return _exact_cosine_topk(_embeddings(spark, sf_dir, 1), TOP_K)
 
 
 def _exact_cosine_topk(e: DataFrame, k: int) -> DataFrame:
@@ -171,23 +182,9 @@ def _exact_cosine_topk(e: DataFrame, k: int) -> DataFrame:
     (query_id, neighbor_id, cos, rank) for every probe against every
     other row of ``e``. The caller picks the scan, so the post-ingest
     recall audit reuses it over its own."""
-    e = e.select("vec_id", "emb", l2norm(F.col("emb")).alias("nrm"))
-    q, c = F.broadcast(e.filter(_probe_filter())).alias("q"), e.alias("c")
-    scored = (
-        q.join(c, F.col("c.vec_id") != F.col("q.vec_id"))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            cosine_pair(F.col("q.emb"), F.col("c.emb"),
-                        F.col("q.nrm"), F.col("c.nrm")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    q = e.filter(_probe_filter()).withColumnRenamed("vec_id", "query_id")
+    return cosine_topk(cosine_join(
+        F.broadcast(q), e, F.col("c.vec_id") != F.col("q.query_id")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -206,30 +203,24 @@ SIM_THRESHOLD = 0.3
            c.label AS match_label, round({cos}, 6) AS cos
     FROM e q JOIN e c ON {probe} AND c.vec_id <> q.vec_id
     WHERE {cos} >= {t}
-    """.format(cos=_cos_sql("q.emb", "c.emb"), t=SIM_THRESHOLD,
-               probe=_PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP)),
+    """.format(cos=cosine_sql("q.emb", "c.emb"), t=SIM_THRESHOLD,
+               probe=_PROBE_SQL),
 )
 def sim_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity join: probe set × corpus, keep pairs with cosine ≥ t.
     Broadcast probe side; the threshold filter sits directly on the
-    codegen'd cosine expression. ``parallel="force"``: same shape as
-    ``sim_cosine_topk_bruteforce`` — the broadcast join leaves the
-    corpus scan's partitioning as the fold work's only parallelism."""
-    e = load_table(spark, sf_dir, "embeddings", parallel="force").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb")
-    ).withColumn("nrm", l2norm(F.col("emb")))
-    probes = e.filter(_probe_filter())
-    q, c = F.broadcast(probes).alias("q"), e.alias("c")
-    cos = cosine_pair(F.col("q.emb"), F.col("c.emb"),
-                      F.col("q.nrm"), F.col("c.nrm"))
+    codegen'd cosine expression. Same pair work, and so the same scan
+    rebalance, as ``sim_cosine_topk_bruteforce``."""
+    e = _embeddings(spark, sf_dir, 1)
     return (
-        q.join(c, F.col("c.vec_id") != F.col("q.vec_id"))
-        .filter(cos >= SIM_THRESHOLD)
+        cosine_join(F.broadcast(e.filter(_probe_filter())), e,
+                    F.col("c.vec_id") != F.col("q.vec_id"))
+        .filter(F.col("cos") >= SIM_THRESHOLD)
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("match_id"),
             F.col("c.label").alias("match_label"),
-            F.round(cos, 6).alias("cos"),
+            F.round("cos", 6).alias("cos"),
         )
     )
 
@@ -247,24 +238,12 @@ def _ann_oracle() -> str:
         f"(CASE WHEN emb[{i + 1}] >= 0 THEN '1' ELSE '0' END)"
         for i in range(ANN_SIGN_BITS)
     )
-    return """
+    pairs = (f"eb q JOIN eb c ON q.bucket = c.bucket AND {_PROBE_SQL}"
+             " AND c.vec_id <> q.vec_id")
+    return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
     eb AS (SELECT vec_id, emb, {bucket} AS bucket FROM e),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS cos
-        FROM eb q JOIN eb c
-          ON q.bucket = c.bucket AND {probe}
-         AND c.vec_id <> q.vec_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank
-    FROM ranked WHERE rank <= {k}
-    """.format(bucket=bucket, cos=_cos_sql("q.emb", "c.emb"),
-               probe=_PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP),
-               k=ANN_K)
+    {_topk_sql(pairs, ANN_K)}"""
 
 
 @query("sim_ann_signlsh_topk", oracle=_ann_oracle())
@@ -277,28 +256,13 @@ def sim_ann_signlsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle runs the identical bucketing, so the approximation itself
     is value-hash-checked (recall loss vs. the brute-force query is
     visible by comparing with ``sim_cosine_topk_bruteforce``)."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", as_double(F.col("embedding")).alias("emb"))
-    eb = e.withColumn("bucket", sign_lsh_bucket(F.col("emb"), ANN_SIGN_BITS)
-                      ).withColumn("nrm", l2norm(F.col("emb")))
-    q = F.broadcast(eb.filter(_probe_filter())).alias("q")
-    c = eb.alias("c")
-    scored = (
-        q.join(c, (F.col("q.bucket") == F.col("c.bucket"))
-               & (F.col("c.vec_id") != F.col("q.vec_id")))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            cosine_pair(F.col("q.emb"), F.col("c.emb"),
-                        F.col("q.nrm"), F.col("c.nrm")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    e = _embeddings(spark, sf_dir, 1 / 2 ** ANN_SIGN_BITS).select(
+        "vec_id", "emb",
+        sign_lsh_bucket(F.col("emb"), ANN_SIGN_BITS).alias("bucket"))
+    q = e.filter(_probe_filter()).withColumnRenamed("vec_id", "query_id")
+    return cosine_topk(cosine_join(
+        F.broadcast(q), e, (F.col("q.bucket") == F.col("c.bucket"))
+        & (F.col("c.vec_id") != F.col("q.query_id"))), ANN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -492,29 +456,13 @@ def _cell_pruned_cosine_topk(probes: DataFrame, assigned: DataFrame,
     is scored only against the ``idx`` rows (vec_id, label, emb) of
     its ``assigned`` (vec_id, label) cells — the broadcast probe⋈cell
     side equi-joins the index on ``label``, never a cartesian — then
-    ranked and cut at ``k``: (query_id, neighbor_id, cos, rank), cos
-    rounded to 6 places after ranking on the exact value."""
+    cut by ``cosine_topk``."""
     q = (F.broadcast(probes.select("vec_id", "emb").join(assigned, "vec_id"))
          .select(F.col("vec_id").alias("query_id"),
-                 F.col("label").alias("cell"),
-                 F.col("emb").alias("qemb"),
-                 l2norm(F.col("emb")).alias("qnrm")))
-    c = idx.withColumn("nrm", l2norm(F.col("emb"))).alias("c")
-    scored = (
-        q.join(c, (F.col("c.label") == F.col("cell"))
-               & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine_pair(F.col("qemb"), F.col("c.emb"),
-                            F.col("qnrm"), F.col("c.nrm")).alias("cos"))
-    )
-    wrank = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                                   F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wrank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"),
-                "rank")
-    )
+                 F.col("label").alias("cell"), "emb"))
+    return cosine_topk(cosine_join(
+        q, idx, (F.col("c.label") == F.col("q.cell"))
+        & (F.col("c.vec_id") != F.col("q.query_id"))), k)
 
 
 def _cells_sql(src: str) -> str:
@@ -561,25 +509,13 @@ def _assign_sql(vecs: str, n: int, margin: float | None = None) -> str:
 
 
 def _cell_scan_sql(probes: str, cells: str, idx: str, k: int) -> str:
-    """DuckDB twin of ``_cell_pruned_cosine_topk``: the ``scored`` CTE
-    and the ranked final SELECT that close a WITH."""
-    return f"""
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_cos_sql('q.emb', 'c.emb')} AS cos
-        FROM {probes} q
+    """DuckDB twin of ``_cell_pruned_cosine_topk``."""
+    return _topk_sql(f"""{probes} q
         JOIN {cells} a ON a.vec_id = q.vec_id
-        JOIN {idx} c ON c.label = a.label AND c.vec_id <> q.vec_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cos, rank FROM (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= {k}
-    """
+        JOIN {idx} c ON c.label = a.label AND c.vec_id <> q.vec_id""", k)
 
 
-_PROBES_CTE = ("probes AS (SELECT vec_id, emb FROM e q WHERE "
-               + _PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP) + ")")
+_PROBES_CTE = f"probes AS (SELECT vec_id, emb FROM e q WHERE {_PROBE_SQL})"
 
 
 @query(
@@ -623,9 +559,10 @@ def _ivf_search_impl(spark: SparkSession, sf_dir: str,
     """Shared IVF pipeline: assign each probe to its ``n_probe_cells``
     nearest centroids (with ``adapt_margin`` set, only those within
     that cosine margin of the best cell — the adaptive dial), exact
-    top-k within those cells only."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+    top-k within those cells only. A probe scans ``n_probe_cells`` of
+    the label-NDV cells, which sizes the scan's pair estimate."""
+    e = _embeddings(spark, sf_dir, n_probe_cells
+                    / parquet_column_ndv(sf_dir, "embeddings", "label"))
     cen, cnorm = _ingest_corpus_cells(e)
     probes = e.filter(_probe_filter())
     assigned = _ingest_assign_cells(probes, cen, cnorm, n_probe_cells,
@@ -810,7 +747,7 @@ MMR_LAMBDA = 0.7
 
 
 def _mmr_oracle() -> str:
-    cos = _cos_sql("{a}", "{b}")
+    cos = cosine_sql("{a}", "{b}")
 
     def c(a, b):
         return cos.format(a=a, b=b)
@@ -919,7 +856,7 @@ def _hybrid_rrf_oracle() -> str:
     from dask_lambda_example_spark.operators.text import (
         _bm25_ctes, _bm25_score_sql)
 
-    cos = _cos_sql("c.emb", "q.emb")
+    cos = cosine_sql("c.emb", "q.emb")
     return f"""
     WITH {_bm25_ctes()},
     lex AS (
@@ -1078,8 +1015,6 @@ def sim_search_auto_impl(spark: SparkSession, sf_dir: str,
     measured by the registered audits) above it. Both branches return
     the same (query_id, neighbor_id, cos, rank<=k) contract with
     k = TOP_K."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
     if parquet_rowcount(sf_dir, "embeddings") <= max_exact_rows:
         return sim_cosine_topk_bruteforce(spark, sf_dir)
     return _ivf_search_impl(spark, sf_dir, IVF_PROBE_CELLS, k=TOP_K)
@@ -1117,20 +1052,20 @@ def sim_search_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQ_M = 32         # subspaces; dim 64 → 2 dims per subspace
 PQ_DSUB = 64 // PQ_M
-# quantizer bits per dimension (default 3 → 8 fixed-width levels).
-# Env-dialable so the compression↔recall trade is MEASURABLE, not
-# asserted: the oracle SQL is built from the same constant at import,
-# so a dialed run stays oracle-gated (GROWTH_r10_pq_tiers.json).
-PQ_BITS = int(os.environ.get("SPARK_GRAFT_PQ_BITS", "3"))
+# quantizer bits per dimension (3 → 8 fixed-width levels). The
+# compression↔recall trade at 2, 3 and 4 bits is measured in
+# GROWTH_r10_pq_tiers.json (raw ADC) and GROWTH_r11_pq_rerank.json
+# (with the exact re-rank); the oracle SQL is built from this constant.
+PQ_BITS = 3
 # The ADC distance-table broadcast carries PQ_M · PQ_K = PQ_M ·
 # (2^bits)^PQ_DSUB slots PER PROBE — exponential in the dial (at dim 64
 # / M=32 / dsub=2: 3 bits → 2 k slots/probe and the sf1 probe set's
 # table is ~10 MB; 6 bits → 131 k slots/probe, ~GB-scale per probe set,
-# hopeless under the 16 g production heap). Bound the dial to the range
-# whose broadcast stays executor material (ADVICE r10); the measured
-# recall curve across this range is in SCALE.md.
+# hopeless under the 16 g production heap). Bound the constant to the
+# range whose broadcast stays executor material (ADVICE r10); the
+# measured recall curve across this range is in SCALE.md.
 assert 2 <= PQ_BITS <= 5, (
-    f"SPARK_GRAFT_PQ_BITS={PQ_BITS} outside supported range [2, 5]: "
+    f"PQ_BITS={PQ_BITS} outside supported range [2, 5]: "
     "the ADC table broadcast is PQ_M*(2^bits)^PQ_DSUB slots per probe "
     "and stops being broadcast material above 5 bits")
 PQ_LEVELS = 1 << PQ_BITS
@@ -1476,10 +1411,9 @@ def _exact_l2_sql(k: int, shortlist: str | None = None) -> str:
     ``shortlist`` query's (query_id, neighbor_id) pairs, or over probe ×
     corpus when there is none."""
     d2 = _pq_rerank_d2_sql("q.emb", "c.emb")
-    probe = _PROBE_SQL.format(mod=PROBE_MOD, cap=PROBE_CAP)
     pairs = (f"({shortlist}) s JOIN e q ON q.vec_id = s.query_id"
              f" JOIN e c ON c.vec_id = s.neighbor_id" if shortlist
-             else f"e q JOIN e c ON {probe} AND c.vec_id <> q.vec_id")
+             else f"e q JOIN e c ON {_PROBE_SQL} AND c.vec_id <> q.vec_id")
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                FROM embeddings)
@@ -1950,9 +1884,11 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     report prices (every approximate path in this repo ships one; the
     ``sim_ivf_recall_multiprobe`` discipline). Plan shape matches the
     ingest + search queries: broadcast centroid/assignment tables, one
-    cell-pruned scored join, bounded windows."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+    cell-pruned scored join, bounded windows. The exact audit reads
+    its own scan, sized like ``sim_cosine_topk_bruteforce``'s; the IVF
+    side's scan is sized by its probed cells."""
+    e = _embeddings(spark, sf_dir, IVF_PROBE_CELLS
+                    / parquet_column_ndv(sf_dir, "embeddings", "label"))
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
@@ -1966,7 +1902,8 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.filter(_probe_filter())
     passigned = _ingest_assign_cells(probes, cen, cnorm, IVF_PROBE_CELLS)
     ivf_k = _cell_pruned_cosine_topk(probes, passigned, idx, IVF_K)
-    return _recall_at_k(_exact_cosine_topk(e, IVF_K), ivf_k, IVF_K)
+    return _recall_at_k(_exact_cosine_topk(_embeddings(spark, sf_dir, 1),
+                                           IVF_K), ivf_k, IVF_K)
 
 
 # ---------------------------------------------------------------------------

@@ -106,6 +106,10 @@ PRIORITY_QUERIES = (
     "sim_ivf_centroids", "sim_ivf_search", "sim_ivf_search_multiprobe",
     "sim_ivf_search_adaptive", "sim_ivf_adaptive_probe_stats",
     "sim_ivfpq_search",
+    # REVERIFY re-earn: the cosine joins now share one scorer and one
+    # top-k cut, and their scans rebalance from estimated pair counts.
+    "sim_threshold_join", "sim_ann_signlsh_topk",
+    "dedup_embedding_neardup", "dedup_semdedup_cells",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -153,6 +157,11 @@ CORRECTNESS_ARTIFACTS = (
 # assign probes with _ingest_assign_cells (which carries the adaptive
 # margin) and scan with the shared _cell_pruned_cosine_topk; their
 # oracles share _cells_sql/_assign_sql/_cell_scan_sql — re-earn.
+# One cosine join: the six hand-written cosine joins (brute-force,
+# threshold, sign-LSH ANN, IVF cell scan, near-dup, SemDeDup) and every
+# composite over them now score with vector.cosine_join and cut with
+# vector.cosine_topk, and their embeddings scans rebalance from
+# estimated pair counts, not a per-call-site override — re-earn.
 REVERIFY: tuple[str, ...] = (
     "sim_cosine_topk_bruteforce", "sim_search_auto",
     "sim_ann_recall_report", "sim_ivf_recall_report",
@@ -164,6 +173,8 @@ REVERIFY: tuple[str, ...] = (
     "sim_ivf_centroids", "sim_ivf_search", "sim_ivf_search_multiprobe",
     "sim_ivf_search_adaptive", "sim_ivf_adaptive_probe_stats",
     "sim_ivfpq_search",
+    "sim_threshold_join", "sim_ann_signlsh_topk",
+    "dedup_embedding_neardup", "dedup_semdedup_cells",
 )
 
 

@@ -2188,43 +2188,47 @@ def _testdata_tier(tier: str) -> str:
     return str(path)
 
 
-def test_load_table_parallel_gate_scales_with_rowcount(spark):
-    """parallel=True's round-robin rebalance derives from footer row
-    count: absent under PARALLEL_MIN_ROWS (the exchange costs a full
-    stage; the single-partition compute it replaces is milliseconds),
-    present at or above it."""
-    from dask_lambda_example_spark.io import (
-        PARALLEL_MIN_ROWS, load_table, parquet_rowcount)
+@pytest.mark.parametrize("name, rr_at_sf01", [
+    # per-row work: 500 documents at sf0.001, 5,000 at sf0.1
+    ("documents", 1),
+    # exact top-k and threshold join: n x probes = 160 k pairs at sf0.1
+    ("sim_cosine_topk_bruteforce", 2),
+    ("sim_threshold_join", 2),
+    # SemDeDup: n^2 / (2 cells) = 200 k
+    ("dedup_semdedup_cells", 2),
+    # the post-ingest audit's exact top-k: 160 k, as brute force
+    ("sim_ivf_incremental_recall", 2),
+    # sign-LSH near-dup: n^2 / (2 * 2^bits) = 31 k
+    ("dedup_embedding_neardup", 0),
+    # IVF cell scan: n * probes * cells / label NDV = 16 k
+    ("sim_ivf_search", 0),
+    # sign-LSH ANN: n * probes / 256 = 625
+    ("sim_ann_signlsh_topk", 0),
+])
+def test_load_table_parallel_gate_scales_with_rowcount(spark, name,
+                                                       rr_at_sf01):
+    """parallel=True's round-robin rebalance derives from footer
+    metadata: present when the table has at least PARALLEL_MIN_ROWS
+    rows or the caller's estimated cosine pairs reach
+    PARALLEL_MIN_PAIRS, absent otherwise. ``name`` is a table (loaded
+    with parallel=True) or a registered query over ``embeddings``
+    (2,000 vectors at sf0.1, 500 at sf0.001, where nothing pays). A
+    rebalanced scan under a broadcast probe join shows as two
+    RoundRobin exchanges, one per side."""
+    from dask_lambda_example_spark.io import load_table
+    from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
 
-    small_sf = _testdata_tier("sf0.001")
-    big_sf = _testdata_tier("sf0.1")
-    assert parquet_rowcount(small_sf, "documents") < PARALLEL_MIN_ROWS
-    assert parquet_rowcount(big_sf, "lineitem") >= PARALLEL_MIN_ROWS
-    small_plan = load_table(
-        spark, small_sf, "documents", parallel=True
-    )._jdf.queryExecution().executedPlan().toString()
-    big_plan = load_table(
-        spark, big_sf, "lineitem", parallel=True
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "roundrobin" not in small_plan.lower()
-    assert "roundrobin" in big_plan.lower()
+    _ensure_loaded()
 
+    def round_robins(tier: str) -> int:
+        sf = _testdata_tier(tier)
+        df = (QUERIES[name].fn(spark, sf) if name in QUERIES
+              else load_table(spark, sf, name, parallel=True))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("RoundRobinPartitioning")
 
-def test_load_table_parallel_force_ignores_row_floor(spark):
-    """parallel="force" rebalances regardless of the footer row count —
-    the escape hatch for broadcast-join consumers whose fold work has
-    no other source of parallelism (VERDICT r14 item 1: the global
-    floor de-parallelized the brute-force cosine family 1.5-4x)."""
-    from dask_lambda_example_spark.io import (
-        PARALLEL_MIN_ROWS, load_table, parquet_rowcount)
-
-    small_sf = _testdata_tier("sf0.001")
-    assert parquet_rowcount(small_sf, "documents") < PARALLEL_MIN_ROWS
-    forced = load_table(spark, small_sf, "documents", parallel="force")
-    plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "roundrobin" in plan.lower()
-    assert forced.rdd.getNumPartitions() == \
-        spark.sparkContext.defaultParallelism
+    assert round_robins("sf0.001") == 0
+    assert round_robins("sf0.1") == rr_at_sf01
 
 
 def test_pq_expression_cache_reuses_per_context(spark):
