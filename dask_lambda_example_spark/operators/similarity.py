@@ -41,29 +41,6 @@ from dask_lambda_example_spark.registry import QUERIES, query
 
 DOT_SQL = "list_dot_product({a}, {b})"
 
-# Constant Column-expression trees memoized per live SparkContext
-# (optimization round 14, measured): py4j construction of the ~3,000-op
-# PQ encode array costs 1.5-2.3 s of pure driver-side Python PER BUILD
-# (the JVM work — analysis — is ~0.1 s), and the same three trees are
-# rebuilt by every query in the 13-query PQ/IVF family. The trees are
-# constants over fixed column names, and pyspark Columns wrap immutable
-# Catalyst expressions, so one build per JVM serves every plan. Keyed
-# on the active SparkContext so a restarted JVM rebuilds instead of
-# dereferencing stale j-expressions.
-_EXPR_CACHE: dict = {}
-
-
-def _cached_expr(key: str, build) -> Column:
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    k = (key, id(sc))
-    col = _EXPR_CACHE.get(k)
-    if col is None:
-        col = build()
-        _EXPR_CACHE[k] = col
-    return col
-
 
 # ---------------------------------------------------------------------------
 # function battery
@@ -1110,45 +1087,42 @@ def _pq_grid(e: DataFrame) -> DataFrame:
                      F.transform("s2", lambda s: s["w"]).alias("wa")))
 
 
-def _pq_bin_expr(pos: int):
-    """The ``PQ_BITS``-bit lattice bin of dimension ``pos`` against the
-    broadcast grid arrays: least(levels-1, floor((x - min) / w ·
-    levels)) — pure codegen, dialect-portable (DuckDB: identical
-    floor/least; floor output is integral so its INT cast is exact
-    under DuckDB's round-on-cast)."""
-    x = F.element_at(F.col("emb"), pos + 1)
-    mn = F.element_at(F.col("mna"), pos + 1)
-    w = F.element_at(F.col("wa"), pos + 1)
-    return F.least(F.lit(PQ_LEVELS - 1),
-                   F.floor((x - mn) / w * PQ_LEVELS)).cast("int")
+def _pq_bin_sql(pos: int) -> str:
+    """The saturating ``PQ_BITS``-bit lattice bin of dimension ``pos``
+    against the grid arrays: greatest(0, least(levels-1, floor((x -
+    min) / w · levels))). A frozen grid (the ingest family's, trained
+    on the corpus only) can meet values outside [min, max]; both
+    clamps pin those to the edge bins. On the rows a grid was trained
+    on x ≥ min, so there the low clamp never fires. DuckDB applies
+    the identical clamps (``_pq_sql``); floor output is integral, so
+    its INT cast is exact under DuckDB's round-on-cast."""
+    x, mn, w = (f"element_at({a}, {pos + 1})" for a in ("emb", "mna", "wa"))
+    return (f"CAST(greatest(0, least({PQ_LEVELS - 1}, "
+            f"floor(({x} - {mn}) / {w} * {PQ_LEVELS}))) AS INT)")
 
 
-def _pq_code_expr(m: int):
-    """The subspace-``m`` PQ code as a pure codegen expression:
-    ``PQ_BITS`` lattice bits per dimension — code = Σ_j bin_j ·
-    levels^j, domain [0, PQ_K). The quantizer IS this binning function
-    (a product lattice with data-driven per-bin reconstruction values),
-    so the corpus encode needs NO argmin, NO codebook, NO join — the
-    round-9 per-label argmin projection enumerated n_codes distance
-    folds per subspace; this is ``PQ_DSUB`` subtract/divide/floors."""
-    parts = [
-        _pq_bin_expr(m * PQ_DSUB + j) * (PQ_LEVELS ** j)
-        for j in range(PQ_DSUB)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
+def _pq_coded(e: DataFrame, train: DataFrame) -> DataFrame:
+    """(vec_id, label, emb, codes array<int>): the one PQ encode of the
+    (vec_id, label, emb) frame ``e`` against the grid trained on
+    ``train`` — ONE whole-stage-codegen projection against the
+    broadcast 1-row grid of positional arrays: no explode, no join, no
+    shuffle. It encodes the corpus (``train`` = ``e``), the ingest
+    batch and the post-ingest index (``train`` = the frozen corpus).
 
-
-def _pq_coded(e: DataFrame, grid: DataFrame) -> DataFrame:
-    """(vec_id, label, emb, codes array<int>) — the corpus PQ encode as
-    ONE whole-stage-codegen projection against the broadcast 1-row
-    grid maps: no explode, no join, no shuffle."""
-    codes = _cached_expr("pq_codes", lambda: F.array(
-        *[_pq_code_expr(m).cast("int") for m in range(PQ_M)]))
-    return (e.crossJoin(F.broadcast(grid))
-             .select("vec_id", "label", "emb", codes.alias("codes")))
+    Subspace m's code is Σ_j bin_{m·dsub+j} · levels^j, domain [0,
+    PQ_K). The quantizer IS this binning function (a product lattice
+    with data-driven per-bin reconstruction values), so encoding needs
+    no argmin, no codebook and no join — ``PQ_DSUB``
+    subtract/divide/floors per code. The ~3,000-op array is ONE SQL
+    string the JVM parses: built through the Column API it cost
+    1.4-2.0 s of py4j calls per query build; parsed, it costs
+    milliseconds and optimizes to the same plan."""
+    codes = "array({})".format(", ".join(
+        " + ".join(f"{_pq_bin_sql(m * PQ_DSUB + j)} * {PQ_LEVELS ** j}"
+                   for j in range(PQ_DSUB))
+        for m in range(PQ_M)))
+    return (e.crossJoin(F.broadcast(_pq_grid(train)))
+             .select("vec_id", "label", "emb", F.expr(codes).alias("codes")))
 
 
 def _pq_codebook(coded: DataFrame) -> DataFrame:
@@ -1169,13 +1143,12 @@ def _pq_codebook(coded: DataFrame) -> DataFrame:
             .agg(F.avg("val").alias("cval")))
 
 
-def _pq_probe_d2(e: DataFrame, cb: DataFrame) -> DataFrame:
+def _pq_probe_d2(probes: DataFrame, cb: DataFrame) -> DataFrame:
     """Probe-side per-(subspace, code) squared distances — the ADC
     distance tables. Exploded + grouped like the oracle, but ONLY over
     the bounded probe set (|probes| × dim × occupied-codes rows; the
     codebook broadcasts)."""
-    sub = (e.filter(_probe_filter())
-            .select("vec_id", F.posexplode("emb").alias("pos0", "val")))
+    sub = probes.select("vec_id", F.posexplode("emb").alias("pos0", "val"))
     diff = F.col("val") - F.col("cval")
     return (sub.join(F.broadcast(cb), "pos0")
                .groupBy("vec_id", "m", "code")
@@ -1220,74 +1193,138 @@ def _pq_dt_array(pdt: DataFrame) -> DataFrame:
                           .alias("dta")))
 
 
-def _pq_adc_fold():
-    """Approximate squared L2 = Σ_m dta[m·stride + code_m] — unrolled
-    into ``PQ_M`` plain ``element_at`` terms (no higher-order
-    function: an HOF lambda is evaluated per element outside
-    whole-stage codegen; 32 literal index expressions stay inside
-    it). Memoized — constant tree, see ``_cached_expr``."""
-    def build():
-        terms = [
-            F.element_at(
-                F.col("dta"),
-                (F.lit(m * PQ_STRIDE) + F.element_at(F.col("codes"), m + 1)
-                 + 1).cast("int"))
-            for m in range(PQ_M)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-    return _cached_expr("pq_adc_fold", build)
+def _pq_adc_ranked(probes: DataFrame, coded: DataFrame,
+                   assigned: DataFrame | None = None) -> DataFrame:
+    """The one ADC ranking: (query_id, neighbor_id, ad2, rank) of each
+    ``probes`` (vec_id, emb) row against the ``coded`` table
+    (``_pq_coded``), ranked by (ad2, neighbor_id). Without
+    ``assigned`` every code row is scored; with a (query_id, cell)
+    ``assigned`` a probe scores only the code rows whose label is one
+    of its cells (IVF-PQ and the post-ingest index). Callers own the
+    coarse assignment and the rank cut."""
+    # Materialize the encode ONCE (round-10 measurement): the coded
+    # frame feeds BOTH the codebook build and the pair-side scan, and
+    # without a materialization barrier Catalyst inlines the ~3,000-op
+    # encode expression into the pair projection — re-encoding the
+    # corpus row PER CANDIDATE PAIR (measured 37 s vs 5.5 s at sf0.1).
+    # The checkpoint is n × (id + PQ_M ints): the codes table a real
+    # pipeline would persist, at exactly the compression PQ promises.
+    coded = coded.localCheckpoint(eager=True)
+    dtm = _pq_dt_array(
+        _pq_probe_d2(probes, _pq_codebook(coded))
+        .select(F.col("vec_id").alias("query_id"), "m", "code", "d2"))
+    # ADC as a broadcast ARRAY-INDEX FOLD, not a join+re-aggregation
+    # (round-9 lesson: the relational form pushed n×M×|probes| rows
+    # through a hash aggregate — 320M rows at sf10, 67.8s; the fold
+    # scans |probes|×n rows once in codegen) — and not a MAP fold
+    # (round-10 lesson in _pq_dt_array: map element_at is a linear
+    # key scan, 18× at the production code domain). Every join is a
+    # broadcast join; nothing shuffles after the encode. The fold
+    # Σ_m dta[m·stride + code_m] is one SQL string of literal
+    # element_at terms: no higher-order-function lambda, which would
+    # be evaluated per element outside whole-stage codegen.
+    ad2 = " + ".join(
+        f"element_at(dta, CAST({m * PQ_STRIDE} + element_at(codes, {m + 1})"
+        f" + 1 AS INT))" for m in range(PQ_M))
+    scan = coded.select("vec_id", F.col("label").alias("cell"), "codes")
+    if assigned is None:
+        pairs = scan.join(F.broadcast(dtm),
+                          F.col("vec_id") != F.col("query_id"))
+    else:
+        pairs = (scan.join(F.broadcast(assigned), ["cell"])
+                 .join(F.broadcast(dtm), ["query_id"])
+                 .filter(F.col("vec_id") != F.col("query_id")))
+    wrank = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
+    return (pairs.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                         F.expr(ad2).alias("ad2"))
+            .withColumn("rank", F.row_number().over(wrank)))
 
 
-def _pq_adc_oracle(topk: int = PQ_TOPK) -> str:
-    """Full-pipeline replication (the IVF-oracle discipline):
-    thresholds, sign-bit encoding, bin-mean codebooks, distance tables
-    and the ADC sum are all recomputed in DuckDB — approximation error
-    vs exact search is part of the checked contract, not hand-waved.
-    ``topk`` widens the cut for the re-rank shortlist
-    (``sim_pq_rerank_search`` nests this at ``PQ_RERANK``)."""
+def _pq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings", parallel=True).select(
+        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+
+
+def _pq_corpus_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ADC ranking over the whole corpus, shared by the top-k cut
+    (``sim_pq_adc_search``) and the re-rank shortlist cut
+    (``sim_pq_rerank_search``)."""
+    e = _pq_embeddings(spark, sf_dir)
+    return _pq_adc_ranked(e.filter(_probe_filter()), _pq_coded(e, e))
+
+
+_PQ_E_SQL = """e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+          FROM embeddings)"""
+
+
+def _pq_sql(train: str, coded: str) -> str:
+    """DuckDB twin of ``_pq_coded`` and the tables ``_pq_adc_ranked``
+    builds: CTE ``grid`` (pos, mn, w) over the relation ``train``; then
+    over the (vec_id, label, emb) relation ``coded``: ``sub`` (vec_id,
+    label, val, pos, m, j), the saturating ``codes`` (vec_id, cell, m,
+    code), the codebook ``cb`` and the probes' distance tables ``pdt``
+    (query_id, m, code, d2)."""
     return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    expl AS (SELECT vec_id, label, unnest(emb) AS val,
-                    generate_subscripts(emb, 1) AS pos FROM e),
+    grid AS (SELECT pos, min(val) AS mn,
+                    greatest(max(val) - min(val), 1e-30) AS w
+             FROM (SELECT unnest(emb) AS val,
+                          generate_subscripts(emb, 1) AS pos FROM {train})
+             GROUP BY pos),
     sub AS (SELECT vec_id, label, val, pos,
                    -- integer floor division: DuckDB CAST(float AS INT)
                    -- ROUNDS, Spark's cast truncates — '//' avoids both
                    CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                   CAST((pos - 1) % {PQ_DSUB} AS INT) AS j FROM expl),
-    grid AS (SELECT pos, min(val) AS mn,
-                    greatest(max(val) - min(val), 1e-30) AS w
-             FROM sub GROUP BY pos),
-    codes AS (SELECT vec_id, m,
-                     CAST(sum(least({PQ_LEVELS - 1},
+                   CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
+            FROM (SELECT vec_id, label, unnest(emb) AS val,
+                         generate_subscripts(emb, 1) AS pos FROM {coded})),
+    codes AS (SELECT vec_id, label AS cell, m,
+                     CAST(sum(greatest(0, least({PQ_LEVELS - 1},
                               CAST(floor((s.val - g.mn) / g.w
-                                         * {PQ_LEVELS}) AS INT))
+                                         * {PQ_LEVELS}) AS INT)))
                           * (1 << ({PQ_BITS} * s.j))) AS INT) AS code
               FROM sub s JOIN grid g USING (pos)
-              GROUP BY vec_id, m),
+              GROUP BY vec_id, label, m),
     cb AS (SELECT c.code, s.m, s.pos, avg(s.val) AS cval
            FROM sub s JOIN codes c ON c.vec_id = s.vec_id AND c.m = s.m
            GROUP BY c.code, s.m, s.pos),
-    d2 AS (SELECT s.vec_id, s.m, cb.code,
-                  sum((s.val - cb.cval) * (s.val - cb.cval)) AS d2
-           FROM sub s JOIN cb ON cb.m = s.m AND cb.pos = s.pos
-           WHERE s.vec_id % {PROBE_MOD} = 0 AND s.vec_id < {PROBE_CAP}
-           GROUP BY s.vec_id, s.m, cb.code),
-    adc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   sum(q.d2) AS ad2
-            FROM d2 q
+    pdt AS (SELECT s.vec_id AS query_id, s.m, cb.code,
+                   sum((s.val - cb.cval) * (s.val - cb.cval)) AS d2
+            FROM sub s JOIN cb ON cb.m = s.m AND cb.pos = s.pos
+            WHERE s.vec_id % {PROBE_MOD} = 0 AND s.vec_id < {PROBE_CAP}
+            GROUP BY s.vec_id, s.m, cb.code)"""
+
+
+def _adc_sql(k: int, cells: str | None = None) -> str:
+    """DuckDB twin of ``_pq_adc_ranked`` cut at rank ``k``, over
+    ``_pq_sql``'s tables: the ``adc`` CTE and the ranked SELECT
+    (query_id, neighbor_id, adist2, rank) that close a WITH. A
+    (vec_id, label) ``cells`` relation prunes each probe's scan to the
+    code rows of its cells."""
+    prune = (f"JOIN {cells} a ON a.vec_id = q.query_id AND a.label = c.cell"
+             if cells else "")
+    return f"""
+    adc AS (SELECT q.query_id, c.vec_id AS neighbor_id, sum(q.d2) AS ad2
+            FROM pdt q
             JOIN codes c ON c.m = q.m AND c.code = q.code
-            WHERE c.vec_id <> q.vec_id
-            GROUP BY q.vec_id, c.vec_id)
+            {prune}
+            WHERE c.vec_id <> q.query_id
+            GROUP BY q.query_id, c.vec_id)
     SELECT query_id, neighbor_id, round(ad2, 6) AS adist2, rank FROM (
         SELECT query_id, neighbor_id, ad2,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY ad2, neighbor_id) AS rank
-        FROM adc) WHERE rank <= {topk}
+        FROM adc) WHERE rank <= {k}
     """
+
+
+def _pq_adc_oracle(topk: int = PQ_TOPK) -> str:
+    """Full-pipeline replication (the IVF-oracle discipline): the
+    lattice grid, the lattice encode, bin-mean codebooks, distance
+    tables and the ADC sum are all recomputed in DuckDB — approximation
+    error vs exact search is part of the checked contract, not
+    hand-waved. ``topk`` widens the cut for the re-rank shortlist
+    (``sim_pq_rerank_search`` nests this at ``PQ_RERANK``)."""
+    return f"WITH {_PQ_E_SQL}, {_pq_sql('e', 'e')}, {_adc_sql(topk)}"
 
 
 @query("sim_pq_adc_search", oracle=_pq_adc_oracle())
@@ -1298,8 +1335,8 @@ def sim_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBys):
 
     1. **Grid**: per-dimension fixed-width quantization grid over the
-       exact [min, max] — one tiny aggregation, broadcast as 1-row
-       maps.
+       exact [min, max] — one tiny aggregation, broadcast as a 1-row
+       frame of positional arrays.
     2. **Encode**: per (vector, subspace), {PQ_BITS} lattice bits per
        dimension → code ∈ [0, {PQ_K}) per subspace (production-shape
        codebooks — VERDICT r9 item 4; the round-9 form had 10
@@ -1327,52 +1364,17 @@ def sim_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     5. Top-{PQ_TOPK} per probe by (adist2, neighbor_id) — bounded
        window over |probes| × n pairs of SCALAR distances.
 
-    Scale: at 100 TB of embeddings the codes table is ~3 TB; combined
-    with IVF cell pruning (``sim_ivfpq_search``) each probe touches
-    n_probe/n_cells of THAT — the standard IVF-PQ composition. L2
-    metric (PQ's native space); for cosine, L2-normalize upstream.
-    The oracle replicates thresholds → bits → bin means → tables →
-    fold end to end."""
-    adc = _pq_adc_ranked(spark, sf_dir)
-    return (adc.filter(F.col("rank") <= PQ_TOPK)
-               .select("query_id", "neighbor_id",
-                       F.round("ad2", 6).alias("adist2"), "rank"))
-
-
-def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id, ad2, rank): the full ADC ranking per
-    probe, shared by the top-k cut (``sim_pq_adc_search``) and the
-    wider re-rank shortlist cut (``sim_pq_rerank_search``)."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
-    grid = _pq_grid(e)
-    # Materialize the encode ONCE (round-10 measurement): the coded
-    # frame feeds BOTH the codebook build and the pair-side scan, and
-    # without a materialization barrier Catalyst inlines the ~3,000-op
-    # encode expression into the pair projection — re-encoding the
-    # corpus row PER CANDIDATE PAIR (measured 37 s vs 5.5 s at sf0.1).
-    # The checkpoint is n × (id + PQ_M ints): the codes table a real
-    # pipeline would persist, at exactly the compression PQ promises.
-    coded = _pq_coded(e, grid).localCheckpoint(eager=True)
-    cb = _pq_codebook(coded)
-    codes_wide = coded.select("vec_id", "codes")
-
-    # ADC as a broadcast ARRAY-INDEX FOLD, not a join+re-aggregation
-    # (round-9 lesson: the relational form pushed n×M×|probes| rows
-    # through a hash aggregate — 320M rows at sf10, 67.8s; the fold
-    # scans |probes|×n rows once in codegen) — and not a MAP fold
-    # (round-10 lesson in _pq_dt_array: map element_at is a linear
-    # key scan, 18× at the production code domain).
-    dtm = _pq_dt_array(
-        _pq_probe_d2(e, cb).select(F.col("vec_id").alias("query_id"),
-                                   "m", "code", "d2"))
-    adc = (codes_wide
-           .join(F.broadcast(dtm), F.col("vec_id") != F.col("query_id"))
-           .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                   _pq_adc_fold().alias("ad2")))
-
-    wrank = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    return adc.withColumn("rank", F.row_number().over(wrank))
+    Steps 3-4 and the ranking are ``_pq_adc_ranked``, which IVF-PQ
+    and the post-ingest serving path share. Scale: at 100 TB of
+    embeddings the codes table is ~3 TB; combined with IVF cell
+    pruning (``sim_ivfpq_search``) each probe touches n_probe/n_cells
+    of THAT — the standard IVF-PQ composition. L2 metric (PQ's native
+    space); for cosine, L2-normalize upstream. The oracle replicates
+    grid → lattice codes → bin means → tables → fold end to end."""
+    return (_pq_corpus_ranked(spark, sf_dir)
+            .filter(F.col("rank") <= PQ_TOPK)
+            .select("query_id", "neighbor_id",
+                    F.round("ad2", 6).alias("adist2"), "rank"))
 
 
 sim_pq_adc_search.__doc__ = sim_pq_adc_search.__doc__.format(
@@ -1469,7 +1471,7 @@ def _exact_l2_topk(spark: SparkSession, sf_dir: str, k: int,
 def sim_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC shortlist → exact re-rank (the FAISS ``refine`` stage).
 
-    The ADC ranking (``_pq_adc_ranked`` — identical plan to
+    The ADC ranking (``_pq_corpus_ranked`` — identical plan to
     ``sim_pq_adc_search``) is cut at ``PQ_RERANK`` instead of top-k;
     the |probes| × {PQ_RERANK} shortlist is then exactly re-scored by
     ``_exact_l2_topk`` (one broadcast-hash join against the corpus,
@@ -1486,7 +1488,7 @@ def sim_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     somewhere in the shortlist" into "top-k in order". The oracle
     nests the full ADC pipeline at the shortlist width and replicates
     the exact re-score."""
-    sl = (_pq_adc_ranked(spark, sf_dir)
+    sl = (_pq_corpus_ranked(spark, sf_dir)
           .filter(F.col("rank") <= PQ_RERANK)
           .select("query_id", "neighbor_id"))
     return _exact_l2_topk(spark, sf_dir, PQ_TOPK, sl)
@@ -1541,56 +1543,18 @@ def _ivfpq_oracle(topk: int = PQ_TOPK) -> str:
     """``topk`` widens the cut for the re-rank shortlist
     (``sim_ivfpq_rerank_search`` nests this at ``PQ_RERANK``)."""
     return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    expl AS (SELECT vec_id, label, unnest(emb) AS val,
-                    generate_subscripts(emb, 1) AS pos FROM e),
-    sub AS (SELECT vec_id, label, val, pos,
-                   CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                   CAST((pos - 1) % {PQ_DSUB} AS INT) AS j FROM expl),
-    grid AS (SELECT pos, min(val) AS mn,
-                    greatest(max(val) - min(val), 1e-30) AS w
-             FROM sub GROUP BY pos),
-    codes AS (SELECT vec_id, m,
-                     CAST(sum(least({PQ_LEVELS - 1},
-                              CAST(floor((s.val - g.mn) / g.w
-                                         * {PQ_LEVELS}) AS INT))
-                          * (1 << ({PQ_BITS} * s.j))) AS INT) AS code
-              FROM sub s JOIN grid g USING (pos)
-              GROUP BY vec_id, m),
-    cb AS (SELECT c.code, s.m, s.pos, avg(s.val) AS cval
-           FROM sub s JOIN codes c ON c.vec_id = s.vec_id AND c.m = s.m
-           GROUP BY c.code, s.m, s.pos),
-    pdt AS (SELECT s.vec_id AS query_id, s.m, cb.code,
-                   sum((s.val - cb.cval) * (s.val - cb.cval)) AS d2
-            FROM sub s JOIN cb ON cb.m = s.m AND cb.pos = s.pos
-            WHERE s.vec_id % {PROBE_MOD} = 0 AND s.vec_id < {PROBE_CAP}
-            GROUP BY s.vec_id, s.m, cb.code),
-    {_cells_sql('e')},
-    assigned AS (SELECT query_id, cell FROM (
-            SELECT p.vec_id AS query_id, cen.label AS cell,
+    WITH {_PQ_E_SQL}, {_pq_sql('e', 'e')}, {_cells_sql('e')},
+    assigned AS (SELECT vec_id, label FROM (
+            SELECT p.vec_id, cen.label,
                    row_number() OVER (
                        PARTITION BY p.vec_id
                        ORDER BY sum((p.val - cen.cval)
                                     * (p.val - cen.cval)), cen.label) AS rn
-            FROM expl p JOIN cen ON cen.pos = p.pos
+            FROM sub p JOIN cen ON cen.pos = p.pos
             WHERE p.vec_id % {PROBE_MOD} = 0 AND p.vec_id < {PROBE_CAP}
             GROUP BY p.vec_id, cen.label)
         WHERE rn <= {IVFPQ_PROBE_CELLS}),
-    adc AS (SELECT q.query_id, c.vec_id AS neighbor_id, sum(q.d2) AS ad2
-            FROM pdt q
-            JOIN codes c ON c.m = q.m AND c.code = q.code
-            JOIN e v ON v.vec_id = c.vec_id
-            JOIN assigned a ON a.query_id = q.query_id
-                           AND a.cell = v.label
-            WHERE c.vec_id <> q.query_id
-            GROUP BY q.query_id, c.vec_id)
-    SELECT query_id, neighbor_id, round(ad2, 6) AS adist2, rank FROM (
-        SELECT query_id, neighbor_id, ad2,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY ad2, neighbor_id) AS rank
-        FROM adc) WHERE rank <= {topk}
-    """
+    {_adc_sql(topk, 'assigned')}"""
 
 
 @query("sim_ivfpq_search", oracle=_ivfpq_oracle())
@@ -1616,32 +1580,22 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sim_ivf_recall_multiprobe``) and the PQ codebook shape
     (``sim_pq_recall_report``).
     """
-    adc = _ivfpq_ranked(spark, sf_dir)
-    return (adc.filter(F.col("rank") <= PQ_TOPK)
-               .select("query_id", "neighbor_id",
-                       F.round("ad2", 6).alias("adist2"), "rank"))
+    return (_ivfpq_ranked(spark, sf_dir)
+            .filter(F.col("rank") <= PQ_TOPK)
+            .select("query_id", "neighbor_id",
+                    F.round("ad2", 6).alias("adist2"), "rank"))
 
 
 def _ivfpq_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id, ad2, rank): the cell-pruned ADC ranking,
-    shared by the top-k cut (``sim_ivfpq_search``) and the re-rank
-    shortlist cut (``sim_ivfpq_rerank_search``)."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
-    grid = _pq_grid(e)
-    # encode materialized once — see sim_pq_adc_search for the
-    # round-10 inlined-re-encode measurement that makes this barrier
-    # load-bearing, not an optimization nicety
-    coded = _pq_coded(e, grid).localCheckpoint(eager=True)
-    cb = _pq_codebook(coded)
-    pdt = (_pq_probe_d2(e, cb)
-           .select(F.col("vec_id").alias("query_id"), "m", "code", "d2"))
-
-    # coarse assignment: probe → top cells by exact L2 to the label
-    # centroids (probe-bounded: |probes| × dim explode against the
-    # broadcast centroid table)
+    """The cell-pruned ADC ranking, shared by the top-k cut
+    (``sim_ivfpq_search``) and the re-rank shortlist cut
+    (``sim_ivfpq_rerank_search``): each probe's top cells by exact L2
+    to the label centroids (probe-bounded: |probes| × dim explode
+    against the broadcast centroid table), then ``_pq_adc_ranked``."""
+    e = _pq_embeddings(spark, sf_dir)
+    probes = e.filter(_probe_filter())
     cen, _ = _ingest_corpus_cells(e)
-    pexpl = e.filter(_probe_filter()).select(
+    pexpl = probes.select(
         "vec_id", F.posexplode("emb").alias("pos0", "val")).select(
         "vec_id", (F.col("pos0") + 1).alias("pos"), "val")
     cdiff = F.col("val") - F.col("cval")
@@ -1653,25 +1607,7 @@ def _ivfpq_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("rn", F.row_number().over(wcell))
                 .filter(F.col("rn") <= IVFPQ_PROBE_CELLS)
                 .select("query_id", "cell"))
-
-    # cell-pruned ADC as broadcast equi-joins + a codegen'd
-    # array-index fold (see sim_pq_adc_search / _pq_dt_array):
-    # assigned cells restrict WHICH code rows are scanned, the probe's
-    # dense distance-table array scores them — every join here is a
-    # broadcast equi-join, nothing shuffles after the encode
-    # projection.
-    codes_wide = coded.select("vec_id", F.col("label").alias("cell"),
-                              "codes")
-    dtm = _pq_dt_array(pdt)
-    adc = (codes_wide
-           .join(F.broadcast(assigned), ["cell"])
-           .join(F.broadcast(dtm), ["query_id"])
-           .filter(F.col("vec_id") != F.col("query_id"))
-           .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                   _pq_adc_fold().alias("ad2")))
-
-    wrank = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    return adc.withColumn("rank", F.row_number().over(wrank))
+    return _pq_adc_ranked(probes, _pq_coded(e, e), assigned)
 
 
 sim_ivfpq_search.__doc__ = sim_ivfpq_search.__doc__.format(
@@ -1728,76 +1664,44 @@ def _ingest_is_batch() -> Column:
     return (F.col("vec_id") % INGEST_MOD) == INGEST_REM
 
 
+def _ingest_index(e: DataFrame):
+    """(corpus, cen, cnorm, idx) over the (vec_id, label, emb) frame
+    ``e``: the corpus/batch split, the frozen corpus-only cells and the
+    post-ingest index ``idx`` (vec_id, label, emb) — corpus vectors
+    under their original cells ∪ batch vectors under their
+    ingest-assigned cells. Shared by the post-ingest recall and the
+    post-ingest serving path."""
+    corpus = e.filter(~_ingest_is_batch())
+    batch = e.filter(_ingest_is_batch())
+    cen, cnorm = _ingest_corpus_cells(corpus)
+    ingested = _ingest_assign_cells(batch, cen, cnorm, 1)
+    idx = corpus.select("vec_id", "label", "emb").unionAll(
+        batch.select("vec_id", "emb")
+             .join(ingested, "vec_id")
+             .select("vec_id", "label", "emb"))
+    return corpus, cen, cnorm, idx
+
+
 _INGEST_BATCH_SQL = f"vec_id % {INGEST_MOD} = {INGEST_REM}"
 
 # The oracle head every ingest query shares: the corpus/batch split,
-# the frozen corpus-only cells and the batch's nearest-cell assignment
-# (``batch_cells``).
+# the frozen corpus-only cells, the batch's nearest-cell assignment
+# (``batch_cells``) and the post-ingest index ``idx``.
 _INGEST_INDEX_SQL = f"""
-    e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-          FROM embeddings),
+    {_PQ_E_SQL},
     corpus AS (SELECT * FROM e WHERE NOT ({_INGEST_BATCH_SQL})),
     batch AS (SELECT * FROM e WHERE {_INGEST_BATCH_SQL}),
     {_cells_sql('corpus')},
-    {_assign_sql('batch', 1)}"""
-
-
-def _pq_sat_bin_expr(pos: int):
-    """Saturating lattice bin against the broadcast grid arrays —
-    ``greatest(0, least(levels-1, floor(...)))``. The frozen grid was
-    trained on the corpus, so an out-of-distribution batch value can
-    fall OUTSIDE [min, max]: clamp its bin on BOTH ends (the
-    full-corpus encode in ``_pq_bin_expr`` never needs the low clamp —
-    its grid min is the data min by construction). Standard
-    frozen-quantizer edge-bin saturation; shared by the ingest and the
-    post-ingest rerank serving path."""
-    x = F.element_at(F.col("emb"), pos + 1)
-    mn = F.element_at(F.col("mna"), pos + 1)
-    w = F.element_at(F.col("wa"), pos + 1)
-    return F.greatest(
-        F.lit(0),
-        F.least(F.lit(PQ_LEVELS - 1),
-                F.floor((x - mn) / w * PQ_LEVELS))).cast("int")
-
-
-def _pq_sat_code_expr(m: int):
-    """Subspace-``m`` saturated PQ code (the ``_pq_code_expr`` fold
-    over ``_pq_sat_bin_expr`` bins)."""
-    parts = [_pq_sat_bin_expr(m * PQ_DSUB + j) * (PQ_LEVELS ** j)
-             for j in range(PQ_DSUB)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
-
-
-def _pq_sat_codes_arr():
-    """All ``PQ_M`` saturated subspace codes as one array expression —
-    pure whole-stage codegen against the broadcast 1-row grid.
-    Memoized — constant tree, see ``_cached_expr``."""
-    return _cached_expr("pq_sat_codes", lambda: F.array(
-        *[_pq_sat_code_expr(m).cast("int") for m in range(PQ_M)]))
+    {_assign_sql('batch', 1)},
+    idx AS (SELECT vec_id, label, emb FROM corpus
+            UNION ALL
+            SELECT b.vec_id, i.label, b.emb
+            FROM batch b JOIN batch_cells i USING (vec_id))"""
 
 
 def _ingest_oracle() -> str:
     return f"""
-    WITH {_INGEST_INDEX_SQL},
-    grid AS (SELECT pos, min(val) AS mn,
-                    greatest(max(val) - min(val), 1e-30) AS w
-             FROM (SELECT unnest(emb) AS val,
-                          generate_subscripts(emb, 1) AS pos FROM corpus)
-             GROUP BY pos),
-    bsub AS (SELECT vec_id, val, pos,
-                    CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
-             FROM batch_expl),
-    codes AS (SELECT vec_id, m,
-                     CAST(sum(greatest(0, least({PQ_LEVELS - 1},
-                              CAST(floor((s.val - g.mn) / g.w
-                                         * {PQ_LEVELS}) AS INT)))
-                          * (1 << ({PQ_BITS} * s.j))) AS INT) AS code
-              FROM bsub s JOIN grid g USING (pos)
-              GROUP BY vec_id, m),
+    WITH {_INGEST_INDEX_SQL}, {_pq_sql('corpus', 'batch')},
     cstr AS (SELECT vec_id,
                     string_agg(CAST(code AS VARCHAR), '-' ORDER BY m)
                       AS codes_str
@@ -1825,8 +1729,7 @@ def sim_ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch). The corpus is NEVER joined against the batch.
     ``sim_ivf_incremental_recall`` value-checks that a post-ingest
     multiprobe search over the updated index finds the new vectors."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
+    e = _pq_embeddings(spark, sf_dir)
     corpus = e.filter(~_ingest_is_batch())
     batch = e.filter(_ingest_is_batch())
 
@@ -1834,17 +1737,12 @@ def sim_ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _ingest_assign_cells(batch, cen, cnorm, 1).select(
         "vec_id", F.col("label").alias("cell"),
         F.round("ccos", 6).alias("ccos"))
-
-    # Saturating encode against the frozen corpus grid — see
-    # _pq_sat_bin_expr; the oracle applies the identical
-    # greatest/least clamps.
-    grid = _pq_grid(corpus)
-    codes = _pq_sat_codes_arr()
-    coded = (batch.crossJoin(F.broadcast(grid))
-             .select("vec_id",
-                     F.array_join(
-                         F.transform(codes, lambda c: c.cast("string")),
-                         "-").alias("codes_str")))
+    # batch values outside the frozen corpus grid saturate at the edge
+    # bins (``_pq_bin_sql``); the oracle applies the identical clamps
+    coded = _pq_coded(batch, corpus).select(
+        "vec_id",
+        F.array_join(F.transform("codes", lambda c: c.cast("string")),
+                     "-").alias("codes_str"))
     return assigned.join(coded, "vec_id").select(
         "vec_id", "cell", "ccos", "codes_str")
 
@@ -1860,10 +1758,6 @@ def _ingest_recall_oracle() -> str:
     centroid table stays corpus-only — frozen index)."""
     ivf_k = f"""
     WITH {_INGEST_INDEX_SQL},
-    idx AS (SELECT vec_id, label, emb FROM corpus
-            UNION ALL
-            SELECT b.vec_id, i.label, b.emb
-            FROM batch b JOIN batch_cells i USING (vec_id)),
     {_PROBES_CTE},
     {_assign_sql('probes', IVF_PROBE_CELLS)},
     {_cell_scan_sql('probes', 'probes_cells', 'idx', IVF_K)}"""
@@ -1889,16 +1783,7 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     side's scan is sized by its probed cells."""
     e = _embeddings(spark, sf_dir, IVF_PROBE_CELLS
                     / parquet_column_ndv(sf_dir, "embeddings", "label"))
-    corpus = e.filter(~_ingest_is_batch())
-    batch = e.filter(_ingest_is_batch())
-
-    cen, cnorm = _ingest_corpus_cells(corpus)
-    ingested = _ingest_assign_cells(batch, cen, cnorm, 1)
-    idx = corpus.select("vec_id", "label", "emb").unionAll(
-        batch.select("vec_id", "emb")
-             .join(ingested, "vec_id")
-             .select("vec_id", "label", "emb"))
-
+    _, cen, cnorm, idx = _ingest_index(e)
     probes = e.filter(_probe_filter())
     passigned = _ingest_assign_cells(probes, cen, cnorm, IVF_PROBE_CELLS)
     ivf_k = _cell_pruned_cosine_topk(probes, passigned, idx, IVF_K)
@@ -1928,119 +1813,11 @@ def sim_ivf_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ingest_rerank_oracle() -> str:
-    shortlist = f"""
-    WITH {_INGEST_INDEX_SQL},
-    grid AS (SELECT pos, min(val) AS mn,
-                    greatest(max(val) - min(val), 1e-30) AS w
-             FROM (SELECT unnest(emb) AS val,
-                          generate_subscripts(emb, 1) AS pos FROM corpus)
-             GROUP BY pos),
-    csub AS (SELECT vec_id, val, pos,
-                    CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
-             FROM (SELECT vec_id, unnest(emb) AS val,
-                          generate_subscripts(emb, 1) AS pos FROM corpus)),
-    ccodes AS (SELECT vec_id, m,
-                      CAST(sum(least({PQ_LEVELS - 1},
-                               CAST(floor((s.val - g.mn) / g.w
-                                          * {PQ_LEVELS}) AS INT))
-                           * (1 << ({PQ_BITS} * s.j))) AS INT) AS code
-               FROM csub s JOIN grid g USING (pos)
-               GROUP BY vec_id, m),
-    bsub AS (SELECT vec_id, val, pos,
-                    CAST((pos - 1) // {PQ_DSUB} AS INT) AS m,
-                    CAST((pos - 1) % {PQ_DSUB} AS INT) AS j
-             FROM batch_expl),
-    bcodes AS (SELECT vec_id, m,
-                      CAST(sum(greatest(0, least({PQ_LEVELS - 1},
-                               CAST(floor((s.val - g.mn) / g.w
-                                          * {PQ_LEVELS}) AS INT)))
-                           * (1 << ({PQ_BITS} * s.j))) AS INT) AS code
-               FROM bsub s JOIN grid g USING (pos)
-               GROUP BY vec_id, m),
-    idxcodes AS (
-        SELECT c.vec_id, v.label AS cell, c.m, c.code
-        FROM ccodes c JOIN corpus v ON v.vec_id = c.vec_id
-        UNION ALL
-        SELECT b.vec_id, i.label AS cell, b.m, b.code
-        FROM bcodes b JOIN batch_cells i ON i.vec_id = b.vec_id),
-    allsub AS (SELECT vec_id, val, pos, m FROM csub
-               UNION ALL
-               SELECT vec_id, val, pos, m FROM bsub),
-    cb AS (SELECT ic.code, s.m, s.pos, avg(s.val) AS cval
-           FROM allsub s JOIN idxcodes ic
-             ON ic.vec_id = s.vec_id AND ic.m = s.m
-           GROUP BY ic.code, s.m, s.pos),
+    return _exact_l2_sql(PQ_TOPK, f"""
+    WITH {_INGEST_INDEX_SQL}, {_pq_sql('corpus', 'idx')},
     {_PROBES_CTE},
     {_assign_sql('probes', IVF_PROBE_CELLS)},
-    pdt AS (SELECT s.vec_id AS query_id, s.m, cb.code,
-                   sum((s.val - cb.cval) * (s.val - cb.cval)) AS d2
-            FROM (SELECT vec_id, val, pos,
-                         CAST((pos - 1) // {PQ_DSUB} AS INT) AS m
-                  FROM probes_expl) s
-            JOIN cb ON cb.m = s.m AND cb.pos = s.pos
-            GROUP BY s.vec_id, s.m, cb.code),
-    adc AS (SELECT q.query_id, ic.vec_id AS neighbor_id, sum(q.d2) AS ad2
-            FROM pdt q
-            JOIN idxcodes ic ON ic.m = q.m AND ic.code = q.code
-            JOIN probes_cells a ON a.vec_id = q.query_id
-                                AND a.label = ic.cell
-            WHERE ic.vec_id <> q.query_id
-            GROUP BY q.query_id, ic.vec_id),
-    ranked AS (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY ad2, neighbor_id) AS rank
-        FROM adc)
-    SELECT query_id, neighbor_id FROM ranked WHERE rank <= {PQ_RERANK}
-    """
-    return _exact_l2_sql(PQ_TOPK, shortlist)
-
-
-def _ingest_rerank_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id): the PQ_RERANK-wide ADC shortlist over
-    the post-ingest index — cell-pruned to each probe's multiprobe
-    cells, scored against the incrementally-updated codebook."""
-    e = load_table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("emb"))
-    corpus = e.filter(~_ingest_is_batch())
-    batch = e.filter(_ingest_is_batch())
-
-    cen, cnorm = _ingest_corpus_cells(corpus)
-    ingested = _ingest_assign_cells(batch, cen, cnorm, 1).select(
-        "vec_id", "label")
-
-    grid = _pq_grid(corpus)
-    ccoded = _pq_coded(corpus, grid).select(
-        "vec_id", "label", "emb", "codes")
-    bcoded = (batch.crossJoin(F.broadcast(grid))
-              .select("vec_id", "emb", _pq_sat_codes_arr().alias("codes"))
-              .join(ingested, "vec_id")
-              .select("vec_id", "label", "emb", "codes"))
-    # one materialization barrier for the post-ingest codes table — the
-    # _pq_adc_ranked lesson (inlined ~3,000-op encode re-evaluated per
-    # candidate pair without it); this IS the table a production index
-    # persists, at PQ compression
-    coded = ccoded.unionAll(bcoded).localCheckpoint(eager=True)
-
-    cb = _pq_codebook(coded)
-    pdt = _pq_probe_d2(e, cb).select(
-        F.col("vec_id").alias("query_id"), "m", "code", "d2")
-    passigned = _ingest_assign_cells(
-        e.filter(_probe_filter()), cen, cnorm, IVF_PROBE_CELLS).select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("cell"))
-
-    dtm = _pq_dt_array(pdt)
-    adc = (coded.select("vec_id", F.col("label").alias("cell"), "codes")
-           .join(F.broadcast(passigned), ["cell"])
-           .join(F.broadcast(dtm), ["query_id"])
-           .filter(F.col("vec_id") != F.col("query_id"))
-           .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                   _pq_adc_fold().alias("ad2")))
-    wrank = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    return (adc.withColumn("rank", F.row_number().over(wrank))
-               .filter(F.col("rank") <= PQ_RERANK)
-               .select("query_id", "neighbor_id"))
+    {_adc_sql(PQ_RERANK, 'probes_cells')}""")
 
 
 @query("sim_ivf_incremental_rerank_search", oracle=_ingest_rerank_oracle())
@@ -2049,8 +1826,8 @@ def sim_ivf_incremental_rerank_search(spark: SparkSession,
     """The production serving path over the FROZEN+INGESTED index:
     multiprobe IVF cell pruning (corpus cells ∪ ingest-assigned
     cells, frozen corpus centroids) → ADC scoring against the
-    post-ingest code table (corpus codes + the batch's saturated
-    codes; codebook = incrementally-maintained bin means) → ONE
+    post-ingest code table (the index encoded once against the frozen
+    corpus grid; codebook = incrementally-maintained bin means) → ONE
     broadcast exact re-rank of the PQ_RERANK shortlist
     (``_exact_l2_topk``: shortlist broadcasts, the full-precision
     corpus is scanned once, never shuffled).
@@ -2061,17 +1838,25 @@ def sim_ivf_incremental_rerank_search(spark: SparkSession,
     ``sim_ivf_incremental_rerank_recall`` measures the recovery vs the
     0.21-0.25 multiprobe-only recall. Deterministic given the frozen
     index, so fully oracle-gated: the SQL replays split → centroids →
-    assignment → grid → both encodes → codebook → distance tables →
+    assignment → grid → encode → codebook → distance tables →
     cell-pruned ADC → exact refine end to end.
 
     Plan shape: every index-side table (centroids, norms, grid,
     distance-table arrays, probe cell assignments) broadcasts; the
-    only scans of the corpus are the two encode projections and the
+    only scans of the corpus are the encode projection and the
     refine's single broadcast-hash join; the batch never joins the
     corpus. At 100 TB the ADC scan touches n_probe/n_cells of the
     code table — which is ~8× smaller than the embeddings — and the
     refine reads |probes| × {PQ_RERANK} full vectors."""
-    sl = _ingest_rerank_shortlist(spark, sf_dir)
+    e = _pq_embeddings(spark, sf_dir)
+    corpus, cen, cnorm, idx = _ingest_index(e)
+    probes = e.filter(_probe_filter())
+    passigned = _ingest_assign_cells(
+        probes, cen, cnorm, IVF_PROBE_CELLS).select(
+        F.col("vec_id").alias("query_id"), F.col("label").alias("cell"))
+    sl = (_pq_adc_ranked(probes, _pq_coded(idx, corpus), passigned)
+          .filter(F.col("rank") <= PQ_RERANK)
+          .select("query_id", "neighbor_id"))
     return _exact_l2_topk(spark, sf_dir, PQ_TOPK, sl)
 
 

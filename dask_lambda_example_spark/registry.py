@@ -110,6 +110,9 @@ PRIORITY_QUERIES = (
     # top-k cut, and their scans rebalance from estimated pair counts.
     "sim_threshold_join", "sim_ann_signlsh_topk",
     "dedup_embedding_neardup", "dedup_semdedup_cells",
+    # REVERIFY re-earn: the PQ family now shares one encode, one ADC
+    # ranking and one oracle CTE chain.
+    "sim_pq_adc_search",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -162,6 +165,9 @@ CORRECTNESS_ARTIFACTS = (
 # composite over them now score with vector.cosine_join and cut with
 # vector.cosine_topk, and their embeddings scans rebalance from
 # estimated pair counts, not a per-call-site override — re-earn.
+# One PQ pipeline: the PQ family now shares one encode, one ADC ranking
+# and one oracle CTE chain — sim_pq_adc_search joins the eight PQ names
+# above.
 REVERIFY: tuple[str, ...] = (
     "sim_cosine_topk_bruteforce", "sim_search_auto",
     "sim_ann_recall_report", "sim_ivf_recall_report",
@@ -175,6 +181,7 @@ REVERIFY: tuple[str, ...] = (
     "sim_ivfpq_search",
     "sim_threshold_join", "sim_ann_signlsh_topk",
     "dedup_embedding_neardup", "dedup_semdedup_cells",
+    "sim_pq_adc_search",
 )
 
 

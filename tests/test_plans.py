@@ -773,11 +773,11 @@ def test_crawl_pagerank_auto_dispatch(spark, sf_dir):
 
 def test_pq_adc_scan_broadcasts_and_never_cartesians(spark, sf_dir):
     # PQ's whole point is that the corpus side stays put: the per-probe
-    # distance-table maps broadcast against the code table (the
+    # dense distance-table arrays broadcast against the code table (the
     # |probes| x n scan is the deliberate brute-force-over-CODES shape,
     # same as sim_cosine_topk_bruteforce's probe x corpus join), never
     # a CartesianProduct, and after the encode stage there is no
-    # shuffle at all — the ADC sum is a codegen'd map-lookup fold.
+    # shuffle at all — the ADC sum is a codegen'd array-index fold.
     df = QUERIES["sim_pq_adc_search"].fn(spark, sf_dir)
     assert_broadcast_join(df)
     assert_no_cartesian(df)
@@ -836,7 +836,7 @@ def test_ivfpq_scan_is_all_equijoins(spark, sf_dir):
     # assigned-cells and distance-table joins are broadcast EQUI-joins,
     # so the scan never visits a code row outside the probe's cells.
     # The ONLY nested-loop joins allowed are the 1-row quantization-grid
-    # attaches (crossJoin of the broadcast single-row min/width maps in
+    # attaches (crossJoin of the broadcast single-row min/width arrays in
     # the encode projection — a build side of exactly one row; the
     # encode subtree plans once under the codebook build and once under
     # the code scan, hence up to two); any other BNLJ would mean the

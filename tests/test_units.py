@@ -2231,16 +2231,46 @@ def test_load_table_parallel_gate_scales_with_rowcount(spark, name,
     assert round_robins("sf0.1") == rr_at_sf01
 
 
-def test_pq_expression_cache_reuses_per_context(spark):
-    """The constant PQ expression trees are built once per live
-    SparkContext (driver-side py4j construction of the ~3,000-op encode
-    was 1.5-2.3 s per build) and the cached Column is the identical
-    object — identical analyzed plans by construction."""
+def test_pq_encode_saturates_against_frozen_grid(spark):
+    """The one PQ encode (``_pq_coded``) against a grid trained on
+    other rows: values below the grid's min, above its max, on both
+    edges and inside the range all get the lattice code computed in
+    Python — bin = max(0, min(levels-1, floor((x - min) / w ·
+    levels))), code_m = Σ_j bin_{m·dsub+j} · levels^j. Dimension 5 is
+    constant in the training rows, so its width is the 1e-30 floor."""
     from dask_lambda_example_spark.operators.similarity import (
-        _pq_adc_fold, _pq_sat_codes_arr)
+        PQ_DSUB, PQ_LEVELS, PQ_M, _pq_coded)
 
-    assert _pq_sat_codes_arr() is _pq_sat_codes_arr()
-    assert _pq_adc_fold() is _pq_adc_fold()
+    dim = PQ_M * PQ_DSUB
+    schema = "vec_id long, label long, emb array<double>"
+    train_emb = [[0.25 if p == 5 else ((i * 0.37 + p * 0.11) % 1.0) - 0.5
+                  for p in range(dim)] for i in range(4)]
+    mn = [min(col) for col in zip(*train_emb)]
+    mx = [max(col) for col in zip(*train_emb)]
+    w = [max(hi - lo, 1e-30) for lo, hi in zip(mn, mx)]
+    # one value per (row, dim): below min, above max, min, max, inside
+    cases = [lambda p: mn[p] - 1.0, lambda p: mx[p] + 0.5,
+             lambda p: mn[p], lambda p: mx[p],
+             lambda p: mn[p] + 0.3 * (mx[p] - mn[p])]
+    test_emb = [[cases[(r + p) % len(cases)](p) for p in range(dim)]
+                for r in range(len(cases))]
+    raw = [math.floor((x - mn[p]) / w[p] * PQ_LEVELS)
+           for row in test_emb for p, x in enumerate(row)]
+    assert min(raw) < 0 and max(raw) > PQ_LEVELS - 1  # both clamps fire
+
+    def code(row, m):
+        return sum(max(0, min(PQ_LEVELS - 1, math.floor(
+            (row[p] - mn[p]) / w[p] * PQ_LEVELS))) * PQ_LEVELS ** j
+            for j, p in enumerate(range(m * PQ_DSUB, (m + 1) * PQ_DSUB)))
+
+    train = spark.createDataFrame(
+        [(i, 0, e) for i, e in enumerate(train_emb)], schema)
+    test = spark.createDataFrame(
+        [(100 + r, 1, e) for r, e in enumerate(test_emb)], schema)
+    got = {r["vec_id"]: r["codes"]
+           for r in _pq_coded(test, train).select("vec_id", "codes").collect()}
+    assert got == {100 + r: [code(row, m) for m in range(PQ_M)]
+                   for r, row in enumerate(test_emb)}
 
 
 def test_table_builds_launch_no_job(spark, sf_dir):
