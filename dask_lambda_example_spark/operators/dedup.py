@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_lambda_example_spark.functions.vector import (
@@ -69,42 +69,66 @@ TOKENS_SQL = """
 """
 
 
-def shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, token) where token is a distinct word 3-gram shingle.
+def word_ngrams(ws: str, n: int) -> Column:
+    """Every word ``n``-gram of the token-array column ``ws``, in order
+    and space-joined — the one n-gram builder of the shingle, MinHash,
+    decontamination and substring queries (``ngrams_sql`` is its DuckDB
+    twin). Callers add their own ``array_distinct``, ``explode`` or
+    ``posexplode`` (pos + 1 for a 1-based start).
 
-    Shingling (not unigrams) is what keeps the inverted index sparse:
-    unigram vocabularies are small so every token is a stopword and a
-    token self-join degenerates toward O(n²); 3-gram shingles are
-    near-unique, so posting lists stay short at any corpus size."""
-    # ws is materialized in its own projection: referencing split(text)
-    # directly from the lambda makes Catalyst re-evaluate the split per
-    # element (3 splits × ~|ws| windows per row — measured 10× slower).
-    wsdf = df.select("doc_id", F.split(F.col(text_col), " ").alias("ws"))
-    ws = F.col("ws")
-    grams = F.when(
-        F.size(ws) >= 3,  # guard: Spark's sequence(1,0) counts DOWN, DuckDB's is empty
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 2),
-            lambda i: F.concat_ws(
-                " ", F.element_at(ws, i), F.element_at(ws, i + 1),
-                F.element_at(ws, i + 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # sz (the set size) rides along through the explode so downstream
-    # Jaccard math needs no separate per-doc size aggregation + re-join.
+    One SQL string, parsed by the JVM, instead of a Python lambda tree.
+    The guard is needed because Spark's ``sequence(1, 0)`` counts DOWN;
+    DuckDB's ``generate_series`` is empty there. ``ws`` must be its own
+    projected column: naming ``split(text)`` inside the lambda makes
+    Catalyst re-evaluate the split per element (measured 10× slower).
+    """
+    return F.expr(
+        f"CASE WHEN size({ws}) >= {n} THEN transform("
+        f"sequence(1, size({ws}) - {n - 1}),"
+        f" i -> array_join(slice({ws}, i, {n}), ' ')) ELSE array() END")
+
+
+def ngrams_sql(ws: str, n: int) -> str:
+    """DuckDB twin of ``word_ngrams``: the list of word ``n``-grams of
+    the list ``ws``."""
+    return (f"list_transform(generate_series(1, len({ws}) - {n - 1}),"
+            f" i -> array_to_string({ws}[i:i+{n - 1}], ' '))")
+
+
+def _gram_sets(df: DataFrame, n: int) -> DataFrame:
+    """(doc_id, sz, token): each document's distinct word ``n``-grams,
+    with sz their count riding along through the explode, so
+    downstream Jaccard math needs no per-doc size aggregation and
+    re-join."""
     return (
-        wsdf.select("doc_id", F.array_distinct(grams).alias("arr"))
+        df.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
+        .select("doc_id", F.array_distinct(word_ngrams("ws", n)).alias("arr"))
         .select("doc_id", F.size("arr").alias("sz"),
                 F.explode("arr").alias("token"))
     )
 
 
-SHINGLES_SQL = """
-    SELECT doc_id, unnest(list_distinct(list_transform(
-               generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS token
-    FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)
+def _gram_sets_sql(n: int, where: str = "TRUE") -> str:
+    """DuckDB twin of ``_gram_sets`` without sz: (doc_id, token) over
+    the documents that pass ``where``."""
+    return f"""
+    SELECT doc_id, unnest(list_distinct({ngrams_sql('ws', n)})) AS token
+    FROM (SELECT doc_id, string_split(text, ' ') AS ws
+          FROM documents WHERE {where})
 """
+
+
+def shingles(df: DataFrame) -> DataFrame:
+    """(doc_id, sz, token) where token is a distinct word 3-gram shingle.
+
+    Shingling (not unigrams) is what keeps the inverted index sparse:
+    unigram vocabularies are small so every token is a stopword and a
+    token self-join degenerates toward O(n²); 3-gram shingles are
+    near-unique, so posting lists stay short at any corpus size."""
+    return _gram_sets(df, 3)
+
+
+SHINGLES_SQL = _gram_sets_sql(3)
 
 
 def shingle_df_cap() -> int | None:
@@ -281,31 +305,105 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_THRESHOLD = 0.5
 
 
-@query(
-    "dedup_jaccard_pairs",
-    oracle=f"""
-    WITH tok AS ({SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
+def _pair_combos(ids: str) -> Column:
+    """Every (a, b) pair, a before b, of the sorted array column
+    ``ids``: the in-row expansion of one posting list. The lists are
+    short (3-gram shingles, df-capped shingles or LSH band groups), so
+    the per-list quadratic term is bounded."""
+    return F.flatten(F.transform(
+        F.col(ids),
+        lambda a, i: F.transform(
+            F.slice(F.col(ids), i + 2, F.size(F.col(ids))),
+            lambda b: F.struct(a.alias("a"), b.alias("b"))),
+    ))
+
+
+def _jaccard(common: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, j) for the rows of ``common`` (a, sza, b, szb, c) whose
+    exact Jaccard j = c/(sza+szb-c) reaches ``JACCARD_THRESHOLD``. The
+    filter reads the unrounded ratio; callers round j for output."""
+    j = F.col("c") / (F.col("sza") + F.col("szb") - F.col("c"))
+    return (common.select(a, b, j.alias("j"))
+            .filter(F.col("j") >= JACCARD_THRESHOLD))
+
+
+def _posting_jaccard(tok: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) over a shingle index ``tok`` (doc_id, sz,
+    token): group by shingle, expand each posting list into its (doc,
+    doc) pairs and count the shared shingles per pair. One pass over
+    the index (a token self-join would compute the shingle explode
+    twice) and one shuffle on the token; sz rides in the posting
+    entries, so no per-doc size join follows."""
+    posts = (
+        tok.groupBy("token")
+        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sz"))).alias("ds"))
+        .filter(F.size("ds") > 1)
+    )
+    common = (
+        posts.select(F.explode(_pair_combos("ds")).alias("p"))
+        .groupBy(F.col("p.a.doc_id").alias("doc_a"), F.col("p.a.sz").alias("sza"),
+                 F.col("p.b.doc_id").alias("doc_b"), F.col("p.b.sz").alias("szb"))
+        .agg(F.count("*").alias("c"))
+    )
+    return _jaccard(common, "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
+
+
+def _verify_jaccard(cand: DataFrame, tok: DataFrame, a: str,
+                    b: str) -> DataFrame:
+    """(a, b, j): exact Jaccard of the candidate pairs ``cand`` (a, b)
+    against the full shingle index ``tok`` (doc_id, sz, token), a
+    shingle equi-join that touches only candidate postings."""
+    ta = tok.alias("ta")
+    tb = tok.alias("tb")
+    common = (
+        cand.join(ta, F.col("ta.doc_id") == F.col(a))
+        .join(tb, (F.col("tb.doc_id") == F.col(b))
+              & (F.col("tb.token") == F.col("ta.token")))
+        .groupBy(F.col(a), F.col("ta.sz").alias("sza"),
+                 F.col(b), F.col("tb.sz").alias("szb"))
+        .agg(F.count("*").alias("c"))
+    )
+    return _jaccard(common, a, b)
+
+
+def _scored_sql(a: str, b: str) -> str:
+    """CTE ``scored`` (a, b, j): the exact Jaccard of each row of CTE
+    ``common`` (a, b, c) against CTE ``sizes`` (doc_id, sz), kept at or
+    above ``JACCARD_THRESHOLD`` unrounded — the oracle twin of
+    ``_jaccard``."""
+    j = "c * 1.0 / (sa.sz + sb.sz - c)"
+    return f"""scored AS (
+        SELECT {a}, {b}, {j} AS j
+        FROM common
+        JOIN sizes sa ON sa.doc_id = {a}
+        JOIN sizes sb ON sb.doc_id = {b}
+        WHERE {j} >= {JACCARD_THRESHOLD})"""
+
+
+def _jaccard_sql(tok: str) -> str:
+    """The all-pairs Jaccard oracle over the (doc_id, token) CTE
+    ``tok``: the CTEs sizes, common and scored, then the SELECT."""
+    return f"""
+    sizes AS (SELECT doc_id, count(*) AS sz FROM {tok} GROUP BY doc_id),
     common AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
+        FROM {tok} a JOIN {tok} b ON a.token = b.token AND a.doc_id < b.doc_id
         GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-        SELECT doc_a, doc_b,
-               round(c * 1.0 / (sa.sz + sb.sz - c), 6) AS jaccard
-        FROM common
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b)
-    SELECT doc_a, doc_b, jaccard FROM pairs
-    WHERE jaccard >= {JACCARD_THRESHOLD}
-    """,
-)
-def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via an inverted-index
-    self-join on word 3-gram shingles — |A∩B| from a shingle equi-join,
-    sizes from a per-doc count, Jaccard = c/(|A|+|B|-c).
+    {_scored_sql("doc_a", "doc_b")}
+    SELECT doc_a, doc_b, round(j, 6) AS jaccard FROM scored
+    """
 
-    Scale: the shingle join shuffles on the shingle (inverted index),
+
+@query("dedup_jaccard_pairs", oracle=f"""
+    WITH tok AS ({SHINGLES_SQL}),{_jaccard_sql("tok")}""")
+def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs via an inverted index on word
+    3-gram shingles — |A∩B| from the posting lists, set sizes carried
+    through the shingle explode (``shingles``' sz),
+    Jaccard = c/(|A|+|B|-c).
+
+    Scale: the posting lists group on the shingle (inverted index),
     never forming the O(n²) cross product, and 3-gram posting lists are
     short by construction (unigram posting lists are not — see
     ``shingles``); residual hot shingles are AQE-skew-split, and the
@@ -318,59 +416,18 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # PRE-cap sz, so the reported jaccard is a lower bound — dropped
         # shingles can only remove intersection evidence, never add it.
         tok = drop_stop_shingles(tok, cap)
-    # Posting-list formulation of the inverted-index join: group by
-    # shingle, emit the (doc, doc) pairs of each posting list via an
-    # in-row combination expansion. One pass over the index (a
-    # token-join self-join would compute the shingle explode twice) and
-    # one shuffle on the token. Posting lists are short by construction
-    # (3-gram shingles), so the per-list quadratic expansion is bounded.
-    posts = (
-        tok.groupBy("token")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sz"))).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    pair_combos = F.flatten(F.transform(
-        F.col("ds"),
-        lambda a, i: F.transform(
-            F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-            lambda b: F.struct(a.alias("a"), b.alias("b"))),
-    ))
-    pairs = posts.select(F.explode(pair_combos).alias("p"))
-    jac = F.col("c") / (F.col("sza") + F.col("szb") - F.col("c"))
-    return (
-        pairs.groupBy(
-            F.col("p.a.doc_id").alias("doc_a"), F.col("p.a.sz").alias("sza"),
-            F.col("p.b.doc_id").alias("doc_b"), F.col("p.b.sz").alias("szb"))
-        .agg(F.count("*").alias("c"))
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _posting_jaccard(tok)
 
 
 STOP_SHINGLE_DF_CAP = 5  # fixed cap for the oracle-paired variant below
 
 
-@query(
-    "dedup_jaccard_stopshingle",
-    oracle=f"""
+@query("dedup_jaccard_stopshingle", oracle=f"""
     WITH tok AS ({SHINGLES_SQL}),
     freq AS (SELECT token, count(*) AS df FROM tok GROUP BY token),
     kept AS (SELECT t.doc_id, t.token
              FROM tok t JOIN freq f ON f.token = t.token
-             WHERE f.df <= {STOP_SHINGLE_DF_CAP}),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM kept GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM kept a JOIN kept b ON a.token = b.token AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id)
-    SELECT doc_a, doc_b,
-           round(c * 1.0 / (sa.sz + sb.sz - c), 6) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE c * 1.0 / (sa.sz + sb.sz - c) >= {JACCARD_THRESHOLD}
-    """,
-)
+             WHERE f.df <= {STOP_SHINGLE_DF_CAP}),{_jaccard_sql("kept")}""")
 def dedup_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup pairs with the df-cap stop-shingle defense as a
     first-class, oracle-checked operator: shingles appearing in more
@@ -383,36 +440,13 @@ def dedup_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     out up front, so no posting list longer than the cap is ever
     collected and per-list pair expansion is bounded at cap²/2
     candidates regardless of how much boilerplate the corpus carries.
+    The post-cap size is a per-doc window count, so it rides into the
+    posting lists like ``dedup_jaccard_pairs``' sz.
     """
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    kept = drop_stop_shingles(shingles(d).select("doc_id", "token"),
-                              STOP_SHINGLE_DF_CAP)
-    sizes = kept.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    posts = (
-        kept.groupBy("token")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    combos = F.flatten(F.transform(
-        F.col("ids"),
-        lambda a, i: F.transform(
-            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-            lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))),
-    ))
-    common = (
-        posts.select(F.explode(combos).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("c") / (F.col("sa.sz") + F.col("sb.sz") - F.col("c"))
-    return (
-        common.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    kept = drop_stop_shingles(shingles(d), STOP_SHINGLE_DF_CAP)
+    return _posting_jaccard(kept.withColumn(
+        "sz", F.count("*").over(Window.partitionBy("doc_id"))))
 
 
 # ---------------------------------------------------------------------------
@@ -429,80 +463,100 @@ N_BANDS = 8
 _M32_MOD = 4_294_967_296
 
 
-def _minhash_oracle() -> str:
-    """The full MinHash→LSH→verify pipeline in DuckDB SQL — textually
-    generated so it provably uses the same hash family/bands as the
-    Spark side."""
-    mh_cols = ", ".join(
-        f"min((h1 + {i} * h2) % {_M32_MOD}) AS mh{i}"
-        for i in range(N_HASHES)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, "
-        f"concat(mh{2 * b}, '|', mh{2 * b + 1}) AS band_val FROM sig"
-        for b in range(N_BANDS)
-    )
+def _mh_sig_terms() -> list[str]:
+    """The 16 signature aggregates over (h1, h2) as SQL that both
+    engines parse, so Spark and the oracle share one hash family."""
+    return [f"min((h1 + {i} * h2) % {_M32_MOD}) AS mh{i}"
+            for i in range(N_HASHES)]
+
+
+def _mh_band_val(b: int) -> str:
+    """Band ``b``'s value, its two minhashes joined by '|', as SQL that
+    both engines parse."""
+    return (f"concat(CAST(mh{2 * b} AS STRING), '|',"
+            f" CAST(mh{2 * b + 1} AS STRING))")
+
+
+def _mh_sql() -> str:
+    """The CTEs tok, th, sig, bands and sizes that both MinHash oracles
+    open with: the same shingles, hash family and banding as
+    ``_mh_bands``."""
     h1 = HEX32_SQL.format(x="token")
     h2 = HEX32_SQL.format(x="token || '#'")
+    band_rows = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_id, {_mh_band_val(b)} AS band_val"
+        " FROM sig" for b in range(N_BANDS))
     return f"""
     WITH tok AS ({SHINGLES_SQL}),
     th AS (SELECT doc_id, {h1} AS h1, {h2} AS h2 FROM tok),
-    sig AS (SELECT doc_id, {mh_cols} FROM th GROUP BY doc_id),
+    sig AS (SELECT doc_id, {", ".join(_mh_sig_terms())} FROM th GROUP BY doc_id),
     bands AS ({band_rows}),
-    cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        FROM bands x JOIN bands y
-          ON x.band_id = y.band_id AND x.band_val = y.band_val
-         AND x.doc_id < y.doc_id),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id)"""
+
+
+def _verify_sql(a: str, b: str) -> str:
+    """The CTEs common and scored: exact Jaccard verify of CTE ``cand``
+    (a, b) against the full shingle index ``tok`` — the oracle twin of
+    ``_verify_jaccard``."""
+    return f"""
     common AS (
-        SELECT c.doc_a, c.doc_b, count(*) AS ct
-        FROM cand c
-        JOIN tok ta ON ta.doc_id = c.doc_a
-        JOIN tok tb ON tb.doc_id = c.doc_b AND tb.token = ta.token
-        GROUP BY c.doc_a, c.doc_b)
-    SELECT doc_a, doc_b,
-           round(ct * 1.0 / (sa.sz + sb.sz - ct), 6) AS jaccard
-    FROM common
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE ct * 1.0 / (sa.sz + sb.sz - ct) >= {JACCARD_THRESHOLD}
-    """
+        SELECT x.{a}, x.{b}, count(*) AS c
+        FROM cand x
+        JOIN tok ta ON ta.doc_id = x.{a}
+        JOIN tok tb ON tb.doc_id = x.{b} AND tb.token = ta.token
+        GROUP BY x.{a}, x.{b}),
+    {_scored_sql(a, b)}"""
 
 
-def _mh_bands(tok_sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_val): the LSH band index, 8 rows per doc
-    — shared by the all-pairs query (``dedup_minhash_lsh_pairs``) and
-    the incremental batch-vs-index variant
-    (``dedup_incremental_minhash``).
+def _mh_bands(spark: SparkSession, d: DataFrame,
+              name: str) -> tuple[DataFrame, DataFrame]:
+    """(tok, bands): the pinned shingle index of ``d`` and its LSH band
+    index (doc_id, band_id, band_val), 8 rows per doc — shared by the
+    all-pairs query (``dedup_minhash_lsh_pairs``) and the incremental
+    batch-vs-index variant (``dedup_incremental_minhash``).
+
+    The shingle index feeds three consumers (signature build + both
+    sides of the verification join); materialize() pins it once —
+    .cache() locally (CacheManager keys on the logical plan, so
+    repeated invocations share one entry), or a parquet checkpoint
+    when SPARK_GRAFT_CHECKPOINT_DIR is set (the 100 TB path: the
+    signature-build input is written once between stages instead of
+    living in evictable executor memory).
 
     Signature: universal-hashing family g_i = (h1 + i·h2) mod 2³²
     from TWO md5-derived hashes per shingle (not 16 md5 calls — the
     affine combinations are integer ops); h1/h2 materialized as
     columns so the 16 min-aggregates reference attributes instead of
-    re-evaluating md5. One aggregation pass computes all 16 mins."""
+    re-evaluating md5. One aggregation pass computes all 16 mins. The
+    aggregates and the band array are SQL strings parsed by the JVM,
+    not Column trees built call by call."""
+    tok = materialize(shingles(d), spark, name)
+    cap = shingle_df_cap()
+    # hot-shingle defense (unset in parity runs): viral shingles are
+    # dropped before SIGNATURE build — their minhashes otherwise
+    # collapse unrelated documents into shared bands. Exact
+    # verification still uses the full index (tok), so emitted
+    # jaccard values stay exact; only candidate RECALL changes.
+    tok_sig = drop_stop_shingles(tok, cap) if cap is not None else tok
     th = tok_sig.select(
         "doc_id",
         hex32(F.col("token")).alias("h1"),
         hex32(F.concat(F.col("token"), F.lit("#"))).alias("h2"))
-    sig = th.groupBy("doc_id").agg(*[
-        F.min((F.col("h1") + i * F.col("h2")) % _M32_MOD).alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ])
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat(F.col(f"mh{2 * b}").cast("string"), F.lit("|"),
-                     F.col(f"mh{2 * b + 1}").cast("string")).alias("band_val"),
-        )
-        for b in range(N_BANDS)
-    ])
-    return sig.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band_id").alias("band_id"),
-        F.col("bs.band_val").alias("band_val"))
+    sig = th.groupBy("doc_id").agg(*map(F.expr, _mh_sig_terms()))
+    bands = ", ".join(
+        f"named_struct('band_id', {b}, 'band_val', {_mh_band_val(b)})"
+        for b in range(N_BANDS))
+    return tok, sig.selectExpr("doc_id", f"inline(array({bands}))")
 
 
-@query("dedup_minhash_lsh_pairs", oracle=_minhash_oracle())
+@query("dedup_minhash_lsh_pairs", oracle=f"""{_mh_sql()},
+    cand AS (
+        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+        FROM bands x JOIN bands y
+          ON x.band_id = y.band_id AND x.band_val = y.band_val
+         AND x.doc_id < y.doc_id),{_verify_sql("doc_a", "doc_b")}
+    SELECT doc_a, doc_b, round(j, 6) AS jaccard FROM scored
+    """)
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup: 16 universal-family minhashes per doc
     (gᵢ = (h1 + i·h2) mod 2³² over two md5-derived hashes) → 8 bands of
@@ -516,24 +570,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     including LSH's false negatives — rather than probabilistic.
     """
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    # The shingle index feeds three consumers (signature build + both
-    # sides of the verification join); materialize() pins it once —
-    # .cache() locally (CacheManager keys on the logical plan, so
-    # repeated invocations share one entry), or a parquet checkpoint
-    # when SPARK_GRAFT_CHECKPOINT_DIR is set (the 100 TB path: the
-    # signature-build input is written once between stages instead of
-    # living in evictable executor memory).
-    tok = materialize(shingles(d), spark, "minhash_shingles")
-    cap = shingle_df_cap()
-    # hot-shingle defense (unset in parity runs): viral shingles are
-    # dropped before SIGNATURE build — their minhashes otherwise
-    # collapse unrelated documents into shared bands. Exact
-    # verification below still uses the full index (tok), so emitted
-    # jaccard values stay exact; only candidate RECALL changes.
-    tok_sig = drop_stop_shingles(tok, cap) if cap is not None else tok
-
-    bands = _mh_bands(tok_sig)
-
+    tok, bands = _mh_bands(spark, d, "minhash_shingles")
     # candidate pairs from grouped band posting lists (one pass over
     # bands instead of a band self-join that would rebuild signatures
     # twice); band groups are tiny, so the in-row expansion is bounded
@@ -542,52 +579,16 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    combos = F.flatten(F.transform(
-        F.col("ids"),
-        lambda a, i: F.transform(
-            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-            lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))),
-    ))
     cand = (
-        grouped.select(F.explode(combos).alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        grouped.select(F.explode(_pair_combos("ids")).alias("p"))
+        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
     )
-
-    ta = tok.alias("ta")
-    tb = tok.alias("tb")
-    common = (
-        cand.join(ta, F.col("ta.doc_id") == F.col("doc_a"))
-        .join(tb, (F.col("tb.doc_id") == F.col("doc_b"))
-              & (F.col("tb.token") == F.col("ta.token")))
-        .groupBy(F.col("doc_a"), F.col("ta.sz").alias("sza"),
-                 F.col("doc_b"), F.col("tb.sz").alias("szb"))
-        .agg(F.count("*").alias("ct"))
-    )
-    jac = F.col("ct") / (F.col("sza") + F.col("szb") - F.col("ct"))
-    return (
-        common.filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _verify_jaccard(cand, tok, "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
 
 
-def _incr_minhash_oracle() -> str:
-    mh_cols = ", ".join(
-        f"min((h1 + {i} * h2) % {_M32_MOD}) AS mh{i}"
-        for i in range(N_HASHES)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, "
-        f"concat(mh{2 * b}, '|', mh{2 * b + 1}) AS band_val FROM sig"
-        for b in range(N_BANDS)
-    )
-    h1 = HEX32_SQL.format(x="token")
-    h2 = HEX32_SQL.format(x="token || '#'")
-    return f"""
-    WITH tok AS ({SHINGLES_SQL}),
-    th AS (SELECT doc_id, {h1} AS h1, {h2} AS h2 FROM tok),
-    sig AS (SELECT doc_id, {mh_cols} FROM th GROUP BY doc_id),
-    bands AS ({band_rows}),
+@query("dedup_incremental_minhash", oracle=f"""{_mh_sql()},
     flags AS (SELECT doc_id,
                      CAST(substr(source, 4) AS INT)
                        >= {INCR_INCOMING_MIN_SRC} AS is_incoming
@@ -599,20 +600,7 @@ def _incr_minhash_oracle() -> str:
         JOIN bands y ON y.band_id = x.band_id
                     AND y.band_val = x.band_val
         JOIN flags fy ON fy.doc_id = y.doc_id AND NOT fy.is_incoming),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
-    common AS (
-        SELECT c.batch_id, c.corpus_id, count(*) AS ct
-        FROM cand c
-        JOIN tok ta ON ta.doc_id = c.batch_id
-        JOIN tok tb ON tb.doc_id = c.corpus_id AND tb.token = ta.token
-        GROUP BY c.batch_id, c.corpus_id),
-    scored AS (
-        SELECT batch_id, corpus_id,
-               ct * 1.0 / (sa.sz + sb.sz - ct) AS j
-        FROM common
-        JOIN sizes sa ON sa.doc_id = batch_id
-        JOIN sizes sb ON sb.doc_id = corpus_id
-        WHERE ct * 1.0 / (sa.sz + sb.sz - ct) >= {JACCARD_THRESHOLD}),
+    {_verify_sql("batch_id", "corpus_id")},
     best AS (SELECT batch_id, corpus_id, j FROM (
             SELECT batch_id, corpus_id, j,
                    row_number() OVER (PARTITION BY batch_id
@@ -623,10 +611,7 @@ def _incr_minhash_oracle() -> str:
            (b.corpus_id IS NOT NULL) AS near_dup_of_existing
     FROM flags f LEFT JOIN best b ON b.batch_id = f.doc_id
     WHERE f.is_incoming
-    """
-
-
-@query("dedup_incremental_minhash", oracle=_incr_minhash_oracle())
+    """)
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup ingest: the new shard (sources ≥
     src{INCR_INCOMING_MIN_SRC}, the ``dedup_incremental_ingest``
@@ -653,9 +638,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcnum = F.substring(F.col("source"), 4, 10).cast("int")
     flags = d.select(
         "doc_id", (srcnum >= INCR_INCOMING_MIN_SRC).alias("is_incoming"))
-    tok = materialize(shingles(d), spark, "incr_minhash_shingles")
-    cap = shingle_df_cap()
-    tok_sig = drop_stop_shingles(tok, cap) if cap is not None else tok
+    tok, bands = _mh_bands(spark, d, "incr_minhash_shingles")
 
     # The band build plans ONCE PER SIDE of the candidate join (2×16
     # partial_min aggregates in the executed plan) — but that is NOT
@@ -665,7 +648,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum to one full build. Measured (sf1/sf10): caching the unsplit
     # band index instead is SLOWER (9.7→11.9 s / 20.7→24.0 s) — the
     # barrier pays a full-index write+read to save nothing.
-    bands = _mh_bands(tok_sig).join(flags, "doc_id")
+    bands = bands.join(flags, "doc_id")
     batch_bands = (bands.filter(F.col("is_incoming"))
                    .select(F.col("doc_id").alias("batch_id"),
                            "band_id", "band_val"))
@@ -674,22 +657,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                            "band_id", "band_val"))
     cand = (batch_bands.join(index_bands, ["band_id", "band_val"])
             .select("batch_id", "corpus_id").distinct())
-
-    ta = tok.alias("ta")
-    tb = tok.alias("tb")
-    common = (
-        cand.join(ta, F.col("ta.doc_id") == F.col("batch_id"))
-        .join(tb, (F.col("tb.doc_id") == F.col("corpus_id"))
-              & (F.col("tb.token") == F.col("ta.token")))
-        .groupBy(F.col("batch_id"), F.col("ta.sz").alias("sza"),
-                 F.col("corpus_id"), F.col("tb.sz").alias("szb"))
-        .agg(F.count("*").alias("ct"))
-    )
-    jac = F.col("ct") / (F.col("sza") + F.col("szb") - F.col("ct"))
     wbest = Window.partitionBy("batch_id").orderBy(
         F.desc("j"), F.asc("corpus_id"))
-    best = (common.withColumn("j", jac)
-            .filter(F.col("j") >= JACCARD_THRESHOLD)
+    best = (_verify_jaccard(cand, tok, "batch_id", "corpus_id")
             .withColumn("rn", F.row_number().over(wbest))
             .filter(F.col("rn") == 1)
             .select(F.col("batch_id").alias("doc_id"),
@@ -848,25 +818,14 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECONTAM_GRAM = 5
 
 
-def _gram5_sql(source_filter: str) -> str:
-    return f"""
-        SELECT doc_id, unnest(list_distinct(list_transform(
-                   generate_series(1, len(ws) - {DECONTAM_GRAM - 1}),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                        || ' ' || ws[i+3] || ' ' || ws[i+4]))) AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws
-              FROM documents WHERE {source_filter})
-    """
-
-
 @query(
     "dedup_decontaminate",
     oracle=f"""
-    WITH bench AS ({_gram5_sql("source = 'src0'")}),
-    corpus AS ({_gram5_sql("source <> 'src0'")}),
+    WITH bench AS ({_gram_sets_sql(DECONTAM_GRAM, "source = 'src0'")}),
+    corpus AS ({_gram_sets_sql(DECONTAM_GRAM, "source <> 'src0'")}),
     contaminated AS (
         SELECT DISTINCT c.doc_id
-        FROM corpus c JOIN bench b ON c.g = b.g)
+        FROM corpus c JOIN bench b ON c.token = b.token)
     SELECT d.doc_id, d.source,
            (ct.doc_id IS NOT NULL) AS contaminated
     FROM documents d
@@ -886,27 +845,10 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast bloom/exact set; the corpus is touched once, no
     self-coupling."""
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    ws = F.split(F.col("text"), " ")
-
-    def gram5(df: DataFrame) -> DataFrame:
-        wsdf = df.select("doc_id", ws.alias("ws"))
-        n = F.size(F.col("ws"))
-        grams = F.when(
-            n >= DECONTAM_GRAM,
-            F.transform(
-                F.sequence(F.lit(1), n - (DECONTAM_GRAM - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(F.col("ws"), i + k)
-                           for k in range(DECONTAM_GRAM)]),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return (wsdf.select("doc_id", F.array_distinct(grams).alias("arr"))
-                .select("doc_id", F.explode("arr").alias("g")))
-
-    bench = gram5(d.filter(F.col("source") == "src0"))
-    corpus = gram5(d.filter(F.col("source") != "src0"))
+    bench = _gram_sets(d.filter(F.col("source") == "src0"), DECONTAM_GRAM)
+    corpus = _gram_sets(d.filter(F.col("source") != "src0"), DECONTAM_GRAM)
     contaminated = (
-        corpus.join(F.broadcast(bench.select("g").distinct()), "g")
+        corpus.join(F.broadcast(bench.select("token").distinct()), "token")
         .select("doc_id").distinct()
         .withColumn("hit", F.lit(True))
     )
@@ -999,17 +941,7 @@ CC_MAX_ITERS = 20
 @query(
     "dedup_cluster_cc",
     oracle=f"""
-    WITH RECURSIVE tok AS ({SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-        SELECT doc_a, doc_b FROM common
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE round(c * 1.0 / (sa.sz + sb.sz - c), 6) >= {JACCARD_THRESHOLD}),
+    WITH RECURSIVE pairs AS ({QUERIES["dedup_jaccard_pairs"].oracle}),
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
               UNION ALL
               SELECT doc_b, doc_a FROM pairs),
@@ -1203,13 +1135,9 @@ SPAN_N = 5  # tokens per span — the classic exact-substring dedup unit
 @query(
     "dedup_repeated_ngram_spans",
     oracle=f"""
-    WITH arrs AS (SELECT doc_id, string_split(text, ' ') AS a
-                  FROM documents),
-    idx AS (SELECT doc_id, a,
-                   unnest(generate_series(1, len(a) - {SPAN_N - 1})) AS i
-            FROM arrs),
-    ng AS (SELECT doc_id, array_to_string(a[i:i+{SPAN_N - 1}], ' ') AS ngram
-           FROM idx),
+    WITH ng AS (SELECT doc_id, unnest({ngrams_sql('a', SPAN_N)}) AS ngram
+                FROM (SELECT doc_id, string_split(text, ' ') AS a
+                      FROM documents)),
     df AS (SELECT ngram, count(DISTINCT doc_id) AS ndocs
            FROM ng GROUP BY 1),
     per_doc AS (
@@ -1259,14 +1187,9 @@ def _repeated_ngram_spans(spark: SparkSession, sf_dir: str,
     rollup join move 8-byte longs instead of ~40-byte strings — the
     scale mitigation SCALE.md Round-7 documented."""
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    n = SPAN_N
-    span = F.explode(F.expr(
-        f"transform(sequence(1, size(a) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(a, i, {n})))")).alias("ngram")
     ng = (
         d.select("doc_id", F.split(F.col("text"), " ").alias("a"))
-        .filter(F.size("a") >= n)
-        .select("doc_id", span)
+        .select("doc_id", F.explode(word_ngrams("a", SPAN_N)).alias("ngram"))
     )
     if hashed:
         # Hash projection happens map-side, pre-shuffle: the string
@@ -1636,14 +1559,9 @@ SUBSTR_ANCHOR_MOD = 4  # grams with hash % 4 == 0 are anchors
 
 _SUBSTR_ORACLE = f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    g0 AS (SELECT doc_id,
-                  unnest(list_transform(
-                      generate_series(1, len(ws) - {SUBSTR_K - 1}),
-                      i -> {{'pos': i,
-                             'g': array_to_string(
-                                 ws[i:i+{SUBSTR_K - 1}], ' ')}})) AS s
-           FROM t WHERE len(ws) >= {SUBSTR_K}),
-    g AS (SELECT doc_id, CAST(s.pos AS INT) AS pos, s.g AS g FROM g0),
+    g AS (SELECT doc_id, CAST(generate_subscripts(l, 1) AS INT) AS pos,
+                 unnest(l) AS g
+          FROM (SELECT doc_id, {ngrams_sql('ws', SUBSTR_K)} AS l FROM t)),
     keep AS (SELECT g FROM g GROUP BY g
              HAVING count(DISTINCT doc_id) BETWEEN 2 AND {SUBSTR_DF_CAP}
                 AND count(*) <= {SUBSTR_OCC_CAP}),
@@ -1673,19 +1591,12 @@ _SUBSTR_ORACLE = f"""
 
 
 def _substr_grams(d: DataFrame) -> DataFrame:
-    """(doc_id, pos, g): every token {SUBSTR_K}-gram with its 1-based
-    start position — one explode per document, |tokens| output rows."""
-    t = (d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-          .filter(F.size("toks") >= SUBSTR_K))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("toks")) - (SUBSTR_K - 1)),
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.array_join(F.slice(F.col("toks"), i, SUBSTR_K), " ")
-             .alias("g")))
-    return (t.select("doc_id", F.explode(grams).alias("s"))
-             .select("doc_id", F.col("s.pos").alias("pos"),
-                     F.col("s.g").alias("g")))
+    """(doc_id, pos, g): every token SUBSTR_K-gram with its 1-based
+    start position — one posexplode per document, |tokens| output rows."""
+    return (d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
+             .select("doc_id", F.posexplode(word_ngrams("toks", SUBSTR_K))
+                     .alias("pos", "g"))
+             .select("doc_id", (F.col("pos") + 1).alias("pos"), "g"))
 
 
 @query("dedup_substring_spans", oracle=_SUBSTR_ORACLE)

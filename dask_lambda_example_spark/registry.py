@@ -113,6 +113,14 @@ PRIORITY_QUERIES = (
     # REVERIFY re-earn: the PQ family now shares one encode, one ADC
     # ranking and one oracle CTE chain.
     "sim_pq_adc_search",
+    # REVERIFY re-earn: the text near-dup queries now share one word
+    # n-gram builder, one Jaccard core and one set of oracle CTEs.
+    "dedup_jaccard_pairs", "dedup_jaccard_stopshingle",
+    "dedup_minhash_lsh_pairs", "dedup_incremental_minhash",
+    "dedup_cluster_cc", "dedup_decontaminate",
+    "dedup_repeated_ngram_spans", "dedup_repeated_ngram_spans_hashed",
+    "dedup_substring_spans", "dedup_substring_cutlist",
+    "pipeline_curation_funnel_cut",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -168,6 +176,10 @@ CORRECTNESS_ARTIFACTS = (
 # One PQ pipeline: the PQ family now shares one encode, one ADC ranking
 # and one oracle CTE chain — sim_pq_adc_search joins the eight PQ names
 # above.
+# One text near-dup core: the shingle, MinHash, decontamination and
+# substring queries (and the funnel that consumes the cut list) share
+# one word n-gram builder, one posting-list pair expansion, one Jaccard
+# verify and one set of oracle CTEs — re-earn.
 REVERIFY: tuple[str, ...] = (
     "sim_cosine_topk_bruteforce", "sim_search_auto",
     "sim_ann_recall_report", "sim_ivf_recall_report",
@@ -182,6 +194,12 @@ REVERIFY: tuple[str, ...] = (
     "sim_threshold_join", "sim_ann_signlsh_topk",
     "dedup_embedding_neardup", "dedup_semdedup_cells",
     "sim_pq_adc_search",
+    "dedup_jaccard_pairs", "dedup_jaccard_stopshingle",
+    "dedup_minhash_lsh_pairs", "dedup_incremental_minhash",
+    "dedup_cluster_cc", "dedup_decontaminate",
+    "dedup_repeated_ngram_spans", "dedup_repeated_ngram_spans_hashed",
+    "dedup_substring_spans", "dedup_substring_cutlist",
+    "pipeline_curation_funnel_cut",
 )
 
 

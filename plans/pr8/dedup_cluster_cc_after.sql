@@ -1,0 +1,36 @@
+
+    WITH RECURSIVE pairs AS (
+    WITH tok AS (
+    SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(ws) - 2), i -> array_to_string(ws[i:i+2], ' ')))) AS token
+    FROM (SELECT doc_id, string_split(text, ' ') AS ws
+          FROM documents WHERE TRUE)
+),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
+    common AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
+        FROM tok a JOIN tok b ON a.token = b.token AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id),
+    scored AS (
+        SELECT doc_a, doc_b, c * 1.0 / (sa.sz + sb.sz - c) AS j
+        FROM common
+        JOIN sizes sa ON sa.doc_id = doc_a
+        JOIN sizes sb ON sb.doc_id = doc_b
+        WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.5)
+    SELECT doc_a, doc_b, round(j, 6) AS jaccard FROM scored
+    ),
+    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+              UNION ALL
+              SELECT doc_b, doc_a FROM pairs),
+    reach(node, label) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, r.label
+        FROM reach r JOIN edges e ON e.src = r.node),
+    cc AS (SELECT node AS doc_id, min(label) AS cluster_id
+           FROM reach GROUP BY node)
+    SELECT c.doc_id, c.cluster_id, s.cluster_size,
+           c.doc_id = c.cluster_id AS is_canonical
+    FROM cc c
+    JOIN (SELECT cluster_id, count(*) AS cluster_size
+          FROM cc GROUP BY cluster_id) s USING (cluster_id)
+    

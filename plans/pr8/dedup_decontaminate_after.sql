@@ -1,0 +1,20 @@
+
+    WITH bench AS (
+    SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(ws) - 4), i -> array_to_string(ws[i:i+4], ' ')))) AS token
+    FROM (SELECT doc_id, string_split(text, ' ') AS ws
+          FROM documents WHERE source = 'src0')
+),
+    corpus AS (
+    SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(ws) - 4), i -> array_to_string(ws[i:i+4], ' ')))) AS token
+    FROM (SELECT doc_id, string_split(text, ' ') AS ws
+          FROM documents WHERE source <> 'src0')
+),
+    contaminated AS (
+        SELECT DISTINCT c.doc_id
+        FROM corpus c JOIN bench b ON c.token = b.token)
+    SELECT d.doc_id, d.source,
+           (ct.doc_id IS NOT NULL) AS contaminated
+    FROM documents d
+    LEFT JOIN contaminated ct ON ct.doc_id = d.doc_id
+    WHERE d.source <> 'src0'
+    

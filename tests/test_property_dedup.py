@@ -1,8 +1,9 @@
 """Property-based test (SURVEY.md §5): the inverted-index Jaccard
-near-dup join must match a brute-force all-pairs reference on arbitrary
-generated corpora — seeded hypothesis search over shingle collisions,
-identical docs, sub-shingle-length docs, empty docs, and singleton
-corpora (the edge cases a fixed fixture misses). The query's scalable
+near-dup join, plain and with the stop-shingle df cap, must match a
+brute-force all-pairs reference on arbitrary generated corpora —
+seeded hypothesis search over shingle collisions, identical docs,
+sub-shingle-length docs, empty docs, and singleton corpora (the edge
+cases a fixed fixture misses). The query's scalable
 formulation (posting-list equi-join, no cross product) and the O(n²)
 reference must be EXTENSIONALLY equal wherever Jaccard ≥ threshold.
 """
@@ -10,11 +11,13 @@ reference must be EXTENSIONALLY equal wherever Jaccard ≥ threshold.
 from __future__ import annotations
 
 import tempfile
+from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from dask_lambda_example_spark.operators.dedup import JACCARD_THRESHOLD
+from dask_lambda_example_spark.operators.dedup import (
+    JACCARD_THRESHOLD, STOP_SHINGLE_DF_CAP)
 
 # tiny alphabet → forced shingle collisions; short docs → boundary cases
 _word = st.sampled_from(["aa", "bb", "cc", "dd"])
@@ -28,8 +31,15 @@ def _shingles(tokens: list[str]) -> set[str]:
     return {" ".join(tokens[i:i + 3]) for i in range(len(tokens) - 2)}
 
 
-def _reference_pairs(corpus: list[list[str]]) -> dict[tuple[int, int], float]:
+def _reference_pairs(corpus: list[list[str]],
+                     max_df: int | None = None) -> dict[tuple[int, int], float]:
+    # with max_df, shingles in more than max_df docs are dropped first
+    # and the set sizes are those of the capped sets (the stop-shingle
+    # query's contract)
     sh = {i: _shingles(toks) for i, toks in enumerate(corpus)}
+    if max_df is not None:
+        df = Counter(g for s in sh.values() for g in s)
+        sh = {i: {g for g in s if df[g] <= max_df} for i, s in sh.items()}
     out = {}
     for a in range(len(corpus)):
         for b in range(a + 1, len(corpus)):
@@ -138,6 +148,10 @@ def test_simhash_matches_reference(spark, corpus):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(corpus=_corpus)
+# "aa aa aa" sits in 6 docs, above the stop-shingle cap: only the
+# post-cap set sizes give the capped pairs (docs 0-1 at 1.0, not 0.6)
+@example(corpus=[["aa", "aa", "aa", "bb", "cc", "dd"]] * 2
+         + [["aa", "aa", "aa", "cc"]] * 4 + [["bb", "cc", "dd", "aa"]])
 def test_jaccard_pairs_match_bruteforce(spark, corpus):
     from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
 
@@ -153,6 +167,9 @@ def test_jaccard_pairs_match_bruteforce(spark, corpus):
     got = {(r.doc_a, r.doc_b): r.jaccard
            for r in QUERIES["dedup_jaccard_pairs"].fn(spark, sf).collect()}
     assert got == _reference_pairs(corpus)
+    capped = {(r.doc_a, r.doc_b): r.jaccard for r in
+              QUERIES["dedup_jaccard_stopshingle"].fn(spark, sf).collect()}
+    assert capped == _reference_pairs(corpus, STOP_SHINGLE_DF_CAP)
 
 
 # ---------------------------------------------------------------------------

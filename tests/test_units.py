@@ -16,7 +16,8 @@ from dask_lambda_example_spark.functions.vector import (
     l2norm,
     sign_lsh_bucket,
 )
-from dask_lambda_example_spark.operators.dedup import hex32, shingles
+from dask_lambda_example_spark.operators.dedup import (
+    hex32, ngrams_sql, shingles, word_ngrams)
 from dask_lambda_example_spark.operators.multimodal import (
     FAKE_IMAGE_MAGIC,
     decode_image_stub,
@@ -44,14 +45,33 @@ def test_vector_expressions(spark):
     assert row.b == "11"
 
 
-def test_shingles_short_doc_guard(spark):
-    # fewer than 3 tokens must yield zero shingles (Spark's sequence()
-    # counts down when start > stop — the guard prevents that)
-    df = spark.createDataFrame(
-        [(1, "one two"), (2, "a b c d")], "doc_id long, text string")
-    out = {r.doc_id: (r.sz, r.token) for r in shingles(df).collect()}
-    assert 1 not in out
-    assert out[2][0] == 2  # "a b c", "b c d"
+@pytest.mark.parametrize("n", [3, 5, 8])
+def test_shingles_short_doc_guard(spark, duck, n):
+    # a doc with fewer than n tokens must yield zero n-grams (Spark's
+    # sequence() counts down when start > stop — word_ngrams' guard
+    # prevents that; DuckDB's generate_series is empty there), and the
+    # Spark builder, its DuckDB twin and a Python reference agree on
+    # empty, shorter-than-n, exactly-n and n+1-token docs
+    texts = {1: "", 2: " ".join(f"w{i}" for i in range(n - 1)),
+             3: " ".join(f"w{i}" for i in range(n)),
+             4: " ".join(f"w{i}" for i in range(n + 1))}
+    ref = {d: [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
+           for d, ws in ((d, t.split(" ")) for d, t in texts.items())}
+    assert [len(ref[d]) for d in sorted(ref)] == [0, 0, 1, 2]
+    df = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    got = {r.doc_id: r.g for r in
+           df.select("doc_id", F.split("text", " ").alias("ws"))
+           .select("doc_id", word_ngrams("ws", n).alias("g")).collect()}
+    assert got == ref
+    values = ", ".join(f"({d}, '{t}')" for d, t in sorted(texts.items()))
+    duck_got = dict(duck.sql(
+        f"SELECT doc_id, {ngrams_sql('ws', n)} FROM (SELECT doc_id,"
+        f" string_split(text, ' ') AS ws FROM (VALUES {values}) v(doc_id, text))"
+    ).fetchall())
+    assert duck_got == ref
+    if n == 3:
+        out = {r.doc_id: (r.sz, r.token) for r in shingles(df).collect()}
+        assert set(out) == {3, 4} and out[4][0] == 2  # "w0 w1 w2", "w1 w2 w3"
 
 
 def test_hex32_matches_duckdb(spark, duck):
@@ -2273,29 +2293,42 @@ def test_pq_encode_saturates_against_frozen_grid(spark):
                    for r, row in enumerate(test_emb)}
 
 
-def test_table_builds_launch_no_job(spark, sf_dir):
+def test_table_builds_launch_no_job(spark, sf_dir, monkeypatch):
     """After one warm-up load, loading every TPC-H table and building
     each of q1-q22 launches no Spark job: the parquet schema comes from
     the ``table_schema`` memo instead of an inference job on every
     ``spark.read.parquet`` (ADVICE r4: building a DataFrame launches no
-    job). Checked by job group, so jobs of other threads don't count."""
+    job). The same holds for the text near-dup queries over
+    ``documents`` (shingle Jaccard, MinHash, decontamination, n-gram
+    and substring spans, and the funnel that consumes the cut list);
+    ``dedup_cluster_cc`` is left out, its label propagation is a
+    declared driver loop. Checked by job group, so jobs of other
+    threads don't count."""
     import re
 
     from dask_lambda_example_spark.io import load_table
     from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
 
     _ensure_loaded()
+    # with a checkpoint dir set, the MinHash shingle index is written
+    # at build time by design
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     names = [n for n in QUERIES if re.fullmatch(r"q\d+_\w+", n)]
     assert len(names) == 22
-    tpch = ("region", "nation", "customer", "supplier", "part", "orders",
-            "lineitem")
-    for t in tpch:
+    names += ["dedup_jaccard_pairs", "dedup_jaccard_stopshingle",
+              "dedup_minhash_lsh_pairs", "dedup_incremental_minhash",
+              "dedup_decontaminate", "dedup_repeated_ngram_spans",
+              "dedup_repeated_ngram_spans_hashed", "dedup_substring_spans",
+              "dedup_substring_cutlist", "pipeline_curation_funnel_cut"]
+    tables = ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "documents")
+    for t in tables:
         load_table(spark, sf_dir, t)
     sc = spark.sparkContext
     group = "test_table_builds_launch_no_job"
-    sc.setJobGroup(group, "load_table and q1-q22 builds")
+    sc.setJobGroup(group, "load_table, q1-q22 and text near-dup builds")
     try:
-        for t in tpch:
+        for t in tables:
             load_table(spark, sf_dir, t)
         for n in names:
             QUERIES[n].fn(spark, sf_dir)
