@@ -16,31 +16,42 @@ the iteration's plan size stays constant. Fixed iteration count keeps
 the computation deterministic and lets the DuckDB oracle run the
 IDENTICAL unrolled recurrence — the whole iterative pipeline is
 value-checked, not rows-only.
+
+Every PageRank query is one call into one pipeline: ``GRAPHS`` describes
+the two input graphs (trade, crawl), ``_pagerank`` materializes a
+graph's edges and degrees and runs the one recurrence loop in its
+broadcast or co-partitioned form, and ``pagerank_auto`` picks the form
+from footer metadata.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import load_table, parquet_rowcount
 from dask_lambda_example_spark.registry import query
 
 PR_ITERS = 3
 PR_DAMP = 0.85
 
 
-# Non-recursive CTEs defining the trade graph: the prelude every
-# trade-graph PageRank oracle shares. A different prelude (same
-# edges/nodes contract) retargets the identical unrolled recurrence at
-# another graph — see the crawl link graph below.
-_TRADE_PR_PRELUDE = """
+# Non-recursive CTEs defining the symmetrized trade graph's
+# ``edges(src, dst)``: shared by the trade-graph PageRank oracles and
+# the reachability oracle.
+_TRADE_EDGES_SQL = """
     e0 AS (
         SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
         FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)"""
+
+# The trade-graph PageRank prelude: the edge CTEs plus the node set. A
+# different prelude (same edges/nodes contract) retargets the identical
+# unrolled recurrence at another graph — see the crawl link graph below.
+_TRADE_PR_PRELUDE = _TRADE_EDGES_SQL + """,
     nodes AS (SELECT DISTINCT src AS node FROM edges)"""
 
 
@@ -130,14 +141,15 @@ def _edge_ckpt_level(e_bound: int):
     return StorageLevel.MEMORY_AND_DISK
 
 
-def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct customer↔supplier trading pairs ``(src, dst)`` from the
-    order lines — the edge build shared by the PageRank family, with
-    the dedup aggregate's partition count scaled from parquet footer
-    row counts (no job) so its hash state fits executor memory at any
-    tier."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetrized customer↔supplier trade graph's edge list (lazy —
+    the caller owns materialization): the distinct trading pairs of the
+    order lines plus their reversal, so every node has out-degree ≥ 1
+    (no dangling-mass correction needed). The dedup aggregate's
+    partition count scales from parquet footer row counts (no job) so
+    its hash state fits executor memory at any tier. The union of the
+    two directed halves is already distinct: the pairs are distinct and
+    the 'c'/'s' prefixes make the src/dst namespaces disjoint."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     pairs = (
@@ -149,244 +161,46 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_li > EDGE_BUILD_REPART_MIN_ROWS:
         n_part = min(2048, n_li // EDGE_BUILD_ROWS_PER_PART)
         pairs = pairs.repartition(n_part, "src", "dst")
-    return pairs.distinct()
+    e0 = pairs.distinct()
+    return e0.union(e0.select(F.col("dst").alias("src"),
+                              F.col("src").alias("dst")))
 
 
-def _pr_broadcast_loop(nodes: DataFrame, edges: DataFrame,
-                       deg: DataFrame | None = None) -> DataFrame:
-    """The broadcast-formulation recurrence shared by every PageRank
-    query: rank and degree vectors are |nodes|-sized → broadcast; each
-    iteration's only shuffle groups contributions by destination. The
-    caller owns the edge list's materialization (``localCheckpoint``)
-    and its node/edge column contract (``nodes(node)``,
-    ``edges(src, dst)``).
-
-    The degree vector and every non-final rank vector are MATERIALIZED
-    (``localCheckpoint`` of |nodes|-sized frames — cheap) rather than
-    left lazy (round-11, measured): un-materialized, iteration i's
-    broadcast build re-executes iterations 1..i-1 inline — O(iters²)
-    scans of the edge list, with every nested broadcast relation live
-    in ONE job's heap — which walled the r10 sf10 run >10 min on a
-    90 g heap and OOM'd the SparkContext outright on the production
-    16 g heap. Materialized, each iteration is one bounded job over
-    the checkpointed edges and the broadcasts build from |nodes|-row
-    LogicalRDDs.
-
-    ``deg`` may be passed in pre-materialized (the trade-graph callers
-    derive the node set FROM it — deg's keys are exactly the distinct
-    edge sources, so one aggregation+checkpoint serves both and the
-    separate nodes-distinct job disappears); when ``None`` it is built
-    and checkpointed here exactly as before (crawl graph, whose node
-    set is the document corpus, not the edge sources)."""
-    if deg is None:
-        deg = (edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-               .localCheckpoint(eager=True))
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for i in range(PR_ITERS):
-        contrib = (
-            edges.join(F.broadcast(ranks),
-                       edges.src == F.col("node"))
-            .join(F.broadcast(deg), "src")
-            .select(F.col("dst"),
-                    (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select("node",
-                    (0.15 + PR_DAMP * F.coalesce(F.col("in_sum"), F.lit(0.0)))
-                    .alias("rank"))
-        )
-        if i < PR_ITERS - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(
-        "node", F.round("rank", 6).cast("float").alias("rank"))
+# The crawl link graph, as the oracle sees it: the HTML pages'
+# in-content anchors target deterministic ⊕-neighbor documents
+# (sources/warc.py make_html_page — xor 1 always, xor 2 for
+# doc_id%3>=1, xor 4 for doc_id%3=2; the same analytic census that
+# gates graph_crawl_indegree), closed over the crawled corpus (targets
+# that were never fetched have no page to rank).
+_CRAWL_PR_PRELUDE = """
+    l0 AS (
+        SELECT doc_id AS src, xor(doc_id, 1) AS dst FROM documents
+        UNION ALL SELECT doc_id, xor(doc_id, 2) FROM documents
+            WHERE doc_id % 3 >= 1
+        UNION ALL SELECT doc_id, xor(doc_id, 4) FROM documents
+            WHERE doc_id % 3 = 2),
+    edges AS (SELECT l0.src, l0.dst FROM l0
+              JOIN documents d ON d.doc_id = l0.dst),
+    nodes AS (SELECT doc_id AS node FROM documents)"""
 
 
-def _pr_shuffled_loop(nodes: DataFrame, edges: DataFrame,
-                      deg: DataFrame) -> DataFrame:
-    """The co-partitioned (nothing-broadcast) recurrence shared by the
-    trade- and crawl-graph families: every per-iteration join is a
-    sort-free ShuffledHashJoin (``shuffle_hash`` hints — SMJ would
-    re-sort the static edge list every round and auto-broadcast would
-    re-create the broadcast sibling's plan at test scale). The caller
-    owns edge materialization (``repartition(n, "src")`` +
-    ``localCheckpoint`` so the LogicalRDD advertises its partitioning
-    and no iteration re-shuffles the edges) and the ``nodes(node)`` /
-    ``edges(src, dst)`` / ``deg(src, outdeg)`` column contract."""
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for _ in range(PR_ITERS):
-        contrib = (
-            edges.join(ranks.hint("shuffle_hash"),
-                       edges.src == F.col("node"))
-            .join(deg.hint("shuffle_hash"), "src")
-            .select(F.col("dst"),
-                    (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib.hint("shuffle_hash"),
-                       nodes.node == contrib.dst, "left")
-            .select("node",
-                    (0.15 + PR_DAMP * F.coalesce(F.col("in_sum"), F.lit(0.0)))
-                    .alias("rank"))
-        )
-    return ranks.select(
-        "node", F.round("rank", 6).cast("float").alias("rank"))
+def _crawl_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DIRECTED crawl link graph's edge list (lazy — the caller owns
+    materialization): WARC bytes → streaming HTML anchor census (the
+    registered ``text_html_outlinks``) → document namespace filter +
+    target parse → semi-join closure over the crawled corpus (a target
+    that was never fetched has no page to rank)."""
+    from dask_lambda_example_spark.sources.warc import text_html_outlinks
 
-
-@query("graph_pagerank", oracle=_pagerank_oracle())
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (damping 0.85, {n} fixed iterations) on the bipartite
-    customer↔supplier graph induced by order lines — the "who are the
-    hub suppliers / anchor customers" question. Edges are the DISTINCT
-    trading pairs, symmetrized so every node has out-degree ≥ 1 (no
-    dangling-mass correction needed).
-
-    Per iteration: contributions = rank/outdeg join on the edge
-    source (rank and degree vectors are |nodes|-sized → broadcast),
-    then one shuffle grouping contributions by destination. The edge
-    list is the only large operand and it is scanned, never mutated.
-    This broadcast formulation is the small-graph fast path; when the
-    node set outgrows broadcast, ``graph_pagerank_copartitioned``
-    (below) runs the identical recurrence with the edges
-    pre-partitioned by ``src`` and nothing broadcast — ``pagerank_auto``
-    dispatches between them from catalog metadata. Fixed iterations +
-    REAL cast make the float fixed-point oracle-checkable
-    bit-for-bit.
-
-    Materialization discipline (round-11): the edge checkpoint builds
-    with AQE off on a dedicated child session so the block width stays
-    the dedup aggregate's footer-scaled partition count (AQE would
-    coalesce sf10's ~240 partitions to ~24 × multi-hundred-MB blocks —
-    the 16 g-heap hazard class of SCALE.md's partition-width rule),
-    and the |nodes|-sized node set is checkpointed so the loop never
-    re-aggregates the full edge list to re-derive it; above the
-    dispatch edge bound the edge blocks persist serialized
-    memory-and-disk (``_edge_ckpt_level``)."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    spark = spark.newSession()
-    e_bound = 2 * parquet_rowcount(sf_dir, "lineitem")
-    e0 = _trade_pairs(spark, sf_dir)
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # the union of the two directed halves is already distinct: e0
-        # is distinct and the 'c'/'s' prefixes make src/dst namespaces
-        # disjoint
-        edges = (e0.union(e0.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-                 .localCheckpoint(eager=True,
-                                  storageLevel=_edge_ckpt_level(e_bound)))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    # ONE aggregation+checkpoint yields both loop vectors: the degree
-    # table's keys ARE the distinct edge sources (= the node set of the
-    # symmetrized graph), so the former separate nodes-distinct
-    # checkpoint job is a projection of deg (optimization round 14).
-    deg = (edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-           .localCheckpoint(eager=True))
-    nodes = deg.select(F.col("src").alias("node"))
-    return _pr_broadcast_loop(nodes, edges, deg)
-
-
-graph_pagerank.__doc__ = graph_pagerank.__doc__.format(n=PR_ITERS)
-
-
-@query("graph_pagerank_copartitioned", oracle=_pagerank_oracle())
-def graph_pagerank_copartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank, co-partitioned formulation — identical recurrence (and
-    oracle) to ``graph_pagerank``, different physical plan: NOTHING is
-    broadcast. ``graph_pagerank`` broadcasts the |nodes|-sized rank and
-    degree vectors every iteration, which is the right plan while they
-    fit in an executor — and a dead end on a billion-node graph (VERDICT
-    r4). Here the edge list is hash-partitioned by ``src`` ONCE
-    (repartition + localCheckpoint pins the partitioning in the
-    LogicalRDD, so Catalyst knows every later ``src``-keyed operator is
-    already satisfied), and each iteration is:
-
-      1. shuffled-hash join edges⋈ranks on src==node — the edge side
-         moves ZERO bytes (its partitioning matches the join
-         requirement); only the |nodes|-sized rank vector shuffles,
-      2. co-partitioned join with the degree vector (derived from the
-         checkpointed edges, so it is born partitioned by ``src``),
-      3. ONE aggregation shuffle of contributions keyed by ``dst``.
-
-    ``shuffle_hash`` hints keep the per-iteration joins sort-free (SMJ
-    would re-sort the static edge list every round) and suppress the
-    auto-broadcast that would re-create the sibling's plan at test
-    scale. Net per-iteration network cost: O(|nodes|) rank rows + the
-    contribution shuffle — never O(|edges|) and never a broadcast.
-    ``pagerank_auto`` dispatches between the two formulations from
-    catalog metadata (footer row counts — no job) under
-    ``PR_BROADCAST_MAX_NODES``.
-
-    Session hygiene (ADVICE r5): the whole query runs on a dedicated
-    ``spark.newSession()`` child (same SparkContext, ISOLATED SQLConf),
-    so disabling AQE for the checkpoint build cannot de-optimize a
-    query planned concurrently on the caller's session. The
-    checkpointed edge blocks are reclaimed by ContextCleaner once the
-    returned DataFrame (the only plan referencing them) is collected
-    and released — session.py pins ``spark.cleaner.periodicGC.interval``
-    to 5 min so reclamation is bounded, not session-lifetime.
-
-    Partition-width rule (round-11, measured): the checkpoint
-    MATERIALIZES the full edge list into storage blocks, one per
-    partition, built concurrently by every core — at sf10's 120 M-row
-    edge bound over the default 32 partitions that is 32 simultaneous
-    ~3 M-row block builds, which OOM'd the 16 g production heap
-    (stage-119 ``java.lang.OutOfMemoryError`` during
-    ``localCheckpoint``). The CHILD session's shuffle width is
-    therefore scaled from the footer edge bound (~``EDGE_BUILD_ROWS_
-    PER_PART`` rows per partition, the same rule the edge-build dedup
-    uses), which sizes the checkpoint blocks AND every loop exchange
-    consistently — the plan shape (and its asserts) are unchanged,
-    only the partition count grows with the data."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    spark = spark.newSession()
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:  # e.g. "auto" under some AQE configurations
-        n_part = spark.sparkContext.defaultParallelism
-    e_bound = 2 * parquet_rowcount(sf_dir, "lineitem")
-    n_part = max(n_part, min(2048, e_bound // EDGE_BUILD_ROWS_PER_PART))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    e0 = _trade_pairs(spark, sf_dir)
-    # AQE must be OFF while the edge list materializes: with AQE on,
-    # the checkpointed LogicalRDD captures UnknownPartitioning (the
-    # adaptive plan's final partitioning isn't propagated — measured: 33
-    # exchanges vs 3) and every iteration re-shuffles the edges. With it
-    # off for just this one bounded build, the LogicalRDD advertises
-    # hashpartitioning(src, n_part) and Catalyst satisfies all later
-    # src-keyed requirements for free. Restored immediately after.
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        edges = (e0.union(e0.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-                 .repartition(n_part, "src")
-                 .localCheckpoint(eager=True,
-                                  storageLevel=_edge_ckpt_level(e_bound)))
-        # Materialize the degree vector ONCE, exchange-free off the
-        # src-partitioned edges, still under AQE-off so the |nodes|-row
-        # checkpoint advertises hashpartitioning(src, n_part) and every
-        # iteration's deg join stays co-partitioned. Lazy, the loop's
-        # final plan re-aggregated the full edge list PR_ITERS times
-        # (once per iteration's deg subtree — measured in the unrolled
-        # plan); checkpointed, each iteration reads |nodes| rows. The
-        # node set is deg's key projection (distinct edge sources), so
-        # the former per-iteration nodes-distinct subtree disappears
-        # with it (optimization round 14).
-        deg = (edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-               .localCheckpoint(eager=True))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    nodes = deg.select(F.col("src").alias("node"))
-    return _pr_shuffled_loop(nodes, edges, deg)
+    docs = load_table(spark, sf_dir, "documents")
+    links = text_html_outlinks(spark, sf_dir)
+    return (
+        links.filter(F.col("href").startswith("/doc/"))
+        .select(F.col("doc_id").alias("src"),
+                F.substring_index(F.col("href"), "/", -1)
+                 .cast("long").alias("dst"))
+        .join(docs.select(F.col("doc_id").alias("dst")), "dst", "left_semi")
+    )
 
 
 # Above this many nodes the rank/degree vectors stop being broadcast
@@ -409,54 +223,238 @@ PR_BROADCAST_MAX_NODES = 100_000_000
 # scale-safe plan. Scales with executor memory; tunable per cluster.
 PR_BROADCAST_MAX_EDGE_ROWS = 24_000_000
 
+# The crawl pages carry at most 3 in-content anchors each by
+# construction (sources/warc.py make_html_page); a general crawl would
+# plug its per-page anchor census bound (or a catalog stat) in here.
+CRAWL_LINKS_PER_PAGE_BOUND = 3
 
-def pagerank_auto(spark: SparkSession, sf_dir: str,
+
+class _Graph(NamedTuple):
+    """One PageRank input graph. ``edges(spark, sf_dir)`` builds its lazy
+    ``(src, dst)`` edge list; ``bounds(sf_dir)`` reads its (node, edge)
+    row bounds from parquet footers (driver-local stat reads — no Spark
+    job at plan-construction time, ADVICE r4); ``nodes(spark, sf_dir,
+    deg)`` gives its ``nodes(node)`` set, given the materialized
+    ``deg(src, outdeg)`` table."""
+
+    edges: Callable[[SparkSession, str], DataFrame]
+    bounds: Callable[[str], tuple[int, int]]
+    nodes: Callable[[SparkSession, str, DataFrame], DataFrame]
+
+
+GRAPHS = {
+    # Symmetric, so deg's keys ARE the node set: one aggregation +
+    # checkpoint yields both loop vectors (optimization round 14).
+    # Nodes: |customer| + |supplier| ≥ |nodes| (prefixed keys). Edges:
+    # 2·|lineitem| ≥ |symmetrized pairs| (each order line contributes
+    # at most one directed pair; l_orderkey is a foreign key).
+    "trade": _Graph(
+        _trade_edges,
+        lambda sf_dir: (parquet_rowcount(sf_dir, "customer")
+                        + parquet_rowcount(sf_dir, "supplier"),
+                        2 * parquet_rowcount(sf_dir, "lineitem")),
+        lambda spark, sf_dir, deg: deg.select(F.col("src").alias("node"))),
+    # Directed, so the node set is the document corpus (a page with no
+    # outlinks still holds the damping floor). Nodes: |documents|
+    # exactly. Edges: CRAWL_LINKS_PER_PAGE_BOUND·|documents| (closure
+    # can only shrink it).
+    "crawl": _Graph(
+        _crawl_edges,
+        lambda sf_dir: (parquet_rowcount(sf_dir, "documents"),
+                        CRAWL_LINKS_PER_PAGE_BOUND
+                        * parquet_rowcount(sf_dir, "documents")),
+        lambda spark, sf_dir, deg: (load_table(spark, sf_dir, "documents")
+                                    .select(F.col("doc_id").alias("node")))),
+}
+
+
+def _pr_loop(nodes: DataFrame, edges: DataFrame, deg: DataFrame,
+             copartitioned: bool) -> DataFrame:
+    """The PageRank recurrence over ``nodes(node)``, ``edges(src, dst)``
+    and ``deg(src, outdeg)``, in one of two physical forms. Each
+    iteration joins the rank and degree vectors onto the edge sources,
+    then ONE shuffle groups the contributions by destination.
+
+    Broadcast form: the |nodes|-sized rank and degree vectors are
+    broadcast. Every non-final rank vector is MATERIALIZED
+    (``localCheckpoint`` of a |nodes|-sized frame — cheap) rather than
+    left lazy (round-11, measured): un-materialized, iteration i's
+    broadcast build re-executes iterations 1..i-1 inline — O(iters²)
+    scans of the edge list, with every nested broadcast relation live
+    in ONE job's heap — which walled the r10 sf10 run >10 min on a
+    90 g heap and OOM'd the SparkContext outright on the production
+    16 g heap. Materialized, each iteration is one bounded job over
+    the checkpointed edges and the broadcasts build from |nodes|-row
+    LogicalRDDs.
+
+    Co-partitioned form: NOTHING is broadcast; every join is a
+    sort-free ShuffledHashJoin (``shuffle_hash`` hints — SMJ would
+    re-sort the static edge list every round and auto-broadcast would
+    re-create the broadcast plan at test scale). With the edges
+    checkpointed hash-partitioned by ``src`` the edge side moves zero
+    bytes: per-iteration network cost is O(|nodes|) rank rows plus the
+    contribution shuffle, never O(|edges|)."""
+    def vec(df: DataFrame) -> DataFrame:  # a |nodes|-sized join side
+        return df.hint("shuffle_hash") if copartitioned else F.broadcast(df)
+
+    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
+    for i in range(PR_ITERS):
+        contrib = (
+            edges.join(vec(ranks), edges.src == F.col("node"))
+            .join(vec(deg), "src")
+            .select(F.col("dst"),
+                    (F.col("rank") / F.col("outdeg")).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        if copartitioned:
+            contrib = contrib.hint("shuffle_hash")
+        ranks = (
+            nodes.join(contrib, nodes.node == contrib.dst, "left")
+            .select("node",
+                    (0.15 + PR_DAMP * F.coalesce(F.col("in_sum"), F.lit(0.0)))
+                    .alias("rank"))
+        )
+        if not copartitioned and i < PR_ITERS - 1:
+            ranks = ranks.localCheckpoint(eager=True)
+    return ranks.select(
+        "node", F.round("rank", 6).cast("float").alias("rank"))
+
+
+def _pagerank(spark: SparkSession, sf_dir: str, graph: str,
+              copartitioned: bool) -> DataFrame:
+    """PageRank over ``GRAPHS[graph]``: materialize its edges and degree
+    vector once, then run ``_pr_loop`` in the requested form.
+
+    Session hygiene (ADVICE r5): the whole query runs on a dedicated
+    ``spark.newSession()`` child (same SparkContext, ISOLATED SQLConf),
+    so the conf changes below cannot de-optimize a query planned
+    concurrently on the caller's session. The checkpointed blocks are
+    reclaimed by ContextCleaner once the returned DataFrame (the only
+    plan referencing them) is collected and released — session.py pins
+    ``spark.cleaner.periodicGC.interval`` to 5 min so reclamation is
+    bounded, not session-lifetime.
+
+    AQE is OFF while the edges and degrees materialize. Co-partitioned,
+    the checkpointed LogicalRDD then advertises hashpartitioning(src,
+    n_part) and Catalyst satisfies every later src-keyed requirement
+    for free (with AQE on it captures UnknownPartitioning — measured:
+    33 exchanges vs 3 — and every iteration re-shuffles the edges). In
+    both forms the block width stays the build's shuffle width (AQE
+    would coalesce sf10's ~240 edge partitions to ~24 × multi-hundred-MB
+    blocks — the 16 g-heap hazard class of SCALE.md's partition-width
+    rule). The degree vector is checkpointed too, off the checkpointed
+    edges: lazy, the loop's final plan re-aggregated the full edge list
+    once per iteration. Its AQE-off checkpoint advertises
+    hashpartitioning(src) in both forms, so where the node set is deg's
+    key projection (trade graph) the nodes⋈contributions join does not
+    shuffle the node side. Above the dispatch edge bound the edge blocks
+    persist serialized memory-and-disk (``_edge_ckpt_level``).
+
+    Partition-width rule (round-11, measured): co-partitioned, the
+    checkpoint materializes the full edge list as one block per
+    partition, built concurrently by every core — at sf10's 120 M-row
+    edge bound over the default 32 partitions that OOM'd the 16 g
+    production heap (``java.lang.OutOfMemoryError`` during
+    ``localCheckpoint``). The child session's shuffle width therefore
+    scales from the footer edge bound (~``EDGE_BUILD_ROWS_PER_PART``
+    rows per partition, the edge-build dedup's rule), which sizes the
+    checkpoint blocks AND every loop exchange consistently."""
+    g = GRAPHS[graph]
+    spark = spark.newSession()
+    e_bound = g.bounds(sf_dir)[1]
+    edges = g.edges(spark, sf_dir)
+    if copartitioned:
+        try:
+            n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        except ValueError:  # e.g. "auto" under some AQE configurations
+            n_part = spark.sparkContext.defaultParallelism
+        n_part = max(n_part, min(2048, e_bound // EDGE_BUILD_ROWS_PER_PART))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+        edges = edges.repartition(n_part, "src")
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        edges = edges.localCheckpoint(eager=True,
+                                      storageLevel=_edge_ckpt_level(e_bound))
+        deg = (edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+               .localCheckpoint(eager=True))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+    return _pr_loop(g.nodes(spark, sf_dir, deg), edges, deg, copartitioned)
+
+
+def pagerank_auto(spark: SparkSession, sf_dir: str, graph: str,
                   max_broadcast_nodes: int = PR_BROADCAST_MAX_NODES,
                   max_broadcast_edge_rows: int = PR_BROADCAST_MAX_EDGE_ROWS,
                   ) -> DataFrame:
-    """Size-dispatched PageRank: broadcast formulation while BOTH the
-    node set is safely broadcastable AND the edge volume fits the
-    broadcast plan's heap posture; co-partitioned shuffle formulation
-    above either threshold. Both bounds come from parquet footer
-    metadata — driver-local stat reads, no Spark job at
-    plan-construction time (ADVICE r4):
+    """Size-dispatched PageRank over ``GRAPHS[graph]``: the broadcast
+    form while BOTH the node bound is safely broadcastable AND the edge
+    bound fits the broadcast plan's heap posture; the co-partitioned
+    form above either threshold. Both bounds are footer metadata — no
+    Spark job at plan-construction time."""
+    n_bound, e_bound = GRAPHS[graph].bounds(sf_dir)
+    copartitioned = not (n_bound <= max_broadcast_nodes
+                         and e_bound <= max_broadcast_edge_rows)
+    return _pagerank(spark, sf_dir, graph, copartitioned)
 
-    - nodes: |customer| + |supplier| ≥ |nodes| (nodes are prefixed
-      custkeys/suppkeys);
-    - edges: 2·|lineitem| ≥ |symmetrized distinct trading pairs| (each
-      order line contributes at most one directed pair; |lineitem| is
-      exactly the orders⋈lineitem join's output row bound since
-      l_orderkey is a foreign key)."""
-    from dask_lambda_example_spark.io import parquet_rowcount
 
-    n_bound = (parquet_rowcount(sf_dir, "customer")
-               + parquet_rowcount(sf_dir, "supplier"))
-    e_bound = 2 * parquet_rowcount(sf_dir, "lineitem")
-    if n_bound <= max_broadcast_nodes and e_bound <= max_broadcast_edge_rows:
-        return graph_pagerank(spark, sf_dir)
-    return graph_pagerank_copartitioned(spark, sf_dir)
+@query("graph_pagerank", oracle=_pagerank_oracle())
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank (damping 0.85, {n} fixed iterations) on the bipartite
+    customer↔supplier graph induced by order lines — the "who are the
+    hub suppliers / anchor customers" question. Edges are the DISTINCT
+    trading pairs, symmetrized so every node has out-degree ≥ 1.
+
+    Broadcast form: the |nodes|-sized rank and degree vectors are
+    broadcast each iteration; the edge list is the only large operand
+    and it is scanned, never mutated. This is the small-graph fast
+    path; ``graph_pagerank_copartitioned`` runs the identical
+    recurrence with nothing broadcast, and ``graph_pagerank_auto``
+    dispatches between them from catalog metadata. Fixed iterations +
+    REAL cast make the float fixed-point oracle-checkable
+    bit-for-bit."""
+    return _pagerank(spark, sf_dir, "trade", copartitioned=False)
+
+
+graph_pagerank.__doc__ = graph_pagerank.__doc__.format(n=PR_ITERS)
+
+
+@query("graph_pagerank_copartitioned", oracle=_pagerank_oracle())
+def graph_pagerank_copartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank, co-partitioned form — identical recurrence (and oracle)
+    to ``graph_pagerank``, different physical plan: NOTHING is
+    broadcast. Broadcasting the |nodes|-sized vectors is the right plan
+    while they fit in an executor — and a dead end on a billion-node
+    graph (VERDICT r4). Here the edge list is hash-partitioned by
+    ``src`` ONCE (repartition + localCheckpoint pins the partitioning in
+    the LogicalRDD), the degree vector derives from it so it is born
+    co-partitioned, and each iteration is a shuffled-hash join that
+    moves only the rank vector, a co-partitioned degree join and ONE
+    contribution shuffle keyed by ``dst``."""
+    return _pagerank(spark, sf_dir, "trade", copartitioned=True)
 
 
 @query("graph_pagerank_auto", oracle=_pagerank_oracle())
 def graph_pagerank_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered entry point for ``pagerank_auto`` — the dispatcher
-    itself as a named, oracle-gated query (VERDICT r9 item 1: it was
-    the only dual-formulation family whose auto name had no
-    CORRECTNESS row). Both formulations share the identical unrolled
-    recurrence and therefore the identical DuckDB oracle, so the
-    dispatch flip can never change answers — only plans; the plan
-    assert ``tests/test_plans.py::test_pagerank_auto_dispatch`` pins
-    broadcast-formulation joins below ``PR_BROADCAST_MAX_NODES`` and
-    the sort-free co-partitioned shuffled-hash shape (no broadcast of
-    the rank vector) above it."""
-    return pagerank_auto(spark, sf_dir)
+    """Registered entry point for ``pagerank_auto`` on the trade graph —
+    the dispatcher itself as a named, oracle-gated query (VERDICT r9
+    item 1). Both forms share the identical unrolled recurrence and
+    therefore the identical DuckDB oracle, so the dispatch flip can
+    never change answers — only plans; the plan assert
+    ``tests/test_plans.py::test_pagerank_auto_dispatch`` pins the
+    broadcast joins below ``PR_BROADCAST_MAX_NODES`` and the sort-free
+    co-partitioned shuffled-hash shape (no broadcast) above it."""
+    return pagerank_auto(spark, sf_dir, "trade")
 
 
 RCTE_MAX_HOPS = 2
 RCTE_SEED = "c1"
 
-_RCTE_SQL = f"""
-    WITH RECURSIVE reach(node, hops) AS (
+# The recursion and its final aggregate over an ``{edges}`` relation:
+# Spark reads a checkpointed temp view, DuckDB the trade edge CTEs.
+_REACH_SQL = f"""
+    reach(node, hops) AS (
         SELECT '{RCTE_SEED}' AS node, 0 AS hops
         UNION ALL
         SELECT e.dst, r.hops + 1
@@ -466,20 +464,10 @@ _RCTE_SQL = f"""
     FROM reach GROUP BY node
 """
 
-_RCTE_ORACLE = f"""
-    WITH RECURSIVE e0 AS (
-        SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-    reach(node, hops) AS (
-        SELECT '{RCTE_SEED}' AS node, 0 AS hops
-        UNION ALL
-        SELECT e.dst, r.hops + 1
-        FROM reach r JOIN edges e ON e.src = r.node
-        WHERE r.hops < {RCTE_MAX_HOPS})
-    SELECT node, CAST(min(hops) AS BIGINT) AS hops
-    FROM reach GROUP BY node
-"""
+_RCTE_SQL = "\n    WITH RECURSIVE" + _REACH_SQL
+
+_RCTE_ORACLE = (f"\n    WITH RECURSIVE{_TRADE_EDGES_SQL},"
+                + _REACH_SQL.format(edges="edges"))
 
 
 @query("graph_reachability_rcte", oracle=_RCTE_ORACLE)
@@ -488,7 +476,8 @@ def graph_reachability_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WITH RECURSIVE``): BFS from one customer across the symmetrized
     trade graph, min-hop distance per reached node, horizon {h} hops
     (the co-buyer neighborhood). The recursion itself is the SAME SQL
-    text on both engines; the edge list is materialized ONCE
+    text on both engines; the edge list is the PageRank family's trade
+    edge build (with its footer-scaled dedup width), materialized ONCE
     (``localCheckpoint``) before the loop — Spark inlines non-recursive
     CTEs into every recursion level, so an unmaterialized edge list
     would re-run the join+distinct per hop (measured 5×). The UNION ALL
@@ -497,62 +486,15 @@ def graph_reachability_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the horizon is kept small — for deeper or unbounded closure
     prefer the driver-loop shape of ``dedup_cluster_cc``, which dedups
     the frontier every round."""
-    # Edge build shared with the PageRank family (round-11: this query
-    # had kept a private copy of the PRE-fix build and would have hit
-    # the same sf10/16g dedup-aggregate OOM _trade_pairs already
-    # guards); checkpoint blocks go serialized memory-and-disk above
-    # the dispatch edge bound like the rest of the family.
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    e_bound = 2 * parquet_rowcount(sf_dir, "lineitem")
-    e0 = _trade_pairs(spark, sf_dir)
-    edges = (e0.union(e0.select(F.col("dst").alias("src"),
-                                F.col("src").alias("dst")))
-             .localCheckpoint(  # halves disjoint -> distinct
-                 eager=True, storageLevel=_edge_ckpt_level(e_bound)))
+    e_bound = GRAPHS["trade"].bounds(sf_dir)[1]
+    edges = _trade_edges(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_edge_ckpt_level(e_bound))
     edges.createOrReplaceTempView("rcte_edges_v")
     return spark.sql(_RCTE_SQL.format(edges="rcte_edges_v"))
 
 
 graph_reachability_rcte.__doc__ = graph_reachability_rcte.__doc__.format(
     h=RCTE_MAX_HOPS)
-
-
-# The crawl link graph, as the oracle sees it: the HTML pages'
-# in-content anchors target deterministic ⊕-neighbor documents
-# (sources/warc.py make_html_page — xor 1 always, xor 2 for
-# doc_id%3>=1, xor 4 for doc_id%3=2; the same analytic census that
-# gates graph_crawl_indegree), closed over the crawled corpus (targets
-# that were never fetched have no page to rank).
-_CRAWL_PR_PRELUDE = """
-    l0 AS (
-        SELECT doc_id AS src, xor(doc_id, 1) AS dst FROM documents
-        UNION ALL SELECT doc_id, xor(doc_id, 2) FROM documents
-            WHERE doc_id % 3 >= 1
-        UNION ALL SELECT doc_id, xor(doc_id, 4) FROM documents
-            WHERE doc_id % 3 = 2),
-    edges AS (SELECT l0.src, l0.dst FROM l0
-              JOIN documents d ON d.doc_id = l0.dst),
-    nodes AS (SELECT doc_id AS node FROM documents)"""
-
-
-def _crawl_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DIRECTED crawl link graph's edge list (lazy — caller owns
-    materialization/partitioning): WARC bytes → streaming HTML anchor
-    census (the registered ``text_html_outlinks``) → document namespace
-    filter + target parse → semi-join closure over the crawled corpus
-    (a target that was never fetched has no page to rank)."""
-    from dask_lambda_example_spark.sources.warc import text_html_outlinks
-
-    docs = load_table(spark, sf_dir, "documents")
-    links = text_html_outlinks(spark, sf_dir)
-    return (
-        links.filter(F.col("href").startswith("/doc/"))
-        .select(F.col("doc_id").alias("src"),
-                F.substring_index(F.col("href"), "/", -1)
-                 .cast("long").alias("dst"))
-        .join(docs.select(F.col("doc_id").alias("dst")), "dst", "left_semi")
-    )
 
 
 @query("graph_crawl_pagerank", oracle=_pagerank_oracle(_CRAWL_PR_PRELUDE))
@@ -563,119 +505,42 @@ def graph_crawl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor census (the registered ``text_html_outlinks``) → document
     namespace filter + target parse → semi-join against the crawled
     corpus (dangling targets have no page to rank) → the same
-    damping-0.85 fixed-iteration recurrence as the trade-graph family.
+    damping-0.85 fixed-iteration recurrence as the trade graph.
     Unlike ``graph_pagerank`` the edge list here is DIRECTED and built
     from parsed page bytes, so the oracle (analytic ⊕-neighbor census +
     identical unrolled recurrence) value-checks extraction, parsing,
     graph closure and the iteration end-to-end.
 
-    Scale posture: the HTML parse is the expensive operand and runs
-    EXACTLY ONCE — the parsed edge list is ``localCheckpoint``-ed
-    before the loop (PR_ITERS scans of a checkpointed long-pair list,
-    never PR_ITERS re-parses of the archive bytes). Per iteration the
-    broadcast formulation ships the |docs|-sized rank vector; on a
-    billion-page graph ``crawl_pagerank_auto`` flips to the
-    co-partitioned recurrence exactly as ``pagerank_auto`` does for the
-    trade graph — the loops are shared (``_pr_broadcast_loop`` /
-    ``_pr_shuffled_loop``), only the edge construction differs."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    docs = load_table(spark, sf_dir, "documents")
-    e_bound = CRAWL_LINKS_PER_PAGE_BOUND * parquet_rowcount(
-        sf_dir, "documents")
-    edges = _crawl_edges(spark, sf_dir).localCheckpoint(
-        eager=True, storageLevel=_edge_ckpt_level(e_bound))
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    return _pr_broadcast_loop(nodes, edges)
+    The HTML parse is the expensive operand and runs EXACTLY ONCE: the
+    parsed edge list is ``localCheckpoint``-ed before the loop (PR_ITERS
+    scans of a checkpointed long-pair list, never PR_ITERS re-parses of
+    the archive bytes). Broadcast form; ``graph_crawl_pagerank_auto``
+    flips to the co-partitioned form exactly as the trade graph does."""
+    return _pagerank(spark, sf_dir, "crawl", copartitioned=False)
 
 
 @query("graph_crawl_pagerank_copartitioned",
        oracle=_pagerank_oracle(_CRAWL_PR_PRELUDE))
 def graph_crawl_pagerank_copartitioned(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
-    """Crawl-graph PageRank, co-partitioned formulation — identical
-    recurrence (and oracle) to ``graph_crawl_pagerank``, billion-page
-    physical plan: NOTHING is broadcast. Same discipline as
-    ``graph_pagerank_copartitioned`` (see its docstring for the AQE /
-    checkpoint-partitioning mechanics): the parsed edge list is
-    hash-partitioned by ``src`` ONCE as it materializes (still exactly
-    one HTML parse), the degree vector derives from the checkpointed
-    edges so it is born co-partitioned, and every iteration join is a
-    sort-free ShuffledHashJoin via the shared ``_pr_shuffled_loop``.
-
-    One difference from the trade graph: the crawl graph is DIRECTED,
-    so the node set is the document corpus (a page with no inlinks
-    still holds the damping floor), not the edge sources — the rank
-    vector therefore shuffles once per iteration onto the edge
-    partitioning instead of deriving partitioned. Per-iteration network
-    cost stays O(|nodes|) rank rows + the contribution shuffle, never
-    O(|edges|), never a broadcast. The child session's shuffle width
-    scales from the footer edge bound exactly as the trade sibling's
-    does (checkpoint block size ∝ rows/partition — see
-    ``graph_pagerank_copartitioned``)."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    spark = spark.newSession()
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        n_part = spark.sparkContext.defaultParallelism
-    e_bound = CRAWL_LINKS_PER_PAGE_BOUND * parquet_rowcount(
-        sf_dir, "documents")
-    n_part = max(n_part, min(2048, e_bound // EDGE_BUILD_ROWS_PER_PART))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    e0 = _crawl_edges(spark, sf_dir)
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        edges = (e0.repartition(n_part, "src")
-                 .localCheckpoint(eager=True,
-                                  storageLevel=_edge_ckpt_level(e_bound)))
-        # same discipline as the trade sibling: one exchange-free
-        # aggregation+checkpoint under AQE-off replaces PR_ITERS lazy
-        # re-aggregations of the checkpointed edge list
-        deg = (edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-               .localCheckpoint(eager=True))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    nodes = (load_table(spark, sf_dir, "documents")
-             .select(F.col("doc_id").alias("node")))
-    return _pr_shuffled_loop(nodes, edges, deg)
-
-
-# The crawl pages carry at most 3 in-content anchors each by
-# construction (sources/warc.py make_html_page); a general crawl would
-# plug its per-page anchor census bound (or a catalog stat) in here.
-CRAWL_LINKS_PER_PAGE_BOUND = 3
-
-
-def crawl_pagerank_auto(spark: SparkSession, sf_dir: str,
-                        max_broadcast_nodes: int = PR_BROADCAST_MAX_NODES,
-                        max_broadcast_edge_rows: int =
-                        PR_BROADCAST_MAX_EDGE_ROWS,
-                        ) -> DataFrame:
-    """Size-dispatched crawl PageRank (VERDICT r10 item 5: the crawl
-    graph gets the same footer-dispatched flip the trade graph has).
-    Node bound: |documents| exactly. Edge bound:
-    ``CRAWL_LINKS_PER_PAGE_BOUND``·|documents| ≥ |edges| (closure can
-    only shrink it). Both are driver-local footer stats — no job at
-    plan-construction time."""
-    from dask_lambda_example_spark.io import parquet_rowcount
-
-    n_bound = parquet_rowcount(sf_dir, "documents")
-    e_bound = CRAWL_LINKS_PER_PAGE_BOUND * n_bound
-    if n_bound <= max_broadcast_nodes and e_bound <= max_broadcast_edge_rows:
-        return graph_crawl_pagerank(spark, sf_dir)
-    return graph_crawl_pagerank_copartitioned(spark, sf_dir)
+    """Crawl-graph PageRank, co-partitioned form — identical recurrence
+    (and oracle) to ``graph_crawl_pagerank``, billion-page physical
+    plan: NOTHING is broadcast. The parsed edge list is hash-partitioned
+    by ``src`` ONCE as it materializes (still exactly one HTML parse).
+    The graph is directed, so the node set is the document corpus, not
+    the edge sources: the rank vector shuffles once per iteration onto
+    the edge partitioning instead of deriving partitioned."""
+    return _pagerank(spark, sf_dir, "crawl", copartitioned=True)
 
 
 @query("graph_crawl_pagerank_auto", oracle=_pagerank_oracle(_CRAWL_PR_PRELUDE))
 def graph_crawl_pagerank_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered entry point for ``crawl_pagerank_auto`` — the crawl
-    graph's dispatcher as a named, oracle-gated query. Both
-    formulations share the identical unrolled recurrence and oracle, so
-    the flip can only change plans, never answers; the plan assert
+    """Registered entry point for ``pagerank_auto`` on the crawl graph
+    (VERDICT r10 item 5: the crawl graph gets the same footer-dispatched
+    flip the trade graph has). Both forms share the identical unrolled
+    recurrence and oracle, so the flip can only change plans, never
+    answers; the plan assert
     ``tests/test_plans.py::test_crawl_pagerank_auto_dispatch`` pins the
     broadcast shape below the thresholds and the nothing-broadcast
     shuffled-hash shape above them (on either axis)."""
-    return crawl_pagerank_auto(spark, sf_dir)
+    return pagerank_auto(spark, sf_dir, "crawl")

@@ -121,6 +121,12 @@ PRIORITY_QUERIES = (
     "dedup_repeated_ngram_spans", "dedup_repeated_ngram_spans_hashed",
     "dedup_substring_spans", "dedup_substring_cutlist",
     "pipeline_curation_funnel_cut",
+    # REVERIFY re-earn: the PageRank queries now share one edge
+    # materialization, one recurrence loop and one footer dispatch, and
+    # the reachability query reads the same trade edge build.
+    "graph_pagerank", "graph_pagerank_copartitioned", "graph_pagerank_auto",
+    "graph_reachability_rcte", "graph_crawl_pagerank",
+    "graph_crawl_pagerank_copartitioned", "graph_crawl_pagerank_auto",
 )
 
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
@@ -180,6 +186,11 @@ CORRECTNESS_ARTIFACTS = (
 # substring queries (and the funnel that consumes the cut list) share
 # one word n-gram builder, one posting-list pair expansion, one Jaccard
 # verify and one set of oracle CTEs — re-earn.
+# One PageRank core: the trade and crawl PageRank queries, broadcast and
+# co-partitioned, run one edge materialization (graph._pagerank), one
+# recurrence loop and one footer dispatch (graph.pagerank_auto), and
+# graph_reachability_rcte reads the same trade edge build; its oracle
+# reuses the trade edge CTEs — re-earn.
 REVERIFY: tuple[str, ...] = (
     "sim_cosine_topk_bruteforce", "sim_search_auto",
     "sim_ann_recall_report", "sim_ivf_recall_report",
@@ -200,6 +211,9 @@ REVERIFY: tuple[str, ...] = (
     "dedup_repeated_ngram_spans", "dedup_repeated_ngram_spans_hashed",
     "dedup_substring_spans", "dedup_substring_cutlist",
     "pipeline_curation_funnel_cut",
+    "graph_pagerank", "graph_pagerank_copartitioned", "graph_pagerank_auto",
+    "graph_reachability_rcte", "graph_crawl_pagerank",
+    "graph_crawl_pagerank_copartitioned", "graph_crawl_pagerank_auto",
 )
 
 

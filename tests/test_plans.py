@@ -239,23 +239,6 @@ def test_pagerank_copartitioned_matches_broadcast_sibling(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-def test_pagerank_auto_dispatches_on_metadata(spark, sf_dir):
-    # below BOTH thresholds the broadcast plan is chosen; above EITHER
-    # (forced to 0 one axis at a time) the shuffle plan — decided from
-    # parquet footer metadata, no Spark job at construction time.
-    # The edge axis exists because the node bound alone mis-dispatched
-    # sf10 under the production 16g heap (VERDICT r10 item 1).
-    from dask_lambda_example_spark.operators.graph import pagerank_auto
-    from dask_lambda_example_spark.plans.inspect import physical_plan
-
-    assert "BroadcastExchange" in physical_plan(
-        pagerank_auto(spark, sf_dir))
-    assert "BroadcastExchange" not in physical_plan(
-        pagerank_auto(spark, sf_dir, max_broadcast_nodes=0))
-    assert "BroadcastExchange" not in physical_plan(
-        pagerank_auto(spark, sf_dir, max_broadcast_edge_rows=0))
-
-
 def test_distributed_ntile_avoids_global_sort(spark, sf_dir):
     # the global-ntile reformulation must contain NO native ntile window
     # (that would be a single-task sort of the whole table) — only a
@@ -712,34 +695,39 @@ def test_sim_search_auto_dispatch(spark, sf_dir):
 
 def test_pagerank_auto_dispatch(spark, sf_dir):
     # VERDICT r9 item 1: the PageRank dispatcher, like every other
-    # auto name, must be pinned on the PHYSICAL plan. Below
-    # PR_BROADCAST_MAX_NODES the iteration joins broadcast the
-    # |nodes|-sized rank/degree vectors (BroadcastHashJoin, zero
-    # shuffled-hash joins); above it the co-partitioned formulation
-    # takes over — every iteration join is a sort-free
-    # ShuffledHashJoin against the once-partitioned edge list and
-    # NOTHING is broadcast (a billion-node rank vector must never be
-    # an executor-local copy).
+    # auto name, must be pinned on the PHYSICAL plan. Below BOTH
+    # thresholds the iteration joins broadcast the |nodes|-sized
+    # rank/degree vectors (BroadcastHashJoin, zero shuffled-hash
+    # joins); above EITHER (forced to 0 one axis at a time) the
+    # co-partitioned formulation takes over — every iteration join is
+    # a sort-free ShuffledHashJoin against the once-partitioned edge
+    # list and NOTHING is broadcast (a billion-node rank vector must
+    # never be an executor-local copy). The choice is made from parquet
+    # footer metadata, no Spark job at construction time.
     from dask_lambda_example_spark.operators.graph import pagerank_auto
     from dask_lambda_example_spark.plans.inspect import physical_plan
 
-    naive_df = pagerank_auto(spark, sf_dir)  # sf0.001 << 1e8 nodes
+    naive_df = pagerank_auto(spark, sf_dir, "trade")  # sf0.001 << 1e8 nodes
     naive = physical_plan(naive_df)
+    assert "BroadcastExchange" in naive, naive[:2000]
     assert "BroadcastHashJoin" in naive, naive[:2000]
     assert "ShuffledHashJoin" not in naive, naive[:2000]
 
-    scale_df = pagerank_auto(spark, sf_dir, max_broadcast_nodes=0)
+    scale_df = pagerank_auto(spark, sf_dir, "trade", max_broadcast_nodes=0)
     scale = physical_plan(scale_df)
     assert "ShuffledHashJoin" in scale, scale[:2000]
+    assert "BroadcastExchange" not in scale, scale[:2000]
     assert "BroadcastHashJoin" not in scale, scale[:2000]
     assert "SortMergeJoin" not in scale, scale[:2000]
 
     # the EDGE-volume axis must force the same flip on its own
     # (VERDICT r10 item 1: node bound alone mis-dispatched sf10 under
     # the 16g production heap)
-    edge_df = pagerank_auto(spark, sf_dir, max_broadcast_edge_rows=0)
+    edge_df = pagerank_auto(spark, sf_dir, "trade",
+                            max_broadcast_edge_rows=0)
     edge = physical_plan(edge_df)
     assert "ShuffledHashJoin" in edge, edge[:2000]
+    assert "BroadcastExchange" not in edge, edge[:2000]
     assert "BroadcastHashJoin" not in edge, edge[:2000]
 
     # same output contract on both sides of the threshold
@@ -754,16 +742,16 @@ def test_crawl_pagerank_auto_dispatch(spark, sf_dir):
     # vector; above EITHER axis nothing is broadcast and every
     # iteration join is a sort-free ShuffledHashJoin against the
     # once-partitioned parsed edge list.
-    from dask_lambda_example_spark.operators.graph import crawl_pagerank_auto
+    from dask_lambda_example_spark.operators.graph import pagerank_auto
     from dask_lambda_example_spark.plans.inspect import physical_plan
 
-    naive_df = crawl_pagerank_auto(spark, sf_dir)
+    naive_df = pagerank_auto(spark, sf_dir, "crawl")
     naive = physical_plan(naive_df)
     assert "BroadcastHashJoin" in naive, naive[:2000]
     assert "ShuffledHashJoin" not in naive, naive[:2000]
 
     for kw in ({"max_broadcast_nodes": 0}, {"max_broadcast_edge_rows": 0}):
-        scale_df = crawl_pagerank_auto(spark, sf_dir, **kw)
+        scale_df = pagerank_auto(spark, sf_dir, "crawl", **kw)
         scale = physical_plan(scale_df)
         assert "ShuffledHashJoin" in scale, scale[:2000]
         assert "BroadcastHashJoin" not in scale, scale[:2000]

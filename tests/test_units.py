@@ -1119,8 +1119,10 @@ def test_stop_shingle_query_keeps_true_pair(spark, sf_dir):
             for r in QUERIES["dedup_jaccard_pairs"].fn(spark, sf_dir).collect()}
     got = {(r.doc_a, r.doc_b) for r in rows}
     # capping only removes evidence from viral shingles; at test SF the
-    # seeded near-dup families share low-df shingles, so they survive
-    assert got and got <= base | got
+    # seeded near-dup families share low-df shingles, so at least one
+    # uncapped pair survives the cap (got <= base is not asserted: a
+    # cap can also lift a pair over the threshold)
+    assert got and got & base
 
 
 def test_minhash_checkpoint_knob(spark, sf_dir, tmp_path, monkeypatch):

@@ -8,8 +8,11 @@ float64 23.0, dies on list/dict cells, and sees last-ulp float diffs. This
 sweep reproduces those failure modes locally so local green predicts driver
 green.
 
-Usage:  PYTHONPATH=/root/repo python tools/parity_sweep.py [name_prefix ...]
-        PYTHONPATH=/root/repo python tools/parity_sweep.py --json OUT.json
+Usage:  [PYTHONPATH=<tree>] python tools/parity_sweep.py [name_prefix ...]
+        [PYTHONPATH=<tree>] python tools/parity_sweep.py --json OUT.json
+
+The sweep imports the package from ``PYTHONPATH`` when it is set, else
+from the checkout this script lives in.
 
 With ``--json PATH`` the sweep also writes a machine-readable artifact:
 ``{"sf": ..., "n": N, "clean": M, "queries": {name: "ok" | "<problem>"}}``
@@ -21,6 +24,7 @@ from __future__ import annotations
 
 import sys
 import traceback
+from pathlib import Path
 
 import duckdb
 
@@ -111,7 +115,9 @@ def check_query(spark, con, name, fn, sql) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    # PYTHONPATH picks the tree to sweep; the repo root is only a
+    # fallback, so a bare run from a checkout still imports the package
+    sys.path.append(str(Path(__file__).resolve().parent.parent))
     from pyspark.sql import SparkSession
 
     from dask_lambda_example_spark.registry import oracle_queries, spark_queries
