@@ -239,6 +239,23 @@ def test_pagerank_copartitioned_matches_broadcast_sibling(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
+def test_pagerank_auto_dispatches_on_metadata(spark, sf_dir):
+    # below BOTH thresholds the broadcast plan is chosen; above EITHER
+    # (forced to 0 one axis at a time) the shuffle plan — decided from
+    # parquet footer metadata, no Spark job at construction time.
+    # The edge axis exists because the node bound alone mis-dispatched
+    # sf10 under the production 16g heap (VERDICT r10 item 1).
+    from dask_lambda_example_spark.operators.graph import pagerank_auto
+    from dask_lambda_example_spark.plans.inspect import physical_plan
+
+    assert "BroadcastExchange" in physical_plan(
+        pagerank_auto(spark, sf_dir, "trade"))
+    assert "BroadcastExchange" not in physical_plan(
+        pagerank_auto(spark, sf_dir, "trade", max_broadcast_nodes=0))
+    assert "BroadcastExchange" not in physical_plan(
+        pagerank_auto(spark, sf_dir, "trade", max_broadcast_edge_rows=0))
+
+
 def test_distributed_ntile_avoids_global_sort(spark, sf_dir):
     # the global-ntile reformulation must contain NO native ntile window
     # (that would be a single-task sort of the whole table) — only a
