@@ -485,7 +485,11 @@ def graph_reachability_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses; Spark does not yet support UNION (distinct) recursion,
     so the horizon is kept small — for deeper or unbounded closure
     prefer the driver-loop shape of ``dedup_cluster_cc``, which dedups
-    the frontier every round."""
+    the frontier every round. The view is registered on a
+    ``newSession()`` child, as in ``_pagerank``: the returned DataFrame
+    is then the only holder of the checkpoint, so ContextCleaner can
+    reclaim it once the result is released."""
+    spark = spark.newSession()
     e_bound = GRAPHS["trade"].bounds(sf_dir)[1]
     edges = _trade_edges(spark, sf_dir).localCheckpoint(
         eager=True, storageLevel=_edge_ckpt_level(e_bound))

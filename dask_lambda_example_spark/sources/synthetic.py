@@ -3,17 +3,26 @@
 ``name,id,x,y`` (``layer/python/dask_processing.py:29-31``) — and the
 producer's random payload (``src/lambda_producer.py:25``).
 
-Spark-first: ``spark.range(n)`` generates DISTRIBUTED partitions of row
-ids with no driver-side data; every column derives from the row id via
-a deterministic integer LCG, so the same rows can be produced by any
+Spark-first: every row is generated on the executors with no
+driver-side data; every column derives from the row number ``i`` via a
+deterministic integer LCG, so the same rows can be produced by any
 engine (the DuckDB oracle regenerates them from ``range()`` with the
 same integer arithmetic — exact, no float/libm parity risk; the
 reference's ``random.randint``/np RNG is deliberately replaced per
 SURVEY.md §5.2-7 determinism rule).
 
-Scale posture: ``spark.range`` parallelizes by id ranges — generating
-86.4 M rows/day spreads evenly over executors; no shuffle until the
-aggregation.
+Day × second generation: a day is 86,400 rows, and row (day ``d``,
+second ``s``) is ``i = d * 86_400 + s``. ``s`` comes from a fixed
+``spark.range(86_400)`` and ``d`` from ``explode(sequence(0, n_days -
+1))``. ``spark.range(n)`` would write ``n`` into the generated Java
+source, so every event size (the producer draws 10-1000 days) would
+compile and JIT a new whole-stage class; the folded ``sequence`` is a
+literal array that the generated code takes by reference, so one class
+serves every ``n_days``.
+
+Scale posture: the 86,400 seconds split evenly over executors by id
+range and each task expands its seconds across all days; no shuffle
+until the aggregation.
 """
 
 from __future__ import annotations
@@ -33,23 +42,30 @@ _INC_Y = 3_266_489_917
 
 START = "2024-01-01 00:00:00"
 _START_EPOCH = 1_704_067_200
+_NAMES = "array(" + ", ".join(f"'{chr(c)}'" for c in range(97, 123)) + ")"
 
 
 def timeseries(spark: SparkSession, n_days: int = 2,
                start_epoch: int = _START_EPOCH) -> DataFrame:
     """Reference ``dask.datasets.timeseries``: 1 row/second over
     ``n_days`` with ``name`` (26 keys), ``id``, ``x``, ``y`` ∈ [-1, 1).
+    ``d`` stays a long so ``d * 86_400`` cannot overflow an int; the
+    operand of ``& (2^32 - 1)`` is non-negative, so it equals the
+    oracle's ``% 2^32``; ``name`` indexes a literal array, so no row
+    builds a ``String``.
     """
-    n = n_days * 86_400
-    i = F.col("id")
-    vx = (i * _MULT_X + _INC_X) % _M32
-    vy = (i * _MULT_Y + _INC_Y) % _M32
-    return spark.range(n).select(
-        F.timestamp_seconds(F.lit(start_epoch) + i).alias("timestamp"),
-        F.char(F.lit(97) + (i % 26).cast("int")).alias("name"),
-        (F.lit(1000) + vx % 100).alias("id"),
-        (vx / F.lit(_M32) * 2 - 1).alias("x"),
-        (vy / F.lit(_M32) * 2 - 1).alias("y"),
+    # sequence(0, -1) counts down, so an empty frame needs 0 seconds
+    days = spark.range(86_400 if n_days > 0 else 0).selectExpr(
+        "id AS s", f"explode(sequence(0L, {n_days - 1}L)) AS d")
+    i = "(d * 86400 + s)"
+    vx = f"(({i} * {_MULT_X} + {_INC_X}) & {_M32 - 1})"
+    vy = f"(({i} * {_MULT_Y} + {_INC_Y}) & {_M32 - 1})"
+    return days.selectExpr(
+        f"timestamp_seconds({start_epoch} + {i}) AS timestamp",
+        f"element_at({_NAMES}, CAST({i} % 26 AS INT) + 1) AS name",
+        f"1000 + {vx} % 100 AS id",
+        f"{vx} / {_M32} * 2 - 1 AS x",
+        f"{vy} / {_M32} * 2 - 1 AS y",
     )
 
 

@@ -256,6 +256,13 @@ def test_pagerank_auto_dispatches_on_metadata(spark, sf_dir):
         pagerank_auto(spark, sf_dir, "trade", max_broadcast_edge_rows=0))
 
 
+def test_rcte_leaves_no_view_on_callers_session(spark, sf_dir):
+    # the checkpointed edge view lives on a child session, so the
+    # caller's catalog cannot keep the edge blocks cached
+    QUERIES["graph_reachability_rcte"].fn(spark, sf_dir).collect()
+    assert "rcte_edges_v" not in {t.name for t in spark.catalog.listTables()}
+
+
 def test_distributed_ntile_avoids_global_sort(spark, sf_dir):
     # the global-ntile reformulation must contain NO native ntile window
     # (that would be a single-task sort of the whole table) — only a

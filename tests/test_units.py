@@ -1158,6 +1158,17 @@ def _bench_gate_mod():
     return bench_gate
 
 
+def test_ab_bench_worker_heap_fits_two_workers():
+    _bench_gate_mod()  # puts tools/ on sys.path
+    from ab_bench import worker_heap_gib
+
+    # a quarter of host RAM each, 1-16 g
+    assert worker_heap_gib(15.6) == 3
+    assert worker_heap_gib(2.0) == 1
+    assert worker_heap_gib(64.0) == 16
+    assert worker_heap_gib(512.0) == 16
+
+
 def test_bench_regression_gate():
     # plan-pathology tripwire: any query >3x slower than the previous
     # committed round's bench fails here instead of waiting for a

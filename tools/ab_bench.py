@@ -24,7 +24,9 @@ for both sides, best-of ratios, and the interleave order. A worker
 that dies mid-sweep is restarted ONCE (fresh JVM, re-warmed off the
 clock); if it dies again the remaining one-sided rows are flagged via
 top-level aborted_sides/n_missing_ratios so a degraded sweep can't
-pass for a full one (ADVICE r11).
+pass for a full one (ADVICE r11), and the tool exits 1.
+Unless SPARK_GRAFT_DRIVER_MEM is set, each worker's JVM heap is a
+quarter of host RAM (1-16 g), so the two together fit the host.
 (CPU-exclusive — timed; run alone like bench.py)
 """
 
@@ -85,6 +87,14 @@ def _worst_common_names(n: int, cur_file: str, base_file: str) -> list[str]:
     common = [k for k in cur if k in base and cur[k] > 0 and base[k] > 0]
     common.sort(key=lambda k: cur[k] / base[k], reverse=True)
     return common[:n]
+
+
+def worker_heap_gib(ram_gib: float) -> int:
+    """Heap for each of the two worker JVMs: a quarter of host RAM, as
+    perfbench's host fit sizes its one JVM, at least 1 g and at most
+    session.py's 16 g default — both workers together stay within
+    half the host."""
+    return max(1, min(16, int(ram_gib // 4)))
 
 
 def _parse_env(spec: str | None) -> dict[str, str]:
@@ -205,6 +215,10 @@ def main() -> int:
                  int(_arg("--worst", "20")),
                  _arg("--cur-file", "BENCH_sf0.1_noop_r10.json"),
                  _arg("--base-file", "BENCH_sf0.1_noop_r9.json")))
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+        ram_gib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                   / 2**30)
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{worker_heap_gib(ram_gib)}g"
     env_cur = _parse_env(_arg("--env-current"))
     env_base = _parse_env(_arg("--env-baseline"))
 
@@ -272,6 +286,7 @@ def main() -> int:
         "timing": "best-of per side (min over reps)",
         "env_current": env_cur or None,
         "env_baseline": env_base or None,
+        "worker_heap": os.environ["SPARK_GRAFT_DRIVER_MEM"],
         "worker_restarts": {"current": a.restarts, "baseline": b.restarts},
         # rows from this query onward pair a restarted (fresh) JVM
         # against a session-warm one — cross-side state asymmetry;
@@ -288,6 +303,10 @@ def main() -> int:
     if out:
         Path(out).write_text(line + "\n")
     print(line)
+    if missing or dead_sides:
+        print(f"AB FAIL {len(missing)} queries without a ratio, aborted "
+              f"sides {dead_sides}", file=sys.stderr, flush=True)
+        return 1
     return 0
 
 
