@@ -28,6 +28,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1776,12 +1777,12 @@ def dedup_substring_cutlist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic and the full banding — recall loss from banding is part
 # of the checked contract.
 #
-# Scale posture: image bytes never shuffle (decode is a per-object
-# mapInPandas; only (doc_id, 48-bit hash) leaves the pass); the band
-# join is |images| × PHASH_BANDS short rows with 12-bit keys — at
-# 100 TB of images that is the same banded-candidate discipline as the
-# text MinHash path, with the same Zipf/df-cap levers available if a
-# pathological corpus concentrates a band value.
+# Scale posture: image bytes never shuffle (``png_phash`` runs in
+# multimodal's ``_per_object`` pass; only (doc_id, 48-bit hash) leaves
+# it); the band join is |images| × PHASH_BANDS short rows with 12-bit
+# keys — at 100 TB of images that is the same banded-candidate
+# discipline as the text MinHash path, with the same Zipf/df-cap levers
+# available if a pathological corpus concentrates a band value.
 # ---------------------------------------------------------------------------
 
 PHASH_CELL = 4                       # pooling block edge (pixels)
@@ -1855,56 +1856,38 @@ def _phash_oracle() -> str:
     """
 
 
-def _phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, phash) over the sampled documents: REAL PNG decode →
-    average-pool → 24-bit aHash ∥ 24-bit dHash.  Shared by the pair
-    emitter and the canonical-assignment consumer; image bytes never
-    leave the mapInPandas pass."""
-    from typing import Iterator
-
-    import pandas as pd
-
+def png_phash(raw: bytes) -> int:
+    """48-bit perceptual hash of one PNG: REAL decode → average-pool
+    into PHASH_CELL² cells → 24-bit aHash ∥ 24-bit dHash."""
     from dask_lambda_example_spark.operators.multimodal import (
-        PNG_SAMPLE_EVERY, decode_png_gray8, make_png_bytes)
+        decode_png_gray8)
 
     gcols, grows, ncells, _ = _phash_dims()
+    _, _, _, _, grid = decode_png_gray8(raw)
+    cells = grid.reshape(grows, PHASH_CELL, gcols, PHASH_CELL).sum(axis=(1, 3))
+    tot = int(cells.sum())
+    h = 0
+    for r in range(grows):
+        for c in range(gcols):
+            k = r * gcols + c
+            if int(cells[r, c]) * ncells > tot:          # aHash
+                h |= 1 << k
+            if cells[r, c] > cells[r, (c + 1) % gcols]:  # dHash
+                h |= 1 << (ncells + k)
+    return h
 
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % PNG_SAMPLE_EVERY == 0)
-         .select("doc_id"))
 
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_png_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "png": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
+def _phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, phash) over the sampled documents' PNGs (``png_phash``).
+    Shared by the pair emitter and the canonical-assignment consumer;
+    image bytes never leave the per-object pass."""
+    from dask_lambda_example_spark.operators.multimodal import (
+        PNG_SAMPLE_EVERY, _media_objects, _per_object, make_png_bytes)
 
-    clips = d.mapInPandas(synth, "doc_id long, png binary")
-
-    def phash(batches: Iterator[pd.DataFrame], _dec=decode_png_gray8,
-              _gc=gcols, _gr=grows, _cell=PHASH_CELL, _nc=ncells
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["png"]):
-                _, _, _, _, grid = _dec(bytes(raw))
-                cells = grid.reshape(_gr, _cell, _gc, _cell).sum(axis=(1, 3))
-                tot = int(cells.sum())
-                h = 0
-                for r in range(_gr):
-                    for c in range(_gc):
-                        k = r * _gc + c
-                        if int(cells[r, c]) * _nc > tot:        # aHash
-                            h |= 1 << k
-                        if cells[r, c] > cells[r, (c + 1) % _gc]:  # dHash
-                            h |= 1 << (_nc + k)
-                ids.append(doc_id)
-                hashes.append(h)
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    return clips.mapInPandas(phash, "doc_id long, phash long")
+    pngs = _media_objects(spark, sf_dir, PNG_SAMPLE_EVERY, make_png_bytes,
+                          "png")
+    return _per_object(pngs, lambda i, raw: [(i, png_phash(raw))],
+                       "doc_id long, phash long")
 
 
 @query("dedup_image_phash", oracle=_phash_oracle())
@@ -2082,16 +2065,17 @@ dedup_image_phash_canonical.__doc__ = \
 # completing the modality set (text: MinHash/SimHash/substring; image:
 # dedup_image_phash; audio: this).  Chromaprint-style construction over
 # REAL RIFF/WAVE files: each sampled document carries a PCM clip
-# (stdlib ``wave`` writer — genuine container: RIFF header, fmt chunk,
-# frame bytes) whose waveform is a 32-block step wave; the fingerprint
-# pass PARSES the container back (stdlib ``wave`` reader — chunk walk,
-# fmt header, frame decode), pools the PCM into per-block energies,
-# and takes one bit per block for energy-vs-clip-mean (the aHash
-# analog) plus one per adjacent-block comparison (the dHash analog,
-# 31 bits) → a 63-bit fingerprint.  All comparisons are INTEGER-EXACT
-# (block sums, cross-multiplied means), so the analytic oracle replays
-# every bit from the generating arithmetic — decode, pooling, banding,
-# and the bucket-min canonicalization are all value-checked.
+# (``afp_wav_bytes`` feeds a 32-block step wave to multimodal's one WAV
+# writer, ``wav_bytes`` — genuine container: RIFF header, fmt chunk,
+# frame bytes); ``wav_fingerprint`` PARSES the container back with the
+# one reader, ``read_wav`` (chunk walk, fmt header, frame decode),
+# pools the PCM into per-block energies, and takes one bit per block
+# for energy-vs-clip-mean (the aHash analog) plus one per
+# adjacent-block comparison (the dHash analog, 31 bits) → a 63-bit
+# fingerprint.  All comparisons are INTEGER-EXACT (block sums,
+# cross-multiplied means), so the analytic oracle replays every bit
+# from the generating arithmetic — decode, pooling, banding, and the
+# bucket-min canonicalization are all value-checked.
 #
 # The waveform arithmetic puts each clip in one of AFP_CLASSES base
 # classes plus a doc-dependent "spike" block: same class + same spike
@@ -2102,9 +2086,9 @@ dedup_image_phash_canonical.__doc__ = \
 # O(clips) at every tier even though class sizes grow linearly.
 #
 # Scale posture: audio bytes never shuffle (synthesis + decode are
-# per-object mapInPandas passes; only (doc_id, 63-bit fp) leaves);
-# the banding join is |clips| × AFP_BANDS short rows; the bucket-min
-# aggregation and candidate join are both keyed equi-ops.
+# the ``_media_objects`` / ``_per_object`` passes; only (doc_id, 63-bit
+# fp) leaves); the banding join is |clips| × AFP_BANDS short rows; the
+# bucket-min aggregation and candidate join are both keyed equi-ops.
 # ---------------------------------------------------------------------------
 
 AFP_SAMPLE_EVERY = 25   # fingerprint every 25th document's clip
@@ -2144,6 +2128,36 @@ def _afp_oracle() -> str:
     """
 
 
+def afp_wav_bytes(doc_id: int) -> bytes:
+    """The WAV clip of one sampled document: AFP_BLOCKS steps of
+    AFP_BLOCK samples each, at the levels the oracle's ``lv`` CTE
+    computes."""
+    from dask_lambda_example_spark.operators.multimodal import wav_bytes
+
+    k = np.arange(AFP_BLOCKS, dtype=np.int64)
+    lvl = ((doc_id % AFP_CLASSES) * 37 + k * 11) % 241 - 120
+    lvl[doc_id % AFP_BLOCKS] += 90
+    return wav_bytes(np.repeat(lvl, AFP_BLOCK), AFP_RATE)
+
+
+def wav_fingerprint(raw: bytes) -> int:
+    """63-bit fingerprint of one WAV clip: REAL parse → per-block sums
+    → AFP_BLOCKS energy-vs-mean bits ∥ AFP_BLOCKS - 1 adjacent-diff
+    bits."""
+    from dask_lambda_example_spark.operators.multimodal import read_wav
+
+    _, _, _, pcm = read_wav(raw)
+    s = pcm.reshape(AFP_BLOCKS, AFP_BLOCK).sum(axis=1)  # = AFP_BLOCK·lvl_k
+    tot = int(s.sum())
+    h = 0
+    for k in range(AFP_BLOCKS):
+        if int(s[k]) * AFP_BLOCKS > tot:                 # energy-vs-mean
+            h |= 1 << k
+        if k < AFP_BLOCKS - 1 and s[k] > s[k + 1]:       # adjacent-diff
+            h |= 1 << (AFP_BLOCKS + k)
+    return h
+
+
 @query("dedup_audio_fingerprint", oracle=_afp_oracle())
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate audio canonicalization (doc_id, fingerprint,
@@ -2158,70 +2172,13 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio near-dup is that contract applied to a binary media column,
     exactly as ``dedup_image_phash`` is for images.
     """
-    from typing import Iterator
+    from dask_lambda_example_spark.operators.multimodal import (
+        _media_objects, _per_object)
 
-    import pandas as pd
-
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % AFP_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame], _nb=AFP_BLOCKS,
-              _bs=AFP_BLOCK, _rate=AFP_RATE, _nc=AFP_CLASSES
-              ) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        def wav_bytes(doc_id: int) -> bytes:
-            k = np.arange(_nb, dtype=np.int64)
-            lvl = ((doc_id % _nc) * 37 + k * 11) % 241 - 120
-            lvl[doc_id % _nb] += 90
-            pcm = np.repeat(lvl, _bs).astype("<i2")
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(_rate)
-                w.writeframes(pcm.tobytes())
-            return buf.getvalue()
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "wav": [wav_bytes(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, wav binary")
-
-    def fingerprint(batches: Iterator[pd.DataFrame], _nb=AFP_BLOCKS,
-                    _bs=AFP_BLOCK) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["wav"]):
-                with wave.open(io.BytesIO(bytes(raw)), "rb") as w:
-                    n = w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), dtype="<i2"
-                                        ).astype(np.int64)
-                s = pcm.reshape(_nb, _bs).sum(axis=1)  # = AFP_BLOCK·lvl_k
-                tot = int(s.sum())
-                h = 0
-                for k in range(_nb):
-                    if int(s[k]) * _nb > tot:            # energy-vs-mean
-                        h |= 1 << k
-                    if k < _nb - 1 and s[k] > s[k + 1]:  # adjacent-diff
-                        h |= 1 << (_nb + k)
-                ids.append(doc_id)
-                fps.append(h)
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    hashes = clips.mapInPandas(fingerprint, "doc_id long, fp long")
+    wavs = _media_objects(spark, sf_dir, AFP_SAMPLE_EVERY, afp_wav_bytes,
+                          "wav")
+    hashes = _per_object(wavs, lambda i, raw: [(i, wav_fingerprint(raw))],
+                         "doc_id long, fp long")
     return _banded_canonical(hashes, AFP_BANDS, AFP_BAND_BITS, AFP_HAM_MAX)
 
 
@@ -2245,9 +2202,10 @@ dedup_audio_fingerprint.__doc__ = \
 # banding and canonicalization.  Output is the bucket-min canonical
 # assignment (one row per clip — the constant-output form).
 #
-# Scale posture: video bytes never shuffle (synthesis, demux, decode
-# are per-object mapInPandas; only (doc_id, 56-bit fp) leaves the
-# pass); banding join is |clips| × VFP_BANDS short rows.  Inter-frame
+# Scale posture: video bytes never shuffle (synthesis, then demux and
+# decode in ``mjpeg_fingerprint``, are the ``_media_objects`` /
+# ``_per_object`` passes; only (doc_id, 56-bit fp) leaves them);
+# banding join is |clips| × VFP_BANDS short rows.  Inter-frame
 # codecs (H.264-class) stay out of scope by environment contract
 # (COVERAGE.md) — MJPEG is the container+intra-codec path this
 # container can execute for real.
@@ -2307,8 +2265,8 @@ def _vfp_oracle() -> str:
 
 def video_fingerprint_bits(v, n_frames: int) -> int:
     """56-bit spatio-temporal signature from the (frames × 4) group
-    energy grid ``v`` — shared bit layout for the Spark pass, the
-    pure-Python test replica, and (transcribed) the SQL oracle."""
+    energy grid ``v`` — shared bit layout for ``mjpeg_fingerprint``,
+    the analytic test reference, and (transcribed) the SQL oracle."""
     tot = int(v.sum())
     ncell = n_frames * 4
     h = 0
@@ -2321,6 +2279,26 @@ def video_fingerprint_bits(v, n_frames: int) -> int:
             if g < 2 and v[f, g] > v[f, g + 1]:       # spatial
                 h |= 1 << (44 + f * 2 + g)
     return h
+
+
+def mjpeg_fingerprint(raw: bytes) -> int:
+    """56-bit fingerprint of one MJPEG AVI: REAL demux and per-frame
+    JPEG decode → per-(frame, block-column) coefficient energies →
+    ``video_fingerprint_bits``."""
+    from dask_lambda_example_spark.operators.jpegcodec import (
+        decode_jpeg_gray8)
+    from dask_lambda_example_spark.operators.multimodal import (
+        demux_avi_frames)
+
+    kw = np.arange(64, dtype=np.int64)
+    _, _, n, frames = demux_avi_frames(raw)
+    v = np.zeros((n, 4), dtype=np.int64)
+    for f in range(n):
+        _, _, zq, _ = decode_jpeg_gray8(frames[f])
+        for g in range(4):
+            zg = zq[g::4]  # block-column g (blocks row-major)
+            v[f, g] = int(zg[:, 0].sum()) * 32 + int((zg * kw).sum())
+    return video_fingerprint_bits(v, n)
 
 
 @query("dedup_video_fingerprint", oracle=_vfp_oracle())
@@ -2337,54 +2315,13 @@ def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     video near-dup completes that contract across the modality matrix
     (text / image / audio / video).
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from dask_lambda_example_spark.operators.multimodal import (
-        MJPG_N_FRAMES, MJPG_SAMPLE_EVERY, demux_avi_frames,
-        make_mjpeg_avi_bytes)
+        MJPG_SAMPLE_EVERY, _media_objects, _per_object, make_mjpeg_avi_bytes)
 
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % MJPG_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_mjpeg_avi_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "avi": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, avi binary")
-
-    def fingerprint(batches: Iterator[pd.DataFrame],
-                    _dmx=demux_avi_frames, _bits=video_fingerprint_bits,
-                    _nf=MJPG_N_FRAMES) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from dask_lambda_example_spark.operators.jpegcodec import (
-            decode_jpeg_gray8,
-        )
-
-        kw = np.arange(64, dtype=np.int64)
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["avi"]):
-                _, _, n, frames = _dmx(bytes(raw))
-                v = np.zeros((n, 4), dtype=np.int64)
-                for f in range(n):
-                    _, _, zq, _ = decode_jpeg_gray8(bytes(frames[f]))
-                    for g in range(4):
-                        zg = zq[g::4]  # block-column g (blocks row-major)
-                        v[f, g] = (int(zg[:, 0].sum()) * 32
-                                   + int((zg * kw).sum()))
-                ids.append(doc_id)
-                fps.append(_bits(v, n))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    hashes = clips.mapInPandas(fingerprint, "doc_id long, fp long")
+    avis = _media_objects(spark, sf_dir, MJPG_SAMPLE_EVERY,
+                          make_mjpeg_avi_bytes, "avi")
+    hashes = _per_object(avis, lambda i, raw: [(i, mjpeg_fingerprint(raw))],
+                         "doc_id long, fp long")
     return _banded_canonical(hashes, VFP_BANDS, VFP_BAND_BITS, VFP_HAM_MAX)
 
 

@@ -7,9 +7,14 @@ Spark-side design (all real and tested):
   meta: map<string,string>>`` — mirrors Spark's ``binaryFile`` source
   (path/length/content) plus a mime tag;
 - plumbing: construction, projection, byte-level stats and content
-  hashing run as JVM expressions; feature extraction runs as
-  ``mapInPandas`` over the binary column (batch shape: one pandas
-  DataFrame of N binary cells per Arrow batch).
+  hashing run as JVM expressions; per-object work runs in two helpers
+  that own the Arrow batch shape (one pandas DataFrame of N binary
+  cells per batch): ``_media_objects`` builds a ``(doc_id, <col>
+  binary)`` frame of synthetic media files, one per sampled document,
+  and ``_per_object`` maps a module-level pure function
+  ``fn(doc_id, raw)`` over such a frame. Each media query is a call of
+  the two; the dedup fingerprints (``dedup.png_phash``,
+  ``wav_fingerprint``, ``mjpeg_fingerprint``) ride the same helpers.
 
 Decode status by modality:
 - **audio: REAL.** ``mm_decode_wav_audio`` parses genuine RIFF/WAVE PCM
@@ -38,24 +43,75 @@ Decode status by modality:
   need ffmpeg-class libraries absent from this container by contract;
   `mm_frame_sample` keeps the byte-slicing plumbing form.
 
-Scale posture: binary payloads never shuffle here — metadata extraction
-is projection-only; at 100 TB the rule is: push bytes through
-mapInPandas once, aggregate only the extracted features.
+Scale posture: the media objects of the two-pass queries never shuffle
+— they are born and decoded in two narrow passes, and only the typed
+rows ``_per_object`` emits reach an exchange (``tests/test_plans.py``
+checks this); at 100 TB the rule is: push bytes through one per-object
+pass, aggregate only the extracted features. ``mm_frame_sample`` is the
+exception: it gathers per-frame bytes into clips with a shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import io
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.operators.jpegcodec import (
+    decode_jpeg_gray8, encode_jpeg_gray8)
 from dask_lambda_example_spark.registry import query
 
 MEDIA_SCHEMA = "struct<uri:string, mime:string, bytes:binary, meta:map<string,string>>"
+
+
+def _media_objects(spark: SparkSession, sf_dir: str, every: int,
+                   encode: Callable[[int], bytes], col: str) -> DataFrame:
+    """``(doc_id, <col> binary)`` for every ``every``-th document: one
+    Arrow-batched ``mapInPandas`` pass builds each sampled document's
+    media file with ``encode(doc_id) -> bytes``."""
+    d = (load_table(spark, sf_dir, "documents")
+         .filter(F.col("doc_id") % every == 0)
+         .select("doc_id"))
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                col: [encode(int(i)) for i in pdf["doc_id"]],
+            })
+
+    return d.mapInPandas(synth, f"doc_id long, {col} binary")
+
+
+def _per_object(objs: DataFrame,
+                fn: Callable[[int, bytes], Iterable[tuple]],
+                schema: str) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass over a ``(doc_id,
+    <binary>)`` frame: ``fn(doc_id, raw)`` yields zero or more row
+    tuples in the order of ``schema``, a flat DDL string. The object
+    bytes enter Python once; only the typed rows leave the pass."""
+    doc, col = objs.columns
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def per_object(batches: Iterator[pd.DataFrame]
+                   ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [row for i, raw in zip(pdf[doc], pdf[col])
+                 for row in fn(int(i), bytes(raw))],
+                columns=names)
+
+    return objs.mapInPandas(per_object, schema)
 
 
 def with_media_column(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -113,25 +169,17 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched feature extraction over binary media — the decode
     pipeline shape (binary in → typed features out) with a
     deterministic extractor the oracle can recompute."""
-    # Nested so cloudpickle ships it by value — workers need no import
-    # of this package (the driver contract runs from a neutral cwd).
-    def feature_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        for pdf in batches:
-            raws = pdf["bytes"]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": raws.map(len),
-                "first_byte": raws.map(lambda b: b[0] if len(b) else None),
-                "digest16": raws.map(
-                    lambda b: int(_hashlib.md5(b).hexdigest()[:4], 16)),
-            })
-
     d = with_media_column(load_table(spark, sf_dir, "documents"))
     payload = d.select("doc_id", F.col("media.bytes").alias("bytes"))
-    return payload.mapInPandas(
-        feature_extract,
-        schema="doc_id long, n_bytes long, first_byte int, digest16 int")
+    return _per_object(
+        payload, feature_rows,
+        "doc_id long, n_bytes long, first_byte int, digest16 int")
+
+
+def feature_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Length, first byte and the top 16 bits of the md5 of one object."""
+    yield (doc_id, len(raw), raw[0] if raw else None,
+           int(hashlib.md5(raw).hexdigest()[:4], 16))
 
 
 FAKE_IMAGE_MAGIC = b"FAKEIMG1"
@@ -153,9 +201,10 @@ def decode_image_stub(raw: bytes) -> tuple[int, int]:
 @query("mm_decode_fake_images")  # stubbed decoder → rows-only check
 def mm_decode_fake_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode pipeline over synthetic FAKEIMG1 payloads: build binary
-    'images' (width/height derived from doc_id), decode via the stub in
-    mapInPandas, return dimensions. Exercises the full binary→decode→
-    features path with the real batch shape."""
+    'images' (width/height derived from doc_id), decode them with
+    ``decode_image_stub`` in one ``_per_object`` pass, return
+    dimensions. Exercises the full binary→decode→features path with the
+    real batch shape."""
     d = load_table(spark, sf_dir, "documents")
 
     def be2(c):  # two-byte big-endian encoding of an int column
@@ -169,30 +218,14 @@ def mm_decode_fake_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat(F.lit(FAKE_IMAGE_MAGIC), be2("w"), be2("h"))
                 .alias("bytes"))
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Self-contained re-statement of decode_image_stub: nested fns
-        # ship by value, module-level fns would need a worker-side import.
-        def stub(raw: bytes) -> tuple[int, int]:
-            if bytes(raw[:8]) == b"FAKEIMG1" and len(raw) >= 12:
-                return (int.from_bytes(raw[8:10], "big"),
-                        int.from_bytes(raw[10:12], "big"))
-            raise NotImplementedError("only the FAKEIMG1 test header is supported")
-
-        for pdf in batches:
-            dims = pdf["bytes"].map(stub)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": dims.map(lambda t: t[0]),
-                "height": dims.map(lambda t: t[1]),
-            })
-
-    return imgs.mapInPandas(decode, schema="doc_id long, width int, height int")
+    return _per_object(imgs, lambda i, raw: [(i, *decode_image_stub(raw))],
+                       "doc_id long, width int, height int")
 
 
 FRAME_LEN = 32        # bytes per synthetic frame
 N_FRAMES = 12         # frames per synthetic clip
 FRAME_STRIDE = 4      # keep every 4th frame
+FRAME_SAMPLE_EVERY = 10  # build a clip for every 10th document
 
 
 @query(
@@ -205,7 +238,7 @@ FRAME_STRIDE = 4      # keep every 4th frame
                              1, {FRAME_LEN})) AS frame_md5
         FROM documents,
              (SELECT unnest(generate_series(0, {N_FRAMES - 1})) AS f) f
-        WHERE doc_id % 10 = 0 AND f.f % {FRAME_STRIDE} = 0)
+        WHERE doc_id % {FRAME_SAMPLE_EVERY} = 0 AND f.f % {FRAME_STRIDE} = 0)
     SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx, frame_md5
     FROM frames
     """,
@@ -214,15 +247,16 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling plumbing: each sampled document carries a
     synthetic "clip" — {n} fixed-length frames concatenated into one
     binary payload — and the operator keeps every {s}th frame,
-    emitting its index and content digest. The byte-slicing runs in
-    ONE Arrow-batched ``mapInPandas`` pass (the codec seam: a real
-    decoder would replace the slicing, same signature, same batch
-    shape); bytes never shuffle — only (doc_id, frame_idx, digest)
-    rows leave the pass. The clip bytes are deterministic, so the
-    oracle rebuilds each kept frame and its md5 exactly — the
-    plumbing is value-checked even though the "video" is synthetic."""
+    emitting its index and content digest. The clip is assembled
+    JVM-side, which shuffles the per-frame bytes once to gather each
+    clip; the byte-slicing then runs in one ``_per_object`` pass (the
+    codec seam: a real decoder would replace ``frame_rows``, same
+    signature, same batch shape), and only (doc_id, frame_idx, digest)
+    rows leave it. The clip bytes are deterministic, so the oracle
+    rebuilds each kept frame and its md5 exactly — the plumbing is
+    value-checked even though the "video" is synthetic."""
     d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 10 == 0))
+         .filter(F.col("doc_id") % FRAME_SAMPLE_EVERY == 0))
     # clip = concat of frames; frame f = first FRAME_LEN bytes of
     # repeat(str(doc_id*1000+f) || '|')
     frame = F.substring(
@@ -242,30 +276,23 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                  lambda acc, x: F.concat(acc, x.getField("fb")))
              .alias("clip"))
     )
-
-    def sample_frames(batches):
-        import hashlib
-
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "frame_md5": []}
-            for doc_id, clip in zip(pdf["doc_id"], pdf["clip"]):
-                for f in range(0, N_FRAMES, FRAME_STRIDE):
-                    chunk = clip[f * FRAME_LEN:(f + 1) * FRAME_LEN]
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["frame_md5"].append(
-                        hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        sample_frames, "doc_id long, frame_idx int, frame_md5 string")
+    return _per_object(clips, frame_rows,
+                       "doc_id long, frame_idx int, frame_md5 string")
 
 
 mm_frame_sample.__doc__ = mm_frame_sample.__doc__.format(
     n=N_FRAMES, s=FRAME_STRIDE)
 
 
+def frame_rows(doc_id: int, clip: bytes) -> Iterator[tuple]:
+    """(doc_id, frame_idx, md5) for every FRAME_STRIDE-th frame of a clip."""
+    for f in range(0, N_FRAMES, FRAME_STRIDE):
+        frame = clip[f * FRAME_LEN:(f + 1) * FRAME_LEN]
+        yield doc_id, f, hashlib.md5(frame).hexdigest()
+
+
 IMG_W = 16            # fake image is IMG_W x IMG_W single-channel bytes
+IMG_SAMPLE_EVERY = 25  # resize every 25th document's image
 
 
 @query(
@@ -280,7 +307,7 @@ IMG_W = 16            # fake image is IMG_W x IMG_W single-channel bytes
         FROM documents d,
              (SELECT unnest(generate_series(0, {IMG_W // 2 - 1})) AS x) x,
              (SELECT unnest(generate_series(0, {IMG_W // 2 - 1})) AS y) y
-        WHERE d.doc_id % 25 = 0)
+        WHERE d.doc_id % {IMG_SAMPLE_EVERY} = 0)
     SELECT doc_id, CAST(x AS INT) AS x, CAST(y AS INT) AS y,
            CAST((p00 + p01 + p10 + p11) // 4 AS INT) AS pooled
     FROM px
@@ -290,17 +317,15 @@ def mm_resize_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize plumbing (2× average-pool downsample): each sampled
     document carries a deterministic {w}×{w} single-channel byte image
     as a BINARY column (built JVM-side — pixel(r,c) =
-    (doc_id·31 + r·13 + c·7) mod 251); one Arrow-batched
-    ``mapInPandas`` pass reinterprets the bytes as a numpy grid, floor-
+    (doc_id·31 + r·13 + c·7) mod 251); one ``_per_object`` pass
+    (``pooled_rows``) reinterprets the bytes as a numpy grid, floor-
     average-pools 2×2 blocks, and emits (x, y, pooled) rows. The codec
     seam again: a real decoder+resampler replaces the numpy kernel with
     the same signature; bytes cross into Python once and never shuffle.
     The oracle recomputes every pooled pixel from the same arithmetic,
     so the array plumbing is value-checked end to end."""
-    import numpy as np
-
     d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 25 == 0).select("doc_id"))
+         .filter(F.col("doc_id") % IMG_SAMPLE_EVERY == 0).select("doc_id"))
     pixel = lambda i: ((F.col("doc_id") * 31
                         + (i / IMG_W).cast("int") * 13
                         + (i % IMG_W) * 7) % 251)
@@ -309,62 +334,79 @@ def mm_resize_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda i: F.unhex(F.format_string("%02x", pixel(i)))),
         F.lit(b""), lambda acc, x: F.concat(acc, x))
     clips = d.select("doc_id", img.alias("img"))
-
-    def pool(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "x": [], "y": [], "pooled": []}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["img"]):
-                grid = np.frombuffer(raw, dtype=np.uint8).reshape(
-                    IMG_W, IMG_W).astype(np.int64)
-                half = IMG_W // 2
-                pooled = (grid[0::2, 0::2] + grid[0::2, 1::2]
-                          + grid[1::2, 0::2] + grid[1::2, 1::2]) // 4
-                for x in range(half):
-                    for y in range(half):
-                        rows["doc_id"].append(doc_id)
-                        rows["x"].append(x)
-                        rows["y"].append(y)
-                        rows["pooled"].append(int(pooled[x, y]))
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        pool, "doc_id long, x int, y int, pooled int")
+    return _per_object(clips, pooled_rows,
+                       "doc_id long, x int, y int, pooled int")
 
 
 mm_resize_downsample.__doc__ = mm_resize_downsample.__doc__.format(w=IMG_W)
 
 
+def pooled_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """(doc_id, x, y, pooled) over the 2×2 floor-average pool of one
+    IMG_W × IMG_W byte image."""
+    grid = np.frombuffer(raw, dtype=np.uint8).reshape(
+        IMG_W, IMG_W).astype(np.int64)
+    pooled = (grid[0::2, 0::2] + grid[0::2, 1::2]
+              + grid[1::2, 0::2] + grid[1::2, 1::2]) // 4
+    for x in range(IMG_W // 2):
+        for y in range(IMG_W // 2):
+            yield doc_id, x, y, int(pooled[x, y])
+
+
 WAV_SAMPLE_EVERY = 20   # decode every 20th document's clip
 
 
-def make_wav_bytes(doc_id: int) -> bytes:
-    """Build a REAL RIFF/WAVE PCM file (stdlib ``wave`` writer) whose
-    content is a deterministic function of ``doc_id`` — int16 mono
-    square wave alternating +amp/-amp, so peak == RMS == amp exactly
-    and the oracle can recompute every decoded stat analytically:
-
-    - sample_rate  = (8000, 11025, 16000)[doc_id % 3]
-    - n_frames     = 256 + (doc_id % 32) * 16     (always even)
-    - amp          = 1000 + (doc_id % 7) * 500
-    """
-    import io
-    import wave
-
-    import numpy as np
-
-    rate = (8000, 11025, 16000)[doc_id % 3]
-    n_frames = 256 + (doc_id % 32) * 16
-    amp = 1000 + (doc_id % 7) * 500
-    pcm = np.empty(n_frames, dtype="<i2")
-    pcm[0::2] = amp
-    pcm[1::2] = -amp
+def wav_bytes(pcm, rate: int) -> bytes:
+    """A REAL RIFF/WAVE file (stdlib ``wave`` writer): mono 16-bit PCM
+    holding the samples ``pcm`` at ``rate`` Hz."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(rate)
-        w.writeframes(pcm.tobytes())
+        w.writeframes(np.asarray(pcm).astype("<i2").tobytes())
     return buf.getvalue()
+
+
+def read_wav(raw: bytes) -> tuple[int, int, int, np.ndarray]:
+    """Parse a 16-bit PCM RIFF/WAVE file with the stdlib ``wave`` reader
+    (RIFF chunk walk, fmt header, frame data): (n_channels,
+    sample_width, sample_rate, int64 samples). Other sample widths
+    raise ValueError."""
+    with wave.open(io.BytesIO(raw), "rb") as w:
+        nch, width, rate = w.getnchannels(), w.getsampwidth(), w.getframerate()
+        frames = w.readframes(w.getnframes())
+    if width != 2:
+        raise ValueError(f"only 16-bit PCM is supported, not {8 * width}-bit")
+    pcm = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+    return nch, width, rate, pcm
+
+
+def make_wav_bytes(doc_id: int) -> bytes:
+    """A REAL WAV file whose content is a deterministic function of
+    ``doc_id`` — int16 mono square wave alternating +amp/-amp, so peak
+    == RMS == amp exactly and the oracle can recompute every decoded
+    stat analytically:
+
+    - sample_rate  = (8000, 11025, 16000)[doc_id % 3]
+    - n_frames     = 256 + (doc_id % 32) * 16     (always even)
+    - amp          = 1000 + (doc_id % 7) * 500
+    """
+    amp = 1000 + (doc_id % 7) * 500
+    pcm = np.empty(256 + (doc_id % 32) * 16, dtype="<i2")
+    pcm[0::2] = amp
+    pcm[1::2] = -amp
+    return wav_bytes(pcm, (8000, 11025, 16000)[doc_id % 3])
+
+
+def wav_stat_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Header fields, duration, peak and RMS of one decoded WAV file."""
+    nch, width, rate, pcm = read_wav(raw)
+    n = len(pcm) // nch
+    # ±amp square wave → mean(pcm²) = amp² is a perfect square; sqrt is
+    # float-exact for amp « 2^26.
+    yield (doc_id, nch, width, rate, n, n / rate, int(np.max(np.abs(pcm))),
+           int(round(float(np.sqrt(np.mean(pcm * pcm))))))
 
 
 @query(
@@ -386,94 +428,25 @@ def make_wav_bytes(doc_id: int) -> bytes:
     """,
 )
 def mm_decode_wav_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode — no stub. Stage 1 synthesizes genuine RIFF/
-    WAVE PCM files (stdlib ``wave`` writer; see ``make_wav_bytes``) as
-    a binary column; stage 2 DECODES them with the stdlib ``wave``
-    reader — an actual container parser that walks the RIFF chunk list
-    and the fmt header — then computes amplitude stats over the PCM
-    frames with numpy. Both stages are Arrow-batched ``mapInPandas``
-    passes; bytes cross into Python once per stage and never shuffle
-    (only the typed features leave).
+    """REAL audio decode — no stub. ``_media_objects`` synthesizes
+    genuine RIFF/WAVE PCM files (``make_wav_bytes``); ``_per_object``
+    DECODES them with ``read_wav`` — the stdlib ``wave`` reader, an
+    actual container parser that walks the RIFF chunk list and the fmt
+    header — and ``wav_stat_rows`` computes amplitude stats over the
+    PCM frames with numpy. The files never shuffle; only the typed
+    features leave.
 
     The synthetic waveform is a ±amp square wave, so peak == RMS == amp
     EXACTLY (integers) and duration is an IEEE-exact int/int division —
     every decoded column is value-checked against the analytic oracle.
-    At 100 TB the same two-pass shape holds: decode is a narrow map over
-    the binary source partitions (no shuffle), and the stats aggregate
-    is partial-agg friendly.
 
     Reference parity anchor: the reference treats payloads as opaque
     bytes end-to-end (src/lambda_consumer.py); this op is the §2.C
     extension where the engine must look INSIDE real media bytes."""
-
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % WAV_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Self-contained restatement of make_wav_bytes (nested fns ship
-        # by value; workers need no import of this package).
-        import io
-        import wave
-
-        import numpy as np
-
-        def wav_bytes(doc_id: int) -> bytes:
-            rate = (8000, 11025, 16000)[doc_id % 3]
-            n_frames = 256 + (doc_id % 32) * 16
-            amp = 1000 + (doc_id % 7) * 500
-            pcm = np.empty(n_frames, dtype="<i2")
-            pcm[0::2] = amp
-            pcm[1::2] = -amp
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(rate)
-                w.writeframes(pcm.tobytes())
-            return buf.getvalue()
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "wav": [wav_bytes(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, wav binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_channels", "sample_width",
-                                    "sample_rate", "n_frames", "duration_s",
-                                    "peak", "rms")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["wav"]):
-                with wave.open(io.BytesIO(bytes(raw)), "rb") as w:
-                    nch = w.getnchannels()
-                    width = w.getsampwidth()
-                    rate = w.getframerate()
-                    n = w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), dtype="<i2"
-                                        ).astype(np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["n_channels"].append(nch)
-                rows["sample_width"].append(width)
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(n)
-                rows["duration_s"].append(n / rate)
-                rows["peak"].append(int(np.max(np.abs(pcm))))
-                # ±amp square wave → mean(pcm²) = amp² is a perfect
-                # square; sqrt is float-exact for amp « 2^26.
-                rows["rms"].append(
-                    int(round(float(np.sqrt(np.mean(pcm * pcm))))))
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        decode,
+    wavs = _media_objects(spark, sf_dir, WAV_SAMPLE_EVERY, make_wav_bytes,
+                          "wav")
+    return _per_object(
+        wavs, wav_stat_rows,
         "doc_id long, n_channels int, sample_width int, sample_rate int, "
         "n_frames int, duration_s double, peak int, rms int")
 
@@ -490,9 +463,6 @@ def make_png_bytes(doc_id: int) -> bytes:
     filters (row r uses filter r mod 5: None/Sub/Up/Average/Paeth), so
     the decoder's unfilter path is fully covered, and each chunk
     carries its genuine CRC-32."""
-    import struct
-    import zlib
-
     def chunk(tag: bytes, data: bytes) -> bytes:
         return (struct.pack(">I", len(data)) + tag + data
                 + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
@@ -539,11 +509,6 @@ def decode_png_gray8(raw: bytes):
     PNG spec §6). Returns (width, height, bit_depth, color_type,
     ndarray[H,W] of int64 pixels). Raises ValueError on a corrupt
     signature, CRC mismatch, or an unsupported color mode."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if raw[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG: bad signature")
     pos, idat = 8, b""
@@ -624,65 +589,30 @@ def decode_png_gray8(raw: bytes):
     """,
 )
 def mm_decode_png_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode — no stub. Stage 1 synthesizes genuine PNG
-    files (all five row filters, real CRCs, zlib-deflated IDAT; see
-    ``make_png_bytes``) as a binary column; stage 2 DECODES them with
-    ``decode_png_gray8`` — an actual PNG decoder: signature, chunk
-    walk with CRC-32 verification, inflate, and full five-filter row
-    reconstruction including Paeth prediction. Both stages are
-    Arrow-batched ``mapInPandas`` passes; bytes never shuffle — only
-    per-image header fields and pixel aggregates (sum/min/max and a
-    position-weighted sum, which pins every pixel to its coordinate)
-    leave the decode pass, and the analytic oracle recomputes each
-    from the generating arithmetic.
-
-    Scale: identical posture to the WAV path — two narrow map passes,
-    shuffle-free until a consumer aggregates the features; at 100 TB
-    cost is linear in sampled image bytes."""
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % PNG_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    # Ship the codec pair by value (workers import nothing): re-bind the
-    # module-level fns as defaults so cloudpickle serializes them.
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_png_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "png": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, png binary")
-
-    def decode(batches: Iterator[pd.DataFrame], _dec=decode_png_gray8
-               ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "bit_depth", "color_type", "pixel_sum",
-                                    "pixel_min", "pixel_max",
-                                    "pixel_weighted")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["png"]):
-                w, h, bd, ct, grid = _dec(bytes(raw))
-                weights = np.arange(1, w * h + 1, dtype=np.int64
-                                    ).reshape(h, w)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bit_depth"].append(bd)
-                rows["color_type"].append(ct)
-                rows["pixel_sum"].append(int(grid.sum()))
-                rows["pixel_min"].append(int(grid.min()))
-                rows["pixel_max"].append(int(grid.max()))
-                rows["pixel_weighted"].append(int((grid * weights).sum()))
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        decode,
+    """REAL image decode — no stub. ``_media_objects`` synthesizes
+    genuine PNG files (all five row filters, real CRCs, zlib-deflated
+    IDAT; see ``make_png_bytes``); ``_per_object`` DECODES them with
+    ``decode_png_gray8`` — an actual PNG decoder: signature, chunk walk
+    with CRC-32 verification, inflate, and full five-filter row
+    reconstruction including Paeth prediction. The files never
+    shuffle — only per-image header fields and pixel aggregates
+    (sum/min/max and a position-weighted sum, which pins every pixel to
+    its coordinate) leave the decode pass, and the analytic oracle
+    recomputes each from the generating arithmetic."""
+    pngs = _media_objects(spark, sf_dir, PNG_SAMPLE_EVERY, make_png_bytes,
+                          "png")
+    return _per_object(
+        pngs, png_stat_rows,
         "doc_id long, width int, height int, bit_depth int, color_type int, "
         "pixel_sum long, pixel_min int, pixel_max int, pixel_weighted long")
+
+
+def png_stat_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Header fields and pixel aggregates of one decoded PNG."""
+    w, h, bd, ct, grid = decode_png_gray8(raw)
+    weights = np.arange(1, w * h + 1, dtype=np.int64).reshape(h, w)
+    yield (doc_id, w, h, bd, ct, int(grid.sum()), int(grid.min()),
+           int(grid.max()), int((grid * weights).sum()))
 
 
 AVI_W, AVI_H = 16, 12          # frame dimensions (8-bit grayscale DIB)
@@ -699,8 +629,6 @@ def make_avi_bytes(doc_id: int) -> bytes:
     '00db' frame chunks, and an idx1 index. Frame f's pixel(r,c) =
     (doc_id*31 + f*17 + r*13 + c*7) mod 251 — analytic, so a demuxer's
     per-frame aggregates are value-checkable."""
-    import struct
-
     W, H, N = AVI_W, AVI_H, AVI_N_FRAMES
 
     def chunk(tag: bytes, data: bytes) -> bytes:
@@ -747,8 +675,6 @@ def demux_avi_frames(raw: bytes):
     Raises ValueError on malformed container or header/stream
     disagreement. (The frame payloads here are raw DIB — a compressed
     fourcc would hand off to a codec at this exact seam.)"""
-    import struct
-
     if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
         raise ValueError("not an AVI: bad RIFF/AVI magic")
     (riff_len,) = struct.unpack("<I", raw[4:8])
@@ -807,58 +733,32 @@ def demux_avi_frames(raw: bytes):
 )
 def mm_demux_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-container demux — no stub for the container layer.
-    Stage 1 synthesizes genuine AVI files (RIFF 'AVI ' with real avih/
-    strh/strf headers, palette, movi frame chunks, and an idx1 index;
-    see ``make_avi_bytes``); stage 2 DEMUXES them with
-    ``demux_avi_frames`` — an actual RIFF tree walker that
+    ``_media_objects`` synthesizes genuine AVI files (RIFF 'AVI ' with
+    real avih/strh/strf headers, palette, movi frame chunks, and an
+    idx1 index; see ``make_avi_bytes``); ``_per_object`` DEMUXES them
+    with ``demux_avi_frames`` — an actual RIFF tree walker that
     cross-checks the declared frame count against the movi stream —
     and keeps every ``AVI_FRAME_STRIDE``-th frame, emitting per-frame
     pixel aggregates (sum + position-weighted sum) that the analytic
     oracle recomputes exactly. Codec handoff for compressed fourccs is
     the documented seam inside the demuxer; raw-DIB frames decode by
-    identity. Same scale posture as WAV/PNG: two narrow mapInPandas
-    passes, bytes never shuffle."""
-    import numpy as np  # noqa: F401  (decode pass uses it worker-side)
-
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % AVI_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_avi_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "avi": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, avi binary")
-
-    def demux(batches: Iterator[pd.DataFrame], _dmx=demux_avi_frames
-              ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        weights = np.arange(1, AVI_W * AVI_H + 1, dtype=np.int64)
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "width",
-                                    "height", "frame_sum", "frame_weighted")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["avi"]):
-                w, h, n, frames = _dmx(bytes(raw))
-                for f in range(0, n, AVI_FRAME_STRIDE):
-                    px = np.frombuffer(frames[f], dtype=np.uint8
-                                       ).astype(np.int64)
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame_sum"].append(int(px.sum()))
-                    rows["frame_weighted"].append(int((px * weights).sum()))
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        demux,
+    identity. The files never shuffle."""
+    avis = _media_objects(spark, sf_dir, AVI_SAMPLE_EVERY, make_avi_bytes,
+                          "avi")
+    return _per_object(
+        avis, avi_frame_rows,
         "doc_id long, frame_idx int, width int, height int, "
         "frame_sum long, frame_weighted long")
+
+
+def avi_frame_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Pixel sum and position-weighted sum of every AVI_FRAME_STRIDE-th
+    frame of one demuxed raw-DIB AVI."""
+    w, h, n, frames = demux_avi_frames(raw)
+    weights = np.arange(1, w * h + 1, dtype=np.int64)
+    for f in range(0, n, AVI_FRAME_STRIDE):
+        px = np.frombuffer(frames[f], dtype=np.uint8).astype(np.int64)
+        yield doc_id, f, w, h, int(px.sum()), int((px * weights).sum())
 
 
 JPG_W, JPG_H = 32, 24          # baseline-JPEG image dimensions (4x3 blocks)
@@ -883,8 +783,6 @@ def jpeg_coeff_blocks(seed: int):
     which is DC-ONLY — a flat block whose IDCT is exactly rational
     (pixel = dcq*q0/8 + 128 = dcq*2 + 128 with the Annex-K q0=16), so
     the SQL oracle can check the pixel path bit-exactly there."""
-    import numpy as np
-
     blocks = np.zeros((JPG_BLOCKS, 64), dtype=np.int64)
     for b in range(JPG_BLOCKS):
         blocks[b, 0] = (seed * 7 + b * 5) % 21 - 10
@@ -902,10 +800,6 @@ def make_jpeg_bytes(seed: int) -> bytes:
     genuine canonical Huffman entropy coding with DC differential
     coding, ZRL, EOB, and 0xFF byte stuffing) whose quantized
     coefficients are ``jpeg_coeff_blocks(seed)``."""
-    from dask_lambda_example_spark.operators.jpegcodec import (
-        encode_jpeg_gray8,
-    )
-
     return encode_jpeg_gray8(jpeg_coeff_blocks(seed), JPG_W, JPG_H)
 
 
@@ -914,8 +808,6 @@ def _jpeg_frame_stats(zq, img, seed: int):
     quantized-coefficient checksums (Huffman/run-length/zigzag/dequant
     pipeline) plus the exact pixel sum over the DC-only blocks (IDCT +
     level-shift + rounding pipeline on the rational-output blocks)."""
-    import numpy as np
-
     nb = zq.shape[0]
     binc = np.arange(1, nb + 1, dtype=np.int64)
     kw = np.arange(64, dtype=np.int64)
@@ -978,48 +870,23 @@ def mm_decode_jpeg_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     Annex-K table's q0=16) is exactly representable — so the DuckDB
     oracle recomputes every column with zero float tolerance. Full-AC
     pixel output is verified in tests/test_units.py against an
-    independent four-loop cosine IDCT.
-
-    Scale posture: identical to WAV/PNG — two narrow shuffle-free
-    mapInPandas passes; at 100 TB cost is linear in sampled image
-    bytes, exchange zero until a consumer aggregates the features."""
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % JPG_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_jpeg_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "jpg": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, jpg binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dask_lambda_example_spark.operators.jpegcodec import (
-            decode_jpeg_gray8,
-        )
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "n_blocks",
-                                    "dcq_sum", "dcq_weighted", "acq_checksum",
-                                    "acq_nnz", "px_dc_sum")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, zq, img = decode_jpeg_gray8(bytes(raw))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append(zq.shape[0])
-                for k, v in _jpeg_frame_stats(zq, img, int(doc_id)).items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        decode,
+    independent four-loop cosine IDCT. Both passes are the shared
+    ``_media_objects`` / ``_per_object`` pair; the files never
+    shuffle."""
+    jpgs = _media_objects(spark, sf_dir, JPG_SAMPLE_EVERY, make_jpeg_bytes,
+                          "jpg")
+    return _per_object(
+        jpgs, jpeg_stat_rows,
         "doc_id long, width int, height int, n_blocks int, dcq_sum long, "
         "dcq_weighted long, acq_checksum long, acq_nnz long, px_dc_sum long")
+
+
+def jpeg_stat_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Dimensions, block count and ``_jpeg_frame_stats`` (in its key
+    order) of one decoded JPEG whose seed is its doc_id."""
+    w, h, zq, img = decode_jpeg_gray8(raw)
+    yield (doc_id, w, h, zq.shape[0],
+           *_jpeg_frame_stats(zq, img, doc_id).values())
 
 
 MJPG_N_FRAMES = 6              # JPEG frames per synthetic MJPEG clip
@@ -1032,12 +899,6 @@ def make_mjpeg_avi_bytes(doc_id: int) -> bytes:
     biCompression) and '00dc' compressed frame chunks whose payloads
     are genuine baseline JFIF files — frame f's quantized coefficients
     are ``jpeg_coeff_blocks(doc_id * 101 + f * 37)``."""
-    import struct
-
-    from dask_lambda_example_spark.operators.jpegcodec import (
-        encode_jpeg_gray8,
-    )
-
     W, H, N = JPG_W, JPG_H, MJPG_N_FRAMES
 
     def chunk(tag: bytes, data: bytes) -> bytes:
@@ -1099,63 +960,33 @@ def make_mjpeg_avi_bytes(doc_id: int) -> bytes:
 )
 def mm_demux_mjpeg_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END compressed video: REAL container demux handing off to
-    a REAL DCT codec at the '00dc' seam. Stage 1 synthesizes genuine
-    MJPEG AVI files (fourcc 'MJPG' in both strh and strf, '00dc' chunks
-    carrying real baseline JFIF frames; see ``make_mjpeg_avi_bytes``);
-    stage 2 demuxes with the same ``demux_avi_frames`` RIFF walker the
-    raw-DIB query uses — the compressed fourcc changes NOTHING about
-    the container walk, which is the point of the seam — then decodes
-    every frame with ``jpegcodec.decode_jpeg_gray8`` and emits the
-    per-frame integer-exact stats (coefficient checksums + DC-only
-    pixel sum) that the analytic oracle recomputes from the generating
-    arithmetic.
-
-    Scale posture: two shuffle-free mapInPandas passes; per-clip cost
-    is frames x blocks with no exchange — at 100 TB the demux+decode
-    parallelizes per media file with zero shuffle."""
-    d = (load_table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % MJPG_SAMPLE_EVERY == 0)
-         .select("doc_id"))
-
-    def synth(batches: Iterator[pd.DataFrame], _enc=make_mjpeg_avi_bytes
-              ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "avi": [_enc(int(i)) for i in pdf["doc_id"]],
-            })
-
-    clips = d.mapInPandas(synth, "doc_id long, avi binary")
-
-    def demux_decode(batches: Iterator[pd.DataFrame], _dmx=demux_avi_frames
-                     ) -> Iterator[pd.DataFrame]:
-        from dask_lambda_example_spark.operators.jpegcodec import (
-            decode_jpeg_gray8,
-        )
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "width", "height",
-                                    "dcq_sum", "acq_checksum", "acq_nnz",
-                                    "px_dc_sum")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["avi"]):
-                w, h, n, frames = _dmx(bytes(raw))
-                for f in range(n):
-                    fw, fh, zq, img = decode_jpeg_gray8(bytes(frames[f]))
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            "frame dims disagree with container header")
-                    stats = _jpeg_frame_stats(zq, img,
-                                              int(doc_id) * 101 + f * 37)
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["width"].append(fw)
-                    rows["height"].append(fh)
-                    for k in ("dcq_sum", "acq_checksum", "acq_nnz",
-                              "px_dc_sum"):
-                        rows[k].append(stats[k])
-            yield pd.DataFrame(rows)
-
-    return clips.mapInPandas(
-        demux_decode,
+    a REAL DCT codec at the '00dc' seam. ``_media_objects`` synthesizes
+    genuine MJPEG AVI files (fourcc 'MJPG' in both strh and strf,
+    '00dc' chunks carrying real baseline JFIF frames; see
+    ``make_mjpeg_avi_bytes``); ``_per_object`` demuxes them with the
+    same ``demux_avi_frames`` RIFF walker the raw-DIB query uses — the
+    compressed fourcc changes NOTHING about the container walk, which
+    is the point of the seam — then decodes every frame with
+    ``jpegcodec.decode_jpeg_gray8`` and emits the per-frame
+    integer-exact stats (coefficient checksums + DC-only pixel sum)
+    that the analytic oracle recomputes from the generating arithmetic.
+    The files never shuffle."""
+    avis = _media_objects(spark, sf_dir, MJPG_SAMPLE_EVERY,
+                          make_mjpeg_avi_bytes, "avi")
+    return _per_object(
+        avis, mjpeg_frame_rows,
         "doc_id long, frame_idx int, width int, height int, dcq_sum long, "
         "acq_checksum long, acq_nnz long, px_dc_sum long")
+
+
+def mjpeg_frame_rows(doc_id: int, raw: bytes) -> Iterator[tuple]:
+    """Per-frame coefficient checksums and DC-only pixel sum of one
+    demuxed MJPEG AVI; frame f's seed is doc_id * 101 + f * 37."""
+    w, h, n, frames = demux_avi_frames(raw)
+    for f in range(n):
+        fw, fh, zq, img = decode_jpeg_gray8(frames[f])
+        if (fw, fh) != (w, h):
+            raise ValueError("frame dims disagree with container header")
+        s = _jpeg_frame_stats(zq, img, doc_id * 101 + f * 37)
+        yield (doc_id, f, fw, fh, s["dcq_sum"], s["acq_checksum"],
+               s["acq_nnz"], s["px_dc_sum"])

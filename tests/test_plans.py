@@ -1042,6 +1042,41 @@ def test_canonical_consumers_are_bucket_min_equijoins(spark, sf_dir):
                    for j in joins), (name, joins)
 
 
+# two-pass media query -> the binary column _media_objects builds
+_MEDIA_COLUMN = {
+    "mm_decode_wav_audio": "wav",
+    "mm_decode_png_image": "png",
+    "mm_demux_avi_frames": "avi",
+    "mm_decode_jpeg_image": "jpg",
+    "mm_demux_mjpeg_avi": "avi",
+    "dedup_image_phash": "png",
+    "dedup_image_phash_canonical": "png",
+    "dedup_audio_fingerprint": "wav",
+    "dedup_video_fingerprint": "avi",
+}
+
+
+@pytest.mark.parametrize("name", list(_MEDIA_COLUMN))
+def test_media_bytes_never_shuffle(spark, sf_dir, name):
+    # the media files are built and decoded per object, so no Exchange
+    # or BroadcastExchange may carry the media column: only the typed
+    # rows _per_object emits reach a shuffle. (mm_frame_sample is not
+    # listed: it gathers per-frame bytes into clips with a shuffle.)
+    import re
+
+    col = _MEDIA_COLUMN[name]
+    df = QUERIES[name].fn(spark, sf_dir)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert re.search(rf"\b{col}#\d+", plan), (name, "media column absent")
+    exchanged = re.findall(
+        r"^\(\d+\) (?:Broadcast)?Exchange\nInput \[\d+\]: \[(.*)\]$",
+        plan, re.M)
+    carried = [c for cols in exchanged for c in cols.split(", ")
+               if re.fullmatch(rf"{col}#\d+", c)]
+    assert not carried, (name, carried)
+
+
 # query -> BroadcastNestedLoopJoins its plan holds: the recall audit's
 # exact side (_exact_cosine_topk) is one by design, probes × every
 # other vector.

@@ -102,6 +102,30 @@ def test_decode_stub_seam():
         decode_image_stub(b"\x89PNG\r\n\x1a\n....")
 
 
+def test_per_object_keeps_declared_schema(spark):
+    # every media query decodes through _per_object: one object may
+    # yield several rows or none, and whatever a batch yields — rows,
+    # no rows, or no batch at all — the frame has the declared schema
+    # with its columns in declared (not alphabetical) order.
+    from dask_lambda_example_spark.operators.multimodal import _per_object
+
+    def rows(doc_id, raw):
+        for k in range(raw[0]):
+            yield doc_id, raw[1:].decode(), k
+
+    schema = "doc_id long, tail string, k int"
+    objs = spark.createDataFrame([(1, b"\x02ab"), (2, b"\x00zz")],
+                                 "doc_id long, raw binary")
+    cases = {"two rows and none": (objs, [(1, "ab", 0), (1, "ab", 1)]),
+             "none": (objs.filter("doc_id = 2"), []),
+             "empty input": (objs.filter("doc_id < 0"), [])}
+    for case, (frame, want) in cases.items():
+        out = _per_object(frame, rows, schema)
+        assert out.schema.simpleString() == \
+            "struct<doc_id:bigint,tail:string,k:int>", case
+        assert sorted(map(tuple, out.collect())) == want, case
+
+
 def test_wav_bytes_are_real_riff_and_roundtrip():
     # The audio path is a REAL decode (stdlib wave RIFF parser), not a
     # stub: the synthesized payload must be a genuine WAV file — RIFF
@@ -126,6 +150,19 @@ def test_wav_bytes_are_real_riff_and_roundtrip():
             pcm = np.frombuffer(w.readframes(n), dtype="<i2")
         amp = 1000 + (doc_id % 7) * 500
         assert int(pcm.max()) == amp and int(pcm.min()) == -amp
+
+    # read_wav decodes 16-bit PCM only: an 8-bit file is refused, not
+    # misread as half as many int16 samples
+    from dask_lambda_example_spark.operators.multimodal import read_wav
+
+    buf = io.BytesIO()
+    with wavemod.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(1)
+        w.setframerate(8000)
+        w.writeframes(b"\x80" * 4)
+    with pytest.raises(ValueError, match="16-bit"):
+        read_wav(buf.getvalue())
 
 
 def test_png_decoder_is_real_and_rejects_corruption():
@@ -1169,6 +1206,49 @@ def test_ab_bench_worker_heap_fits_two_workers():
     assert worker_heap_gib(512.0) == 16
 
 
+def test_ab_bench_sweep_files_clean_up(tmp_path):
+    # the sweep's worker script is deleted, a baseline worktree the
+    # sweep added is removed again, a directory already checked out at
+    # the baseline is reused and kept, and one at another commit is
+    # refused rather than timed as the baseline
+    import os
+    import subprocess
+
+    _bench_gate_mod()  # puts tools/ on sys.path
+    from ab_bench import sweep_files
+
+    repo = tmp_path / "repo"
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-C", str(repo), "-c", "user.name=t",
+             "-c", "user.email=t@t", *args],
+            check=True, capture_output=True, text=True).stdout.strip()
+
+    repo.mkdir()
+    git("init", "-q")
+    revs = []
+    for msg in ("one", "two"):
+        git("commit", "-q", "--allow-empty", "-m", msg)
+        revs.append(git("rev-parse", "HEAD"))
+    base = tmp_path / "ab_baseline"
+
+    with sweep_files(repo, revs[0], base) as script:
+        assert os.path.exists(script)
+        assert git("-C", str(base), "rev-parse", "HEAD") == revs[0]
+    assert not os.path.exists(script)
+    assert not base.exists()
+    assert str(base) not in git("worktree", "list")
+
+    git("worktree", "add", "--detach", str(base), revs[0])
+    with sweep_files(repo, revs[0], base) as script:
+        pass
+    assert base.exists() and not os.path.exists(script)
+    with pytest.raises(RuntimeError, match="not the baseline"):
+        with sweep_files(repo, revs[1], base):
+            pass
+
+
 def test_bench_regression_gate():
     # plan-pathology tripwire: any query >3x slower than the previous
     # committed round's bench fails here instead of waiting for a
@@ -2013,16 +2093,16 @@ def test_bench_battery_cap_policy(monkeypatch):
 
 
 def test_image_phash_decode_matches_generating_arithmetic():
-    # the perceptual-hash bits computed from the REAL PNG decode
-    # (decode_png_gray8 over make_png_bytes) must equal the bits
+    # the perceptual-hash bits the Spark pass computes from the REAL
+    # PNG decode (png_phash over make_png_bytes) must equal the bits
     # derived directly from the generating pixel arithmetic — the same
     # relationship the DuckDB oracle relies on, checked here without
     # Spark for a spread of doc_ids (covers all five PNG row filters
     # and the mod-251 wraparound).
     from dask_lambda_example_spark.operators.dedup import (
-        PHASH_CELL, _phash_dims)
+        PHASH_CELL, _phash_dims, png_phash)
     from dask_lambda_example_spark.operators.multimodal import (
-        PNG_H, PNG_W, decode_png_gray8, make_png_bytes)
+        PNG_H, PNG_W, make_png_bytes)
 
     gc_, gr_, nc, _ = _phash_dims()
 
@@ -2043,23 +2123,9 @@ def test_image_phash_decode_matches_generating_arithmetic():
                     h |= 1 << (nc + k)
         return h
 
-    def phash_decoded(doc_id: int) -> int:
-        _, _, _, _, grid = decode_png_gray8(make_png_bytes(doc_id))
-        cells = grid.reshape(gr_, PHASH_CELL, gc_, PHASH_CELL).sum(
-            axis=(1, 3))
-        tot = int(cells.sum())
-        h = 0
-        for r in range(gr_):
-            for c in range(gc_):
-                k = r * gc_ + c
-                if int(cells[r, c]) * nc > tot:
-                    h |= 1 << k
-                if cells[r, c] > cells[r, (c + 1) % gc_]:
-                    h |= 1 << (nc + k)
-        return h
-
     for doc_id in [0, 25, 50, 251, 2510, 6275, 97525]:
-        assert phash_decoded(doc_id) == phash_analytic(doc_id), doc_id
+        assert png_phash(make_png_bytes(doc_id)) == phash_analytic(doc_id), \
+            doc_id
     # identical images (doc_id ≡ mod 251·SAMPLE step) hash identically
     assert phash_analytic(0) == phash_analytic(251)
 
@@ -2089,18 +2155,18 @@ def test_cutlist_interval_merge_reference():
 
 
 def test_audio_fingerprint_decode_matches_generating_arithmetic():
-    # the 63-bit audio fingerprint computed from the REAL RIFF/WAVE
-    # round-trip (stdlib wave writer → stdlib wave parser → block
-    # pooling) must equal the bits derived directly from the generating
-    # block-level arithmetic — the relationship the DuckDB oracle
-    # relies on — checked without Spark for a spread of doc_ids.
-    import io
-    import wave
-
+    # the 63-bit audio fingerprint the Spark pass computes from the
+    # REAL RIFF/WAVE round-trip (wav_bytes → read_wav → block pooling,
+    # in wav_fingerprint) must equal the bits derived directly from the
+    # generating block-level arithmetic — the relationship the DuckDB
+    # oracle relies on — checked without Spark for a spread of doc_ids.
     import numpy as np
 
     from dask_lambda_example_spark.operators.dedup import (
-        AFP_BLOCK, AFP_BLOCKS, AFP_CLASSES, AFP_RATE)
+        AFP_BLOCK, AFP_BLOCKS, AFP_CLASSES, AFP_RATE, afp_wav_bytes,
+        wav_fingerprint)
+    from dask_lambda_example_spark.operators.multimodal import (
+        read_wav, wav_bytes)
 
     def lvl(doc_id: int):
         k = np.arange(AFP_BLOCKS, dtype=np.int64)
@@ -2121,24 +2187,11 @@ def test_audio_fingerprint_decode_matches_generating_arithmetic():
     def fp_analytic(doc_id: int) -> int:
         return bits(lvl(doc_id))
 
-    def fp_decoded(doc_id: int) -> int:
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(AFP_RATE)
-            w.writeframes(np.repeat(lvl(doc_id), AFP_BLOCK)
-                          .astype("<i2").tobytes())
-        buf.seek(0)
-        with wave.open(buf, "rb") as w:
-            assert (w.getnchannels(), w.getsampwidth(),
-                    w.getframerate()) == (1, 2, AFP_RATE)
-            pcm = np.frombuffer(w.readframes(w.getnframes()),
-                                dtype="<i2").astype(np.int64)
-        return bits(pcm.reshape(AFP_BLOCKS, AFP_BLOCK).sum(axis=1))
-
     for doc_id in [0, 25, 50, 325, 407, 2500, 10400, 99925]:
-        assert fp_decoded(doc_id) == fp_analytic(doc_id), doc_id
+        raw = wav_bytes(np.repeat(lvl(doc_id), AFP_BLOCK), AFP_RATE)
+        assert raw == afp_wav_bytes(doc_id), doc_id
+        assert read_wav(raw)[:3] == (1, 2, AFP_RATE)
+        assert wav_fingerprint(raw) == fp_analytic(doc_id), doc_id
 
     # near-dup structure the AFP_HAM_MAX dial relies on:
     # same base class (mod AFP_CLASSES) + same spike (mod AFP_BLOCKS)
@@ -2161,11 +2214,9 @@ def test_video_fingerprint_decode_matches_generating_arithmetic():
     import numpy as np
 
     from dask_lambda_example_spark.operators.dedup import (
-        video_fingerprint_bits)
-    from dask_lambda_example_spark.operators.jpegcodec import (
-        decode_jpeg_gray8)
+        mjpeg_fingerprint, video_fingerprint_bits)
     from dask_lambda_example_spark.operators.multimodal import (
-        JPG_BLOCKS, MJPG_N_FRAMES, demux_avi_frames, make_mjpeg_avi_bytes)
+        JPG_BLOCKS, MJPG_N_FRAMES, make_mjpeg_avi_bytes)
 
     def v_analytic(doc_id: int):
         v = np.zeros((MJPG_N_FRAMES, 4), dtype=np.int64)
@@ -2184,23 +2235,9 @@ def test_video_fingerprint_decode_matches_generating_arithmetic():
                 v[f, b % 4] += dcq * 32 + k1 * a1 + k2 * a2
         return v
 
-    def v_decoded(doc_id: int):
-        kw = np.arange(64, dtype=np.int64)
-        _, _, n, frames = demux_avi_frames(make_mjpeg_avi_bytes(doc_id))
-        assert n == MJPG_N_FRAMES
-        v = np.zeros((n, 4), dtype=np.int64)
-        for f in range(n):
-            _, _, zq, _ = decode_jpeg_gray8(bytes(frames[f]))
-            for g in range(4):
-                zg = zq[g::4]
-                v[f, g] = int(zg[:, 0].sum()) * 32 + int((zg * kw).sum())
-        return v
-
     for doc_id in [0, 50, 100, 450, 900, 9000, 99950]:
-        va, vd = v_analytic(doc_id), v_decoded(doc_id)
-        assert (va == vd).all(), (doc_id, va, vd)
-        assert video_fingerprint_bits(vd, MJPG_N_FRAMES) == \
-            video_fingerprint_bits(va, MJPG_N_FRAMES)
+        assert mjpeg_fingerprint(make_mjpeg_avi_bytes(doc_id)) == \
+            video_fingerprint_bits(v_analytic(doc_id), MJPG_N_FRAMES), doc_id
 
 
 # --- optimization round 14: internals changed for performance ---------------

@@ -27,11 +27,16 @@ top-level aborted_sides/n_missing_ratios so a degraded sweep can't
 pass for a full one (ADVICE r11), and the tool exits 1.
 Unless SPARK_GRAFT_DRIVER_MEM is set, each worker's JVM heap is a
 quarter of host RAM (1-16 g), so the two together fit the host.
+The baseline checkout is <tmp>/ab_baseline_<rev> (<tmp> is Python's
+tempfile directory, i.e. $TMPDIR or /tmp). An existing directory there
+is reused only if its HEAD is the baseline commit; otherwise it is added
+as a git worktree and removed again when the sweep ends.
 (CPU-exclusive — timed; run alone like bench.py)
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import subprocess
@@ -97,6 +102,44 @@ def worker_heap_gib(ram_gib: float) -> int:
     return max(1, min(16, int(ram_gib // 4)))
 
 
+def _log_path(tag: str) -> str:
+    return os.path.join(tempfile.gettempdir(), f"ab_bench_{tag}.stderr")
+
+
+def _git(*args: str) -> subprocess.CompletedProcess:
+    return subprocess.run(["git", *args], capture_output=True, text=True)
+
+
+@contextlib.contextmanager
+def sweep_files(repo: Path, rev: str, base_dir: Path):
+    """Yield the worker script's path with ``base_dir`` a checkout of
+    the full commit hash ``rev``. An existing ``base_dir`` is reused
+    only if its HEAD is ``rev`` (RuntimeError otherwise); a missing one
+    is added as a worktree of ``repo``. On exit the script is deleted,
+    and so is the worktree if this call added it."""
+    if base_dir.exists():
+        head = _git("-C", str(base_dir), "rev-parse", "HEAD").stdout.strip()
+        if head != rev:
+            raise RuntimeError(
+                f"{base_dir} exists but its HEAD is {head or 'unreadable'}, "
+                f"not the baseline {rev}; remove it and rerun")
+        added = False
+    else:
+        subprocess.run(["git", "-C", str(repo), "worktree", "add",
+                        "--detach", str(base_dir), rev], check=True)
+        added = True
+    with tempfile.NamedTemporaryFile(
+            "w", suffix="_ab_worker.py", delete=False) as f:
+        f.write(_WORKER_SRC)
+    try:
+        yield f.name
+    finally:
+        os.unlink(f.name)
+        if added:
+            subprocess.run(["git", "-C", str(repo), "worktree", "remove",
+                            "--force", str(base_dir)], check=True)
+
+
 def _parse_env(spec: str | None) -> dict[str, str]:
     if not spec:
         return {}
@@ -140,7 +183,7 @@ class _Worker:
             self.proc.wait(timeout=30)
         if self.log is not None:
             self.log.close()
-        self.log = open(f"/tmp/ab_bench_{self.tag}.stderr", "a")
+        self.log = open(_log_path(self.tag), "a")
         env = dict(os.environ, **self.extra_env)
         self.proc = subprocess.Popen(
             [sys.executable, self.worker_py, self.repo, self.sf_dir],
@@ -190,7 +233,7 @@ class _Worker:
                             "error": f"worker restart failed: {ex}"}
             return {"name": name,
                     "error": (f"worker died (exit={rc}{pipe_err}); see "
-                              f"/tmp/ab_bench_{self.tag}.stderr")}
+                              f"{_log_path(self.tag)}")}
         return {"name": name, "error": "unreachable"}
 
     def close(self) -> None:
@@ -222,53 +265,47 @@ def main() -> int:
     env_cur = _parse_env(_arg("--env-current"))
     env_base = _parse_env(_arg("--env-baseline"))
 
-    rev = subprocess.run(
-        ["git", "-C", str(REPO), "rev-parse", "--short", baseline],
-        capture_output=True, text=True, check=True).stdout.strip()
-    base_dir = f"/tmp/ab_baseline_{rev}"
-    if not os.path.isdir(base_dir):
-        subprocess.run(["git", "-C", str(REPO), "worktree", "add",
-                        "--detach", base_dir, baseline], check=True)
+    full = _git("-C", str(REPO), "rev-parse", "--verify",
+                f"{baseline}^{{commit}}").stdout.strip()
+    assert full, f"--baseline {baseline} is not a commit"
+    rev = _git("-C", str(REPO), "rev-parse", "--short", full).stdout.strip()
+    base_dir = Path(tempfile.gettempdir()) / f"ab_baseline_{rev}"
 
-    worker_py = tempfile.NamedTemporaryFile(
-        "w", suffix="_ab_worker.py", delete=False)
-    worker_py.write(_WORKER_SRC)
-    worker_py.close()
-
-    a = _Worker("current", str(REPO), sf_dir, worker_py.name, env_cur)
-    b = _Worker("baseline", base_dir, sf_dir, worker_py.name, env_base)
-    results: dict[str, dict] = {}
-    try:
-        for name in names:
-            walls: dict[str, list] = {"current": [], "baseline": []}
-            errors: list[str] = []
-            # A,B,B,A per rep-pair: any monotone host drift cancels
-            order = [a, b] if len(results) % 2 == 0 else [b, a]
-            for _ in range(reps):
-                for w in order:
-                    r = w.run(name)
-                    if "wall" in r:
-                        walls[w.tag].append(r["wall"])
-                    else:
-                        errors.append(f"{w.tag}: {r.get('error')}")
-                order.reverse()
-            rec: dict = {"current": walls["current"],
-                         "baseline": walls["baseline"]}
-            if walls["current"] and walls["baseline"]:
-                rec["best_ratio"] = round(
-                    min(walls["current"]) / min(walls["baseline"]), 3)
-            if errors:
-                rec["errors"] = errors
-            results[name] = rec
-            print(json.dumps({name: rec}), file=sys.stderr, flush=True)
-    finally:
-        # dead/exhausted state must be read BEFORE close() reaps the
-        # processes, or a crashed side would look identical to a clean
-        # exit in the summary doc
-        dead_sides = sorted(
-            w.tag for w in (a, b) if w.proc.poll() is not None)
-        a.close()
-        b.close()
+    with sweep_files(REPO, full, base_dir) as worker_py:
+        a = _Worker("current", str(REPO), sf_dir, worker_py, env_cur)
+        b = _Worker("baseline", str(base_dir), sf_dir, worker_py, env_base)
+        results: dict[str, dict] = {}
+        try:
+            for name in names:
+                walls: dict[str, list] = {"current": [], "baseline": []}
+                errors: list[str] = []
+                # A,B,B,A per rep-pair: any monotone host drift cancels
+                order = [a, b] if len(results) % 2 == 0 else [b, a]
+                for _ in range(reps):
+                    for w in order:
+                        r = w.run(name)
+                        if "wall" in r:
+                            walls[w.tag].append(r["wall"])
+                        else:
+                            errors.append(f"{w.tag}: {r.get('error')}")
+                    order.reverse()
+                rec: dict = {"current": walls["current"],
+                             "baseline": walls["baseline"]}
+                if walls["current"] and walls["baseline"]:
+                    rec["best_ratio"] = round(
+                        min(walls["current"]) / min(walls["baseline"]), 3)
+                if errors:
+                    rec["errors"] = errors
+                results[name] = rec
+                print(json.dumps({name: rec}), file=sys.stderr, flush=True)
+        finally:
+            # dead/exhausted state must be read BEFORE close() reaps the
+            # processes, or a crashed side would look identical to a clean
+            # exit in the summary doc
+            dead_sides = sorted(
+                w.tag for w in (a, b) if w.proc.poll() is not None)
+            a.close()
+            b.close()
 
     ratios = sorted(r["best_ratio"] for r in results.values()
                     if "best_ratio" in r)
