@@ -35,6 +35,26 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # stderr.
 XLOG_STDERR_OPTS = "-Xlog:disable -Xlog:all=warning:stderr"
 
+# Entries in Spark's JVM-wide cache of compiled generated classes
+# (``spark.sql.codegen.cache.maxEntries``, default 100). The cache is
+# LRU, so a battery that cycles through more classes than it holds
+# evicts every one before its next use: at 100, every repeat of a query
+# in a long-lived session recompiles its classes with Janino and runs
+# them cold in the JIT again (the 22 TPC-H queries alone generate
+# about 260 classes a pass). The bound sits above the whole registry's
+# working set, measured as the classes one pass compiles: 3,075 at
+# sf0.001 and 3,187 at sf0.1, so 5,000 leaves room for queries added
+# later. Two registry passes in one session at sf0.001 (local[4], 4 g
+# heap) then compile 3,075 and 141 classes instead of 4,320 and 4,289,
+# for +25 MB of Metaspace (254 against 229 MB) and +19 MB of CodeHeap
+# (148 against 130 MB) after the second pass. The conf is static:
+# Spark reads it once, when it creates the JVM-wide cache, so it goes
+# in the builder and ``io.ensure_portable_session`` cannot set it at
+# runtime. A Connect session ignores it: pyspark sends builder confs
+# to a remote session with ``silent=True``, and the server refuses a
+# static conf without an error.
+CODEGEN_CACHE_ENTRIES = 5_000
+
 
 def _default_local_dir() -> str | None:
     """Fast scratch space for shuffle files and block-manager spill.
@@ -178,6 +198,8 @@ def get_spark(app_name: str = "dask_lambda_example_spark",
         # writes + read-backs are measured query paths)
         .config("spark.sql.warehouse.dir",
                 os.path.join(fast_scratch_dir(), "spark_graft_warehouse"))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     if not os.environ.get("SPARK_GRAFT_REMOTE"):
         # Local test/bench mode: single JVM. Driver heap is 16g, NOT

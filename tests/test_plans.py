@@ -68,6 +68,26 @@ def test_flagship_partial_aggregation(spark, sf_dir):
     assert_wholestage_codegen(df)
 
 
+def test_repeated_tpch_pass_compiles_no_class_per_query(spark, sf_dir):
+    # the session's codegen class cache holds the 22 TPC-H queries'
+    # generated classes (about 260 a pass), so a second pass, in the
+    # reverse order, finds them there instead of compiling them again;
+    # at Spark's default of 100 entries it compiles about 175. The bound
+    # is absolute because earlier tests may have warmed the cache.
+    import re
+
+    tpch = [QUERIES[n].fn for n in QUERIES if re.fullmatch(r"q\d+_\w+", n)]
+    assert len(tpch) == 22
+    for fn in tpch:
+        fn(spark, sf_dir).collect()
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    before = compiles.getCount()
+    for fn in reversed(tpch):
+        fn(spark, sf_dir).collect()
+    assert compiles.getCount() - before < len(tpch)
+
+
 def test_topk_uses_take_ordered(spark, sf_dir):
     from dask_lambda_example_spark.plans.inspect import physical_plan
 

@@ -55,9 +55,11 @@ from dask_lambda_example_spark.registry import spark_queries
 from dask_lambda_example_spark.session import get_spark
 spark = get_spark("ab-bench")
 qs = spark_queries()
-# warm the JVM + parquet footer caches off the clock
+# warm the JVM + parquet footer caches off the clock, and start the
+# Python worker so the first Python-worker query does not pay for it
 qs["flagship_groupby_mean_std"](spark, sf_dir).write.format("noop") \\
     .mode("overwrite").save()
+spark.range(4).mapInPandas(lambda it: it, "id long").collect()
 print(json.dumps({"ready": True, "n_queries": len(qs)}), flush=True)
 for line in sys.stdin:
     name = line.strip()
