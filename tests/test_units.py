@@ -1261,7 +1261,11 @@ def test_bench_regression_gate():
     # (SPARK_GRAFT_BENCH_ONLY) and fails only on a RAW-bar-confirmed
     # isolated wall.  The re-probe is cached in BENCH_reprobe_gate.json
     # keyed on the artifact bytes, so the suite stays fast until the
-    # driver drops a new pair.  The 3x bar itself is UNCHANGED.
+    # driver drops a new pair.  The 3x bar itself is UNCHANGED.  A crash
+    # the artifact RECORDS (-1) is a record of the program that wrote
+    # it, so it is re-probed fresh in the same run and fails here only
+    # if it still crashes against the current tree (a recorded crash
+    # that runs fresh but past the raw bar lands in "confirmed").
     import pathlib
 
     bench_gate = _bench_gate_mod()
@@ -1277,7 +1281,8 @@ def test_bench_regression_gate():
     if report["skip"]:
         pytest.skip(report["skip"])
     assert not report["failed"], (
-        f"queries failing in {arts[-1].name}: {report['failed']}")
+        f"queries recorded as failing in {arts[-1].name} that still "
+        f"fail in a fresh re-probe: {report['failed']}")
     assert not report["flaky"], (
         f"queries flaky under repetition in {arts[-1].name}: "
         f"{report['flaky']}")
@@ -1396,6 +1401,84 @@ def test_bench_gate_median_cap_sentinels(tmp_path):
     # a LOADED-host run at the same uniform 4x: same flags, but the
     # isolated walls at parity attribute it to weather — the cap never
     # turns weather into a failure, it only refuses to take it on faith
+
+
+def test_bench_gate_reprobes_recorded_crashes(tmp_path):
+    # a -1 wall in the current artifact records a crash of the program
+    # that wrote it: the gate re-probes it fresh, with the protocol
+    # pinned to the pair, and fails only if it still crashes; one that
+    # runs is held to the raw 3x bar against its previous wall
+    import json
+
+    bench_gate = _bench_gate_mod()
+
+    def art(path, queries, flagship):
+        path.write_text(json.dumps({"parsed": {
+            "sink_mode": "collect", "queries": queries,
+            "flagship_synth_sec": flagship}}))
+        return path
+
+    prev = {f"q{i}": 1.0 for i in range(10)}
+    prev.update(crashed=4.0)
+    cur = {f"q{i}": 1.0 for i in range(10)}
+    cur.update(crashed=-1.0, new_crashed=-1.0)  # new_crashed: no prev
+    a = art(tmp_path / "BENCH_r88.json", prev, 0.7)
+    b = art(tmp_path / "BENCH_r89.json", cur, 0.7)
+
+    probed = {}
+
+    def reprobe_at(walls):
+        def reprobe(prev_art, cur_art, names, **kw):
+            probed.update(names=set(names), sink=kw.get("sink"))
+            return {"isolated": {n: walls[n] for n in names}}
+        return reprobe
+
+    r = bench_gate.evaluate(
+        a, b, reprobe=reprobe_at({"crashed": 4.1, "new_crashed": 0.5}))
+    assert probed == {"names": {"crashed", "new_crashed"},
+                      "sink": "collect"}
+    assert r["failed_recorded"] == ["crashed", "new_crashed"]
+    assert not r["failed"] and not r["confirmed"]
+
+    r2 = bench_gate.evaluate(
+        a, b, reprobe=reprobe_at({"crashed": -1.0, "new_crashed": -1.0}))
+    assert r2["failed"] == ["crashed", "new_crashed"]
+    assert not r2["confirmed"]
+
+    r3 = bench_gate.evaluate(
+        a, b, reprobe=reprobe_at({"crashed": 12.5, "new_crashed": 90.0}))
+    assert not r3["failed"]
+    assert r3["confirmed"] == {"crashed": (4.0, 12.5)}
+
+
+def test_bench_gate_cli_fails_on_fresh_crash(tmp_path, capsys):
+    # the ledger CLI must not print GREEN and exit 0 for a pair whose
+    # current side crashed when the crash reproduces fresh; the CLI's
+    # re-probe cache (OUT.reprobe) stands in for the fresh run
+    import json
+
+    bench_gate = _bench_gate_mod()
+
+    def ledger(path, queries):
+        path.write_text(json.dumps({
+            "sink_mode": "noop", "queries": queries,
+            "flagship_synth_sec": 0.7}))
+        return path
+
+    a = ledger(tmp_path / "prev.json", {"q": 1.0, "crashed": 2.0})
+    b = ledger(tmp_path / "cur.json", {"q": 1.0, "crashed": -1.0})
+    out = tmp_path / "gate.json"
+
+    def run_cli(wall):
+        out.with_name(out.name + ".reprobe").write_text(json.dumps({
+            "prev_md5": bench_gate._md5(a), "cur_md5": bench_gate._md5(b),
+            "isolated": {"crashed": wall}}))
+        rc = bench_gate.main([str(a), str(b), "--out", str(out)])
+        capsys.readouterr()
+        return rc, json.loads(out.read_text())["verdict"]
+
+    assert run_cli(-1.0) == (1, "CONFIRMED_FAILURE")
+    assert run_cli(2.1) == (0, "GREEN")
 
 
 def test_bench_gate_parse_anchoring(tmp_path):

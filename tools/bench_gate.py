@@ -35,6 +35,16 @@ worst movers whenever the cap binds; artifact parsing is anchored to the
 queries object so a tail artifact can't admit phantom entries; and a
 query that crashed on SOME re-probe rep (bench.py's ``flaky`` list) is
 treated as CONFIRMED, not silently green.
+
+A crash the current artifact RECORDS (a ``-1`` wall) is a record of the
+program that produced the artifact, which may no longer exist, so it is
+judged like a recorded slowdown: re-probed fresh against the current
+tree in the same cached, pinned run.  It fails (``failed``) only if the
+fresh re-probe is ``-1.0`` (a crash, a crash on some rep, or a name gone
+from the registry), is ``confirmed`` if it runs but exceeds the raw bar
+against its previous wall, and clears otherwise.  A name with no
+previous wall is judged on the crash alone.  The raw recorded list
+stays in the report as ``failed_recorded``.
 """
 
 from __future__ import annotations
@@ -180,9 +190,9 @@ def run_reprobe(prev_art: pathlib.Path, cur_art: pathlib.Path,
                 sf_dir: str = "/root/testdata/sf0.1",
                 cache_path: pathlib.Path | None = None,
                 timeout: int = 1800) -> dict:
-    """Measure the flagged names in a FRESH interpreter/JVM via
-    bench.py's ``SPARK_GRAFT_BENCH_ONLY``, write the cache artifact,
-    return it.  The protocol is PINNED to the artifact pair's, not the
+    """Measure the flagged and recorded-crashed names in a FRESH
+    interpreter/JVM via bench.py's ``SPARK_GRAFT_BENCH_ONLY``, write
+    the cache artifact, return it.  The protocol is PINNED to the artifact pair's, not the
     ambient environment (round-13 review): sink = the artifacts' own
     sink mode (evaluate already guaranteed both sides match; None — a
     pre-r6 truncated pair — replays the driver default, collect), tier
@@ -234,7 +244,8 @@ def run_reprobe(prev_art: pathlib.Path, cur_art: pathlib.Path,
         "what": ("fresh-session isolated re-probe of bench-gate flagged "
                  "names (VERDICT r12 item 1): names that exceed the "
                  "weather-normalized bar between the two driver "
-                 "artifacts are re-measured in an idle fresh JVM and "
+                 "artifacts, and names the current artifact recorded "
+                 "as crashed, are re-measured in an idle fresh JVM and "
                  "judged against the RAW bars; cache is keyed on the "
                  "artifact bytes so a new driver round invalidates it"),
         "prev_art": prev_art.name,
@@ -262,13 +273,19 @@ def evaluate(prev_art: pathlib.Path, cur_art: pathlib.Path,
              reprobe=run_reprobe,
              cache_path: pathlib.Path | None = None) -> dict:
     """Full gate: returns a report dict; ``confirmed`` non-empty means
-    a REAL (isolated-confirmed) regression.  ``reprobe`` is injectable
-    for unit tests."""
+    a REAL (isolated-confirmed) regression, ``failed`` non-empty a
+    query that still crashes fresh.  Flagged names (past the weather-
+    normalized bar), sentinels (median past the cap) and recorded
+    crashes (``failed_recorded``: a ``-1`` wall in the current
+    artifact) are all re-probed fresh in one run; a recorded crash
+    lands in ``failed`` if it re-probes to ``-1.0``, in ``confirmed``
+    if it runs past the raw bar against its previous wall, and clears
+    otherwise.  ``reprobe`` is injectable for unit tests."""
     prev_sink, prev, f_prev, _ = parse_artifact(prev_art)
     cur_sink, cur, f_cur, cur_flaky = parse_artifact(cur_art)
     report: dict = {"sink": (prev_sink, cur_sink), "confirmed": {},
                     "flagged": {}, "median": None, "skip": None,
-                    "flaky": list(cur_flaky)}
+                    "flaky": list(cur_flaky), "failed": []}
     # collect-sink vs noop-sink rounds are not comparable; when exactly
     # one side is unrecoverable, skip rather than guess (ADVICE r5)
     if (prev_sink is None) != (cur_sink is None):
@@ -295,15 +312,24 @@ def evaluate(prev_art: pathlib.Path, cur_art: pathlib.Path,
     report["sentinels"] = dict(sentinels)
     fs_flag = flagship_flagged(f_prev, f_cur, med)
     report["flagship_flagged"] = fs_flag
-    report["failed"] = [n for n, t in cur.items() if t < 0]
+    # a recorded crash is a record of the program that wrote the
+    # artifact, not of this tree: it joins the fresh re-probe set
+    recorded = [n for n, t in cur.items() if t < 0]
+    report["failed_recorded"] = recorded
     probe_prev = {**{n: t[0] for n, t in sentinels.items()},
                   **{n: t[0] for n, t in flagged.items()}}
-    need = set(probe_prev) | ({FLAGSHIP_KEY} if fs_flag else set())
+    need = (set(probe_prev) | set(recorded)
+            | ({FLAGSHIP_KEY} if fs_flag else set()))
     if not need:
         return report
     cache = cached_reprobe(prev_art, cur_art, need, cache_path) or reprobe(
         prev_art, cur_art, need, sink=cur_sink)
     iso = cache["isolated"]
+    # a recorded crash fails only if it crashes fresh; one that runs is
+    # held to the raw bar against its previous wall, when it has one
+    report["failed"] = [n for n in recorded if iso[n] < 0]
+    probe_prev.update({n: prev[n] for n in recorded
+                       if iso[n] >= 0 and prev.get(n, -1.0) > 0})
     # a flagged name whose isolated re-probe FAILED (-1.0: the query
     # crashed fresh, crashed on SOME rep, or was renamed out of the
     # registry) must CONFIRM, not silently clear (round-13 review) —
@@ -328,9 +354,10 @@ def evaluate(prev_art: pathlib.Path, cur_art: pathlib.Path,
 def main(argv: list[str]) -> int:
     """CLI for the per-tier ledger gate (VERDICT r13 item 1): compare
     two committed builder ledgers (full bench.py JSON), re-probe any
-    flagged/sentinel name fresh at the LEDGER's own tier, and write the
-    verdict artifact — so in-battery mover families are attributed in
-    the same round that produced them.
+    flagged/sentinel/recorded-crashed name fresh at the LEDGER's own
+    tier, and write the verdict artifact — so in-battery mover families
+    are attributed in the same round that produced them.  A recorded
+    crash that crashes fresh too is ``CONFIRMED_FAILURE`` and exits 1.
 
         python tools/bench_gate.py PREV.json CUR.json \\
             --sf-dir /root/repo/.localdata/sf1 \\
@@ -357,6 +384,7 @@ def main(argv: list[str]) -> int:
     report["sf_dir"] = args.sf_dir
     report["verdict"] = (
         "SKIP" if report["skip"]
+        else "CONFIRMED_FAILURE" if report["failed"]
         else "CONFIRMED_REGRESSION" if report["confirmed"]
         else "WEATHER_ATTRIBUTED" if (report["flagged"]
                                       or report.get("sentinels"))
@@ -365,7 +393,7 @@ def main(argv: list[str]) -> int:
     if args.out:
         args.out.write_text(text + "\n")
     print(text)
-    return 1 if report["confirmed"] else 0
+    return 1 if report["failed"] or report["confirmed"] else 0
 
 
 if __name__ == "__main__":
