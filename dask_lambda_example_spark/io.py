@@ -47,7 +47,7 @@ PARALLEL_MIN_PAIRS = 100_000
 # (parquet TIMESTAMP(NANOS) → PARQUET_TYPE_ILLEGAL without nanosAsLong)
 # and timestamp semantics drift without a pinned UTC session timezone.
 # All four are dynamic SQLConf entries, so we set them defensively at
-# query entry instead of relying on the builder.
+# query entry as well as in session.get_spark's builder.
 _PORTABLE_CONFS = {
     # events.ts is parquet TIMESTAMP(NANOS); Spark has no nanosecond
     # timestamp type — scan as long, convert in load_table (ns → µs
@@ -56,8 +56,13 @@ _PORTABLE_CONFS = {
     # the reference computes in naive UTC throughout
     # (layer/python/dask_processing.py:29); DuckDB compares in UTC.
     "spark.sql.session.timeZone": "UTC",
-    # InferFiltersFromGenerate re-evaluates expensive generator inputs
-    # (measured 7-10× on shingle/explode pipelines — see session.py).
+    # InferFiltersFromGenerate duplicates the generator expression into
+    # an inferred Filter that predicate-pushdown then sinks below the
+    # defining Project, re-expanding aliases — for our shingle/explode
+    # pipelines that re-evaluates an expensive array transform several
+    # times per row (measured 7-10× on the Jaccard/MinHash
+    # inverted-index joins). Our explode inputs are never
+    # null/empty-heavy, so the rule only costs.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     # full PushedFilters/ReadSchema in plan strings for plan-contract

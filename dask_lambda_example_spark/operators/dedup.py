@@ -1292,15 +1292,11 @@ def _fuzzy_blocked_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured on this frame, so they are EXACTLY the blocking the
     registered query executes (df cap included), not a re-derivation
     that could drift."""
-    import os
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 3), " ")
          .alias("title"),
         F.element_at(F.split(F.col("text"), " "), 1).alias("blk"))
-    if os.environ.get("SPARK_GRAFT_FUZZY_SHALLOW_BLOCK"):
-        return d.withColumn("mh", F.lit(0).cast("long"))
     t = d.withColumn("ttail",
                      F.expr("substring(title, length(blk) + 2)"))
     g = t.select(
@@ -1361,10 +1357,6 @@ def dedup_fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-join discipline — approximation checked, not hand-waved);
     more recall = more bands (additional min-k grams), the standard
     LSH dial.
-
-    ``SPARK_GRAFT_FUZZY_SHALLOW_BLOCK=1`` (measurement-only) restores
-    the round-9 first-token-only key so the Zipf straggler can be
-    timed against the composite fix; it is never the default.
     """
     d = _fuzzy_blocked_frame(spark, sf_dir)
     a, b = d.alias("a"), d.alias("b")

@@ -186,21 +186,14 @@ _CRAWL_PR_PRELUDE = """
 
 def _crawl_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DIRECTED crawl link graph's edge list (lazy — the caller owns
-    materialization): WARC bytes → streaming HTML anchor census (the
-    registered ``text_html_outlinks``) → document namespace filter +
-    target parse → semi-join closure over the crawled corpus (a target
+    materialization): the document links of the HTML crawl
+    (``warc.crawl_links``) semi-joined over the crawled corpus (a target
     that was never fetched has no page to rank)."""
-    from dask_lambda_example_spark.sources.warc import text_html_outlinks
+    from dask_lambda_example_spark.sources.warc import crawl_links
 
     docs = load_table(spark, sf_dir, "documents")
-    links = text_html_outlinks(spark, sf_dir)
-    return (
-        links.filter(F.col("href").startswith("/doc/"))
-        .select(F.col("doc_id").alias("src"),
-                F.substring_index(F.col("href"), "/", -1)
-                 .cast("long").alias("dst"))
-        .join(docs.select(F.col("doc_id").alias("dst")), "dst", "left_semi")
-    )
+    return crawl_links(spark, sf_dir).join(
+        docs.select(F.col("doc_id").alias("dst")), "dst", "left_semi")
 
 
 # Above this many nodes the rank/degree vectors stop being broadcast

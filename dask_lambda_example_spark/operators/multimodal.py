@@ -14,7 +14,9 @@ Spark-side design (all real and tested):
   and ``_per_object`` maps a module-level pure function
   ``fn(doc_id, raw)`` over such a frame. Each media query is a call of
   the two; the dedup fingerprints (``dedup.png_phash``,
-  ``wav_fingerprint``, ``mjpeg_fingerprint``) ride the same helpers.
+  ``wav_fingerprint``, ``mjpeg_fingerprint``) ride the same helpers,
+  and ``sources/warc.py`` reads its crawl and tar archives with
+  ``_per_object``.
 
 Decode status by modality:
 - **audio: REAL.** ``mm_decode_wav_audio`` parses genuine RIFF/WAVE PCM
@@ -96,10 +98,11 @@ def _media_objects(spark: SparkSession, sf_dir: str, every: int,
 def _per_object(objs: DataFrame,
                 fn: Callable[[int, bytes], Iterable[tuple]],
                 schema: str) -> DataFrame:
-    """One Arrow-batched ``mapInPandas`` pass over a ``(doc_id,
-    <binary>)`` frame: ``fn(doc_id, raw)`` yields zero or more row
-    tuples in the order of ``schema``, a flat DDL string. The object
-    bytes enter Python once; only the typed rows leave the pass."""
+    """One Arrow-batched ``mapInPandas`` pass over an ``(id, <binary>)``
+    frame (a media file's ``doc_id`` or an archive's ``archive_id``):
+    ``fn(id, raw)`` yields zero or more row tuples in the order of
+    ``schema``, a flat DDL string. The object bytes enter Python once;
+    only the typed rows leave the pass."""
     doc, col = objs.columns
     names = [field.split()[0] for field in schema.split(",")]
 

@@ -8,10 +8,10 @@ cost is the #1 fixed overhead at any scale (BASELINE.md).
 
 Scale posture (100 TB): every knob here is chosen so the same code runs
 unchanged on a real cluster — AQE for runtime re-planning (coalesce +
-skew-join splitting), UTC session timezone (the reference uses naive UTC
-throughout, ``layer/python/dask_processing.py:29``), Arrow for any
-pandas exchange, and shuffle partitions sized to cores locally but
-expected to be overridden (or AQE-coalesced) on a cluster.
+skew-join splitting), the confs of ``io._PORTABLE_CONFS`` (a UTC session
+timezone among them), Arrow for any pandas exchange, and shuffle
+partitions sized to cores locally but expected to be overridden (or
+AQE-coalesced) on a cluster.
 """
 
 from __future__ import annotations
@@ -21,6 +21,8 @@ import re
 import tempfile
 
 from pyspark.sql import SparkSession
+
+from dask_lambda_example_spark.io import _PORTABLE_CONFS
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -173,26 +175,9 @@ def get_spark(app_name: str = "dask_lambda_example_spark",
         # the tiny exchanges cost in scheduling. BENCH_ab artifact in
         # OPTIMIZATION_r14.md; keep parallelism-first.)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # events.ts is parquet TIMESTAMP(NANOS); Spark has no ns timestamp —
-        # read as long and convert in io.load_table (ns → µs truncation,
-        # matching DuckDB's behavior on the same file).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # InferFiltersFromGenerate duplicates the generator expression
-        # into an inferred Filter that predicate-pushdown then sinks
-        # below the defining Project, re-expanding aliases — for our
-        # shingle/explode pipelines that re-evaluates an expensive
-        # array transform several times per row (measured 7-10× on the
-        # Jaccard/MinHash inverted-index joins). Our explode inputs are
-        # never null/empty-heavy, so the rule only costs.
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
         .config("spark.ui.enabled", "false")
-        # full PushedFilters/ReadSchema in plan strings (default 100
-        # chars truncates them) — the plan-contract tests parse these
-        .config("spark.sql.maxMetadataStringLength", "2000")
         # fixed writable warehouse for bucketed saveAsTable regardless
         # of the driver's cwd — on the fast scratch medium (bucketed
         # writes + read-backs are measured query paths)
@@ -201,6 +186,10 @@ def get_spark(app_name: str = "dask_lambda_example_spark",
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
     )
+    # the confs every query needs in any session (io._PORTABLE_CONFS
+    # says why each is set)
+    for k, v in _PORTABLE_CONFS.items():
+        builder = builder.config(k, v)
     if not os.environ.get("SPARK_GRAFT_REMOTE"):
         # Local test/bench mode: single JVM. Driver heap is 16g, NOT
         # "all the machine's memory" (round-10 measurement): with a 90g

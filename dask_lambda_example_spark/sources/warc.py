@@ -28,18 +28,23 @@ What is REAL here (and unit-tested as such, ISO 28500 / WARC 1.0):
   ``Content-Length``, a length that disagrees with the record
   terminator, or gzip trailing garbage each raise ``ValueError``.
 
-Scale posture: archives are built per ``file_id`` group (one WARC per
-~WARC_DOCS_PER_FILE documents — one shuffle, the unavoidable cost of
-the WRITE side's file grouping) and parsed back in a shuffle-free
-``mapInPandas`` pass; at 100 TB the read path is the one that matters
-and it is embarrassingly parallel per archive file, bytes never
-shuffling — identical posture to Spark's own binaryFile + per-file
-decode pattern.
+Scale posture: every archive query is two passes. ``_archives``
+groups documents into archives of at most ``DOCS_PER_ARCHIVE`` each in
+one ``applyInPandas`` pass (one shuffle, the unavoidable cost of the
+WRITE side's file grouping), and ``multimodal._per_object`` reads them
+back in one shuffle-free ``mapInPandas`` pass with a module-level pure
+function per archive (``warc_scan_rows``, ``html_extract_rows``,
+``outlink_rows``, ``tar_member_rows``). At 100 TB the read path is the
+one that matters and it is embarrassingly parallel per archive file,
+bytes never shuffling (``tests/test_plans.py`` checks this) — the same
+posture as Spark's own binaryFile + per-file decode pattern.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import hashlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -47,9 +52,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.operators.multimodal import _per_object
 from dask_lambda_example_spark.registry import query
 
-WARC_DOCS_PER_FILE = 100       # documents per synthetic archive
+DOCS_PER_ARCHIVE = 100         # documents per synthetic archive (WARC or tar)
 WARC_DATE = "2026-01-01T00:00:00Z"
 
 
@@ -201,6 +207,45 @@ def parse_warc_gz(raw: bytes) -> list[dict]:
     return records
 
 
+def _archives(docs: DataFrame,
+              make: Callable[[list[int], list[str]], bytes],
+              col: str, by: tuple[str, ...] = ()) -> DataFrame:
+    """``(archive_id long, <col> binary)``: one ``applyInPandas`` pass
+    groups the ``(doc_id, text[, by…])`` rows of ``docs`` by ``(*by,
+    doc_id div DOCS_PER_ARCHIVE)`` and builds each group's archive with
+    ``make(sorted_ids, texts)``. ``archive_id`` is the group's smallest
+    ``doc_id``. The ``doc_id`` bucket bounds every archive at
+    ``DOCS_PER_ARCHIVE`` documents however a ``by`` key is skewed, so
+    the write-side shuffle has no hot group."""
+    # Single-parameter signature is REQUIRED: applyInPandas dispatches
+    # on arity, and a second (even defaulted) parameter flips it into
+    # the (key, pdf) calling convention.
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("doc_id")
+        ids = [int(i) for i in pdf["doc_id"]]
+        return pd.DataFrame({"archive_id": [ids[0]],
+                             col: [make(ids, list(pdf["text"]))]})
+
+    return (docs.groupBy(*by, F.expr(f"doc_id div {DOCS_PER_ARCHIVE}"))
+                .applyInPandas(build, f"archive_id long, {col} binary"))
+
+
+def _responses(raw: bytes) -> Iterator[tuple[int, dict]]:
+    """(doc_id, record) per 'response' record of one ``.warc.gz``
+    archive; the id is the last path segment of the target URI."""
+    for rec in parse_warc_gz(raw):
+        if rec["warc_type"] == "response":
+            yield int(rec["target_uri"].rsplit("/", 1)[1]), rec
+
+
+def warc_scan_rows(archive_id: int, raw: bytes) -> Iterator[tuple]:
+    """(doc_id, uri, http_status, n_payload_bytes, payload_md5) per
+    response record of one archive."""
+    for doc_id, rec in _responses(raw):
+        yield (doc_id, rec["target_uri"], rec["http_status"],
+               len(rec["payload"]), hashlib.md5(rec["payload"]).hexdigest())
+
+
 # Shared read-side contract of BOTH WARC queries (the archive grouping
 # key never leaks into the output, so the oracle is grouping-independent
 # and one copy serves both @query registrations — review r9).
@@ -219,121 +264,43 @@ _WARC_SCAN_SCHEMA = ("doc_id long, uri string, http_status int, "
 
 @query("src_warc_scan", oracle=_WARC_SCAN_ORACLE)
 def src_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-archive ingestion end to end: stage 1 groups documents
-    into per-``file_id`` genuine ``.warc.gz`` archives (warcinfo +
+    """Crawl-archive ingestion end to end: ``_archives`` groups
+    documents into genuine ``.warc.gz`` archives (warcinfo +
     one-gzip-member-per-record framing, Content-Length record framing,
     inner HTTP blocks whose bodies EMBED a blank line — see
-    ``make_warc_gz_bytes``); stage 2 parses every archive back with
-    ``parse_warc_gz`` and emits per-document URI, HTTP status, payload
-    length and payload MD5, which the oracle recomputes from the
-    original ``documents`` rows. A value-hash match proves the full
-    gzip-member walk + length-framed record parse + HTTP split
-    preserved every byte.
-
-    Scale: the build side shuffles once on ``file_id`` (the write
-    side's file grouping, as any archive writer must); the parse side
-    is a shuffle-free ``mapInPandas`` over archive bytes — per-file
-    parallel at 100 TB, the same read posture as binaryFile+decode."""
-    d = (load_table(spark, sf_dir, "documents")
-         .select("doc_id", "text")
-         .withColumn("file_id",
-                     (F.col("doc_id") / WARC_DOCS_PER_FILE).cast("long")))
-
-    # Single-parameter signature is REQUIRED: applyInPandas dispatches on
-    # arity, and a second (even defaulted) parameter flips it into the
-    # (key, pdf) calling convention.
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        from dask_lambda_example_spark.sources.warc import (
-            make_warc_gz_bytes as _mk,
-        )
-
-        pdf = pdf.sort_values("doc_id")
-        return pd.DataFrame({
-            "file_id": [int(pdf["file_id"].iloc[0])],
-            "warc": [_mk([int(i) for i in pdf["doc_id"]],
-                         list(pdf["text"]))],
-        })
-
-    archives = (d.groupBy("file_id")
-                 .applyInPandas(build, "file_id long, warc binary"))
-
-    return archives.mapInPandas(_scan_warc_archives, _WARC_SCAN_SCHEMA)
-
-
-def _scan_warc_archives(batches: Iterator[pd.DataFrame]
-                        ) -> Iterator[pd.DataFrame]:
-    """Shared read side of both WARC queries: walk each archive's gzip
-    members and emit per-document URI / status / payload length / MD5.
-    Module-level so it pickles by reference (code shipping, A13)."""
-    import hashlib
-
-    for pdf in batches:
-        rows = {k: [] for k in ("doc_id", "uri", "http_status",
-                                "n_payload_bytes", "payload_md5")}
-        for raw in pdf["warc"]:
-            for rec in parse_warc_gz(bytes(raw)):
-                if rec["warc_type"] != "response":
-                    continue
-                uri = rec["target_uri"]
-                rows["doc_id"].append(int(uri.rsplit("/", 1)[1]))
-                rows["uri"].append(uri)
-                rows["http_status"].append(rec["http_status"])
-                rows["n_payload_bytes"].append(len(rec["payload"]))
-                rows["payload_md5"].append(
-                    hashlib.md5(rec["payload"]).hexdigest())
-        yield pd.DataFrame(rows)
+    ``make_warc_gz_bytes``); ``warc_scan_rows`` parses every archive
+    back with ``parse_warc_gz`` and emits per-document URI, HTTP
+    status, payload length and payload MD5, which the oracle recomputes
+    from the original ``documents`` rows. A value-hash match proves the
+    full gzip-member walk + length-framed record parse + HTTP split
+    preserved every byte."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _per_object(_archives(docs, make_warc_gz_bytes, "warc"),
+                       warc_scan_rows, _WARC_SCAN_SCHEMA)
 
 
 @query("src_warc_by_lang_scan", oracle=_WARC_SCAN_ORACLE)
 def src_warc_by_lang_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC build/scan with a DATA-DRIVEN archive key — one corpus of
     archives per ``lang``, the way real crawl exports shard by domain
-    or language. The naive form (``groupBy("lang")``) is the realistic
-    write-side straggler: on the Zipf tier 82 % of all documents land
-    in ONE applyInPandas group, i.e. one Python worker builds one giant
-    archive while 31 idle. The fix is by CONSTRUCTION, not AQE: the
-    grouping key is ``(lang, bucket)`` where ``bucket = doc_id div
-    WARC_DOCS_PER_FILE``, so every archive is bounded at
-    ``WARC_DOCS_PER_FILE`` members no matter how hot the language —
-    exactly what production archive writers do by capping archive size
-    (Common Crawl caps WARC files ~1 GB). Bounded groups mean the
-    write-side shuffle has NO hot key at any skew, and AQE's skew
-    handling (which cannot split an applyInPandas group) is never
+    or language. The naive form (one archive group per ``lang``) is the
+    realistic write-side straggler: on the Zipf tier 82 % of all
+    documents land in ONE applyInPandas group, i.e. one Python worker
+    builds one giant archive while 31 idle (SCALE.md's ingest-skew
+    battery measured it). ``_archives(..., by=("lang",))`` keys each
+    archive by ``(lang, doc_id div DOCS_PER_ARCHIVE)`` instead, so every
+    archive is bounded at ``DOCS_PER_ARCHIVE`` members no matter how hot
+    the language — exactly what production archive writers do by
+    capping archive size (Common Crawl caps WARC files ~1 GB), and AQE's
+    skew handling (which cannot split an applyInPandas group) is never
     needed. The scan side and output schema are identical to
     ``src_warc_scan`` — the oracle is grouping-independent because
-    every document lands in exactly one archive.
-
-    ``SPARK_GRAFT_WARC_LANG_UNBOUNDED=1`` (measurement-only) restores
-    the naive one-group-per-lang form so the straggler can be timed
-    against the bounded fix on the skew tiers; it is never the default.
-    """
-    import os
-
-    d = load_table(spark, sf_dir, "documents").select(
+    every document lands in exactly one archive."""
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang")
-    if os.environ.get("SPARK_GRAFT_WARC_LANG_UNBOUNDED"):
-        d = d.withColumn("bucket", F.lit(0).cast("long"))
-    else:
-        d = d.withColumn(
-            "bucket", (F.col("doc_id") / WARC_DOCS_PER_FILE).cast("long"))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        from dask_lambda_example_spark.sources.warc import (
-            make_warc_gz_bytes as _mk,
-        )
-
-        pdf = pdf.sort_values("doc_id")
-        return pd.DataFrame({
-            "lang": [str(pdf["lang"].iloc[0])],
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "warc": [_mk([int(i) for i in pdf["doc_id"]],
-                         list(pdf["text"]))],
-        })
-
-    archives = (d.groupBy("lang", "bucket")
-                 .applyInPandas(build, "lang string, bucket long, "
-                                       "warc binary"))
-    return archives.mapInPandas(_scan_warc_archives, _WARC_SCAN_SCHEMA)
+    return _per_object(
+        _archives(docs, make_warc_gz_bytes, "warc", by=("lang",)),
+        warc_scan_rows, _WARC_SCAN_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -465,56 +432,23 @@ def extract_main_text(html_bytes: bytes) -> tuple[str, str, int]:
 
 
 def _html_warc_archives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → per-``file_id`` ``.warc.gz`` archives whose HTTP
-    payloads are the deterministic HTML pages (the crawl-corpus build
-    side both HTML queries share)."""
-    d = (load_table(spark, sf_dir, "documents")
-         .select("doc_id", "text")
-         .withColumn("file_id",
-                     (F.col("doc_id") / WARC_DOCS_PER_FILE).cast("long")))
-
-    # single-parameter signature (applyInPandas arity dispatch — see
-    # the src_warc_scan note)
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        from dask_lambda_example_spark.sources.warc import (
-            make_warc_gz_bytes as _mk,
-        )
-
-        pdf = pdf.sort_values("doc_id")
-        return pd.DataFrame({
-            "file_id": [int(pdf["file_id"].iloc[0])],
-            "warc": [_mk([int(i) for i in pdf["doc_id"]],
-                         list(pdf["text"]), html=True)],
-        })
-
-    return d.groupBy("file_id").applyInPandas(
-        build, "file_id long, warc binary")
+    """The crawl-corpus archives both HTML queries read: ``_archives``
+    whose HTTP payloads are the deterministic HTML pages."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _archives(
+        docs, functools.partial(make_warc_gz_bytes, html=True), "warc")
 
 
 _HTML_EXTRACT_SCHEMA = ("doc_id long, title string, main_text string, "
                         "link_count int")
 
 
-def _extract_html_archives(batches: Iterator[pd.DataFrame]
-                           ) -> Iterator[pd.DataFrame]:
-    """Shared read side of the HTML queries: WARC member walk → inner
-    HTTP parse → HTML main-text extraction, one output row per
-    response record. Module-level so it pickles by reference."""
-    for pdf in batches:
-        rows = {k: [] for k in ("doc_id", "title", "main_text",
-                                "link_count")}
-        for raw in pdf["warc"]:
-            for rec in parse_warc_gz(bytes(raw)):
-                if rec["warc_type"] != "response":
-                    continue
-                title, main_text, n_links = extract_main_text(
-                    rec["payload"])
-                rows["doc_id"].append(
-                    int(rec["target_uri"].rsplit("/", 1)[1]))
-                rows["title"].append(title)
-                rows["main_text"].append(main_text)
-                rows["link_count"].append(n_links)
-        yield pd.DataFrame(rows)
+def html_extract_rows(archive_id: int, raw: bytes) -> Iterator[tuple]:
+    """(doc_id, title, main_text, link_count) per response record of
+    one HTML archive: WARC member walk → inner HTTP parse → HTML
+    main-text extraction."""
+    for doc_id, rec in _responses(raw):
+        yield (doc_id, *extract_main_text(rec["payload"]))
 
 
 # What extraction must recover, stated analytically from the original
@@ -543,8 +477,8 @@ _HTML_EXTRACT_ORACLE = """
 
 @query("text_html_extract", oracle=_HTML_EXTRACT_ORACLE)
 def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl → corpus, the missing middle step: build per-``file_id``
-    ``.warc.gz`` archives whose HTTP payloads are full deterministic
+    """Crawl → corpus, the missing middle step: build ``.warc.gz``
+    archives (``_archives``) whose HTTP payloads are full deterministic
     HTML pages (head/title, script+style+nav+footer boilerplate, two
     content paragraphs, reference links, entity-encoded text, an HTML
     comment — ``make_html_page``), then parse every archive back
@@ -559,14 +493,14 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     undecoded ``&amp;`` breaks the hash).
 
     Scale posture: identical to ``src_warc_scan`` — one write-side
-    shuffle groups documents into archives, the read side is a
-    shuffle-free per-archive ``mapInPandas`` (bytes never shuffle,
-    per-file parallel at 100 TB). HTML parsing is per-payload Python
-    by design (the codec-op exemption: the parse IS the operator);
-    the downstream text operators consume ``main_text`` exactly as
-    they consume ``documents.text``."""
-    return _html_warc_archives(spark, sf_dir).mapInPandas(
-        _extract_html_archives, _HTML_EXTRACT_SCHEMA)
+    shuffle groups documents into archives, the read side is one
+    shuffle-free ``_per_object`` pass (bytes never shuffle, per-file
+    parallel at 100 TB). HTML parsing is per-payload Python by design
+    (the codec-op exemption: the parse IS the operator); the
+    downstream text operators consume ``main_text`` exactly as they
+    consume ``documents.text``."""
+    return _per_object(_html_warc_archives(spark, sf_dir),
+                       html_extract_rows, _HTML_EXTRACT_SCHEMA)
 
 
 # crawl-funnel gates (pure functions of the extracted columns so the
@@ -645,24 +579,14 @@ def pipeline_crawl_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_tokens").alias("n_tokens")))
 
 
-def _outlink_archives_scan(batches: Iterator[pd.DataFrame]
-                           ) -> Iterator[pd.DataFrame]:
-    """(doc_id, href) per anchor, document order — the link-graph read
-    side over the same HTML archives. Module-level so it pickles by
-    reference."""
-    for pdf in batches:
-        rows = {"doc_id": [], "href": []}
-        for raw in pdf["warc"]:
-            for rec in parse_warc_gz(bytes(raw)):
-                if rec["warc_type"] != "response":
-                    continue
-                ex = _MainTextExtractor()
-                ex.feed(rec["payload"].decode("utf-8"))
-                doc_id = int(rec["target_uri"].rsplit("/", 1)[1])
-                for href in ex.hrefs:
-                    rows["doc_id"].append(doc_id)
-                    rows["href"].append(href)
-        yield pd.DataFrame(rows)
+def outlink_rows(archive_id: int, raw: bytes) -> Iterator[tuple]:
+    """(doc_id, href) per ``<a href>`` anchor of one HTML archive, in
+    document order."""
+    for doc_id, rec in _responses(raw):
+        ex = _MainTextExtractor()
+        ex.feed(rec["payload"].decode("utf-8"))
+        for href in ex.hrefs:
+            yield doc_id, href
 
 
 # per-page link inventory, stated analytically: 3 nav paths, the
@@ -693,10 +617,22 @@ def text_html_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     baked into ``make_html_page``), so the output is a genuine crawl
     link graph; the oracle restates the full per-page inventory
     analytically. Same scale posture as every archive scan: one
-    write-side grouping shuffle, shuffle-free per-archive
-    ``mapInPandas`` read, bytes never shuffle."""
-    return _html_warc_archives(spark, sf_dir).mapInPandas(
-        _outlink_archives_scan, "doc_id long, href string")
+    write-side grouping shuffle, one shuffle-free ``_per_object`` read,
+    bytes never shuffle."""
+    return _per_object(_html_warc_archives(spark, sf_dir), outlink_rows,
+                       "doc_id long, href string")
+
+
+def crawl_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(src, dst)`` per document link of the HTML crawl: the anchors
+    of ``text_html_outlinks`` in the ``/doc/`` namespace (boilerplate
+    nav/footer paths are not graph edges), target id parsed from the
+    href. Targets that were never crawled are kept."""
+    return (text_html_outlinks(spark, sf_dir)
+            .filter(F.col("href").startswith("/doc/"))
+            .select(F.col("doc_id").alias("src"),
+                    F.substring_index(F.col("href"), "/", -1)
+                     .cast("long").alias("dst")))
 
 
 _INDEGREE_ORACLE = """
@@ -713,11 +649,10 @@ _INDEGREE_ORACLE = """
 def graph_crawl_indegree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl link-graph in-degree — the first aggregate every crawl
     pipeline computes over its extracted edges (the input to spam
-    heuristics and PageRank seeding). Consumes the REGISTERED
-    ``text_html_outlinks`` as a function: document links only (the
-    ``/doc/`` namespace — boilerplate nav/footer paths are not graph
-    edges), target parsed from the href, one count shuffle keyed by
-    target. The oracle derives the same multiset of targets
+    heuristics and PageRank seeding). Counts the ``crawl_links`` edges
+    (the REGISTERED ``text_html_outlinks`` called as a function,
+    ``/doc/`` namespace only, target parsed from the href) in one count
+    shuffle keyed by target. The oracle derives the same multiset of targets
     analytically from the ⊕-neighbor construction, so extraction,
     namespace filter, parse and count are value-checked end-to-end.
     Scale: in-degree of a link graph is the textbook skewed
@@ -725,16 +660,9 @@ def graph_crawl_indegree(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that absorbs hot targets; dangling targets (links to
     never-crawled ids) appear with their in-degree exactly as a real
     link table keeps them."""
-    links = text_html_outlinks(spark, sf_dir)
-    return (links
-            .filter(F.col("href").startswith("/doc/"))
-            .select(F.substring_index(F.col("href"), "/", -1)
-                     .cast("long").alias("target_doc"))
-            .groupBy("target_doc")
+    return (crawl_links(spark, sf_dir)
+            .groupBy(F.col("dst").alias("target_doc"))
             .agg(F.count("*").alias("indegree")))
-
-
-TAR_DOCS_PER_FILE = 100        # documents per synthetic tarball
 
 
 def make_tar_bytes(doc_ids: list[int], texts: list[str]) -> bytes:
@@ -769,58 +697,28 @@ def make_tar_bytes(doc_ids: list[int], texts: list[str]) -> bytes:
 def src_tar_archive_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tar-archive ingestion (the other container corpora ship as —
     uncompressed tar specifically, because it supports random access to
-    members, unlike .tar.gz which must inflate from the front): stage 1
-    groups documents into genuine POSIX tarballs; stage 2 walks every
-    member with stdlib ``tarfile`` and emits name/size/MD5 per member,
-    value-checked against the original rows. Same two-pass shape and
-    scale posture as ``src_warc_scan``: one write-side shuffle on
-    ``file_id``, then a shuffle-free per-archive mapInPandas parse."""
-    d = (load_table(spark, sf_dir, "documents")
-         .select("doc_id", "text")
-         .withColumn("file_id",
-                     (F.col("doc_id") / TAR_DOCS_PER_FILE).cast("long")))
-
-    # Single-parameter signature (applyInPandas dispatches on arity —
-    # see the WARC build note above).
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        from dask_lambda_example_spark.sources.warc import (
-            make_tar_bytes as _mk,
-        )
-
-        pdf = pdf.sort_values("doc_id")
-        return pd.DataFrame({
-            "file_id": [int(pdf["file_id"].iloc[0])],
-            "tar": [_mk([int(i) for i in pdf["doc_id"]],
-                        list(pdf["text"]))],
-        })
-
-    archives = (d.groupBy("file_id")
-                 .applyInPandas(build, "file_id long, tar binary"))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import io
-        import tarfile
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "member_name", "n_bytes",
-                                    "content_md5")}
-            for raw in pdf["tar"]:
-                with tarfile.open(fileobj=io.BytesIO(bytes(raw)),
-                                  mode="r:") as tf:
-                    for info in tf:
-                        data = tf.extractfile(info).read()
-                        if len(data) != info.size:
-                            raise ValueError("tar member size disagrees "
-                                             "with header")
-                        rows["doc_id"].append(
-                            int(info.name[4:-4]))  # doc_<id>.txt
-                        rows["member_name"].append(info.name)
-                        rows["n_bytes"].append(info.size)
-                        rows["content_md5"].append(
-                            hashlib.md5(data).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return archives.mapInPandas(
-        scan,
+    members, unlike .tar.gz which must inflate from the front):
+    ``_archives`` groups documents into genuine POSIX tarballs;
+    ``tar_member_rows`` walks every member with stdlib ``tarfile`` and
+    emits name/size/MD5 per member, value-checked against the original
+    rows. Same two passes and scale posture as ``src_warc_scan``."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _per_object(
+        _archives(docs, make_tar_bytes, "tar"), tar_member_rows,
         "doc_id long, member_name string, n_bytes long, content_md5 string")
+
+
+def tar_member_rows(archive_id: int, raw: bytes) -> Iterator[tuple]:
+    """(doc_id, member_name, n_bytes, content_md5) per member of one
+    tarball; a member whose data disagrees with its header size raises
+    ``ValueError``."""
+    import io
+    import tarfile
+
+    with tarfile.open(fileobj=io.BytesIO(raw), mode="r:") as tf:
+        for info in tf:
+            data = tf.extractfile(info).read()
+            if len(data) != info.size:
+                raise ValueError("tar member size disagrees with header")
+            yield (int(info.name[4:-4]),  # doc_<id>.txt
+                   info.name, info.size, hashlib.md5(data).hexdigest())

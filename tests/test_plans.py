@@ -1062,7 +1062,8 @@ def test_canonical_consumers_are_bucket_min_equijoins(spark, sf_dir):
                    for j in joins), (name, joins)
 
 
-# two-pass media query -> the binary column _media_objects builds
+# two-pass media or archive query -> the binary column _media_objects
+# or warc._archives builds
 _MEDIA_COLUMN = {
     "mm_decode_wav_audio": "wav",
     "mm_decode_png_image": "png",
@@ -1073,15 +1074,22 @@ _MEDIA_COLUMN = {
     "dedup_image_phash_canonical": "png",
     "dedup_audio_fingerprint": "wav",
     "dedup_video_fingerprint": "avi",
+    "src_warc_scan": "warc",
+    "src_warc_by_lang_scan": "warc",
+    "text_html_extract": "warc",
+    "pipeline_crawl_funnel": "warc",
+    "text_html_outlinks": "warc",
+    "graph_crawl_indegree": "warc",
+    "src_tar_archive_scan": "tar",
 }
 
 
 @pytest.mark.parametrize("name", list(_MEDIA_COLUMN))
 def test_media_bytes_never_shuffle(spark, sf_dir, name):
-    # the media files are built and decoded per object, so no Exchange
-    # or BroadcastExchange may carry the media column: only the typed
-    # rows _per_object emits reach a shuffle. (mm_frame_sample is not
-    # listed: it gathers per-frame bytes into clips with a shuffle.)
+    # the media files and archives are built and decoded per object, so
+    # no Exchange or BroadcastExchange may carry their column: only the
+    # typed rows _per_object emits reach a shuffle. (mm_frame_sample is
+    # not listed: it gathers per-frame bytes into clips with a shuffle.)
     import re
 
     col = _MEDIA_COLUMN[name]

@@ -451,7 +451,7 @@ def test_warc_member_walk_is_linear_in_member_count(monkeypatch):
 
 
 def test_fuzzy_composite_block_is_subset_and_splits_hot_token(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path):
     # Round-10 Zipf-proofing: the composite (first token, min-gram)
     # blocking key must (a) return a SUBSET of the first-token-only
     # key's pairs (it only ever narrows candidate generation), (b)
@@ -459,7 +459,13 @@ def test_fuzzy_composite_block_is_subset_and_splits_hot_token(
     # split a hot first-token block: documents sharing the Zipf-hot
     # first token but with unrelated tails must land in DIFFERENT
     # blocks (no candidate pair), which is exactly why the max block no
-    # longer grows with token popularity.
+    # longer grows with token popularity. The first-token-only pairs
+    # are computed here with DuckDB over the same six rows.
+    import duckdb
+
+    from dask_lambda_example_spark.operators.dedup import (
+        FUZZY_TITLE_MAX_DIST,
+    )
     from dask_lambda_example_spark.registry import QUERIES
 
     rows = [
@@ -478,18 +484,26 @@ def test_fuzzy_composite_block_is_subset_and_splits_hot_token(
         (4, "the cata", "en", "web"),
         (5, "the dogb", "en", "web"),
     ]
+    path = f"{tmp_path}/documents.parquet"
     spark.createDataFrame(
         [(i, t, lg, s, len(t)) for i, t, lg, s in rows],
         "doc_id long, text string, lang string, source string, "
-        "n_chars long").write.parquet(f"{tmp_path}/documents.parquet")
+        "n_chars long").write.parquet(path)
 
-    fn = QUERIES["dedup_fuzzy_title_pairs"].fn
-    monkeypatch.delenv("SPARK_GRAFT_FUZZY_SHALLOW_BLOCK", raising=False)
-    deep = {(r.doc_a, r.doc_b, r.edit_dist)
-            for r in fn(spark, str(tmp_path)).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_FUZZY_SHALLOW_BLOCK", "1")
-    shallow = {(r.doc_a, r.doc_b, r.edit_dist)
-               for r in fn(spark, str(tmp_path)).collect()}
+    deep = {(r.doc_a, r.doc_b, r.edit_dist) for r in
+            QUERIES["dedup_fuzzy_title_pairs"].fn(
+                spark, str(tmp_path)).collect()}
+    shallow = set(duckdb.sql(f"""
+        WITH t AS (
+            SELECT doc_id,
+                   array_to_string(list_slice(string_split(text, ' '),
+                                              1, 3), ' ') AS title,
+                   string_split(text, ' ')[1] AS blk
+            FROM read_parquet('{path}/*.parquet'))
+        SELECT a.doc_id, b.doc_id, levenshtein(a.title, b.title)
+        FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
+        WHERE levenshtein(a.title, b.title) <= {FUZZY_TITLE_MAX_DIST}
+        """).fetchall())
     assert deep <= shallow
     assert (0, 1, 1) in deep          # the edited near-duplicate
     assert all(d <= 4 for _, _, d in deep)
@@ -554,23 +568,33 @@ def test_crawl_funnel_stages_are_monotone(spark, sf_dir):
     assert docs[-1] >= 1  # the gates pass a non-trivial survivor set
 
 
-def test_warc_by_lang_bounded_equals_unbounded(spark, sf_dir, monkeypatch):
-    # The (lang, bucket) bounded-archive grouping and the naive
-    # one-group-per-lang form (measurement-only knob) must emit the
-    # SAME per-document rows — the archive key never leaks into the
-    # output. This is the only place the unbounded branch executes in
-    # CI; its scale role is the skew-tier straggler measurement.
+def test_warc_by_lang_rows_match_file_grouping(spark, sf_dir):
+    # The (lang, bucket) archive key never leaks into the output: the
+    # by-lang scan emits the same per-document rows as the file-grouped
+    # scan, one per document, and no by-lang archive holds more than
+    # DOCS_PER_ARCHIVE documents however hot its language.
+    from dask_lambda_example_spark.io import load_table, parquet_rowcount
     from dask_lambda_example_spark.registry import QUERIES
+    from dask_lambda_example_spark.sources.warc import (
+        DOCS_PER_ARCHIVE,
+        _archives,
+    )
 
-    from dask_lambda_example_spark.io import parquet_rowcount
+    def rows(name):
+        return sorted(tuple(r) for r in
+                      QUERIES[name].fn(spark, sf_dir).collect())
 
-    fn = QUERIES["src_warc_by_lang_scan"].fn
-    monkeypatch.delenv("SPARK_GRAFT_WARC_LANG_UNBOUNDED", raising=False)
-    bounded = {tuple(r) for r in fn(spark, sf_dir).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_WARC_LANG_UNBOUNDED", "1")
-    unbounded = {tuple(r) for r in fn(spark, sf_dir).collect()}
-    assert bounded == unbounded
-    assert len(bounded) == parquet_rowcount(sf_dir, "documents")
+    by_lang = rows("src_warc_by_lang_scan")
+    assert by_lang == rows("src_warc_scan")
+    n_docs = parquet_rowcount(sf_dir, "documents")
+    assert len(by_lang) == n_docs
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang")
+    sizes = [int.from_bytes(r.n, "big") for r in _archives(
+        docs, lambda ids, texts: len(ids).to_bytes(4, "big"), "n",
+        by=("lang",)).collect()]
+    assert sum(sizes) == n_docs
+    assert max(sizes) <= DOCS_PER_ARCHIVE
 
 
 def test_bpe_train_matches_reference(spark, sf_dir):
@@ -1479,6 +1503,32 @@ def test_bench_gate_cli_fails_on_fresh_crash(tmp_path, capsys):
 
     assert run_cli(-1.0) == (1, "CONFIRMED_FAILURE")
     assert run_cli(2.1) == (0, "GREEN")
+
+
+def test_bench_gate_cli_fails_on_flaky(tmp_path, capsys):
+    # the ledger CLI must not print GREEN and exit 0 for a pair whose
+    # current side lists a name as flaky (crashed on some rep), even
+    # when no wall is flagged and so nothing is re-probed
+    import json
+
+    bench_gate = _bench_gate_mod()
+
+    def ledger(path, flaky):
+        path.write_text(json.dumps({
+            "sink_mode": "noop", "queries": {"q": 1.0}, "flaky": flaky,
+            "flagship_synth_sec": 0.7}))
+        return path
+
+    def run_cli(flaky):
+        a = ledger(tmp_path / "prev.json", [])
+        b = ledger(tmp_path / "cur.json", flaky)
+        out = tmp_path / "gate.json"
+        rc = bench_gate.main([str(a), str(b), "--out", str(out)])
+        capsys.readouterr()
+        return rc, json.loads(out.read_text())["verdict"]
+
+    assert run_cli(["q"]) == (1, "FLAKY")
+    assert run_cli([]) == (0, "GREEN")
 
 
 def test_bench_gate_parse_anchoring(tmp_path):

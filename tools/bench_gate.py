@@ -357,7 +357,9 @@ def main(argv: list[str]) -> int:
     flagged/sentinel/recorded-crashed name fresh at the LEDGER's own
     tier, and write the verdict artifact — so in-battery mover families
     are attributed in the same round that produced them.  A recorded
-    crash that crashes fresh too is ``CONFIRMED_FAILURE`` and exits 1.
+    crash that crashes fresh too is ``CONFIRMED_FAILURE`` and exits 1;
+    a name the current ledger lists as ``flaky`` (crashed on some rep)
+    is ``FLAKY`` and exits 1.
 
         python tools/bench_gate.py PREV.json CUR.json \\
             --sf-dir /root/repo/.localdata/sf1 \\
@@ -383,9 +385,10 @@ def main(argv: list[str]) -> int:
     report["cur_art"] = args.cur.name
     report["sf_dir"] = args.sf_dir
     report["verdict"] = (
-        "SKIP" if report["skip"]
-        else "CONFIRMED_FAILURE" if report["failed"]
+        "CONFIRMED_FAILURE" if report["failed"]
         else "CONFIRMED_REGRESSION" if report["confirmed"]
+        else "FLAKY" if report["flaky"]
+        else "SKIP" if report["skip"]
         else "WEATHER_ATTRIBUTED" if (report["flagged"]
                                       or report.get("sentinels"))
         else "GREEN")
@@ -393,7 +396,8 @@ def main(argv: list[str]) -> int:
     if args.out:
         args.out.write_text(text + "\n")
     print(text)
-    return 1 if report["failed"] or report["confirmed"] else 0
+    return 1 if (report["failed"] or report["confirmed"]
+                 or report["flaky"]) else 0
 
 
 if __name__ == "__main__":
