@@ -129,41 +129,50 @@ def ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_join_backward(events: DataFrame, right: DataFrame,
-                       left_key: str, right_key: str,
-                       left_ts: str, right_ts: str,
-                       payload_cols: list[str]) -> DataFrame:
-    """Reusable backward as-of join (dask ``merge_asof``, SURVEY.md
-    §4.3-1): for each left row, the most recent right row with
-    ``right_ts <= left_ts`` per key.
+def asof_join(events: DataFrame, right: DataFrame,
+              left_key: str, right_key: str,
+              left_ts: str, right_ts: str,
+              payload_cols: list[str], direction: str) -> DataFrame:
+    """Reusable as-of join (dask ``merge_asof``, SURVEY.md §4.3-1): for
+    each left row, per key, the most recent right row with
+    ``right_ts <= left_ts`` (``direction="backward"``) or the earliest
+    with ``right_ts >= left_ts`` (``direction="forward"``).
 
     Composition, not a per-group pandas fallback: union both sides on
     (key, t), one window ``last(..., ignorenulls=True)`` per payload
     column over a running frame, then keep left rows. Cost = one
     shuffle on the key + one in-partition sort — same complexity as a
-    sort-merge join, valid at any scale. Right rows sort before left
-    rows at equal timestamps (side=0 < 1) so exact-timestamp matches
-    are taken, matching merge_asof/ASOF JOIN semantics.
+    sort-merge join, valid at any scale. Backward orders the window
+    ascending with right rows before left rows at equal timestamps
+    (side 0 < 1); forward is the mirror — descending, right rows after
+    left rows — so exact-timestamp matches are taken either way,
+    matching merge_asof/ASOF JOIN semantics.
     """
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"direction must be backward or forward: {direction!r}")
+    back = direction == "backward"
+    left_side, right_side = (1, 0) if back else (0, 1)
     left_tagged = events.select(
         F.col(left_key).alias("__k"), F.col(left_ts).alias("__t"),
-        F.lit(1).alias("__side"),
+        F.lit(left_side).alias("__side"),
         "*", *[F.lit(None).cast(right.schema[c].dataType).alias(f"__p_{c}")
                for c in payload_cols])
     right_tagged = right.select(
         F.col(right_key).alias("__k"), F.col(right_ts).alias("__t"),
-        F.lit(0).alias("__side"),
+        F.lit(right_side).alias("__side"),
         *[F.lit(None).cast(events.schema[c].dataType).alias(c)
           for c in events.columns],
         *[F.col(c).alias(f"__p_{c}") for c in payload_cols])
     unioned = left_tagged.unionByName(right_tagged)
-    w = (W.partitionBy("__k").orderBy("__t", "__side")
+    order = (["__t", "__side"] if back
+             else [F.desc("__t"), F.desc("__side")])
+    w = (W.partitionBy("__k").orderBy(*order)
          .rowsBetween(W.unboundedPreceding, W.currentRow))
     filled = unioned.select(
         "*", *[F.last(f"__p_{c}", ignorenulls=True).over(w).alias(f"__m_{c}")
                for c in payload_cols])
     return (
-        filled.filter(F.col("__side") == 1)
+        filled.filter(F.col("__side") == left_side)
         .select(*events.columns,
                 *[F.col(f"__m_{c}").alias(c) for c in payload_cols])
     )
@@ -183,9 +192,9 @@ def ts_asof_join_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = DuckDB's native ASOF JOIN."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders")
-    return asof_join_backward(
+    return asof_join(
         e, o, "user_id", "o_custkey", "ts", "o_orderdate",
-        ["o_orderkey", "o_orderdate"],
+        ["o_orderkey", "o_orderdate"], "backward",
     )
 
 
@@ -208,9 +217,9 @@ def ts_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders").withColumn(
         "total", F.round("o_totalprice", 6))
-    joined = asof_join_backward(
+    joined = asof_join(
         e, o, "user_id", "o_custkey", "ts", "o_orderdate",
-        ["o_orderkey", "o_orderdate", "total"],
+        ["o_orderkey", "o_orderdate", "total"], "backward",
     )
     within = F.col("o_orderdate") >= F.col("ts") - F.expr("INTERVAL 365 DAYS")
     return joined.select(
@@ -270,39 +279,6 @@ def ts_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_join_forward(events: DataFrame, right: DataFrame,
-                      left_key: str, right_key: str,
-                      left_ts: str, right_ts: str,
-                      payload_cols: list[str]) -> DataFrame:
-    """Forward as-of (``merge_asof(direction='forward')``): for each
-    left row, the EARLIEST right row with ``right_ts >= left_ts`` per
-    key — the mirror of ``asof_join_backward``: same union, descending
-    ordered window, right rows after left rows at equal timestamps so
-    exact matches are still taken."""
-    left_tagged = events.select(
-        F.col(left_key).alias("__k"), F.col(left_ts).alias("__t"),
-        F.lit(0).alias("__side"),
-        "*", *[F.lit(None).cast(right.schema[c].dataType).alias(f"__p_{c}")
-               for c in payload_cols])
-    right_tagged = right.select(
-        F.col(right_key).alias("__k"), F.col(right_ts).alias("__t"),
-        F.lit(1).alias("__side"),
-        *[F.lit(None).cast(events.schema[c].dataType).alias(c)
-          for c in events.columns],
-        *[F.col(c).alias(f"__p_{c}") for c in payload_cols])
-    unioned = left_tagged.unionByName(right_tagged)
-    w = (W.partitionBy("__k").orderBy(F.desc("__t"), F.desc("__side"))
-         .rowsBetween(W.unboundedPreceding, W.currentRow))
-    filled = unioned.select(
-        "*", *[F.last(f"__p_{c}", ignorenulls=True).over(w).alias(f"__m_{c}")
-               for c in payload_cols])
-    return (
-        filled.filter(F.col("__side") == 0)
-        .select(*events.columns,
-                *[F.col(f"__m_{c}").alias(c) for c in payload_cols])
-    )
-
-
 @query(
     "ts_asof_join_forward",
     oracle="""
@@ -317,9 +293,9 @@ def ts_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = DuckDB's native ASOF JOIN with the <= inequality."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders")
-    return asof_join_forward(
+    return asof_join(
         e, o, "user_id", "o_custkey", "ts", "o_orderdate",
-        ["o_orderkey", "o_orderdate"],
+        ["o_orderkey", "o_orderdate"], "forward",
     )
 
 
@@ -350,12 +326,12 @@ def ts_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the two directional joins sharing one key shuffle."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders")
-    b = asof_join_backward(e, o, "user_id", "o_custkey", "ts", "o_orderdate",
-                           ["o_orderkey", "o_orderdate"]) \
+    b = asof_join(e, o, "user_id", "o_custkey", "ts", "o_orderdate",
+                  ["o_orderkey", "o_orderdate"], "backward") \
         .withColumnRenamed("o_orderkey", "bk") \
         .withColumnRenamed("o_orderdate", "bt")
-    f = asof_join_forward(e, o, "user_id", "o_custkey", "ts", "o_orderdate",
-                          ["o_orderkey", "o_orderdate"]) \
+    f = asof_join(e, o, "user_id", "o_custkey", "ts", "o_orderdate",
+                  ["o_orderkey", "o_orderdate"], "forward") \
         .select("event_id", F.col("o_orderkey").alias("fk"),
                 F.col("o_orderdate").alias("ft"))
     # o_orderdate scans as TIMESTAMP_NTZ; cast is identity under the

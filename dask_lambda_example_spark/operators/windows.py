@@ -90,9 +90,7 @@ def win_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "win_rank_distributed_twophase",
-    oracle="""
+_RANK_FAMILY_ORACLE = """
     SELECT l_orderkey, l_linenumber,
            rank()       OVER w AS rnk,
            dense_rank() OVER w AS drnk,
@@ -100,8 +98,10 @@ def win_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(cume_dist()    OVER w, 6) AS cdist
     FROM lineitem
     WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_quantity)
-    """,
-)
+    """
+
+
+@query("win_rank_distributed_twophase", oracle=_RANK_FAMILY_ORACLE)
 def win_rank_distributed_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-safe ranking over a LOW-CARDINALITY partition key.
 
@@ -159,15 +159,15 @@ _NTILE_ORDER = ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
                 "l_quantity", "l_extendedprice")
 
 
-@query(
-    "win_ntile_distributed",
-    oracle=f"""
+_NTILE_GLOBAL_ORACLE = f"""
     SELECT l_orderkey, l_linenumber,
            ntile({NTILE_K}) OVER (ORDER BY {", ".join(_NTILE_ORDER)})
              AS quartile
     FROM lineitem
-    """,
-)
+    """
+
+
+@query("win_ntile_distributed", oracle=_NTILE_GLOBAL_ORACLE)
 def win_ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL ntile without a global sort — closing the one gap
     ``win_rank_distributed_twophase`` documents: ntile is position-based,
@@ -247,23 +247,6 @@ def ntile_from_position(pos, n, k: int):
 # formulation's extra shuffle. Tunable per cluster; the number comes
 # from parquet footer metadata (driver-local stat read, no Spark job).
 RANK_NAIVE_MAX_ROWS = 50_000_000
-
-_RANK_FAMILY_ORACLE = """
-    SELECT l_orderkey, l_linenumber,
-           rank()       OVER w AS rnk,
-           dense_rank() OVER w AS drnk,
-           round(percent_rank() OVER w, 6) AS prank,
-           round(cume_dist()    OVER w, 6) AS cdist
-    FROM lineitem
-    WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_quantity)
-    """
-
-_NTILE_GLOBAL_ORACLE = f"""
-    SELECT l_orderkey, l_linenumber,
-           ntile({NTILE_K}) OVER (ORDER BY {", ".join(_NTILE_ORDER)})
-             AS quartile
-    FROM lineitem
-    """
 
 
 def _rank_family_naive(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -183,34 +183,16 @@ def src_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's replay of the identical offset range. Covers the
     reference's producer→consumer cadence (``app.py:131-134``) with a
     USER-DEFINED source instead of the built-in file/rate sources."""
-    import time as _time
-
     from dask_lambda_example_spark.streaming.pipeline import (
-        _mem_table, _stream_state_partitions)
+        _await_rows, _mem_table, start_stream)
 
     spark.dataSource.register(SyntheticTradesStreamSource)
     stream = spark.readStream.format("synthetic_trades_stream").load()
     table = _mem_table("pyds_stream")
-    import tempfile
-
-    ckpt = scratch_mkdtemp("ckpt_pyds_")
-    with _stream_state_partitions(spark):
-        q = (stream.writeStream.outputMode("append")
-             .format("memory").queryName(table)
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="250 milliseconds")
-             .start())
+    q = start_stream(stream, mode="append", table=table,
+                     every="250 milliseconds")
     try:
-        # drain-completion poll reads the query's PROGRESS METADATA
-        # (numInputRows per committed micro-batch — driver-side state,
-        # no Spark job), not a count() query per tick
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            landed = sum(p["numInputRows"] for p in q.recentProgress)
-            if landed >= STREAM_MAX:
-                break
-            _time.sleep(0.25)
-        else:
+        if not _await_rows(q, STREAM_MAX, deadline_s=120):
             raise RuntimeError("stream source did not drain in time")
     finally:
         q.stop()
@@ -335,7 +317,6 @@ def src_python_datasink_roundtrip(spark: SparkSession,
     (per-task file + driver manifest) is the structure a real external
     sink needs for exactly-once publishes."""
     import os
-    import tempfile
 
     from dask_lambda_example_spark.io import load_table
 

@@ -8,6 +8,13 @@ Spark-first mapping: ``readStream`` file source discovers new files;
 everything present, then stop); watermarks bound late data; memory /
 foreachBatch sinks close the loop.
 
+Every streaming query starts through one runner, ``start_stream``: one
+throwaway checkpoint, the pinned state width (``_pinned``), a memory or
+foreachBatch sink, and an AvailableNow or processing-time trigger. The
+episodic queries end in ``drain`` (run to termination, return the
+memory table); the processing-time ones wait on ``_await_rows``, which
+polls the query's progress metadata until enough input rows landed.
+
 Batch-equivalence is the correctness strategy (SURVEY.md §5.2-6): every
 streaming query here runs in COMPLETE or deduplicating mode over a
 static directory, so its result equals the batch computation the DuckDB
@@ -22,12 +29,13 @@ S3, Redshift, etc" (``layer/python/dask_processing.py:26-27``).
 from __future__ import annotations
 
 import os
-import sys
-import tempfile
+import time
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from dask_lambda_example_spark.io import (
     load_table, normalize_events_ts, table_schema)
@@ -43,26 +51,86 @@ def _mem_table(prefix: str) -> str:
 
 
 @contextmanager
-def _stream_state_partitions(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` for the duration of a
-    streaming query start. A stateful stream creates one state store
-    PER shuffle partition PER stateful operator, and every micro-batch
-    snapshots every store — so the partition count is a per-batch
-    FIXED COST, not a parallelism win, until per-partition state is
-    large enough to matter. On local bench data 32 stores made the
-    stream-stream join 5× slower than 8 (pure checkpoint-file
-    overhead). The count is baked into each query's checkpoint at
-    first start (throwaway here), so pinning per-start is safe; at
-    cluster scale raise ``SPARK_GRAFT_STREAM_PARTITIONS`` to O(cores)
-    *before* the first run against a durable checkpoint — it cannot
-    change across restarts of the same checkpoint."""
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+def _pinned(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block, then
+    restore its previous value, or unset it if it had none."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def start_stream(df: DataFrame, *, mode: str = "complete",
+                 table: str | None = None,
+                 batch: Callable[[DataFrame, int], None] | None = None,
+                 every: str | None = None) -> StreamingQuery:
+    """Start ``df`` as a streaming query and return the running
+    StreamingQuery; the caller awaits or stops it.
+
+    The sink is the memory table ``table``, or ``foreachBatch(batch)``
+    when ``batch`` is given. The trigger is ``Trigger.AvailableNow``
+    (the Lambda-style episodic run, A19: process every file present,
+    then stop), or ``processingTime=every`` when ``every`` is given
+    (A20: the reference's producer runs on a one-minute EventBridge
+    rate, ``app.py:131-134``; poll the source every ``every`` and
+    process whatever arrived). The checkpoint is a fresh throwaway
+    directory.
+
+    The state width is pinned around the start: a stateful stream
+    creates one state store PER shuffle partition PER stateful
+    operator, and every micro-batch snapshots every store — so the
+    partition count is a per-batch FIXED COST, not a parallelism win,
+    until per-partition state is large enough to matter. On local bench
+    data 32 stores made the stream-stream join 5× slower than 8 (pure
+    checkpoint-file overhead). The query copies the session conf at
+    start, and the count is baked into its checkpoint at the first
+    batch (throwaway here), so pinning per start is safe; at cluster
+    scale raise ``SPARK_GRAFT_STREAM_PARTITIONS`` to O(cores) *before*
+    the first run against a durable checkpoint — it cannot change
+    across restarts of the same checkpoint."""
+    w = (df.writeStream.outputMode(mode)
+         .option("checkpointLocation", scratch_mkdtemp("ckpt_")))
+    w = (w.format("memory").queryName(table) if batch is None
+         else w.foreachBatch(batch))
+    w = (w.trigger(availableNow=True) if every is None
+         else w.trigger(processingTime=every))
+    width = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+    with _pinned(df.sparkSession, "spark.sql.shuffle.partitions", width):
+        return w.start()
+
+
+def drain(df: DataFrame, mode: str = "complete") -> DataFrame:
+    """Run ``df`` to termination under AvailableNow into a fresh memory
+    table and return that table."""
+    table = _mem_table("stream")
+    start_stream(df, mode=mode, table=table).awaitTermination()
+    return df.sparkSession.table(table)
+
+
+def _await_rows(q: StreamingQuery, n: int, deadline_s: float,
+                _clock=time.time, _sleep=time.sleep) -> bool:
+    """Block until ``q``'s committed micro-batches hold at least ``n``
+    input rows in total, or ``deadline_s`` passes; return whether they
+    did.
+
+    Polls the query's PROGRESS METADATA (numInputRows per committed
+    micro-batch — driver-side state, no Spark job) every 0.25 s, never
+    a count() per tick, and exits the moment the rows land — so the
+    deadline is a worst-case bound, not a sleep. ``_clock`` /
+    ``_sleep`` are injectable for the unit test that replays a
+    slow-first-batch timeline without a real stream."""
+    deadline = _clock() + deadline_s
+    while True:
+        if sum(p["numInputRows"] for p in q.recentProgress) >= n:
+            return True
+        if _clock() >= deadline:
+            return False
+        _sleep(0.25)
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -97,38 +165,6 @@ def events_stream(spark: SparkSession, sf_dir: str,
     return normalize_events_ts(stream, batch_schema)
 
 
-def run_available_now(df: DataFrame, table: str,
-                      output_mode: str = "complete") -> None:
-    """Lambda-style episodic execution (A19/A20): process all files
-    currently present, then stop — ``Trigger.AvailableNow`` with a
-    throwaway checkpoint, memory sink for the result."""
-    ckpt = scratch_mkdtemp("ckpt_")
-    with _stream_state_partitions(df.sparkSession):
-        q = (df.writeStream.outputMode(output_mode)
-             .format("memory").queryName(table)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-
-def run_processing_time(df: DataFrame, table: str, cadence: str,
-                        output_mode: str = "complete"):
-    """Continuous-cadence execution (A20): the reference's producer runs
-    on a one-minute EventBridge rate (``app.py:131-134``) and its
-    consumer fires per arriving file; Spark's single-process analog is
-    ``Trigger.ProcessingTime`` — poll the source every ``cadence`` and
-    process whatever arrived. Returns the running StreamingQuery; the
-    caller owns ``stop()``."""
-    ckpt = scratch_mkdtemp("ckpt_pt_")
-    with _stream_state_partitions(df.sparkSession):
-        return (df.writeStream.outputMode(output_mode)
-                .format("memory").queryName(table)
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime=cadence)
-                .start())
-
-
 def producer_counts_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming file-source scan of the producer's hive-partitioned
     JSON layout (``src/lambda_producer.py:22-27``) — new files under
@@ -159,9 +195,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.round(F.sum("value"), 6).alias("sum_v"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n", "sum_v")
     )
-    table = _mem_table("stream_tumbling")
-    run_available_now(agg, table)
-    return spark.table(table)
+    return drain(agg)
 
 
 @query(
@@ -184,20 +218,20 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("w_start"), "n")
     )
-    table = _mem_table("stream_watermark")
-    run_available_now(agg, table)
-    return spark.table(table)
+    return drain(agg)
 
 
-@query(
-    "stream_dedup",
-    oracle="""
+# the event key is unique, so both streaming dedups equal the batch
+# DISTINCT ON
+_DEDUP_ORACLE = """
     SELECT event_type, count(*) AS n FROM (
         SELECT DISTINCT ON (event_id) event_id, event_type FROM events
         ORDER BY event_id
     ) GROUP BY event_type
-    """,
-)
+    """
+
+
+@query("stream_dedup", oracle=_DEDUP_ORACLE)
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates on the event key, then aggregate —
     chained stateful operators (Spark ≥3.4). event_id is unique in the
@@ -209,9 +243,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    table = _mem_table("stream_dedup")
-    run_available_now(deduped, table)
-    return spark.table(table)
+    return drain(deduped)
 
 
 @query(
@@ -236,9 +268,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.avg("value"), 6).alias("mean_v"))
         .select(F.col("w.start").alias("w_start"), "mean_v")
     )
-    table = _mem_table("stream_sliding")
-    run_available_now(agg, table)
-    return spark.table(table)
+    return drain(agg)
 
 
 def foreach_batch_to_parquet(spark: SparkSession, sf_dir: str,
@@ -252,18 +282,9 @@ def foreach_batch_to_parquet(spark: SparkSession, sf_dir: str,
         (batch_df.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    ckpt = scratch_mkdtemp("ckpt_fb_")
-    with _stream_state_partitions(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .groupBy("event_type").agg(F.count("*").alias("n"))
-            .writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    counts = events_stream(spark, sf_dir).groupBy("event_type").agg(
+        F.count("*").alias("n"))
+    start_stream(counts, batch=write_batch).awaitTermination()
     return spark.read.parquet(out_dir).count()
 
 
@@ -312,9 +333,7 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    table = _mem_table("stream_stateful")
-    run_available_now(out, table, output_mode="update")
-    return spark.table(table)
+    return drain(out, "update")
 
 
 @query(
@@ -354,9 +373,41 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.round(F.sum("value"), 6).alias("sum_v"))
         .select("user_id", F.col("w.start").alias("s_start"), "n", "sum_v")
     )
-    table = _mem_table("stream_session")
-    run_available_now(agg, table)
-    return spark.table(table)
+    return drain(agg)
+
+
+def _view_click_join(spark: SparkSession, sf_dir: str,
+                     how: str) -> DataFrame:
+    """The attribution join of both stream-stream queries: the view
+    stream joined (``how``) to the same user's clicks within the
+    following hour, as ``(user_id, view_id, click_id,
+    micros_to_click)``, each leg under a 2 h watermark."""
+    views = (events_stream(spark, sf_dir)
+             .filter(F.col("event_type") == "view")
+             .select(F.col("user_id"),
+                     F.col("event_id").alias("view_id"),
+                     F.col("ts").alias("view_ts"))
+             .withWatermark("view_ts", "2 hours"))
+    clicks = (events_stream(spark, sf_dir)
+              .filter(F.col("event_type") == "click")
+              .select(F.col("user_id").alias("c_user_id"),
+                      F.col("event_id").alias("click_id"),
+                      F.col("ts").alias("click_ts"))
+              .withWatermark("click_ts", "2 hours"))
+    return (
+        views.join(
+            clicks,
+            (F.col("user_id") == F.col("c_user_id"))
+            & (F.col("click_ts") > F.col("view_ts"))
+            & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
+            how,
+        )
+        .select(
+            "user_id", "view_id", "click_id",
+            (F.unix_micros("click_ts") - F.unix_micros("view_ts"))
+            .alias("micros_to_click"),
+        )
+    )
 
 
 @query(
@@ -385,34 +436,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch and the range predicate prunes inside each key group —
     the same shape as the batch range join, plus watermark-driven state
     eviction."""
-    views = (events_stream(spark, sf_dir)
-             .filter(F.col("event_type") == "view")
-             .select(F.col("user_id"),
-                     F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "2 hours"))
-    clicks = (events_stream(spark, sf_dir)
-              .filter(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user_id"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("click_ts"))
-              .withWatermark("click_ts", "2 hours"))
-    joined = (
-        views.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user_id"))
-            & (F.col("click_ts") > F.col("view_ts"))
-            & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select(
-            "user_id", "view_id", "click_id",
-            (F.unix_micros("click_ts") - F.unix_micros("view_ts"))
-            .alias("micros_to_click"),
-        )
-    )
-    table = _mem_table("stream_stream_join")
-    run_available_now(joined, table, output_mode="append")
-    return spark.table(table)
+    return drain(_view_click_join(spark, sf_dir, "inner"), "append")
 
 
 @query(
@@ -442,50 +466,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"),
              F.round(F.sum("value"), 6).alias("sum_v"))
     )
-    table = _mem_table("stream_static_join")
-    run_available_now(joined, table)
-    return spark.table(table)
-
-
-def _await_first_rows(q, deadline_s: float | None = None,
-                      poll_s: float = 0.5,
-                      _clock=None, _sleep=None) -> bool:
-    """Block until ``q`` commits its first micro-batch with input rows,
-    or the deadline passes; return whether rows landed.
-
-    Polls the query's PROGRESS METADATA (numInputRows per committed
-    micro-batch — driver-side state, no Spark job), never a count()
-    per tick, and exits the moment a batch lands — so the deadline is
-    a worst-case bound, not a sleep. The default is deliberately
-    generous (90 s, env ``SPARK_GRAFT_STREAM_FIRST_BATCH_S``): under a
-    loaded 32-core host the first 1-second-trigger micro-batch can
-    take well over the old hard-coded 8 s to commit, which made the
-    rate-source gate flaky in the round-11 driver window (VERDICT r11
-    item 1) even though the query itself was correct. ``_clock`` /
-    ``_sleep`` are injectable for the unit test that replays a
-    slow-first-batch timeline without a real stream."""
-    import time as _time
-
-    clock = _clock or _time.time
-    sleep = _sleep or _time.sleep
-    if deadline_s is None:
-        raw = os.environ.get("SPARK_GRAFT_STREAM_FIRST_BATCH_S", "90")
-        try:
-            deadline_s = float(raw)
-        except ValueError:
-            # a typo'd env override must degrade to the default, not
-            # fail the rate-source gate outright (round-12 review)
-            deadline_s = 90.0
-            print(f"STREAM WARN unparseable "
-                  f"SPARK_GRAFT_STREAM_FIRST_BATCH_S={raw!r} — "
-                  f"using {deadline_s}", file=sys.stderr)
-    deadline = clock() + deadline_s
-    while True:
-        if any(p["numInputRows"] > 0 for p in q.recentProgress):
-            return True
-        if clock() >= deadline:
-            return False
-        sleep(poll_s)
+    return drain(joined)
 
 
 @query("stream_rate_source_smoke")  # wall-clock-driven source → rows-only
@@ -507,21 +488,16 @@ def stream_rate_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy("name").agg(
         F.count("*").alias("n"), F.avg("value").alias("mean_v"))
     table = _mem_table("stream_rate")
-    ckpt = scratch_mkdtemp("ckpt_rate_")
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(table)
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="1 second")
-             .start())
+    q = start_stream(agg, table=table, every="1 second")
     try:
         # let the first micro-batch land, then stop — episodic use of a
         # continuous trigger (the reference's 1-minute cadence,
-        # app.py:131-134, compressed for test time). _await_first_rows
-        # exits the moment a batch commits; the generous env-tunable
-        # deadline only costs wall-clock on a host too loaded to commit
-        # any batch at all (r11's flaky 8 s gate, fixed).
-        landed = _await_first_rows(q)
+        # app.py:131-134, compressed for test time). The wait exits the
+        # moment a batch commits; the generous 90 s deadline only costs
+        # wall-clock on a host too loaded to commit any batch at all
+        # (on a loaded 32-core host the first 1 s-trigger batch took
+        # well over the 8 s this gate once had).
+        landed = _await_rows(q, 1, deadline_s=90)
     finally:
         q.stop()
     out = spark.table(table)
@@ -533,8 +509,7 @@ def stream_rate_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     # landed=False with total>0 just means the batch committed in the
     # stop window after the last poll — still a pass; the gate is rows.
     assert total > 0, (
-        f"no micro-batch landed within the deadline (landed={landed}; "
-        "raise SPARK_GRAFT_STREAM_FIRST_BATCH_S on slow hosts)")
+        f"no micro-batch landed within the deadline (landed={landed})")
     for r in rows:
         k = ord(r["name"]) - 97
         assert 0 <= k < 26, r
@@ -590,46 +565,10 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     State per key is bounded by (rate × 3 h) regardless of job
     lifetime; each micro-batch shuffles both sides on user_id once —
     the batch range-join shape plus watermark-driven cleanup."""
-    views = (events_stream(spark, sf_dir)
-             .filter(F.col("event_type") == "view")
-             .select(F.col("user_id"),
-                     F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "2 hours"))
-    clicks = (events_stream(spark, sf_dir)
-              .filter(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user_id"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("click_ts"))
-              .withWatermark("click_ts", "2 hours"))
-    joined = (
-        views.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user_id"))
-            & (F.col("click_ts") > F.col("view_ts"))
-            & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-            "left_outer",
-        )
-        .select(
-            "user_id", "view_id", "click_id",
-            (F.unix_micros("click_ts") - F.unix_micros("view_ts"))
-            .alias("micros_to_click"),
-        )
-    )
-    table = _mem_table("stream_stream_left_outer")
-    run_available_now(joined, table, output_mode="append")
-    return spark.table(table)
+    return drain(_view_click_join(spark, sf_dir, "left_outer"), "append")
 
 
-@query(
-    "stream_dedup_within_watermark",
-    oracle="""
-    SELECT event_type, count(*) AS n FROM (
-        SELECT DISTINCT ON (event_id) event_id, event_type FROM events
-        ORDER BY event_id
-    ) GROUP BY event_type
-    """,
-)
+@query("stream_dedup_within_watermark", oracle=_DEDUP_ORACLE)
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark``: the dedup whose state is
     BOUNDED — a key is only remembered until the watermark passes its
@@ -646,9 +585,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     agg = (deduped.groupBy("event_type")
            .agg(F.count("*").alias("n")))
-    table = _mem_table("stream_dedup_wm")
-    run_available_now(agg, table, output_mode="complete")
-    return spark.table(table)
+    return drain(agg)
 
 
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,11 +636,9 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
+    with _pinned(
+            spark, "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"):
         out = (
             events_stream(spark, sf_dir)
             .groupBy("user_id")
@@ -714,12 +649,4 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="None",
             )
         )
-        table = _mem_table("stream_tws")
-        run_available_now(out, table, output_mode="update")
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return spark.table(table)
+        return drain(out, "update")

@@ -9,7 +9,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dask_lambda_example_spark.operators.timeseries import asof_join_backward
+from dask_lambda_example_spark.operators.timeseries import asof_join
 
 ts_strategy = st.integers(min_value=0, max_value=50)
 key_strategy = st.integers(min_value=0, max_value=3)
@@ -38,7 +38,7 @@ def test_asof_backward_matches_merge_asof(spark, left, right):
     ldf = spark.createDataFrame(lpdf)
     rdf = (spark.createDataFrame(rpdf) if not rpdf.empty
            else spark.createDataFrame([], "k long, t long, payload long"))
-    got = (asof_join_backward(ldf, rdf, "k", "k", "t", "t", ["payload"])
+    got = (asof_join(ldf, rdf, "k", "k", "t", "t", ["payload"], "backward")
            .toPandas().set_index("rid").sort_index())
     if rpdf.empty:
         expected_payload = [-1.0] * len(lpdf)

@@ -49,12 +49,11 @@ def test_producer_partition_pruning(spark):
 def test_streaming_file_source_matches_batch(spark, sf_dir):
     """A19: the file-source stream over the events table sees exactly
     the batch rows (episodic AvailableNow ≙ one Lambda invocation)."""
-    from dask_lambda_example_spark.streaming.pipeline import run_available_now
+    from dask_lambda_example_spark.streaming.pipeline import drain
 
     total = (events_stream(spark, sf_dir)
              .groupBy().agg(F.count("*").alias("n"), F.sum("event_id").alias("s")))
-    run_available_now(total, "t_stream_total")
-    got = spark.table("t_stream_total").first()
+    got = drain(total).first()
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     assert got["n"] == batch.count()
 
@@ -70,14 +69,14 @@ def test_processing_time_trigger_two_ticks(spark):
     from dask_lambda_example_spark.sources.producer import producer_payloads
     from dask_lambda_example_spark.streaming.pipeline import (
         producer_counts_stream,
-        run_processing_time,
+        start_stream,
     )
 
     path = tempfile.mkdtemp(prefix="producer_pt_")
     write_producer_layout(spark, path, n_files=10)
     agg = (producer_counts_stream(spark, path)
            .groupBy().agg(F.count("*").alias("n"), F.sum("count").alias("s")))
-    q = run_processing_time(agg, "t_pt_counts", "500 milliseconds")
+    q = start_stream(agg, table="t_pt_counts", every="500 milliseconds")
     try:
         def wait_for(n, deadline_s=60):
             deadline = time.time() + deadline_s
@@ -111,6 +110,38 @@ def test_foreach_batch_sink(spark, sf_dir):
     back = spark.read.parquet(out)
     assert {r["event_type"] for r in back.collect()} == {
         "click", "error", "purchase", "signup", "view"}
+
+
+def test_stream_runner_pins_state_width(spark, sf_dir, monkeypatch):
+    """``start_stream`` runs every stateful operator at the pinned state
+    width (8 stores per operator) whatever the session's shuffle width,
+    and leaves the session's width as it found it; ``_pinned`` unsets a
+    key that had no value before."""
+    from dask_lambda_example_spark.streaming.pipeline import (
+        _pinned, start_stream)
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        deduped = (events_stream(spark, sf_dir)
+                   .dropDuplicates(["event_id"])
+                   .groupBy("event_type").agg(F.count("*").alias("n")))
+        q = start_stream(deduped, table="t_pinned_width")
+        q.awaitTermination()
+        ops = q.lastProgress["stateOperators"]
+        assert len(ops) == 2
+        assert [op["numShufflePartitions"] for op in ops] == [8, 8]
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, prev)
+
+    unset = "spark.graft.test.pinned_unset"
+    assert spark.conf.get(unset, None) is None
+    with _pinned(spark, unset, "on"):
+        assert spark.conf.get(unset) == "on"
+    assert spark.conf.get(unset, None) is None
 
 
 def test_transform_with_state_modern_api(spark, sf_dir):
@@ -247,9 +278,9 @@ def test_await_first_rows_slow_batch():
     """VERDICT r11 item 1: the rate-source gate must tolerate a first
     micro-batch that takes far longer than the old hard-coded 8 s.
     Replays a simulated timeline where the first batch commits at
-    t=30 s (a loaded 32-core host) against the default 90 s deadline —
-    no real stream, injectable clock/sleep."""
-    from dask_lambda_example_spark.streaming.pipeline import _await_first_rows
+    t=30 s (a loaded 32-core host) against the rate smoke's 90 s
+    deadline — no real stream, injectable clock/sleep."""
+    from dask_lambda_example_spark.streaming.pipeline import _await_rows
 
     class FakeQuery:
         def __init__(self, lands_at: float, clock):
@@ -272,43 +303,18 @@ def test_await_first_rows_slow_batch():
         def sleep(self, s):
             self.now += s
 
-    # slow first batch (t=30) inside the default deadline → True, and
+    # slow first batch (t=30) inside the 90 s deadline → True, and
     # the wait stops the moment the batch lands (no full-deadline sleep)
     clk = FakeClock()
     q = FakeQuery(lands_at=30.0, clock=clk)
-    assert _await_first_rows(q, _clock=clk.time, _sleep=clk.sleep) is True
+    assert _await_rows(q, 1, 90.0, _clock=clk.time, _sleep=clk.sleep) is True
     assert 30.0 <= clk.now < 31.0
     # a batch that never lands → False exactly at the deadline
     clk = FakeClock()
     q = FakeQuery(lands_at=1e9, clock=clk)
-    assert _await_first_rows(q, deadline_s=12.0,
-                             _clock=clk.time, _sleep=clk.sleep) is False
+    assert _await_rows(q, 1, deadline_s=12.0,
+                       _clock=clk.time, _sleep=clk.sleep) is False
     assert clk.now >= 12.0
-    # env knob overrides the default deadline
-    import os
-    old = os.environ.get("SPARK_GRAFT_STREAM_FIRST_BATCH_S")
-    os.environ["SPARK_GRAFT_STREAM_FIRST_BATCH_S"] = "45"
-    try:
-        clk = FakeClock()
-        q = FakeQuery(lands_at=40.0, clock=clk)
-        assert _await_first_rows(q, _clock=clk.time,
-                                 _sleep=clk.sleep) is True
-        clk = FakeClock()
-        q = FakeQuery(lands_at=50.0, clock=clk)
-        assert _await_first_rows(q, _clock=clk.time,
-                                 _sleep=clk.sleep) is False
-        # a typo'd env value must degrade to the 90 s default instead
-        # of raising before the gate can poll (round-12 review)
-        os.environ["SPARK_GRAFT_STREAM_FIRST_BATCH_S"] = "ninety"
-        clk = FakeClock()
-        q = FakeQuery(lands_at=60.0, clock=clk)
-        assert _await_first_rows(q, _clock=clk.time,
-                                 _sleep=clk.sleep) is True
-    finally:
-        if old is None:
-            del os.environ["SPARK_GRAFT_STREAM_FIRST_BATCH_S"]
-        else:
-            os.environ["SPARK_GRAFT_STREAM_FIRST_BATCH_S"] = old
 
 
 def test_rows_only_gates_under_load(spark, sf_dir):

@@ -22,10 +22,7 @@ from dask_lambda_example_spark.operators.multimodal import (
     FAKE_IMAGE_MAGIC,
     decode_image_stub,
 )
-from dask_lambda_example_spark.operators.timeseries import (
-    asof_join_backward,
-    asof_join_forward,
-)
+from dask_lambda_example_spark.operators.timeseries import asof_join
 
 
 def test_vector_expressions(spark):
@@ -89,10 +86,12 @@ def test_asof_directions(spark):
     right = spark.createDataFrame(
         [(10, 3, 100), (10, 7, 200)], "k long, rt long, payload long").select(
         "k", F.timestamp_seconds("rt").alias("rt"), "payload")
-    b = asof_join_backward(left, right, "k", "k", "t", "rt", ["payload"])
-    f = asof_join_forward(left, right, "k", "k", "t", "rt", ["payload"])
+    b = asof_join(left, right, "k", "k", "t", "rt", ["payload"], "backward")
+    f = asof_join(left, right, "k", "k", "t", "rt", ["payload"], "forward")
     assert b.first().payload == 100  # latest at-or-before t=5 is rt=3
     assert f.first().payload == 200  # earliest at-or-after t=5 is rt=7
+    with pytest.raises(ValueError):
+        asof_join(left, right, "k", "k", "t", "rt", ["payload"], "nearest")
 
 
 def test_decode_stub_seam():
