@@ -298,10 +298,6 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
                  for f in table_files(sf_dir, name, pattern="*"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every driver table as a temp view for the SQL API."""
     for t in TABLES:

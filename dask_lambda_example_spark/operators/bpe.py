@@ -223,6 +223,7 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
 # at 100 TB (vocab in the millions) the same rule widens the loop to
 # real parallelism. Same metadata-driven dispatch idea as rank_auto.
 BPE_VOCAB_ROWS_PER_PART = 65536
+BPE_LOCAL_VOCAB_MAX = 200_000  # vocabularies up to this train on the driver
 
 
 def train_bpe(spark: SparkSession, sf_dir: str,
@@ -234,8 +235,6 @@ def train_bpe(spark: SparkSession, sf_dir: str,
     ``localCheckpoint`` per round keeps the lineage flat across the
     iterative loop; the loop width follows the measured vocabulary
     size, not the corpus."""
-    import os
-
     key = (sf_dir, n_merges, _corpus_fingerprint(sf_dir))
     if key in _MERGE_CACHE:
         return _MERGE_CACHE[key]
@@ -244,14 +243,13 @@ def train_bpe(spark: SparkSession, sf_dir: str,
 
     # Metadata dispatch (the rank_auto pattern): below the threshold the
     # word-count table fits comfortably on the driver — collect it
-    # (bounded by the knob) and run the iterations locally, which is
-    # how production tokenizer trainers work once the distributed count
-    # is done. Above it, run the loop distributed. Both paths implement
-    # identical semantics (pytest forces the distributed path via the
-    # knob and compares merge-by-merge).
-    local_max = int(os.environ.get("SPARK_GRAFT_BPE_LOCAL_VOCAB_MAX",
-                                   "200000"))
-    if n_vocab <= local_max:
+    # (bounded by ``BPE_LOCAL_VOCAB_MAX``) and run the iterations
+    # locally, which is how production tokenizer trainers work once the
+    # distributed count is done. Above it, run the loop distributed.
+    # Both paths implement identical semantics (pytest forces the
+    # distributed path by lowering the bound and compares
+    # merge-by-merge).
+    if n_vocab <= BPE_LOCAL_VOCAB_MAX:
         counts = {r["word"]: int(r["cnt"]) for r in wc.collect()}
         merges = train_bpe_reference(counts, n_merges)
         _MERGE_CACHE[key] = merges

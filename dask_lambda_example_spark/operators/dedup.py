@@ -25,9 +25,6 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
-import os
-import uuid
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -132,26 +129,15 @@ def shingles(df: DataFrame) -> DataFrame:
 SHINGLES_SQL = _gram_sets_sql(3)
 
 
-def shingle_df_cap() -> int | None:
-    """Optional hot-shingle document-frequency cap for the near-dup
-    candidate generators (``SPARK_GRAFT_SHINGLE_MAX_DF``).
-
-    At web scale a handful of boilerplate shingles ("all rights
-    reserved …") appear in millions of documents; their posting lists
-    defeat both AQE skew-splitting (one straggler task) and the pair
-    expansion (one list of length m contributes m² candidates). The
-    standard defense (Gopher/CCNet-style pipelines) is to DROP shingles
-    above a df cap before pair expansion: a shingle shared by that many
-    documents carries no near-dup signal. Unset (the default — and in
-    every oracle-parity run) the generators are exact.
-    """
-    v = os.environ.get("SPARK_GRAFT_SHINGLE_MAX_DF")
-    return int(v) if v else None
-
-
 def drop_stop_shingles(tok: DataFrame, max_df: int) -> DataFrame:
     """Drop (doc_id, token) postings whose token's document frequency
     exceeds ``max_df`` — BEFORE any posting list is materialized.
+
+    At web scale a handful of boilerplate shingles ("all rights
+    reserved …") appear in millions of documents; their posting lists
+    defeat both AQE skew-splitting and the pair expansion (a list of
+    length m contributes m² candidates), and a shingle shared by that
+    many documents carries no near-dup signal.
 
     Two passes, both safe at 100 TB: the df count is an ordinary
     partial-aggregated shuffle of (token, count) pairs, and the viral
@@ -164,24 +150,6 @@ def drop_stop_shingles(tok: DataFrame, max_df: int) -> DataFrame:
     viral = (tok.groupBy("token").agg(F.count("*").alias("_df"))
              .filter(F.col("_df") > max_df).select("token"))
     return tok.join(viral, "token", "left_anti")
-
-
-def materialize(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
-    """Pin a multi-consumer intermediate: ``.cache()`` locally, or a
-    parquet checkpoint when ``SPARK_GRAFT_CHECKPOINT_DIR`` is set.
-
-    ``.cache()`` is the right local default, but at cluster scale cache
-    eviction silently recomputes the full lineage per consumer and the
-    cached blocks die with their executors. The 100 TB path writes the
-    intermediate once and re-scans it (columnar, spill-free, survives
-    executor loss, truncates the lineage for AQE).
-    """
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not ckpt_dir:
-        return df.cache()
-    path = os.path.join(ckpt_dir, f"{name}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(path)
-    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -410,14 +378,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``shingles``); residual hot shingles are AQE-skew-split, and the
     MinHash variant below is the designed escape for true web scale."""
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    tok = shingles(d)
-    cap = shingle_df_cap()
-    if cap is not None:
-        # hot-shingle defense (unset in parity runs). Set sizes keep the
-        # PRE-cap sz, so the reported jaccard is a lower bound — dropped
-        # shingles can only remove intersection evidence, never add it.
-        tok = drop_stop_shingles(tok, cap)
-    return _posting_jaccard(tok)
+    return _posting_jaccard(shingles(d))
 
 
 STOP_SHINGLE_DF_CAP = 5  # fixed cap for the oracle-paired variant below
@@ -509,20 +470,16 @@ def _verify_sql(a: str, b: str) -> str:
     {_scored_sql(a, b)}"""
 
 
-def _mh_bands(spark: SparkSession, d: DataFrame,
-              name: str) -> tuple[DataFrame, DataFrame]:
+def _mh_bands(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(tok, bands): the pinned shingle index of ``d`` and its LSH band
     index (doc_id, band_id, band_val), 8 rows per doc — shared by the
     all-pairs query (``dedup_minhash_lsh_pairs``) and the incremental
     batch-vs-index variant (``dedup_incremental_minhash``).
 
     The shingle index feeds three consumers (signature build + both
-    sides of the verification join); materialize() pins it once —
-    .cache() locally (CacheManager keys on the logical plan, so
-    repeated invocations share one entry), or a parquet checkpoint
-    when SPARK_GRAFT_CHECKPOINT_DIR is set (the 100 TB path: the
-    signature-build input is written once between stages instead of
-    living in evictable executor memory).
+    sides of the verification join); ``.cache()`` pins it once
+    (CacheManager keys on the logical plan, so repeated invocations
+    share one entry) without launching a job while the query builds.
 
     Signature: universal-hashing family g_i = (h1 + i·h2) mod 2³²
     from TWO md5-derived hashes per shingle (not 16 md5 calls — the
@@ -531,15 +488,8 @@ def _mh_bands(spark: SparkSession, d: DataFrame,
     re-evaluating md5. One aggregation pass computes all 16 mins. The
     aggregates and the band array are SQL strings parsed by the JVM,
     not Column trees built call by call."""
-    tok = materialize(shingles(d), spark, name)
-    cap = shingle_df_cap()
-    # hot-shingle defense (unset in parity runs): viral shingles are
-    # dropped before SIGNATURE build — their minhashes otherwise
-    # collapse unrelated documents into shared bands. Exact
-    # verification still uses the full index (tok), so emitted
-    # jaccard values stay exact; only candidate RECALL changes.
-    tok_sig = drop_stop_shingles(tok, cap) if cap is not None else tok
-    th = tok_sig.select(
+    tok = shingles(d).cache()
+    th = tok.select(
         "doc_id",
         hex32(F.col("token")).alias("h1"),
         hex32(F.concat(F.col("token"), F.lit("#"))).alias("h2"))
@@ -571,7 +521,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     including LSH's false negatives — rather than probabilistic.
     """
     d = load_table(spark, sf_dir, "documents", parallel=True)
-    tok, bands = _mh_bands(spark, d, "minhash_shingles")
+    tok, bands = _mh_bands(d)
     # candidate pairs from grouped band posting lists (one pass over
     # bands instead of a band self-join that would rebuild signatures
     # twice); band groups are tiny, so the in-row expansion is bounded
@@ -629,9 +579,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates come from a plain (band_id, band_val) equi-join of
     batch bands against index bands — never corpus×corpus, never a
     posting-list self-join — and exact Jaccard verification touches
-    only candidate postings. Document bytes never shuffle; the
-    hot-shingle df cap (``SPARK_GRAFT_SHINGLE_MAX_DF``) applies to the
-    signature build exactly as in the all-pairs query. The DuckDB
+    only candidate postings. Document bytes never shuffle. The DuckDB
     oracle replicates the full pipeline (same hash family, banding,
     verify), so LSH's false negatives are part of the checked
     contract."""
@@ -639,7 +587,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcnum = F.substring(F.col("source"), 4, 10).cast("int")
     flags = d.select(
         "doc_id", (srcnum >= INCR_INCOMING_MIN_SRC).alias("is_incoming"))
-    tok, bands = _mh_bands(spark, d, "incr_minhash_shingles")
+    tok, bands = _mh_bands(d)
 
     # The band build plans ONCE PER SIDE of the candidate join (2×16
     # partial_min aggregates in the executed plan) — but that is NOT
@@ -1612,8 +1560,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("g"))
     # The capped gram table feeds five consumers (two anchor sides, two
     # match sides, the candidate re-derivation) and the plan shows 8
-    # parquet scans with zero ReusedExchange — but pinning it via
-    # materialize() measured SLOWER on a single execution (round-13,
+    # parquet scans with zero ReusedExchange — but pinning it with
+    # .cache() measured SLOWER on a single execution (round-13,
     # same-session pairs: sf1 29.1 s vs 9.5 s lazy, sf10 66.8 s vs
     # 40.6 s lazy): the explode is a cheap columnar projection that
     # parallelizes perfectly, while the cache pays a full

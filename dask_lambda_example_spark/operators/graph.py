@@ -26,7 +26,6 @@ from footer metadata.
 
 from __future__ import annotations
 
-import os
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -121,23 +120,13 @@ def _edge_ckpt_level(e_bound: int):
     unchanged: a multi-TB edge list is spill-tier data, never
     PINNED executor-storage-tier.
 
-    ROLLBACK TRIGGER (ADVICE r13: the green re-run of the r9 failure
-    shape is one sample of a nondeterministic OOM, and under the
-    unified memory manager cached blocks are protected from execution
-    eviction up to ``spark.memory.storageFraction`` — a per-context
-    core conf this query cannot lower from a ``newSession``): if ANY
-    battery run OOMs the SparkContext with graph checkpoints resident,
-    set ``SPARK_GRAFT_EDGE_CKPT_LEVEL=DISK_ONLY`` — that restores the
-    round-11 hard guard verbatim (no storage blocks in the heap, the
-    priced 1.454x rcte trade) without a code change, and the incident
-    wall belongs in SCALE.md next to the env flip."""
+    ROLLBACK: if a battery run OOMs the SparkContext with graph
+    checkpoints resident, restoring round 11's ``DISK_ONLY`` guard is
+    a one-line edit of the return below."""
     from pyspark import StorageLevel
 
     if e_bound <= PR_BROADCAST_MAX_EDGE_ROWS:
         return None
-    level = os.environ.get("SPARK_GRAFT_EDGE_CKPT_LEVEL", "")
-    if level:
-        return getattr(StorageLevel, level)
     return StorageLevel.MEMORY_AND_DISK
 
 

@@ -25,10 +25,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Every ``PushedFilters: [...]`` entry across the plan's scans —
     predicates the parquet/orc reader skips row groups with."""

@@ -58,77 +58,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQ
     return deco
 
 
-# The verification driver samples the FIRST 50 entries of queries() each
-# round. The cumulative union of CORRECTNESS_r01-r11 covers ALL
-# oracle-gated queries green with zero never-verified names (r11: 44
-# full green, the one red row being the rows-only rate-source gate —
-# fixed this round) — the backlog is ZERO and REVERIFY drained with it.
-# The round-12 curated head is therefore MINIMAL: just the six
-# rows-only queries (no oracle → the driver records only that they
-# ran; that weak signal is re-earned EVERY round, since a
-# no-correctness-signal row never marks a query verified — ADVICE r3),
-# leaving ~44 surplus window slots that auto-fill with the
-# STALEST-verified names — regression detection. tests/test_units.py::
-# test_registry_priority_rotation enforces the window invariants.
-PRIORITY_QUERIES = (
-    # rows-only queries: no oracle exists, so verification never sticks —
-    # the driver re-runs them every round. text_bpe_train/encode joined
-    # the permanent re-earn set in r7 (iterative argmax is not
-    # SQL-expressible; train is pytest-exact vs a pure-Python reference,
-    # encode carries a worker-side rank-replay exact gate).
-    # agg_approx_sketches' invariant gate moved from the query body to
-    # pytest (test_approx_sketches_within_error_bounds) in r11 —
-    # VERDICT r10 item 6; the rows-only re-earn is unchanged.
-    # r12: stream_rate_source_smoke was the ONE red driver row of the
-    # r11 window — its first-batch wait grew from a hard-coded 8 s to
-    # an env-tunable 90 s poll (VERDICT r11 item 1) and the gate is now
-    # CI-exercised under a saturated scheduler
-    # (test_rows_only_gates_under_load), so the re-earn holds on a
-    # loaded driver host too.
-    "agg_approx_sketches", "sim_mllib_brp_join", "mm_decode_fake_images",
-    "stream_rate_source_smoke", "text_bpe_train", "text_bpe_encode",
-    # The r14 additions earned green rows in CORRECTNESS_r14/r15.json
-    # and rotate out, except the incremental-ANN trio, whose r15 rows
-    # are red: the r15 snapshot crashed them (half-migrated coarse-index
-    # refactor, since reverted to the r14 form). They lead the head
-    # together with the REVERIFY names below.
-    "sim_ivf_incremental_ingest", "sim_ivf_incremental_rerank_search",
-    "sim_ivf_incremental_rerank_recall",
-    # REVERIFY re-earn: the similarity family's recall audits, exact
-    # top-k searches and refine stage now share one implementation each.
-    "sim_cosine_topk_bruteforce", "sim_search_auto",
-    "sim_ann_recall_report", "sim_ivf_recall_report",
-    "sim_ivf_recall_multiprobe", "sim_ivf_recall_adaptive",
-    "sim_pq_rerank_search", "sim_pq_rerank_recall", "sim_pq_recall_report",
-    "sim_ivfpq_rerank_search", "sim_ivf_incremental_recall",
-    # REVERIFY re-earn: the IVF searches, the centroid build and IVF-PQ
-    # now read the one coarse index and the one cell-pruned scan.
-    "sim_ivf_centroids", "sim_ivf_search", "sim_ivf_search_multiprobe",
-    "sim_ivf_search_adaptive", "sim_ivf_adaptive_probe_stats",
-    "sim_ivfpq_search",
-    # REVERIFY re-earn: the cosine joins now share one scorer and one
-    # top-k cut, and their scans rebalance from estimated pair counts.
-    "sim_threshold_join", "sim_ann_signlsh_topk",
-    "dedup_embedding_neardup", "dedup_semdedup_cells",
-    # REVERIFY re-earn: the PQ family now shares one encode, one ADC
-    # ranking and one oracle CTE chain.
-    "sim_pq_adc_search",
-    # REVERIFY re-earn: the text near-dup queries now share one word
-    # n-gram builder, one Jaccard core and one set of oracle CTEs.
-    "dedup_jaccard_pairs", "dedup_jaccard_stopshingle",
-    "dedup_minhash_lsh_pairs", "dedup_incremental_minhash",
-    "dedup_cluster_cc", "dedup_decontaminate",
-    "dedup_repeated_ngram_spans", "dedup_repeated_ngram_spans_hashed",
-    "dedup_substring_spans", "dedup_substring_cutlist",
-    "pipeline_curation_funnel_cut",
-    # REVERIFY re-earn: the PageRank queries now share one edge
-    # materialization, one recurrence loop and one footer dispatch, and
-    # the reachability query reads the same trade edge build.
-    "graph_pagerank", "graph_pagerank_copartitioned", "graph_pagerank_auto",
-    "graph_reachability_rcte", "graph_crawl_pagerank",
-    "graph_crawl_pagerank_copartitioned", "graph_crawl_pagerank_auto",
-)
-
 # CORRECTNESS artifacts the rotation derives its state from — pinned to
 # the rounds committed at HEAD, so a stray working-tree file (e.g. the
 # current round's artifact, written by the driver before it re-reads
@@ -268,24 +197,34 @@ def driver_verified() -> set[str]:
     return {n for n, ok in _verdicts().items() if ok} - set(REVERIFY)
 
 
+def priority_queries() -> list[str]:
+    """The head of the driver's window: the rows-only queries (no
+    oracle, so the driver records only that they ran and that weak
+    signal is re-earned every round) in registration order, then
+    ``REVERIFY``."""
+    _ensure_loaded()
+    return [*(n for n, s in QUERIES.items() if s.oracle is None), *REVERIFY]
+
+
 def _ordered() -> list[QuerySpec]:
     """Registry order = the driver's sample order (it checks the FIRST
     50 entries of ``queries()`` each round). Rotation is automatic and
     self-maintaining: never-driver-verified names come first —
-    ``PRIORITY_QUERIES`` (the curated head for this round's window),
-    then the remaining unverified names in registration order — and
+    ``priority_queries()`` (the head for this round's window), then
+    the remaining unverified names in registration order — and
     verified names re-register after them ordered stalest-green-round
     first, so when fewer than 50 unverified names remain the driver's
     surplus slots automatically re-sample the longest-unchecked green
     names (regression detection rather than dead slots).
     """
     _ensure_loaded()
-    missing = [n for n in PRIORITY_QUERIES if n not in QUERIES]
+    missing = [n for n in REVERIFY if n not in QUERIES]
     if missing:
-        raise RuntimeError(f"PRIORITY_QUERIES names not registered: {missing}")
+        raise RuntimeError(f"REVERIFY names not registered: {missing}")
     green = driver_verified()
-    pri = set(PRIORITY_QUERIES)
-    head = [n for n in PRIORITY_QUERIES if n not in green]
+    priority = priority_queries()
+    pri = set(priority)
+    head = [n for n in priority if n not in green]
     unverified = [n for n in QUERIES if n not in green and n not in pri]
     last = _last_green_round()
     reg_pos = {n: i for i, n in enumerate(QUERIES)}

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dask_lambda_example_spark.io import write_hive_partitioned_json
+
 PAYLOAD_SCHEMA = T.StructType([T.StructField("count", T.LongType(), True)])
 
 PARTITION_COLS = ["year", "month", "day", "hour", "minute", "second"]
@@ -50,9 +52,10 @@ def write_producer_layout(spark: SparkSession, path: str,
     Spark's ``partitionBy`` emits exactly the ``key=value`` scheme the
     producer builds by hand (``src/lambda_producer.py:23``), and every
     later scan partition-prunes on it."""
-    (producer_payloads(spark, n_files)
-     .repartition(1)  # one tiny file per partition dir, like the producer
-     .write.mode("overwrite").partitionBy(*PARTITION_COLS).json(path))
+    write_hive_partitioned_json(
+        # one tiny file per partition dir, like the producer
+        producer_payloads(spark, n_files).repartition(1), path,
+        PARTITION_COLS, mode="overwrite")
 
 
 def read_producer_layout(spark: SparkSession, path: str) -> DataFrame:

@@ -44,6 +44,9 @@ from dask_lambda_example_spark.session import scratch_mkdtemp
 
 _COUNTER = {"n": 0}
 
+# State stores per stateful operator, pinned by ``start_stream``.
+STREAM_STATE_PARTITIONS = 8
+
 
 def _mem_table(prefix: str) -> str:
     _COUNTER["n"] += 1
@@ -90,17 +93,17 @@ def start_stream(df: DataFrame, *, mode: str = "complete",
     checkpoint-file overhead). The query copies the session conf at
     start, and the count is baked into its checkpoint at the first
     batch (throwaway here), so pinning per start is safe; at cluster
-    scale raise ``SPARK_GRAFT_STREAM_PARTITIONS`` to O(cores) *before*
-    the first run against a durable checkpoint — it cannot change
-    across restarts of the same checkpoint."""
+    scale raise ``STREAM_STATE_PARTITIONS`` to O(cores) *before* the
+    first run against a durable checkpoint — it cannot change across
+    restarts of the same checkpoint."""
     w = (df.writeStream.outputMode(mode)
          .option("checkpointLocation", scratch_mkdtemp("ckpt_")))
     w = (w.format("memory").queryName(table) if batch is None
          else w.foreachBatch(batch))
     w = (w.trigger(availableNow=True) if every is None
          else w.trigger(processingTime=every))
-    width = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    with _pinned(df.sparkSession, "spark.sql.shuffle.partitions", width):
+    with _pinned(df.sparkSession, "spark.sql.shuffle.partitions",
+                 str(STREAM_STATE_PARTITIONS)):
         return w.start()
 
 

@@ -112,7 +112,7 @@ def test_foreach_batch_sink(spark, sf_dir):
         "click", "error", "purchase", "signup", "view"}
 
 
-def test_stream_runner_pins_state_width(spark, sf_dir, monkeypatch):
+def test_stream_runner_pins_state_width(spark, sf_dir):
     """``start_stream`` runs every stateful operator at the pinned state
     width (8 stores per operator) whatever the session's shuffle width,
     and leaves the session's width as it found it; ``_pinned`` unsets a
@@ -120,7 +120,6 @@ def test_stream_runner_pins_state_width(spark, sf_dir, monkeypatch):
     from dask_lambda_example_spark.streaming.pipeline import (
         _pinned, start_stream)
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, "32")

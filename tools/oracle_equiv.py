@@ -21,7 +21,7 @@ import sys
 
 import duckdb
 
-from parity_sweep import SF, TABLES
+from parity_sweep import SF
 
 SCALES = ("sf0.001", "sf0.01", "sf0.1")
 
@@ -37,6 +37,7 @@ def main() -> int:
     tag, outdir = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
+    from dask_lambda_example_spark.io import TABLES
     from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
 
     _ensure_loaded()

@@ -30,9 +30,6 @@ import duckdb
 
 SF = "/root/testdata/sf0.01"
 
-TABLES = ("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")
-
 # pandas dtype kinds that the driver's hasher would treat as distinct
 # (numpy kind codes: i=int, u=uint, f=float, b=bool, O=object, M=datetime)
 _KIND_GROUPS = {
@@ -120,6 +117,7 @@ def main() -> int:
     sys.path.append(str(Path(__file__).resolve().parent.parent))
     from pyspark.sql import SparkSession
 
+    from dask_lambda_example_spark.io import TABLES
     from dask_lambda_example_spark.registry import oracle_queries, spark_queries
 
     argv = sys.argv[1:]
