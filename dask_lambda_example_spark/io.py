@@ -14,6 +14,7 @@ at 100 TB).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -298,10 +299,44 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
                  for f in table_files(sf_dir, name, pattern="*"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view for the SQL API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+def bind_tables(spark: SparkSession, sf_dir: str,
+                *tables: str) -> dict[str, str]:
+    """Temp views over driver tables for ``spark.sql``; returns
+    ``{table: view}``, the names a query text formats in.
+
+    A view is named per (``sf_dir``, table), ``sg_<8 hex of
+    sha1(sf_dir)>_<table>``, so two sf_dirs in one session (a path and
+    its ``file://`` form, two scale tiers) never rebind each other, and
+    a caller's own ``orders`` view is never replaced. Each view is
+    registered once per session and bound again only when its
+    (``table_fingerprint``, ``_PARQUET_INFERENCE_CONFS`` values) key
+    changes; the memo lives on the session object, like
+    ``ensure_portable_session``'s mark. A hit runs no ``load_table``
+    and registers nothing: the view's plan, with its resolved file
+    index, serves every later query. A table the driver cannot stat
+    locally (an object-store URI) has no fingerprint and is bound again
+    on every call, as ``table_schema`` infers it again."""
+    ensure_portable_session(spark)
+    bound = getattr(spark, "_spark_graft_views", None)
+    if bound is None:
+        bound = {}
+        try:
+            spark._spark_graft_views = bound
+        except AttributeError:  # pragma: no cover - session forbids them
+            pass
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS)
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
+    views = {}
+    for t in tables:
+        view = views[t] = f"sg_{tag}_{t}"
+        try:
+            key = (table_fingerprint(sf_dir, t), confs)
+        except FileNotFoundError:
+            key = None
+        if key is None or bound.get(view) != key:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(view)
+            bound[view] = key
+    return views
 
 
 def write_hive_partitioned_json(df: DataFrame, path: str,

@@ -17,8 +17,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import bind_tables, load_table
 from dask_lambda_example_spark.registry import query
+
+
+_Q1 = """
+    SELECT l_returnflag, l_linestatus,
+           round(sum(l_quantity), 6) AS sum_qty,
+           round(sum(l_extendedprice), 6) AS sum_base_price,
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS sum_disc_price,
+           round(sum(l_extendedprice * (1 - l_discount) * (l_tax + 1)), 6)
+             AS sum_charge,
+           round(avg(l_quantity), 6) AS avg_qty,
+           round(avg(l_extendedprice), 6) AS avg_price,
+           round(avg(l_discount), 6) AS avg_disc,
+           count(*) AS count_order
+    FROM {lineitem}
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+    GROUP BY l_returnflag, l_linestatus
+"""
 
 
 @query(
@@ -41,22 +58,8 @@ from dask_lambda_example_spark.registry import query
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: 2-key groupBy + 8 aggregates — the canonical
     scan-heavy partial+final aggregation (headline bench query)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 6).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 6).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 6).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
+    return spark.sql(_Q1.format(
+        **bind_tables(spark, sf_dir, "lineitem")))
 
 
 @query(
@@ -354,12 +357,11 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API (same Catalyst plan)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_gs")
     return spark.sql("""
         SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 6) AS sum_qty
-        FROM li_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """)
+    """.format(**bind_tables(spark, sf_dir, "lineitem")))
 
 
 @query(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import bind_tables, load_table
 from dask_lambda_example_spark.registry import query
 
 
@@ -510,6 +510,22 @@ def join_band_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_Q3 = """
+    SELECT /*+ BROADCAST(c) */ l_orderkey,
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue,
+           o_orderdate
+    FROM {lineitem} l
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    WHERE c.c_mktsegment = 'BUILDING'
+      AND o.o_orderdate < TIMESTAMP '1998-03-15'
+      AND l.l_shipdate > TIMESTAMP '1995-03-15'
+    GROUP BY l_orderkey, o_orderdate
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+"""
+
+
 @query(
     "q3_shipping_priority",
     oracle="""
@@ -531,22 +547,25 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 analog: selective dim filter → fact join → agg → top-k.
     customer (filtered) broadcasts; lineitem⋈orders shuffles once on
     orderkey; top-10 via TakeOrderedAndProject. Headline bench query."""
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-             .alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
+    return spark.sql(_Q3.format(
+        **bind_tables(spark, sf_dir, "customer", "orders", "lineitem")))
+
+
+_Q5 = """
+    SELECT /*+ BROADCAST(c, s, n, r) */ n_name,
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue
+    FROM {lineitem} l
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN {supplier} s
+      ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+    JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+    JOIN {region} r ON n.n_regionkey = r.r_regionkey
+    WHERE r.r_name = 'ASIA'
+      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate < TIMESTAMP '1998-01-01'
+    GROUP BY n_name
+"""
 
 
 @query(
@@ -570,25 +589,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 analog: 6-table star with a co-nationality condition.
     All dims broadcast; only lineitem⋈orders shuffles. Headline bench
     query."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), (li.l_suppkey == s.s_suppkey)
-              & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-             .alias("revenue"))
-    )
+    return spark.sql(_Q5.format(
+        **bind_tables(spark, sf_dir, "customer", "orders", "lineitem",
+                      "supplier", "nation", "region")))
 
 
 @query(

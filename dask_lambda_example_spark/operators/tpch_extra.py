@@ -7,8 +7,12 @@ plan shapes: filter-only scan aggregation (Q6), multi-way join with
 top-k (Q10), conditional aggregation over a join (Q14), group-having
 membership subquery (Q18), disjunctive join predicates (Q19).
 
-Each query's Spark side is the DataFrame API (the SQL dialect surface is
-covered by ``subqueries.py``); the oracle is the matching ANSI SQL.
+Each query's Spark side is ONE hinted Spark SQL statement over the
+session's table views (``io.bind_tables``), with the join order, the
+``/*+ BROADCAST */`` hints and the semi join of the DataFrame-API
+bodies it replaced, so the physical plans are unchanged
+(``tests/test_plans.py::test_tpch_plan_shape``); the oracle is a
+separate ANSI SQL text for DuckDB.
 
 Scale notes per query in the docstrings; the common rules: filters push
 to the scan, dims broadcast, aggregations combine map-side, top-k is
@@ -18,10 +22,20 @@ TakeOrderedAndProject.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import bind_tables
 from dask_lambda_example_spark.registry import query
+
+
+_Q6 = """
+    SELECT round(sum(l_extendedprice * l_discount), 6) AS revenue,
+           count(*) AS n_lines
+    FROM {lineitem}
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l_shipdate < TIMESTAMP '1997-01-01'
+      AND l_discount >= 0.05D AND l_discount <= 0.07D
+      AND l_quantity < 24
+"""
 
 
 @query(
@@ -41,17 +55,23 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown benchmark. All four predicates reach the parquet reader
     (row-group skipping); the aggregate is a single partial+final
     reduction, no shuffle of data rows at all."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 6)
-             .alias("revenue"),
-             F.count("*").alias("n_lines"))
-    )
+    return spark.sql(_Q6.format(
+        **bind_tables(spark, sf_dir, "lineitem")))
+
+
+_Q10 = """
+    SELECT /*+ BROADCAST(c) */ c_custkey, c_name,
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue,
+           round(c_acctbal, 6) AS acctbal
+    FROM {customer} c
+    JOIN {orders} o ON c.c_custkey = o.o_custkey
+    JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND l.l_returnflag = 'R'
+    GROUP BY c_custkey, c_name, c_acctbal
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+"""
 
 
 @query(
@@ -75,23 +95,20 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     items. Customer (small) broadcasts onto the orders⋈lineitem join;
     the returnflag and date filters push below the joins; final top-20
     is TakeOrderedAndProject with a deterministic tie-break."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= "1996-01-01")
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R")
-    return (
-        F.broadcast(c)
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-             .alias("revenue"))
-        .select("c_custkey", "c_name", "revenue",
-                F.round("c_acctbal", 6).alias("acctbal"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
+    return spark.sql(_Q10.format(
+        **bind_tables(spark, sf_dir, "customer", "orders", "lineitem")))
+
+
+_Q14 = """
+    SELECT /*+ BROADCAST(p) */
+           round(sum(CASE WHEN p_type = 'PROMO'
+                          THEN l_extendedprice * (1 - l_discount)
+                          ELSE 0 END) * 100.0D
+                 / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_pct
+    FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
+    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l.l_shipdate < TIMESTAMP '1996-07-01'
+"""
 
 
 @query(
@@ -111,16 +128,21 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promo share of revenue — conditional aggregation over
     a fact⋈dim join. Part broadcasts; the CASE folds into the aggregate
     so one pass computes both numerator and denominator."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1996-07-01"))
-    p = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(F.round(100.0 * F.sum(promo) / F.sum(rev), 6).alias("promo_pct"))
-    )
+    return spark.sql(_Q14.format(
+        **bind_tables(spark, sf_dir, "lineitem", "part")))
+
+
+_Q18 = """
+    SELECT o_orderkey, o_custkey,
+           round(o_totalprice, 6) AS totalprice,
+           round(sum(l_quantity), 6) AS total_qty
+    FROM {orders} o
+    LEFT SEMI JOIN (SELECT l_orderkey, sum(l_quantity) AS q FROM {lineitem}
+                    GROUP BY l_orderkey HAVING q > 150) big
+      ON o.o_orderkey = big.l_orderkey
+    JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+    GROUP BY o_orderkey, o_custkey, o_totalprice
+"""
 
 
 @query(
@@ -141,18 +163,20 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a group-having membership subquery. The inner aggregate reuses the
     same l_orderkey partitioning as the join (one shuffle serves both);
     Catalyst plans the IN as a left-semi join."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-           .filter(F.col("q") > 150).select("l_orderkey"))
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey, "left_semi")
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy("o_orderkey", "o_custkey", "o_totalprice")
-        .agg(F.round(F.sum("l_quantity"), 6).alias("total_qty"))
-        .select("o_orderkey", "o_custkey",
-                F.round("o_totalprice", 6).alias("totalprice"), "total_qty")
-    )
+    return spark.sql(_Q18.format(
+        **bind_tables(spark, sf_dir, "orders", "lineitem")))
+
+
+_Q19 = """
+    SELECT /*+ BROADCAST(p) */
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue,
+           count(*) AS n_lines
+    FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
+    WHERE (p_brand = 'Brand#1' AND (p_size >= 1 AND p_size <= 15)
+           AND (l_quantity >= 1 AND l_quantity <= 20))
+       OR (p_brand = 'Brand#9' AND (p_size >= 10 AND p_size <= 30)
+           AND (l_quantity >= 10 AND l_quantity <= 35))
+"""
 
 
 @query(
@@ -172,16 +196,5 @@ def q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     both join sides. The equi-key still drives a broadcast hash join;
     Catalyst extracts the per-side common filter residues from the OR
     where possible and evaluates the rest post-join."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    cond1 = ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15)
-             & F.col("l_quantity").between(1, 20))
-    cond2 = ((F.col("p_brand") == "Brand#9") & F.col("p_size").between(10, 30)
-             & F.col("l_quantity").between(10, 35))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(cond1 | cond2)
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-             .alias("revenue"),
-             F.count("*").alias("n_lines"))
-    )
+    return spark.sql(_Q19.format(
+        **bind_tables(spark, sf_dir, "lineitem", "part")))

@@ -2,7 +2,8 @@
 adapted to the driver's star schema — no partsupp/commitdate/phone, so
 the "late delivery" predicate becomes ``l_shipdate > o_orderdate + 180
 days`` and Q22's "no orders" becomes "no orders since 1999-07-01",
-which are non-degenerate on the synthetic data).
+which are non-degenerate on the synthetic data: shipdates are weakly
+coupled to order dates, so late + finished selects ~23% of orders).
 
 These add the relational plan shapes the first battery
 (``tpch_extra.py``) doesn't have: correlated EXISTS with an
@@ -21,19 +22,35 @@ Scale notes are per-docstring; the shared rules: the fact table never
 broadcasts, dims and scalar aggregates always do, and every correlated
 subquery is decorrelated into a join keyed on the correlation column
 so it shuffles at most once.
+
+Each query is ONE hinted Spark SQL statement over the session's table
+views (``io.bind_tables``): every broadcast is a ``/*+ BROADCAST */``
+hint, and the pre-aggregations and semi/anti joins are spelled out
+(``LEFT SEMI JOIN``, ``LEFT ANTI JOIN``, CTEs Catalyst inlines), so
+the physical plans are the ones the DataFrame-API bodies had —
+``tests/test_plans.py::test_tpch_plan_shape`` pins their operator
+counts. A build is a handful of py4j calls instead of a Column tree
+per query. The oracle stays an independent ANSI text.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import bind_tables
 from dask_lambda_example_spark.registry import query
 
-# Adapted "late shipment": the synthetic shipdates are weakly coupled to
-# order dates, so 180 days late + finished status selects ~23% of orders.
-_LATE = "l_shipdate > o_orderdate + INTERVAL 180 DAY"
+
+_Q4 = """
+    SELECT o_orderpriority, count(*) AS order_count
+    FROM {orders} o
+    LEFT SEMI JOIN {lineitem} l
+      ON o.o_orderkey = l.l_orderkey
+     AND l.l_shipdate > o.o_orderdate + INTERVAL 180 DAY
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate < TIMESTAMP '1996-04-01'
+    GROUP BY o_orderpriority
+"""
 
 
 @query(
@@ -55,16 +72,21 @@ def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     Planned as a left-semi hash join on l_orderkey with the date
     inequality as the join residual; the quarter filter pushes to the
     orders scan so the semi join probes only ~4% of the fact."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-04-01"))
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        o.join(li, (o.o_orderkey == li.l_orderkey) & F.expr(_LATE),
-               "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
+    return spark.sql(_Q4.format(
+        **bind_tables(spark, sf_dir, "orders", "lineitem")))
+
+
+_Q12 = """
+    SELECT l_returnflag,
+           sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS high_line_count,
+           sum(CASE WHEN NOT o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS low_line_count
+    FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l.l_shipdate < TIMESTAMP '1997-01-01'
+    GROUP BY l_returnflag
+"""
 
 
 @query(
@@ -87,17 +109,19 @@ def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches fold into one aggregate pass; the year filter pushes to
     the lineitem scan, and the join shuffles both sides on orderkey
     once — the groupBy's 3-key output then collapses map-side."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01"))
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"))
-    )
+    return spark.sql(_Q12.format(
+        **bind_tables(spark, sf_dir, "orders", "lineitem")))
+
+
+_Q13 = """
+    SELECT c_count, count(*) AS custdist
+    FROM (SELECT c_custkey, count(o_orderkey) AS c_count
+          FROM {customer} c
+          LEFT JOIN (SELECT * FROM {orders} WHERE o_orderstatus = 'O') o
+            ON o.o_custkey = c.c_custkey
+          GROUP BY c_custkey)
+    GROUP BY c_count
+"""
 
 
 @query(
@@ -119,16 +143,25 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not count(*)) gives the null-safe zero. The first groupBy reuses
     the join's c_custkey partitioning (no extra shuffle); the second
     aggregates a customer-sized input down to ~30 distinct counts."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "O")
-    return (
-        c.join(o, o.o_custkey == c.c_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-    )
+    return spark.sql(_Q13.format(
+        **bind_tables(spark, sf_dir, "customer", "orders")))
+
+
+_Q15 = """
+    WITH rev AS (
+      SELECT l_suppkey AS supplier_no,
+             sum(l_extendedprice * (1 - l_discount)) AS total_revenue
+      FROM {lineitem}
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l_shipdate < TIMESTAMP '1996-04-01'
+      GROUP BY l_suppkey)
+    SELECT /*+ BROADCAST(m, s) */ s_suppkey, s_name,
+           round(total_revenue, 6) AS total_revenue
+    FROM rev
+    JOIN (SELECT max(total_revenue) AS mx FROM rev) m
+      ON rev.total_revenue = m.mx
+    JOIN {supplier} s ON rev.supplier_no = s.s_suppkey
+"""
 
 
 @query(
@@ -154,20 +187,21 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     is supplier-cardinality (tiny after the map-side combine); its max
     is a one-row broadcast joined back with an equality residual, and
     the supplier dim broadcasts onto the winner row(s)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1996-04-01"))
-    rev = (li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-           .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .alias("total_revenue")))
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
-    s = load_table(spark, sf_dir, "supplier")
-    return (
-        rev.join(F.broadcast(mx), rev.total_revenue == mx.mx)
-        .join(F.broadcast(s), F.col("supplier_no") == s.s_suppkey)
-        .select("s_suppkey", "s_name",
-                F.round("total_revenue", 6).alias("total_revenue"))
-    )
+    return spark.sql(_Q15.format(
+        **bind_tables(spark, sf_dir, "lineitem", "supplier")))
+
+
+_Q16 = """
+    SELECT /*+ BROADCAST(bad, p) */ p_brand, p_type, p_size,
+           count(DISTINCT l_suppkey) AS supplier_cnt
+    FROM {lineitem} l
+    LEFT ANTI JOIN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0) bad
+      ON l.l_suppkey = bad.s_suppkey
+    JOIN {part} p ON l.l_partkey = p.p_partkey
+    WHERE p.p_brand <> 'Brand#1' AND p.p_type <> 'PROMO'
+      AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+    GROUP BY p_brand, p_type, p_size
+"""
 
 
 @query(
@@ -192,18 +226,23 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty); part filters broadcast-prune the fact; the distinct
     count is a two-level partial aggregate (distinct expand map-side,
     then merge), never a global distinct shuffle of raw rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45))
-    bad = load_table(spark, sf_dir, "supplier").filter(
-        F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
-        li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
+    return spark.sql(_Q16.format(
+        **bind_tables(spark, sf_dir, "lineitem", "part", "supplier")))
+
+
+_Q17 = """
+    WITH branded AS (
+      SELECT /*+ BROADCAST(p) */ *
+      FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
+      WHERE p.p_brand = 'Brand#3')
+    SELECT /*+ BROADCAST(a) */
+           round(sum(l_extendedprice) / 7.0D, 6) AS avg_yearly
+    FROM branded
+    JOIN (SELECT l_partkey AS ak, avg(l_quantity) * 0.5D AS half_avg
+          FROM branded GROUP BY l_partkey) a
+      ON branded.l_partkey = a.ak
+    WHERE l_quantity < half_avg
+"""
 
 
 @query(
@@ -224,16 +263,28 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (semi-joined first so the avg never touches other brands' rows)
     and broadcast back; the alternative window-over-partkey would
     shuffle the whole fact instead. One scan feeds both sides."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
-    branded = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    avgs = (branded.groupBy(F.col("l_partkey").alias("ak"))
-            .agg((0.5 * F.avg("l_quantity")).alias("half_avg")))
-    return (
-        branded.join(F.broadcast(avgs), F.col("l_partkey") == F.col("ak"))
-        .filter(F.col("l_quantity") < F.col("half_avg"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 6).alias("avg_yearly"))
-    )
+    return spark.sql(_Q17.format(
+        **bind_tables(spark, sf_dir, "lineitem", "part")))
+
+
+_Q21 = """
+    WITH late AS (
+      SELECT l_orderkey, l_suppkey
+      FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+      WHERE o.o_orderstatus = 'F'
+        AND l.l_shipdate > o.o_orderdate + INTERVAL 180 DAY)
+    SELECT /*+ BROADCAST(s) */ s_name, count(*) AS numwait
+    FROM late l1
+    LEFT SEMI JOIN (SELECT l_orderkey AS k2, l_suppkey AS s2
+                    FROM {lineitem}) l2
+      ON l1.l_orderkey = l2.k2 AND l1.l_suppkey <> l2.s2
+    LEFT ANTI JOIN (SELECT l_orderkey AS k3, l_suppkey AS s3 FROM late) l3
+      ON l1.l_orderkey = l3.k3 AND l1.l_suppkey <> l3.s3
+    JOIN {supplier} s ON l1.l_suppkey = s.s_suppkey
+    GROUP BY s_name
+    ORDER BY numwait DESC, s_name
+    LIMIT 20
+"""
 
 
 @query(
@@ -267,29 +318,23 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey shuffle partitioning; the `late` subplan is referenced
     twice and recomputed — cheaper than caching at 100 TB because it
     is already filter-pruned to ~3% of lines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o_f = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F")
-    late = (li.join(o_f, li.l_orderkey == o_f.o_orderkey)
-            .filter(F.expr(_LATE))
-            .select("l_orderkey", "l_suppkey"))
-    l1 = late
-    l2 = li.select(F.col("l_orderkey").alias("k2"),
-                   F.col("l_suppkey").alias("s2"))
-    l3 = late.select(F.col("l_orderkey").alias("k3"),
-                     F.col("l_suppkey").alias("s3"))
-    s = load_table(spark, sf_dir, "supplier")
-    return (
-        l1.join(l2, (l1.l_orderkey == l2.k2) & (l1.l_suppkey != l2.s2),
-                "left_semi")
-        .join(l3, (F.col("l_orderkey") == l3.k3)
-              & (F.col("l_suppkey") != l3.s3), "left_anti")
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(20)
-    )
+    return spark.sql(_Q21.format(
+        **bind_tables(spark, sf_dir, "lineitem", "orders", "supplier")))
+
+
+_Q22 = """
+    SELECT /*+ BROADCAST(a, n) */ n_name, count(*) AS numcust,
+           round(sum(c_acctbal), 6) AS totacctbal
+    FROM {customer} c
+    JOIN (SELECT avg(c_acctbal) AS avg_bal FROM {customer}
+          WHERE c_acctbal > 0) a
+      ON c.c_acctbal > a.avg_bal
+    LEFT ANTI JOIN (SELECT o_custkey FROM {orders}
+                    WHERE o_orderdate >= TIMESTAMP '1999-07-01') recent
+      ON c.c_custkey = recent.o_custkey
+    JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+    GROUP BY n_name
+"""
 
 
 @query(
@@ -313,21 +358,29 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (cross join, no shuffle); the anti join's right side is
     date-pruned at the orders scan before shuffling; the nation dim
     broadcasts for the final rollup."""
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    recent = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= "1999-07-01").select("o_custkey")
-    avg_pos = (c.filter(F.col("c_acctbal") > 0)
-               .agg(F.avg("c_acctbal").alias("avg_bal")))
-    return (
-        c.join(F.broadcast(avg_pos))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(recent, c.c_custkey == recent.o_custkey, "left_anti")
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count("*").alias("numcust"),
-             F.round(F.sum("c_acctbal"), 6).alias("totacctbal"))
-    )
+    return spark.sql(_Q22.format(
+        **bind_tables(spark, sf_dir, "customer", "nation", "orders")))
+
+
+_Q7 = """
+    WITH n AS (
+      SELECT * FROM {nation} WHERE n_name IN ('NATION_1', 'NATION_2'))
+    SELECT /*+ BROADCAST(s, sn, c, cn) */ supp_nation, cust_nation,
+           year(l_shipdate) AS l_year,
+           round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue
+    FROM {lineitem} l
+    JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+    JOIN (SELECT n_nationkey AS snk, n_name AS supp_nation FROM n) sn
+      ON s.s_nationkey = sn.snk
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN (SELECT n_nationkey AS cnk, n_name AS cust_nation FROM n) cn
+      ON c.c_nationkey = cn.cnk
+    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l.l_shipdate < TIMESTAMP '1998-01-01'
+      AND supp_nation <> cust_nation
+    GROUP BY supp_nation, cust_nation, year(l_shipdate)
+"""
 
 
 @query(
@@ -357,30 +410,31 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     so supplier and customer shrink at their dim joins and only
     pair-relevant fact rows survive to the orderkey join. All dims
     broadcast; the single shuffle is lineitem⋈orders."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1998-01-01"))
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_1", "NATION_2"))
-    cn = n.select(F.col("n_nationkey").alias("cnk"),
-                  F.col("n_name").alias("cust_nation"))
-    sn = n.select(F.col("n_nationkey").alias("snk"),
-                  F.col("n_name").alias("supp_nation"))
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("snk"))
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cnk"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").alias("l_year"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-             .alias("revenue"))
-    )
+    return spark.sql(_Q7.format(
+        **bind_tables(spark, sf_dir, "lineitem", "orders", "customer",
+                      "supplier", "nation")))
+
+
+_Q8 = """
+    SELECT /*+ BROADCAST(c, cn, r, s, sn) */ year(o_orderdate) AS l_year,
+           round(sum(CASE WHEN supp_nation = 'NATION_3'
+                          THEN l_extendedprice * (1 - l_discount)
+                          ELSE 0.0D END)
+                 / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share
+    FROM {lineitem} l
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN (SELECT n_nationkey AS cnk, n_regionkey AS crk FROM {nation}) cn
+      ON c.c_nationkey = cn.cnk
+    JOIN {region} r ON cn.crk = r.r_regionkey
+    JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+    JOIN (SELECT n_nationkey AS snk, n_name AS supp_nation FROM {nation}) sn
+      ON s.s_nationkey = sn.snk
+    WHERE r.r_name = 'EUROPE'
+      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate < TIMESTAMP '1998-01-01'
+    GROUP BY year(o_orderdate)
+"""
 
 
 @query(
@@ -412,30 +466,24 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Region→nation→customer prunes the demand side before the fact
     join; supplier nation rides along only as a CASE input. Share-of
     division happens on the two-sided sums, after aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1998-01-01"))
-    c = load_table(spark, sf_dir, "customer")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    cn = n.select(F.col("n_nationkey").alias("cnk"),
-                  F.col("n_regionkey").alias("crk"))
-    sn = n.select(F.col("n_nationkey").alias("snk"),
-                  F.col("n_name").alias("supp_nation"))
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    target = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cnk"))
-        .join(F.broadcast(r), F.col("crk") == r.r_regionkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("snk"))
-        .groupBy(F.year("o_orderdate").alias("l_year"))
-        .agg(F.round(F.sum(target) / F.sum(vol), 6).alias("mkt_share"))
-    )
+    return spark.sql(_Q8.format(
+        **bind_tables(spark, sf_dir, "lineitem", "orders", "customer",
+                      "region", "supplier", "nation")))
+
+
+_Q9 = """
+    SELECT /*+ BROADCAST(p, s, sn) */ nation, year(o_orderdate) AS o_year,
+           round(sum(l_extendedprice * (1 - l_discount)
+                     - p_retailprice * 0.6D * l_quantity), 6) AS profit
+    FROM {lineitem} l
+    JOIN {part} p ON l.l_partkey = p.p_partkey
+    JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+    JOIN (SELECT n_nationkey AS snk, n_name AS nation FROM {nation}) sn
+      ON s.s_nationkey = sn.snk
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    WHERE p.p_name LIKE '%widget%'
+    GROUP BY nation, year(o_orderdate)
+"""
 
 
 @query(
@@ -461,23 +509,25 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orderkey shuffle — join order is the whole game at 100 TB;
     Catalyst keeps the dim joins broadcast and the profit expression
     whole-stage-codegen'd."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(
-        F.col("p_name").like("%widget%"))
-    s = load_table(spark, sf_dir, "supplier")
-    sn = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("snk"), F.col("n_name").alias("nation"))
-    o = load_table(spark, sf_dir, "orders")
-    profit = (F.col("l_extendedprice") * (1 - F.col("l_discount"))
-              - F.col("p_retailprice") * 0.6 * F.col("l_quantity"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("snk"))
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        .agg(F.round(F.sum(profit), 6).alias("profit"))
-    )
+    return spark.sql(_Q9.format(
+        **bind_tables(spark, sf_dir, "lineitem", "part", "supplier", "nation",
+                      "orders")))
+
+
+_Q11 = """
+    WITH partval AS (
+      SELECT /*+ BROADCAST(s, n) */ l_partkey,
+             sum(l_extendedprice * (1 - l_discount)) AS val
+      FROM {lineitem} l
+      JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+      JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+      WHERE n.n_name IN ('NATION_0', 'NATION_1', 'NATION_2')
+      GROUP BY l_partkey)
+    SELECT /*+ BROADCAST(t) */ l_partkey, round(val, 6) AS total_value
+    FROM partval
+    JOIN (SELECT sum(val) * 0.001D AS thresh FROM partval) t
+      ON partval.val > t.thresh
+"""
 
 
 @query(
@@ -505,22 +555,8 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast on the other. The nation filter broadcast-prunes
     supplier, then lineitem, before any shuffle; the only wide
     exchange is the partkey aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    n = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_0", "NATION_1", "NATION_2"))
-    s = load_table(spark, sf_dir, "supplier")
-    partval = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .groupBy("l_partkey")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-             .alias("val")))
-    thresh = partval.agg((0.001 * F.sum("val")).alias("thresh"))
-    return (
-        partval.join(F.broadcast(thresh))
-        .filter(F.col("val") > F.col("thresh"))
-        .select("l_partkey", F.round("val", 6).alias("total_value"))
-    )
+    return spark.sql(_Q11.format(
+        **bind_tables(spark, sf_dir, "lineitem", "nation", "supplier")))
 
 
 # Q2/Q20 need partsupp, which this schema lacks; both analogs derive the
@@ -530,7 +566,30 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantity (Q20). Same plan shapes as the originals — correlated scalar
 # MIN per part, and a nested IN/EXISTS chain gated by a per-(p,s) scalar.
 
-_PS_EU_NATIONS = ("EUROPE",)
+_Q2 = """
+    WITH ps AS (
+      SELECT l_partkey, l_suppkey,
+             min(l_extendedprice / l_quantity) AS unit_cost
+      FROM {lineitem} GROUP BY l_partkey, l_suppkey),
+    eu AS (
+      SELECT /*+ BROADCAST(nr) */ s_suppkey, s_name, s_acctbal, n_name
+      FROM {supplier} s
+      JOIN (SELECT /*+ BROADCAST(r) */ *
+            FROM {nation} n JOIN {region} r ON n.n_regionkey = r.r_regionkey
+            WHERE r.r_name = 'EUROPE') nr
+        ON s.s_nationkey = nr.n_nationkey),
+    ps_eu AS (
+      SELECT /*+ BROADCAST(eu) */ *
+      FROM ps JOIN eu ON ps.l_suppkey = eu.s_suppkey)
+    SELECT /*+ BROADCAST(m, p) */ p_partkey, p_name, s_name, n_name,
+           round(unit_cost, 6) AS min_cost, round(s_acctbal, 6) AS acctbal
+    FROM ps_eu
+    JOIN (SELECT l_partkey, min(unit_cost) AS min_cost_raw
+          FROM ps_eu GROUP BY l_partkey) m USING (l_partkey)
+    JOIN {part} p ON l_partkey = p.p_partkey
+    WHERE unit_cost = min_cost_raw
+      AND p.p_type = 'ECONOMY' AND p.p_size < 15
+"""
 
 
 @query(
@@ -570,31 +629,30 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate that broadcasts back onto the supply rows, and the part
     dim broadcasts last. Unit costs are IEEE division of identical
     inputs on both engines, so the min-equality join is parity-exact."""
-    li = load_table(spark, sf_dir, "lineitem")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    n = load_table(spark, sf_dir, "nation")
-    s = load_table(spark, sf_dir, "supplier")
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_type") == "ECONOMY") & (F.col("p_size") < 15))
+    return spark.sql(_Q2.format(
+        **bind_tables(spark, sf_dir, "lineitem", "region", "nation",
+                      "supplier", "part")))
 
-    ps = (li.groupBy("l_partkey", "l_suppkey")
-          .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity"))
-               .alias("unit_cost")))
-    eu = (s.join(F.broadcast(n.join(F.broadcast(r),
-                                    n.n_regionkey == r.r_regionkey)),
-                 s.s_nationkey == F.col("n_nationkey"))
-          .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
-    ps_eu = ps.join(F.broadcast(eu), ps.l_suppkey == F.col("s_suppkey"))
-    min_per_part = (ps_eu.groupBy("l_partkey")
-                    .agg(F.min("unit_cost").alias("min_cost_raw")))
-    return (
-        ps_eu.join(F.broadcast(min_per_part), "l_partkey")
-        .filter(F.col("unit_cost") == F.col("min_cost_raw"))
-        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
-        .select("p_partkey", "p_name", "s_name", "n_name",
-                F.round("unit_cost", 6).alias("min_cost"),
-                F.round("s_acctbal", 6).alias("acctbal"))
-    )
+
+_Q20 = """
+    WITH ps AS (
+      SELECT l_partkey, l_suppkey,
+             sum(l_quantity) AS availqty,
+             sum(CASE WHEN l_shipdate >= TIMESTAMP '1997-01-01'
+                       AND l_shipdate < TIMESTAMP '1998-01-01'
+                      THEN l_quantity ELSE 0.0D END) AS yr_qty
+      FROM {lineitem} GROUP BY l_partkey, l_suppkey),
+    excess AS (
+      SELECT /*+ BROADCAST(p) */ *
+      FROM ps JOIN {part} p ON ps.l_partkey = p.p_partkey
+      WHERE p.p_name LIKE '%widget%'
+        AND ps.availqty > ps.yr_qty * 0.5D AND ps.yr_qty > 0)
+    SELECT /*+ BROADCAST(n) */ s_name, round(s_acctbal, 6) AS acctbal
+    FROM {supplier} s
+    JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+    LEFT SEMI JOIN excess ON s.s_suppkey = excess.l_suppkey
+    WHERE n.n_name IN ('NATION_3', 'NATION_4')
+"""
 
 
 @query(
@@ -628,24 +686,6 @@ def q20_excess_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pass — no second scan, no aggregate-to-aggregate join),
     then a broadcast part filter and a left-semi probe into the tiny
     nation-filtered supplier dim."""
-    li = load_table(spark, sf_dir, "lineitem")
-    n = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_3", "NATION_4"))
-    s = load_table(spark, sf_dir, "supplier")
-    p = load_table(spark, sf_dir, "part").filter(
-        F.col("p_name").like("%widget%"))
-
-    in_year = ((F.col("l_shipdate") >= "1997-01-01")
-               & (F.col("l_shipdate") < "1998-01-01"))
-    ps = (li.groupBy("l_partkey", "l_suppkey")
-          .agg(F.sum("l_quantity").alias("availqty"),
-               F.sum(F.when(in_year, F.col("l_quantity")).otherwise(0.0))
-               .alias("yr_qty")))
-    excess = (ps.join(F.broadcast(p), ps.l_partkey == p.p_partkey)
-              .filter((F.col("availqty") > 0.5 * F.col("yr_qty"))
-                      & (F.col("yr_qty") > 0)))
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(excess, s.s_suppkey == excess.l_suppkey, "left_semi")
-        .select("s_name", F.round("s_acctbal", 6).alias("acctbal"))
-    )
+    return spark.sql(_Q20.format(
+        **bind_tables(spark, sf_dir, "lineitem", "nation", "supplier",
+                      "part")))

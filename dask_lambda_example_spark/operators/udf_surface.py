@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dask_lambda_example_spark.io import load_table
+from dask_lambda_example_spark.io import bind_tables, load_table
 from dask_lambda_example_spark.registry import query
 
 
@@ -179,13 +179,12 @@ def udf_real_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield o_orderkey, f"priority:{priority}"
 
     spark.udtf.register("tag_exploder", TagExploder)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     return spark.sql("""
         SELECT t.o_orderkey, t.tag
-        FROM orders_v,
+        FROM {orders} o,
              LATERAL tag_exploder(o_orderkey, o_orderstatus, o_orderpriority) t
-        WHERE orders_v.o_orderkey < 100
-    """)
+        WHERE o.o_orderkey < 100
+    """.format(**bind_tables(spark, sf_dir, "orders")))
 
 
 @query(
@@ -293,11 +292,10 @@ def udf_polymorphic_udtf_analyze(spark: SparkSession,
 
     poly = udtf(JsonFields)
     spark.udtf.register("json_fields", poly)
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_v")
     return spark.sql("""
         SELECT t.event_id, t.k, t.type
-        FROM events_v,
+        FROM {events} e,
              LATERAL json_fields(event_id, props, event_type,
                                  'k,event_type') t
-        WHERE events_v.event_id % 40 = 0
-    """)
+        WHERE e.event_id % 40 = 0
+    """.format(**bind_tables(spark, sf_dir, "events")))

@@ -19,6 +19,7 @@ from dask_lambda_example_spark.plans.inspect import (
     assert_pushed_filter,
     assert_read_schema_excludes,
     assert_wholestage_codegen,
+    physical_plan,
 )
 from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
 
@@ -60,6 +61,56 @@ def test_exists_subquery_decorrelates_to_semijoin(spark, sf_dir):
 def test_not_exists_decorrelates_to_antijoin(spark, sf_dir):
     df = QUERIES["subq_not_exists_antijoin"].fn(spark, sf_dir)
     assert_join_type(df, "LeftAnti")
+
+
+# Operator counts in each TPC-H query's physical plan before execution:
+# shuffle Exchange, BroadcastExchange, SortMergeJoin, BroadcastHashJoin
+# + BroadcastNestedLoopJoin, ShuffledHashJoin, LeftSemi, LeftAnti. The
+# counts are those of the DataFrame-API bodies the hinted Spark SQL
+# texts replaced; they are the same at sf0.001, sf0.01 and sf0.1.
+_SHAPE_OPS = (r"(?<![A-Za-z])Exchange ", r"BroadcastExchange ",
+              r"SortMergeJoin ", r"Broadcast(?:Hash|NestedLoop)Join ",
+              r"ShuffledHashJoin ", r"LeftSemi", r"LeftAnti")
+_TPCH_PLAN_SHAPES = {
+    "q1_pricing_summary": (1, 0, 0, 0, 0, 0, 0),
+    "q2_min_cost_supplier": (3, 8, 0, 8, 0, 0, 0),
+    "q3_shipping_priority": (1, 2, 0, 2, 0, 0, 0),
+    "q4_priority_exists": (1, 1, 0, 1, 0, 1, 0),
+    "q5_local_supplier_volume": (1, 5, 0, 5, 0, 0, 0),
+    "q6_forecast_revenue": (1, 0, 0, 0, 0, 0, 0),
+    "q7_nation_volume": (1, 5, 0, 5, 0, 0, 0),
+    "q8_market_share": (1, 6, 0, 6, 0, 0, 0),
+    "q9_product_profit": (1, 4, 0, 4, 0, 0, 0),
+    "q10_returned_items": (1, 2, 0, 2, 0, 0, 0),
+    "q11_important_parts": (3, 5, 0, 5, 0, 0, 0),
+    "q12_priority_classes": (1, 1, 0, 1, 0, 0, 0),
+    "q13_order_count_distribution": (2, 1, 0, 1, 0, 0, 0),
+    "q14_promo_revenue": (1, 1, 0, 1, 0, 0, 0),
+    "q15_top_supplier": (3, 2, 0, 2, 0, 0, 0),
+    "q16_supplier_variety": (2, 2, 0, 2, 0, 0, 1),
+    "q17_small_quantity_revenue": (2, 3, 0, 3, 0, 0, 0),
+    "q18_large_orders": (2, 2, 0, 2, 0, 1, 0),
+    "q19_disjunctive_join": (1, 1, 0, 1, 0, 0, 0),
+    "q20_excess_inventory": (3, 2, 1, 2, 0, 1, 0),
+    "q21_waiting_supplier": (3, 4, 1, 4, 0, 1, 1),
+    "q22_dormant_customers": (2, 3, 0, 3, 0, 0, 1),
+}
+
+
+def plan_shape(plan: str) -> tuple:
+    """``_SHAPE_OPS`` counts of a physical plan string."""
+    import re
+
+    return tuple(len(re.findall(op, plan)) for op in _SHAPE_OPS)
+
+
+@pytest.mark.parametrize("name", _TPCH_PLAN_SHAPES)
+def test_tpch_plan_shape(spark, sf_dir, name):
+    # each query's text keeps the join order, broadcasts, pre-aggregations
+    # and semi/anti joins of the plan it pins (the DuckDB oracle texts
+    # of q2 and q18, run by Spark, plan 5 and 3 exchanges instead)
+    plan = physical_plan(QUERIES[name].fn(spark, sf_dir))
+    assert plan_shape(plan) == _TPCH_PLAN_SHAPES[name], plan
 
 
 def test_flagship_partial_aggregation(spark, sf_dir):

@@ -1250,6 +1250,36 @@ def test_ab_bench_sweep_files_clean_up(tmp_path):
             pass
 
 
+def test_ab_bench_first_run_is_untimed():
+    # each side's first run of a query (cold: it pays the query's code
+    # generation) is run off the clock, so it never enters the walls,
+    # the best-of ratio or the IQR; the timed reps interleave A,B,B,A
+    _bench_gate_mod()  # puts tools/ on sys.path
+    from ab_bench import pair_query
+
+    calls = []
+
+    class Stub:
+        def __init__(self, tag, walls):
+            self.tag, self.walls = tag, iter(walls)
+
+        def run(self, name):
+            calls.append(self.tag)
+            return {"name": name, "wall": next(self.walls)}
+
+    cur = Stub("current", [60.0, 1.0, 1.2, 1.4, 1.6])
+    base = Stub("baseline", [70.0, 2.0, 2.0, 2.0, 2.0])
+    rec = pair_query("q", [cur, base], reps=4)
+    assert rec["current"] == [1.0, 1.2, 1.4, 1.6]
+    assert rec["baseline"] == [2.0] * 4
+    assert rec["best_ratio"] == 0.5
+    assert rec["iqr"] == {"current": 0.5, "baseline": 0.0}
+    assert rec["median"] == {"current": 1.3, "baseline": 2.0}
+    assert calls == ["current", "baseline"] + ["current", "baseline",
+                                               "baseline", "current"] * 2
+    assert "errors" not in rec
+
+
 def test_bench_regression_gate():
     # plan-pathology tripwire: any query >3x slower than the previous
     # committed round's bench fails here instead of waiting for a
@@ -2504,6 +2534,76 @@ def test_table_builds_launch_no_job(spark, sf_dir):
     finally:
         sc._jsc.clearJobGroup()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _count_view_registrations(spark, monkeypatch) -> list:
+    """Names of the temp views registered from here on."""
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    seen = []
+    register = cls.createOrReplaceTempView
+
+    def counting(df, name):
+        seen.append(name)
+        register(df, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", counting)
+    return seen
+
+
+def test_bind_tables_registers_each_view_once(spark, sf_dir, monkeypatch):
+    """A second ``bind_tables`` call with the same arguments registers
+    no view and returns the same names; a caller's own view named like
+    a table is left alone."""
+    from dask_lambda_example_spark.io import bind_tables
+
+    spark.range(3).createOrReplaceTempView("orders")
+    try:
+        first = bind_tables(spark, sf_dir, "orders", "lineitem")
+        seen = _count_view_registrations(spark, monkeypatch)
+        assert bind_tables(spark, sf_dir, "orders", "lineitem") == first
+        assert seen == []
+        assert first["orders"] != "orders"
+        assert spark.table("orders").count() == 3
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
+def test_bind_tables_views_per_sf_dir(spark, sf_dir):
+    """A path and its ``file://`` form get distinct views, and a query
+    built on each returns the same rows."""
+    from dask_lambda_example_spark.io import bind_tables
+    from dask_lambda_example_spark.registry import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
+    uri = f"file://{sf_dir}"
+    assert (bind_tables(spark, sf_dir, "orders")
+            != bind_tables(spark, uri, "orders"))
+    q3 = QUERIES["q3_shipping_priority"].fn
+    rows = sorted(q3(spark, sf_dir).collect())
+    assert rows and sorted(q3(spark, uri).collect()) == rows
+
+
+def test_bind_tables_rebinds_a_rewritten_table(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """Rewriting a table's file with fewer rows makes the next call bind
+    the view again, and the view's count follows the file."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dask_lambda_example_spark.io import bind_tables
+
+    path = tmp_path / "nation.parquet"
+    shutil.copy(f"{sf_dir}/nation.parquet", path)
+    view = bind_tables(spark, str(tmp_path), "nation")["nation"]
+    assert spark.table(view).count() == 25
+    seen = _count_view_registrations(spark, monkeypatch)
+    bind_tables(spark, str(tmp_path), "nation")
+    assert seen == []
+    pq.write_table(pq.read_table(path).slice(0, 5), path)
+    assert bind_tables(spark, str(tmp_path), "nation") == {"nation": view}
+    assert seen == [view]
+    assert spark.table(view).count() == 5
 
 
 def test_load_table_schema_matches_inference(spark, sf_dir, tmp_path):

@@ -19,8 +19,10 @@ from two committed battery ledgers (default the sf0.1 r10-vs-r9 pair;
 ledgers). --env-current/--env-baseline add per-side environment (e.g.
 SPARK_GRAFT_DRIVER_MEM=90g on ONE side to isolate a heap-config axis
 with identical code on both sides: --baseline HEAD).
-Output: one JSON object (BENCH_ab artifact) with per-query wall lists
-for both sides, best-of ratios, and the interleave order. A worker
+Output: one JSON object (BENCH_ab artifact) with per-query wall lists,
+medians and IQRs for both sides, best-of ratios, and the interleave
+order. Each side runs each query once, untimed, before its timed reps,
+so no rep pays the query's first-run code generation. A worker
 that dies mid-sweep is restarted ONCE (fresh JVM, re-warmed off the
 clock); if it dies again the remaining one-sided rows are flagged via
 top-level aborted_sides/n_missing_ratios so a degraded sweep can't
@@ -39,6 +41,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -248,6 +251,49 @@ class _Worker:
         self.log.close()
 
 
+def _median_iqr(walls: list[float]) -> tuple[float, float]:
+    if len(walls) < 2:
+        return round(walls[0], 4), 0.0
+    q1, q2, q3 = statistics.quantiles(walls, n=4)
+    return round(q2, 4), round(q3 - q1, 4)
+
+
+def pair_query(name: str, order: list, reps: int) -> dict:
+    """One query's paired record over the two workers in ``order``.
+
+    Each worker first runs ``name`` once off the clock: a query's first
+    run in a JVM pays its code generation and other cold costs, which
+    would otherwise land in one rep per side and widen that side's
+    IQR. Then ``reps`` timed runs per side, A,B,B,A per rep-pair, so
+    any monotone host drift cancels. The record holds each side's
+    walls, median and IQR, and the best-of ratio current/baseline."""
+    walls: dict[str, list] = {"current": [], "baseline": []}
+    errors: list[str] = []
+    for w in order:
+        r = w.run(name)
+        if "wall" not in r:
+            errors.append(f"{w.tag} (untimed first run): {r.get('error')}")
+    order = list(order)
+    for _ in range(reps):
+        for w in order:
+            r = w.run(name)
+            if "wall" in r:
+                walls[w.tag].append(r["wall"])
+            else:
+                errors.append(f"{w.tag}: {r.get('error')}")
+        order.reverse()
+    rec: dict = {"current": walls["current"], "baseline": walls["baseline"]}
+    if walls["current"] and walls["baseline"]:
+        rec["best_ratio"] = round(
+            min(walls["current"]) / min(walls["baseline"]), 3)
+        spread = {side: _median_iqr(w) for side, w in walls.items()}
+        rec["median"] = {side: m for side, (m, _) in spread.items()}
+        rec["iqr"] = {side: q for side, (_, q) in spread.items()}
+    if errors:
+        rec["errors"] = errors
+    return rec
+
+
 def main() -> int:
     baseline = _arg("--baseline")
     assert baseline, "--baseline <git-rev> is required"
@@ -279,26 +325,8 @@ def main() -> int:
         results: dict[str, dict] = {}
         try:
             for name in names:
-                walls: dict[str, list] = {"current": [], "baseline": []}
-                errors: list[str] = []
-                # A,B,B,A per rep-pair: any monotone host drift cancels
                 order = [a, b] if len(results) % 2 == 0 else [b, a]
-                for _ in range(reps):
-                    for w in order:
-                        r = w.run(name)
-                        if "wall" in r:
-                            walls[w.tag].append(r["wall"])
-                        else:
-                            errors.append(f"{w.tag}: {r.get('error')}")
-                    order.reverse()
-                rec: dict = {"current": walls["current"],
-                             "baseline": walls["baseline"]}
-                if walls["current"] and walls["baseline"]:
-                    rec["best_ratio"] = round(
-                        min(walls["current"]) / min(walls["baseline"]), 3)
-                if errors:
-                    rec["errors"] = errors
-                results[name] = rec
+                rec = results[name] = pair_query(name, order, reps)
                 print(json.dumps({name: rec}), file=sys.stderr, flush=True)
         finally:
             # dead/exhausted state must be read BEFORE close() reaps the
@@ -323,6 +351,8 @@ def main() -> int:
         "reps_per_side": reps,
         "interleave": "A,B,B,A per rep-pair, sides alternate per query",
         "timing": "best-of per side (min over reps)",
+        "first_run": "each side runs each query once, untimed, before "
+                     "its timed reps",
         "env_current": env_cur or None,
         "env_baseline": env_base or None,
         "worker_heap": os.environ["SPARK_GRAFT_DRIVER_MEM"],
